@@ -86,23 +86,33 @@ object Bench {
                   "q_props_extract"))
       try materialize(SparkEntry.queries(q)(spark, sfDir)) catch { case _: Throwable => }
     val warmupSec = (System.nanoTime() - tWarm) / 1e9
+    // a failed build records -1 in its numeric field and its cause under
+    // `build_errors` (part → exception text), stack trace to stderr
+    val buildErrors = scala.collection.mutable.LinkedHashMap[String, String]()
+    def subBuild(part: String)(f: => Unit): Double = {
+      val t0 = System.nanoTime()
+      try { f; (System.nanoTime() - t0) / 1e9 }
+      catch {
+        case e: Throwable =>
+          buildErrors(part) = e.toString
+          e.printStackTrace()
+          -1.0
+      }
+    }
     // one-time index build (the K2 sink) — reported, not hidden — plus an
     // untimed bucket-pruned read so the first timed index query measures
     // the steady-state read path, not first-touch table/file-listing costs
-    val tIdx = System.nanoTime()
-    val indexBuildSec =
-      try {
-        val p = graft.sources.IndexStore.postings(spark, sfDir)
-        p.count()
-        // warm with a term that exists ("the" is a stopword and never
-        // reaches the index) so the warm read touches real bucket data
-        materialize(p.filter(col("term") === "spark"))
-        // the positional index q_phrase serves from — same build-once
-        // attribution (and the same bucket-pruned warm read)
-        val pp = graft.sources.IndexStore.positionalPostings(spark, sfDir)
-        materialize(pp.filter(col("term") === "spark"))
-        (System.nanoTime() - tIdx) / 1e9
-      } catch { case _: Throwable => -1.0 }
+    val indexBuildSec = subBuild("index") {
+      val p = graft.sources.IndexStore.postings(spark, sfDir)
+      p.count()
+      // warm with a term that exists ("the" is a stopword and never
+      // reaches the index) so the warm read touches real bucket data
+      materialize(p.filter(col("term") === "spark"))
+      // the positional index q_phrase serves from — same build-once
+      // attribution (and the same bucket-pruned warm read)
+      val pp = graft.sources.IndexStore.positionalPostings(spark, sfDir)
+      materialize(pp.filter(col("term") === "spark"))
+    }
     // one-time LSH + connected-components build shared by the dedup
     // family (q_dedup_near/q_dedup_clusters/q_curate) — same build-once-
     // query-many attribution as the index: reported as its own line so
@@ -115,17 +125,13 @@ object Bench {
     // cluster memo. `dedup_build_sec` stays their sum for round-over-round
     // continuity. A sub-build that throws records -1 and later stages
     // still run (each is independently try-wrapped).
-    def subBuild(f: => Unit): Double = {
-      val t0 = System.nanoTime()
-      try { f; (System.nanoTime() - t0) / 1e9 } catch { case _: Throwable => -1.0 }
-    }
     val D = graft.queries.DedupQueries.DedupStore
-    val shingleBuildSec = subBuild { D.hashes(spark, sfDir).count(): Unit }
+    val shingleBuildSec = subBuild("dedup.shingle") { D.hashes(spark, sfDir).count(): Unit }
     // shared rare-shingle candidate relation (q_jaccard_pairs +
     // q_containment) — same build-once attribution
-    val candBuildSec = subBuild { D.rareCandidates(spark, sfDir).count(): Unit }
-    val pairBuildSec = subBuild { D.pairs(spark, sfDir).count(): Unit }
-    val clusterBuildSec = subBuild { D.clusters(spark, sfDir).count(): Unit }
+    val candBuildSec = subBuild("dedup.candidates") { D.rareCandidates(spark, sfDir).count(): Unit }
+    val pairBuildSec = subBuild("dedup.pairs") { D.pairs(spark, sfDir).count(): Unit }
+    val clusterBuildSec = subBuild("dedup.clusters") { D.clusters(spark, sfDir).count(): Unit }
     // the streamed-ingest store q_curate_streamed serves from: three
     // incremental processBatch passes — the same build-once attribution
     // (timing the ingest inside the query would charge every snapshot cut
@@ -133,8 +139,8 @@ object Bench {
     // separately (it invalidates only when the store changes, and the
     // store is static across the run)
     var streamedStore: String = null
-    val streamedIngestSec = subBuild { streamedStore = D.streamedStorePath(spark, sfDir) }
-    val streamedMemoSec = subBuild {
+    val streamedIngestSec = subBuild("dedup.stream_ingest") { streamedStore = D.streamedStorePath(spark, sfDir) }
+    val streamedMemoSec = subBuild("dedup.stream_memo") {
       if (streamedStore == null) sys.error("ingest failed")
       D.streamedClusters(spark, streamedStore).count(): Unit
     }
@@ -152,7 +158,7 @@ object Bench {
     // for round-over-round continuity; a failed part records -1 and the
     // later parts still build.
     val storeParts = scala.collection.mutable.LinkedHashMap[String, Double]()
-    def storePart(name: String)(f: => Unit): Unit = storeParts(name) = subBuild(f)
+    def storePart(name: String)(f: => Unit): Unit = storeParts(name) = subBuild("store." + name)(f)
     storePart("layout_z") {
       graft.sources.LayoutStore.lineitemZ(spark, sfDir).count(): Unit }
     storePart("colocated") {
@@ -517,7 +523,9 @@ object Bench {
       if (healthFailures.isEmpty) "ok" else "contended:" + healthFailures.mkString(",")
     val storePartsJson = storeParts.map { case (k, v) => esc(k) + ":" + f2(v) }
       .mkString("{", ",", "}")
-    val line = s"""{"metric":"total","value":${f4(total)},"unit":"sec","queries":$qs,"errors":$errs,"protocol":"min_of_2_plus_remeasure","host_health":${esc(hostHealth)},"remeasured":${contended.length},"cube_rollup_ratio":${f4(cubeRollupRatio)},"rollup_end_sec":${f4(rollupEnd)},"cpu_sentinel_start_sec":${f4(cpuStart)},"cpu_sentinel_end_sec":${f4(cpuEnd)},"index_build_sec":${f4(indexBuildSec)},"dedup_build_sec":${f4(dedupBuildSec)},"dedup_build_parts":{"shingle":${f2(shingleBuildSec)},"candidates":${f2(candBuildSec)},"pairs":${f2(pairBuildSec)},"clusters":${f2(clusterBuildSec)},"stream_ingest":${f2(streamedIngestSec)},"stream_memo":${f2(streamedMemoSec)}},"store_build_sec":${f4(storeBuildSec)},"store_build_parts":$storePartsJson,"store_build_prev":${esc(prevArtifact.map(_.getName).getOrElse("none"))},"store_build_prev_status":${esc(prevStatus)},"store_build_delta_parts":$storeDeltaJson,"dedup_build_delta_parts":$dedupDeltaJson,"warmup_sec":${f4(warmupSec)},"sf":"$sfDir"}"""
+    val buildErrorsJson = buildErrors.map { case (k, e) => esc(k) + ":" + esc(e) }
+      .mkString("{", ",", "}")
+    val line = s"""{"metric":"total","value":${f4(total)},"unit":"sec","queries":$qs,"errors":$errs,"protocol":"min_of_2_plus_remeasure","host_health":${esc(hostHealth)},"remeasured":${contended.length},"cube_rollup_ratio":${f4(cubeRollupRatio)},"rollup_end_sec":${f4(rollupEnd)},"cpu_sentinel_start_sec":${f4(cpuStart)},"cpu_sentinel_end_sec":${f4(cpuEnd)},"index_build_sec":${f4(indexBuildSec)},"dedup_build_sec":${f4(dedupBuildSec)},"dedup_build_parts":{"shingle":${f2(shingleBuildSec)},"candidates":${f2(candBuildSec)},"pairs":${f2(pairBuildSec)},"clusters":${f2(clusterBuildSec)},"stream_ingest":${f2(streamedIngestSec)},"stream_memo":${f2(streamedMemoSec)}},"store_build_sec":${f4(storeBuildSec)},"store_build_parts":$storePartsJson,"store_build_prev":${esc(prevArtifact.map(_.getName).getOrElse("none"))},"store_build_prev_status":${esc(prevStatus)},"store_build_delta_parts":$storeDeltaJson,"dedup_build_delta_parts":$dedupDeltaJson,"build_errors":$buildErrorsJson,"warmup_sec":${f4(warmupSec)},"sf":"$sfDir"}"""
     println(line)
     // sidecar copy: the FULL artifact at a fixed path (committed per-round
     // as BENCH_r{N}_builder.json)

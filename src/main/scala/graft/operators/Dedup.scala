@@ -317,7 +317,7 @@ object Dedup {
     * `spark.cleaner.referenceTracking.cleanCheckpoints=true` (default
     * false), so every durable checkpoint is RECORDED here and released
     * by `releaseCheckpoints` (explicit end-of-job call) or by the stale
-    * sweep `DedupStore` runs when a session stops — repeated cluster
+    * sweep every `SessionStores.memo` miss runs — repeated cluster
     * invocations no longer leak checkpoint storage.
     */
   private[graft] def materializeOnce(df: DataFrame): DataFrame =
@@ -354,11 +354,11 @@ object Dedup {
     * (`sc.getCheckpointDir`), which is shared by every reliable
     * checkpoint the context ever wrote, not only dedup's: call it only
     * when NO checkpointed data of this context is needed again (end of
-    * job), and prefer `DedupQueries.DedupStore.release(spark)`, which
-    * first drops the cached dedup relations whose lineage depends on
-    * these files — releasing under a live DedupStore cache would leave
-    * cached frames backed by deleted checkpoints (FileNotFoundException
-    * on any block recompute).
+    * job), and prefer `SessionStores.release(spark)`, which first drops
+    * the session's memoized relations whose lineage depends on these
+    * files — releasing under a live memo would leave cached frames
+    * backed by deleted checkpoints (FileNotFoundException on any block
+    * recompute).
     */
   def releaseCheckpoints(spark: org.apache.spark.sql.SparkSession): Unit =
     releaseWhere { ref =>
@@ -367,7 +367,7 @@ object Dedup {
     }
 
   /** Delete recorded checkpoint dirs whose owning context is stopped or
-    * collected — the background sweep (`DedupStore.pruneStopped`).
+    * collected — the sweep every `SessionStores.memo` miss runs.
     */
   private[graft] def releaseStaleCheckpoints(): Unit =
     releaseWhere { ref =>

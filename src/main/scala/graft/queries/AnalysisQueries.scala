@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.{Text, TextAnalysis}
-import graft.sources.{Corpus, Tables}
+import graft.sources.{Corpus, SessionStores, Tables}
 
 /** Text-analysis + event-analytics surface (⊕ LLM-pipeline): language ID,
   * quality scoring, token counting, fingerprints, event windows, JSON
@@ -38,12 +38,8 @@ object AnalysisQueries {
     * files live under the `SessionStores` process scope.
     */
   object SketchStores {
-    private val lock = new Object
-    private var cache = Map.empty[(SparkSession, String), String]
-
-    def streamedMgStore(s: SparkSession, dir: String): String = lock.synchronized {
-      cache = cache.filter(!_._1._1.sparkContext.isStopped)
-      cache.getOrElse((s, dir), {
+    def streamedMgStore(s: SparkSession, dir: String): String =
+      SessionStores.memo(s, "stream_mg:" + dir) {
         val path = graft.sources.SessionStores.scopedPath("graft_mgsketch",
           "store_" + graft.sources.SessionStores.tagOf(dir))
         val d = docs(s, dir).select("doc_id", "source", "text")
@@ -70,10 +66,8 @@ object AnalysisQueries {
               b.toLong, path): Unit
           } finally batch.unpersist(): Unit
         }
-        cache += (s, dir) -> path
         path
-      })
-    }
+      }
   }
 
   /** Session-scoped StreamingEvents fact store: `dir`'s events
@@ -84,22 +78,16 @@ object AnalysisQueries {
     * (session, dir); serves every `*_streamed` behavioral twin.
     */
   private[graft] object EventStores {
-    private val lock = new Object
-    private var cache = Map.empty[(SparkSession, String), String]
-
-    def streamedStore(s: SparkSession, dir: String): String = lock.synchronized {
-      cache = cache.filter(!_._1._1.sparkContext.isStopped)
-      cache.getOrElse((s, dir), {
+    def streamedStore(s: SparkSession, dir: String): String =
+      SessionStores.memo(s, "stream_events:" + dir) {
         val path = graft.sources.SessionStores.scopedPath("graft_eventstream",
           "store_" + graft.sources.SessionStores.tagOf(dir))
         val ev = Tables.events(s, dir)
         for (b <- 0 until 3)
           graft.streaming.StreamingEvents.processBatch(
             ev.filter(col("event_id") % 3 === b), b.toLong, path): Unit
-        cache += (s, dir) -> path
         path
-      })
-    }
+      }
 
     def streamedEvents(s: SparkSession, dir: String): DataFrame =
       graft.streaming.StreamingEvents.events(s, streamedStore(s, dir))
@@ -111,12 +99,8 @@ object AnalysisQueries {
     * Hive-partitioned by `gen`, built once per (process, corpus).
     */
   private[graft] object SchemaEvoStore {
-    private val lock = new Object
-    private var cache = Map.empty[(SparkSession, String), String]
-
-    def path(s: SparkSession, dir: String): String = lock.synchronized {
-      cache = cache.filter(!_._1._1.sparkContext.isStopped)
-      cache.getOrElse((s, dir), {
+    def path(s: SparkSession, dir: String): String =
+      SessionStores.memo(s, "schema_evo:" + dir) {
         val p = graft.sources.SessionStores.scopedPath("graft_schemaevo",
           "store_" + graft.sources.SessionStores.tagOf(dir))
         val d = Corpus.documents(s, dir)
@@ -125,10 +109,8 @@ object AnalysisQueries {
         d.filter(col("doc_id") % 2 === 1)
           .select(col("doc_id"), col("text"), col("lang"))
           .write.mode("overwrite").parquet(s"$p/gen=2")
-        cache += (s, dir) -> p
         p
-      })
-    }
+      }
   }
 
   /** r16 VERDICT What's-wrong #1: deterministic-enrichment INPUT
@@ -178,12 +160,8 @@ object AnalysisQueries {
     * Built once per (process, corpus).
     */
   private[graft] object BadRecordsStore {
-    private val lock = new Object
-    private var cache = Map.empty[(SparkSession, String), String]
-
-    def path(s: SparkSession, dir: String): String = lock.synchronized {
-      cache = cache.filter(!_._1._1.sparkContext.isStopped)
-      cache.getOrElse((s, dir), {
+    def path(s: SparkSession, dir: String): String =
+      SessionStores.memo(s, "bad_records:" + dir) {
         val p = graft.sources.SessionStores.scopedPath("graft_badrec",
           "store_" + graft.sources.SessionStores.tagOf(dir))
         Corpus.documents(s, dir)
@@ -193,10 +171,8 @@ object AnalysisQueries {
             expr("substring(line, 1, length(line) - 1)")) // drop the }
             .otherwise(col("line")).as("value"))
           .write.mode("overwrite").text(p)
-        cache += (s, dir) -> p
         p
-      })
-    }
+      }
   }
 
   /** q_group_percentiles' body: EXACT per-group quantiles (p25/p50/p75
@@ -499,14 +475,9 @@ object AnalysisQueries {
     * batch weights.
     */
   private[graft] object FtModels {
-    private val lock = new Object
-    private var cache =
-      Map.empty[(SparkSession, String), (Array[Double], Array[Double], Array[Double])]
-
     def of(s: SparkSession, key: String, seedRaw: => DataFrame)
-        : (Array[Double], Array[Double], Array[Double]) = lock.synchronized {
-      cache = cache.filter(!_._1._1.sparkContext.isStopped)
-      cache.getOrElse((s, key), {
+        : (Array[Double], Array[Double], Array[Double]) =
+      SessionStores.memo(s, "ft_model:" + key) {
         val raw = seedRaw
         // per-bucket standardization stats from the TRAIN rows only (no
         // held-out leakage through the normalizer)
@@ -522,11 +493,8 @@ object AnalysisQueries {
         val w = graft.operators.Classifier.fitLogRegWide(
           seed.filter(col("split") === "train"), "fx", "y",
           dims = FtD + 1, rounds = FtRounds, lr = FtLr)
-        val m = (w, muArr, sdArr)
-        cache += (s, key) -> m
-        m
-      })
-    }
+        (w, muArr, sdArr)
+      }
   }
 
   /** Session-scoped PERSISTED featurized ft seed (split, y, rx) per
@@ -1295,17 +1263,10 @@ object AnalysisQueries {
     * must derive from their own store-accumulated relation.
     */
   private[graft] object PplDocs {
-    private val lock = new Object
-    private var cache = Map.empty[(SparkSession, String), DataFrame]
-
-    def of(s: SparkSession, key: String, d: => DataFrame): DataFrame = lock.synchronized {
-      cache = cache.filter(!_._1._1.sparkContext.isStopped)
-      cache.getOrElse((s, key), {
-        val m = pplOf(d).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        cache += (s, key) -> m
-        m
-      })
-    }
+    def of(s: SparkSession, key: String, d: => DataFrame): DataFrame =
+      SessionStores.memo(s, "ppl:" + key) {
+        pplOf(d).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      }
   }
 
   /** q_ppl_buckets' body: CCNet-style PERPLEXITY BUCKETING — per
@@ -1391,12 +1352,8 @@ object AnalysisQueries {
     * count is just an additive keyed relation.
     */
   private[graft] object DriftStores {
-    private val lock = new Object
-    private var cache = Map.empty[(SparkSession, String), String]
-
-    def streamedStore(s: SparkSession, dir: String): String = lock.synchronized {
-      cache = cache.filter(!_._1._1.sparkContext.isStopped)
-      cache.getOrElse((s, dir), {
+    def streamedStore(s: SparkSession, dir: String): String =
+      SessionStores.memo(s, "stream_drift:" + dir) {
         val path = graft.sources.SessionStores.scopedPath("graft_graphstream",
           "drift_store_" + graft.sources.SessionStores.tagOf(dir))
         for (b <- 0 until 3) {
@@ -1407,10 +1364,8 @@ object AnalysisQueries {
           graft.streaming.StreamingGraph.processBatch(contribs, b.toLong, path,
             keyType = org.apache.spark.sql.types.StringType): Unit
         }
-        cache += (s, dir) -> path
         path
-      })
-    }
+      }
 
     def counts(s: SparkSession, dir: String): DataFrame =
       graft.streaming.StreamingGraph.edges(s, streamedStore(s, dir),
@@ -1429,12 +1384,8 @@ object AnalysisQueries {
     * the vocab-sized state accumulates, training runs at any cut.
     */
   private[graft] object BpeStreamStores {
-    private val lock = new Object
-    private var cache = Map.empty[(SparkSession, String), String]
-
-    def store(s: SparkSession, dir: String): String = lock.synchronized {
-      cache = cache.filter(!_._1._1.sparkContext.isStopped)
-      cache.getOrElse((s, dir), {
+    def store(s: SparkSession, dir: String): String =
+      SessionStores.memo(s, "stream_bpe:" + dir) {
         val path = graft.sources.SessionStores.scopedPath("graft_graphstream",
           "bpewords_store_" + graft.sources.SessionStores.tagOf(dir))
         for (b <- 0 until 3) {
@@ -1444,10 +1395,8 @@ object AnalysisQueries {
           graft.streaming.StreamingGraph.processBatch(contribs, b.toLong, path,
             keyType = org.apache.spark.sql.types.StringType): Unit
         }
-        cache += (s, dir) -> path
         path
-      })
-    }
+      }
 
     def words(s: SparkSession, dir: String): DataFrame =
       graft.streaming.StreamingGraph.edges(s, store(s, dir),
@@ -1463,12 +1412,8 @@ object AnalysisQueries {
     * store accumulates the whole PMI input (the DriftStores pattern).
     */
   private[graft] object PmiStores {
-    private val lock = new Object
-    private var cache = Map.empty[(SparkSession, String), String]
-
-    def store(s: SparkSession, dir: String): String = lock.synchronized {
-      cache = cache.filter(!_._1._1.sparkContext.isStopped)
-      cache.getOrElse((s, dir), {
+    def store(s: SparkSession, dir: String): String =
+      SessionStores.memo(s, "stream_pmi:" + dir) {
         val path = graft.sources.SessionStores.scopedPath("graft_graphstream",
           "pmi_store_" + graft.sources.SessionStores.tagOf(dir))
         for (b <- 0 until 3) {
@@ -1489,10 +1434,8 @@ object AnalysisQueries {
             uni.unionByName(bi).unionByName(tot), b.toLong, path,
             keyType = org.apache.spark.sql.types.StringType): Unit
         }
-        cache += (s, dir) -> path
         path
-      })
-    }
+      }
   }
 
   /** q_histogram_streamed's additive bucket-count store: Long-keyed
@@ -1500,12 +1443,8 @@ object AnalysisQueries {
     * o_orderkey-mod-3 order slices.
     */
   private[graft] object HistStores {
-    private val lock = new Object
-    private var cache = Map.empty[(SparkSession, String), String]
-
-    def store(s: SparkSession, dir: String): String = lock.synchronized {
-      cache = cache.filter(!_._1._1.sparkContext.isStopped)
-      cache.getOrElse((s, dir), {
+    def store(s: SparkSession, dir: String): String =
+      SessionStores.memo(s, "stream_hist:" + dir) {
         val path = graft.sources.SessionStores.scopedPath("graft_graphstream",
           "hist_store_" + graft.sources.SessionStores.tagOf(dir))
         for (b <- 0 until 3) {
@@ -1515,10 +1454,8 @@ object AnalysisQueries {
               lit(0L).as("dst"), lit(1L).as("w"))
           graft.streaming.StreamingGraph.processBatch(contribs, b.toLong, path): Unit
         }
-        cache += (s, dir) -> path
         path
-      })
-    }
+      }
   }
 
   /** q_quality_gate_streamed's accumulated DOC-fact store: the corpus
@@ -1532,12 +1469,8 @@ object AnalysisQueries {
       StructField("doc_id", LongType),
       StructField("source", StringType),
       StructField("text", StringType)))
-    private val lock = new Object
-    private var cache = Map.empty[(SparkSession, String), String]
-
-    def streamedStore(s: SparkSession, dir: String): String = lock.synchronized {
-      cache = cache.filter(!_._1._1.sparkContext.isStopped)
-      cache.getOrElse((s, dir), {
+    def streamedStore(s: SparkSession, dir: String): String =
+      SessionStores.memo(s, "stream_docs:" + dir) {
         val path = graft.sources.SessionStores.scopedPath("graft_docstream",
           "store_" + graft.sources.SessionStores.tagOf(dir))
         val d = docs(s, dir).select("doc_id", "source", "text")
@@ -1545,10 +1478,8 @@ object AnalysisQueries {
           graft.streaming.StreamingFacts.processBatch(
             d.filter(col("doc_id") % 3 === b), b.toLong, path,
             "doc_id", docSchema): Unit
-        cache += (s, dir) -> path
         path
-      })
-    }
+      }
 
     def streamedDocs(s: SparkSession, dir: String): DataFrame =
       graft.streaming.StreamingFacts.facts(s, streamedStore(s, dir),

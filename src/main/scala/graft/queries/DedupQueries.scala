@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators.Dedup
-import graft.sources.Corpus
+import graft.sources.{Corpus, SessionStores}
 
 /** Dedup operator surface (⊕ LLM-pipeline): exact, MinHash-LSH near-dup
   * with Jaccard verification, SimHash fingerprints. Oracles re-express the
@@ -516,101 +516,37 @@ object DedupQueries {
     * intermediate in the system — and it stays persisted
     * (MEMORY_AND_DISK, spillable) for the session so the LSH and
     * jaccard paths share it; size executor storage for roughly the
-    * tokenized corpus, or `invalidate(dir)` after the dedup queries to
-    * release it early.
+    * tokenized corpus, or `SessionStores.release(spark)` at end of job to
+    * release it.
+    *
+    * CACHE CONTRACT: entries are `SessionStores.memo` values keyed by
+    * (session, corpus dir) and live for the SESSION lifetime — a corpus
+    * dir whose contents change mid-session keeps serving the relations
+    * computed at first touch (exactly like a materialized view).
     */
   object DedupStore {
-
-    // CACHE CONTRACT: entries are keyed by (session, corpus dir) and live
-    // for the SESSION lifetime — a corpus dir whose contents change
-    // mid-session keeps serving the relations computed at first touch
-    // (exactly like a materialized view; call `invalidate` after
-    // rewriting a corpus in place). Entries of stopped sessions are
-    // pruned on every access so the map cannot pin dead SparkSessions or
-    // their persisted blocks for the JVM lifetime.
-    private val lock = new Object
-    private var hashCache = Map.empty[(SparkSession, String), DataFrame]
-    private var pairCache = Map.empty[(SparkSession, String), DataFrame]
-    private var clusterCache = Map.empty[(SparkSession, String), DataFrame]
-    private var bloomCache = Map.empty[(SparkSession, String), Array[Byte]]
-    private var candCache = Map.empty[(SparkSession, String), DataFrame]
-
-    private def pruneStopped(): Unit = {
-      hashCache = hashCache.filter(!_._1._1.sparkContext.isStopped)
-      pairCache = pairCache.filter(!_._1._1.sparkContext.isStopped)
-      clusterCache = clusterCache.filter(!_._1._1.sparkContext.isStopped)
-      bloomCache = bloomCache.filter(!_._1._1.sparkContext.isStopped)
-      candCache = candCache.filter(!_._1._1.sparkContext.isStopped)
-      // a stopped session's durable checkpoint files are unreachable
-      // garbage (readable only through its RDD lineage) — sweep them
-      Dedup.releaseStaleCheckpoints()
-    }
-
-    /** Drop the cached relations for one corpus dir (all sessions),
-      * unpersisting their blocks — for corpora rewritten in place.
-      */
-    def invalidate(dir: String): Unit = lock.synchronized {
-      hashCache.filter(_._1._2 == dir).values.foreach(_.unpersist())
-      pairCache.filter(_._1._2 == dir).values.foreach(_.unpersist())
-      clusterCache.filter(_._1._2 == dir).values.foreach(_.unpersist())
-      candCache.filter(_._1._2 == dir).values.foreach(_.unpersist())
-      hashCache = hashCache.filter(_._1._2 != dir)
-      pairCache = pairCache.filter(_._1._2 != dir)
-      clusterCache = clusterCache.filter(_._1._2 != dir)
-      candCache = candCache.filter(_._1._2 != dir)
-      bloomCache = bloomCache.filter(_._1._2 != dir)
-    }
-
-    /** End-of-job release for one session: drop this session's cached
-      * dedup relations FIRST (their lineage references the reliable
-      * checkpoints), then delete the context's recorded checkpoint
-      * directories (`Dedup.releaseCheckpoints`). This is the safe order —
-      * deleting the files under a live cache would leave cached frames
-      * that FileNotFound on any block recompute. Only call when no
-      * checkpointed data of this context (dedup or otherwise) is needed
-      * again — see the scope warning on `Dedup.releaseCheckpoints`.
-      */
-    def release(s: SparkSession): Unit = lock.synchronized {
-      hashCache.filter(_._1._1 eq s).values.foreach(_.unpersist())
-      pairCache.filter(_._1._1 eq s).values.foreach(_.unpersist())
-      clusterCache.filter(_._1._1 eq s).values.foreach(_.unpersist())
-      candCache.filter(_._1._1 eq s).values.foreach(_.unpersist())
-      hashCache = hashCache.filter(e => !(e._1._1 eq s))
-      pairCache = pairCache.filter(e => !(e._1._1 eq s))
-      clusterCache = clusterCache.filter(e => !(e._1._1 eq s))
-      candCache = candCache.filter(e => !(e._1._1 eq s))
-      bloomCache = bloomCache.filter(e => !(e._1._1 eq s))
-      Dedup.releaseCheckpoints(s)
-    }
 
     /** The shared shingle+hash frame (doc_id, sh, hv): the CPU-heavy
       * tokenize→shingle→md5 pass, persisted once per corpus and fed to
       * BOTH the LSH build (`pairs`) and `q_jaccard_pairs`.
       */
-    def hashes(s: SparkSession, dir: String): DataFrame = lock.synchronized {
-      pruneStopped()
-      hashCache.getOrElse((s, dir), {
+    def hashes(s: SparkSession, dir: String): DataFrame =
+      SessionStores.memo(s, "dedup.hashes:" + dir) {
         val h = Dedup.shingleHashFrame(Corpus.documents(s, dir)).persist()
         h.count() // materialize before fan-out (cache does not dedupe within one action)
-        hashCache += (s, dir) -> h
         h
-      })
-    }
+      }
 
     /** The batch decontamination Bloom filter for `dir`'s eval slice,
       * built ONCE per (session, corpus) — the filter is a deterministic
       * function of the eval shingles, so per-execution rebuild jobs
       * (count + distributed aggregation) are pure steady-state waste.
       */
-    def benchBloom(s: SparkSession, dir: String): Array[Byte] = lock.synchronized {
-      pruneStopped()
-      bloomCache.getOrElse((s, dir), {
-        val b = Dedup.benchShingleBloom(
+    def benchBloom(s: SparkSession, dir: String): Array[Byte] =
+      SessionStores.memo(s, "dedup.bloom:" + dir) {
+        Dedup.benchShingleBloom(
           hashes(s, dir).select(col("doc_id"), col("sh")).filter(evalDocPred))
-        bloomCache += (s, dir) -> b
-        b
-      })
-    }
+      }
 
     /** The rare-shingle candidate pair relation (maxDf=10,
       * minSharedRare=2), generated ONCE per (session, corpus) and shared
@@ -618,64 +554,48 @@ object DedupQueries {
       * ~half of either query's cost and is byte-identical between them.
       * Near-dup-pairs-sized (tiny); persisted.
       */
-    def rareCandidates(s: SparkSession, dir: String): DataFrame = lock.synchronized {
-      pruneStopped()
-      candCache.getOrElse((s, dir), {
+    def rareCandidates(s: SparkSession, dir: String): DataFrame =
+      SessionStores.memo(s, "dedup.candidates:" + dir) {
         val c = Dedup.rareShingleCandidates(
           hashes(s, dir).filter(size(col("sh")) > 0),
           maxDf = 10, minSharedRare = 2).persist()
         c.count() // materialize before fan-out
-        candCache += (s, dir) -> c
         c
-      })
-    }
+      }
 
-    def pairs(s: SparkSession, dir: String): DataFrame = lock.synchronized {
-      pruneStopped()
-      pairCache.getOrElse((s, dir), {
+    def pairs(s: SparkSession, dir: String): DataFrame =
+      SessionStores.memo(s, "dedup.pairs:" + dir) {
         val p = Dedup.nearDuplicatesFromHashes(hashes(s, dir)).persist()
         p.count() // materialize in one pass before fan-out to consumers
-        pairCache += (s, dir) -> p
         p
-      })
-    }
+      }
 
-    def clusters(s: SparkSession, dir: String): DataFrame = lock.synchronized {
-      pruneStopped()
-      clusterCache.getOrElse((s, dir), {
+    def clusters(s: SparkSession, dir: String): DataFrame =
+      SessionStores.memo(s, "dedup.clusters:" + dir) {
         val c = Dedup.clusters(pairs(s, dir)).persist()
         c.count()
-        clusterCache += (s, dir) -> c
         c
-      })
-    }
-
-    private var streamedStoreCache = Map.empty[(SparkSession, String), String]
-    private var streamedClusterCache =
-      Map.empty[(SparkSession, String), ((Long, Long), DataFrame)]
+      }
 
     /** Connected components over the streamed store's CURRENT pair
       * relation, memoized per (session, store) and keyed by the store's
       * change witness (`StreamingDedup.pairsVersion`) — an unchanged
       * store serves the persisted cluster frame (the snapshot-cut read a
       * continuously-ingesting stack runs between batches), a new ingest
-      * batch or compaction recomputes. The per-call cost on the common
-      * unchanged path is one scan of the pair store (near-dup-pair-
-      * sized), not the O(log d) pointer-jumping rounds.
+      * batch or compaction recomputes and unpersists the frame it
+      * supersedes. The per-call cost on the common unchanged path is one
+      * scan of the pair store (near-dup-pair-sized), not the O(log d)
+      * pointer-jumping rounds.
       */
-    def streamedClusters(s: SparkSession, storePath: String): DataFrame = lock.synchronized {
-      streamedClusterCache =
-        streamedClusterCache.filter(!_._1._1.sparkContext.isStopped)
+    def streamedClusters(s: SparkSession, storePath: String): DataFrame = {
       val v = graft.streaming.StreamingDedup.pairsVersion(s, storePath)
-      streamedClusterCache.get((s, storePath)) match {
-        case Some((`v`, c)) => c
-        case stale =>
-          stale.foreach(_._2.unpersist())
-          val c = Dedup.clusters(
-            graft.streaming.StreamingDedup.pairs(s, storePath)).persist()
-          c.count()
-          streamedClusterCache += (s, storePath) -> (v, c)
-          c
+      val key = "dedup.stream_clusters:" + storePath + "@"
+      SessionStores.memo(s, key + v) {
+        SessionStores.forget(s, key)
+        val c = Dedup.clusters(
+          graft.streaming.StreamingDedup.pairs(s, storePath)).persist()
+        c.count()
+        c
       }
     }
 
@@ -688,20 +608,16 @@ object DedupQueries {
       * per (session, dir); files live under the `SessionStores` process
       * scope and are deleted by its end-of-process hook.
       */
-    def streamedStorePath(s: SparkSession, dir: String): String = lock.synchronized {
-      pruneStopped()
-      streamedStoreCache = streamedStoreCache.filter(!_._1._1.sparkContext.isStopped)
-      streamedStoreCache.getOrElse((s, dir), {
+    def streamedStorePath(s: SparkSession, dir: String): String =
+      SessionStores.memo(s, "dedup.stream_store:" + dir) {
         val path = graft.sources.SessionStores.scopedPath("graft_streamcur",
           "store_" + graft.sources.SessionStores.tagOf(dir))
         val d = Corpus.documents(s, dir).select("doc_id", "text")
         for (b <- 0 until 3)
           graft.streaming.StreamingDedup.processBatch(
             d.filter(col("doc_id") % 3 === b), b, path)
-        streamedStoreCache += (s, dir) -> path
         path
-      })
-    }
+      }
   }
 
   /** Tokens (stopwords kept) per doc — mirror of `Text.tokenize`. */

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
+import graft.sources.SessionStores
 
 /** Relational capability surface (SURVEY §2.2) over the TPC-H-ish fixtures.
   *
@@ -52,12 +53,8 @@ object RelationalQueries {
       ("l_extendedprice", "l_discount"),
       ("l_discount", "l_tax"))
 
-    private val lock = new Object
-    private var cache = Map.empty[(SparkSession, String), DataFrame]
-
-    def of(s: SparkSession, dir: String): DataFrame = lock.synchronized {
-      cache = cache.filter(!_._1._1.sparkContext.isStopped)
-      cache.getOrElse((s, dir), {
+    def of(s: SparkSession, dir: String): DataFrame =
+      SessionStores.memo(s, "moments:" + dir) {
         val aggs = cols.flatMap { c =>
           Seq(
             count(col(c)).as(s"nn_$c"),
@@ -72,12 +69,9 @@ object RelationalQueries {
         } ++ pairs.zipWithIndex.map { case ((x, y), i) =>
           sum((col(x) * col(y)).cast(DecimalType(18, 4))).cast("double").as(s"sxy_$i")
         } :+ count(lit(1)).as("n")
-        val m = tbl(s, dir, "lineitem").agg(aggs.head, aggs.tail: _*)
+        tbl(s, dir, "lineitem").agg(aggs.head, aggs.tail: _*)
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        cache += (s, dir) -> m
-        m
-      })
-    }
+      }
   }
 
   /** Session-scoped persisted customer-grain RETURNS relation serving
@@ -91,13 +85,9 @@ object RelationalQueries {
     * (session, dir) memo discipline as `LineitemMoments`.
     */
   private[graft] object CustReturns {
-    private val lock = new Object
-    private var cache = Map.empty[(SparkSession, String), DataFrame]
-
-    def of(s: SparkSession, dir: String): DataFrame = lock.synchronized {
-      cache = cache.filter(!_._1._1.sparkContext.isStopped)
-      cache.getOrElse((s, dir), {
-        val m = tbl(s, dir, "lineitem").filter(col("l_returnflag") === "R")
+    def of(s: SparkSession, dir: String): DataFrame =
+      SessionStores.memo(s, "cust_returns:" + dir) {
+        tbl(s, dir, "lineitem").filter(col("l_returnflag") === "R")
           .join(tbl(s, dir, "orders"), col("l_orderkey") === col("o_orderkey"))
           .groupBy(col("o_custkey"))
           .agg(sum((col("l_extendedprice") * (lit(1) - col("l_discount")))
@@ -107,10 +97,7 @@ object RelationalQueries {
             col("c_nationkey") === col("n_nationkey"))
           .select(col("c_custkey"), col("c_name"), col("n_name"), col("ret_dec"))
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        cache += (s, dir) -> m
-        m
-      })
-    }
+      }
   }
 
   /** Session-scoped 25-row (r_name, n_name, rev, cnt) revenue LEAF
@@ -124,15 +111,11 @@ object RelationalQueries {
     * and the DECIMAL leaf partials keep the exactness contract.
     */
   private[graft] object RevenueLeaf {
-    private val lock = new Object
-    private var cache = Map.empty[(SparkSession, String), DataFrame]
-
-    def of(s: SparkSession, dir: String): DataFrame = lock.synchronized {
-      cache = cache.filter(!_._1._1.sparkContext.isStopped)
-      cache.getOrElse((s, dir), {
+    def of(s: SparkSession, dir: String): DataFrame =
+      SessionStores.memo(s, "revenue_leaf:" + dir) {
         Seq("lineitem", "orders", "customer", "nation", "region")
           .foreach(t => tbl(s, dir, t).createOrReplaceTempView(s"graft_$t"))
-        val m = s.sql(
+        s.sql(
           """SELECT r_name, n_name,
             |  SUM(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,4))) AS rev,
             |  COUNT(*) AS cnt
@@ -143,10 +126,7 @@ object RelationalQueries {
             |JOIN graft_region   ON n_regionkey = r_regionkey
             |GROUP BY r_name, n_name""".stripMargin)
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        cache += (s, dir) -> m
-        m
-      })
-    }
+      }
   }
 
   /** Session-scoped shared QUANTILE relation serving the whole exact-
@@ -223,21 +203,15 @@ object RelationalQueries {
     * (session, dir); the EmbedStores pattern.
     */
   private[graft] object GraphStores {
-    private val lock = new Object
-    private var cache = Map.empty[(SparkSession, String), String]
-
-    def streamedStore(s: SparkSession, dir: String): String = lock.synchronized {
-      cache = cache.filter(!_._1._1.sparkContext.isStopped)
-      cache.getOrElse((s, dir), {
+    def streamedStore(s: SparkSession, dir: String): String =
+      SessionStores.memo(s, "stream_graph:" + dir) {
         val path = graft.sources.SessionStores.scopedPath("graft_graphstream",
           "store_" + graft.sources.SessionStores.tagOf(dir))
         for (b <- 0 until 3)
           graft.streaming.StreamingGraph.processBatch(
             nationEdgeContribs(s, dir, b), b.toLong, path): Unit
-        cache += (s, dir) -> path
         path
-      })
-    }
+      }
   }
 
   /** The nation trade graph's edge relation (supplier nation →

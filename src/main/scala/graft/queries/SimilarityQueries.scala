@@ -1,7 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import graft.sources.VectorStore
+import graft.sources.{SessionStores, VectorStore}
 
 /** Embedding similarity-search surface (⊕ LLM-pipeline) over
   * `embeddings.parquet`. Every query serves from the persisted
@@ -420,12 +420,8 @@ object SimilarityQueries {
     * streamed twins serve from). Built once per (session, dir).
     */
   private[graft] object EmbedStores {
-    private val lock = new Object
-    private var cache = Map.empty[(SparkSession, String), String]
-
-    def streamedStore(s: SparkSession, dir: String): String = lock.synchronized {
-      cache = cache.filter(!_._1._1.sparkContext.isStopped)
-      cache.getOrElse((s, dir), {
+    def streamedStore(s: SparkSession, dir: String): String =
+      SessionStores.memo(s, "stream_embed:" + dir) {
         import org.apache.spark.sql.functions.col
         val path = graft.sources.SessionStores.scopedPath("graft_embstream",
           "store_" + graft.sources.SessionStores.tagOf(dir))
@@ -433,10 +429,8 @@ object SimilarityQueries {
         for (b <- 0 until 3)
           graft.streaming.StreamingEmbed.processBatch(
             emb.filter(col("vec_id") % 3 === b), b.toLong, path): Unit
-        cache += (s, dir) -> path
         path
-      })
-    }
+      }
   }
 
   /** Session-scoped WHITENED-COORDINATE store: fit the 4-component

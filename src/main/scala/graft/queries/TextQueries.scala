@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.Text
 import graft.operators.{BooleanQuery, InvertedIndex}
-import graft.sources.Corpus
+import graft.sources.{Corpus, SessionStores}
 
 /** Inverted-index + text-pipeline queries with their DuckDB oracles.
   *
@@ -133,12 +133,8 @@ object TextQueries {
     * per-bucket single files), then served read-only.
     */
   private[graft] object StreamedIndex {
-    private val lock = new Object
-    private var cache = Map.empty[(SparkSession, String), String]
-
-    def table(s: SparkSession, dir: String): String = lock.synchronized {
-      cache = cache.filter(!_._1._1.sparkContext.isStopped)
-      cache.getOrElse((s, dir), {
+    def table(s: SparkSession, dir: String): String =
+      SessionStores.memo(s, "stream_index:" + dir) {
         val tag = graft.sources.SessionStores.tagOf(dir)
         val path = graft.sources.SessionStores.scopedPath("graft_stridx", "store_" + tag)
         val tbl = s"graft_stridx_$tag"
@@ -148,10 +144,8 @@ object TextQueries {
             InvertedIndex.postings(d.filter(col("doc_id") % 3 === b)),
             b.toLong, tbl, path, buckets = 32): Unit
         graft.streaming.StreamingIndex.compact(s, tbl, path, buckets = 32)
-        cache += (s, dir) -> tbl
         tbl
-      })
-    }
+      }
   }
 
   /** Session-scoped StreamingFuzzy store holding `dir`'s urls ingested
@@ -159,12 +153,8 @@ object TextQueries {
     * the EmbedStores pattern). Built once per (session, dir).
     */
   private[graft] object FuzzyStores {
-    private val lock = new Object
-    private var cache = Map.empty[(SparkSession, String), String]
-
-    def streamedStore(s: SparkSession, dir: String): String = lock.synchronized {
-      cache = cache.filter(!_._1._1.sparkContext.isStopped)
-      cache.getOrElse((s, dir), {
+    def streamedStore(s: SparkSession, dir: String): String =
+      SessionStores.memo(s, "stream_fuzzy:" + dir) {
         val path = graft.sources.SessionStores.scopedPath("graft_fuzzystream",
           "store_" + graft.sources.SessionStores.tagOf(dir))
         val d = docs(s, dir)
@@ -172,10 +162,8 @@ object TextQueries {
           graft.streaming.StreamingFuzzy.processBatch(
             d.filter(col("doc_id") % 3 === b).select("url"),
             b.toLong, path): Unit
-        cache += (s, dir) -> path
         path
-      })
-    }
+      }
 
     /** The word co-occurrence edge relation for TextRank, persisted
       * once per (process, corpus): symmetric count-weighted
@@ -224,19 +212,16 @@ object TextQueries {
       * `processBatch`) — the `GraphStores.streamedStore` pattern at
       * term keys. Built once per (session, dir).
       */
-    def streamedCoocStore(s: SparkSession, dir: String): String = lock.synchronized {
-      coocCache = coocCache.filter(!_._1._1.sparkContext.isStopped)
-      coocCache.getOrElse((s, dir), {
+    def streamedCoocStore(s: SparkSession, dir: String): String =
+      SessionStores.memo(s, "stream_cooc:" + dir) {
         val path = graft.sources.SessionStores.scopedPath("graft_graphstream",
           "cooc_store_" + graft.sources.SessionStores.tagOf(dir))
         for (b <- 0 until 3)
           graft.streaming.StreamingGraph.processBatch(
             coocContribs(s, dir, b), b.toLong, path,
             keyType = org.apache.spark.sql.types.StringType): Unit
-        coocCache += (s, dir) -> path
         path
-      })
-    }
+      }
 
     /** String-keyed StreamingGraph store accumulating the DOC-graph
       * edge deltas: the ED-1 fuzzy pair relation sliced three ways on
@@ -244,9 +229,8 @@ object TextQueries {
       * weights are additive), exploded both directions. Feeds the
       * streamed twin of the SHUFFLE-path q_pagerank_docs.
       */
-    def streamedDocGraphStore(s: SparkSession, dir: String): String = lock.synchronized {
-      docGraphCache = docGraphCache.filter(!_._1._1.sparkContext.isStopped)
-      docGraphCache.getOrElse((s, dir), {
+    def streamedDocGraphStore(s: SparkSession, dir: String): String =
+      SessionStores.memo(s, "stream_docgraph:" + dir) {
         val path = graft.sources.SessionStores.scopedPath("graft_graphstream",
           "docgraph_store_" + graft.sources.SessionStores.tagOf(dir))
         val pairs = batchPairs(s, dir)
@@ -260,12 +244,8 @@ object TextQueries {
             contribs, b.toLong, path,
             keyType = org.apache.spark.sql.types.StringType): Unit
         }
-        docGraphCache += (s, dir) -> path
         path
-      })
-    }
-    private var coocCache = Map.empty[(SparkSession, String), String]
-    private var docGraphCache = Map.empty[(SparkSession, String), String]
+      }
 
     /** The BATCH corpus-wide ED-1 pair relation, persisted once per
       * (process, corpus) — the `DedupStore.pairs` discipline applied
@@ -722,12 +702,8 @@ object TextQueries {
     * any doc partition.
     */
   private[graft] object TermDfStores {
-    private val lock = new Object
-    private var cache = Map.empty[(SparkSession, String), String]
-
-    def store(s: SparkSession, dir: String): String = lock.synchronized {
-      cache = cache.filter(!_._1._1.sparkContext.isStopped)
-      cache.getOrElse((s, dir), {
+    def store(s: SparkSession, dir: String): String =
+      SessionStores.memo(s, "stream_termdf:" + dir) {
         val path = graft.sources.SessionStores.scopedPath("graft_graphstream",
           "termdf_store_" + graft.sources.SessionStores.tagOf(dir))
         for (b <- 0 until 3) {
@@ -738,10 +714,8 @@ object TextQueries {
           graft.streaming.StreamingGraph.processBatch(contribs, b.toLong, path,
             keyType = org.apache.spark.sql.types.StringType): Unit
         }
-        cache += (s, dir) -> path
         path
-      })
-    }
+      }
   }
 
   /** q_pagerank_docs oracle, shared verbatim by the streamed twin

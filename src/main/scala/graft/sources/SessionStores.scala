@@ -5,9 +5,22 @@ import org.apache.spark.sql.functions.col
 
 /** Shared scaffolding for the session-scoped derived stores (the
   * persisted index, the co-located bucketed tables, the z-ordered
-  * rewrite): ONE per-process scope id, the build-once-per-(process,
-  * target) discipline, the metastore staleness guard for catalog
-  * tables, and end-of-process cleanup.
+  * rewrite, the per-session memo relations): ONE per-process scope id,
+  * the build-once disciplines, the metastore staleness guard for
+  * catalog tables, and end-of-process cleanup.
+  *
+  * LIFETIMES — the one rule for choosing a backing:
+  *   - file-backed stores (`servedPath` / `servedTable`) live for the
+  *     PROCESS: built once per target path or table, served to every
+  *     session, deleted by the shutdown hook below;
+  *   - `memo` entries live for the SESSION: built once per
+  *     (session, key), evicted by the first miss after that session's
+  *     context stops, and released early (persisted blocks
+  *     unpersisted) by `release`.
+  * A relation that feeds `RangeRank` must stay parquet-backed (a
+  * `servedPath` store), never a memoized `.persist()`: an
+  * `InMemoryRelation` under its range exchange defeats exchange reuse,
+  * and `RangeRank` refuses cached-lineage input (see `PriceQuantiles`).
   *
   * PROCESS SCOPING: store files live under a per-process UUID directory
   * so two concurrent JVMs (each overwriting on build) can never race
@@ -107,5 +120,67 @@ private[graft] object SessionStores {
       }
     }
     spark.read.parquet(path)
+  }
+
+  private val memos =
+    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), AnyRef]()
+
+  /** The value `build` returns, computed once per (`s`, `key`) and served
+    * for the session's lifetime — a materialized view: a source that
+    * changes mid-session keeps serving the value of the first touch.
+    * `key` names the store as well as its input (`"dedup.pairs:" + dir`),
+    * since every store shares this one map. A hit is one lock-free read;
+    * a miss takes the per-key lock, so concurrent first calls build once
+    * while builds of different keys may nest (`pairs` inside `clusters`).
+    * A miss also evicts the entries of stopped sessions, so the map
+    * cannot pin dead sessions or their blocks, and sweeps the checkpoint
+    * files those sessions left behind.
+    */
+  def memo[T](s: SparkSession, key: String)(build: => T): T = {
+    val k = (s, key)
+    val hit = memos.get(k)
+    if (hit != null) hit.asInstanceOf[T]
+    else lockFor(key).synchronized {
+      val again = memos.get(k)
+      if (again != null) again.asInstanceOf[T]
+      else {
+        memos.keySet.removeIf(_._1.sparkContext.isStopped): Unit
+        graft.operators.Dedup.releaseStaleCheckpoints()
+        val v = build
+        memos.put(k, v.asInstanceOf[AnyRef])
+        v
+      }
+    }
+  }
+
+  /** Drop `s`'s memo entries whose key starts with `keyPrefix`,
+    * unpersisting every memoized Dataset among them.
+    */
+  private[graft] def forget(s: SparkSession, keyPrefix: String): Unit = {
+    val it = memos.entrySet.iterator
+    while (it.hasNext) {
+      val e = it.next()
+      if ((e.getKey._1 eq s) && e.getKey._2.startsWith(keyPrefix)) {
+        e.getValue match {
+          case ds: org.apache.spark.sql.Dataset[_] => ds.unpersist(): Unit
+          case _ =>
+        }
+        it.remove()
+      }
+    }
+  }
+
+  /** End-of-job release for one session: drop its memo entries FIRST,
+    * unpersisting their DataFrames (their lineage may reference reliable
+    * checkpoints), then delete the context's recorded checkpoint
+    * directories (`Dedup.releaseCheckpoints`). This is the safe order —
+    * deleting the files under a live cache would leave cached frames
+    * that FileNotFound on any block recompute. Only call when no
+    * checkpointed data of this context is needed again — see the scope
+    * warning on `Dedup.releaseCheckpoints`.
+    */
+  def release(s: SparkSession): Unit = {
+    forget(s, "")
+    graft.operators.Dedup.releaseCheckpoints(s)
   }
 }

@@ -225,6 +225,10 @@ object StreamingIndex {
               path: String, buckets: Int = 32): Unit = {
     StoreMaintenance.assertIngestStopped(spark.sparkContext.hadoopConfiguration, path)
     val tmpTable = tableName + "__compacting"
+    // `sinkToIndex` appends through the stream's own session, so a session
+    // that read the table before the last batches keeps a stale file list;
+    // rewriting from it would silently drop those batches
+    spark.catalog.refreshTable(tableName)
     val compacted = spark.table(tableName).dropDuplicates("term", "doc_id")
     val schemaDdl = compacted.schema.toDDL
     graft.sources.Sinks.writeIndex(compacted, tmpTable, path + "__compacting", buckets)

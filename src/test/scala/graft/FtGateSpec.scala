@@ -70,8 +70,8 @@ class FtGateSpec extends AnyFunSuite {
     val docs = graft.sources.Corpus.documents(spark, "/root/testdata/sf0.001")
     val toks = graft.functions.Text.tokenize(col("text"))
     val s = array_join(toks, " ")
-    val d = 192
-    val ns = Seq(2, 3)
+    val d = graft.queries.AnalysisQueries.FtD
+    val ns = graft.queries.AnalysisQueries.FtNs
     val counts = ns.map(n => graft.plans.GramBuckets.gramBuckets(s, n, d))
       .reduce((a, b) => zip_with(a, b, _ + _))
     val ng = ns.map(n => greatest(length(s) - (n - 1), lit(0))).reduce(_ + _)

@@ -41,4 +41,74 @@ class SessionStoresSpec extends AnyFunSuite {
     }.as[Long].head()
     assert(va === 1L && vb === 2L)
   }
+
+  private val S = graft.sources.SessionStores
+
+  test("memo builds once under 4 concurrent first calls on one (session, key)") {
+    val key = "test.concurrent:" + System.nanoTime()
+    val builds = new java.util.concurrent.atomic.AtomicInteger(0)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
+    try {
+      val futures = (1 to 4).map(_ => pool.submit(
+        new java.util.concurrent.Callable[String] {
+          def call(): String = S.memo(spark, key) {
+            builds.incrementAndGet()
+            Thread.sleep(200) // widen the race window
+            "built"
+          }
+        }))
+      assert(futures.map(_.get()).forall(_ === "built"))
+      assert(builds.get() === 1, s"memo built ${builds.get()} times")
+    } finally pool.shutdown()
+  }
+
+  test("memo keeps one entry per session: newSession() builds its own") {
+    val key = "test.per_session:" + System.nanoTime()
+    val other = spark.newSession()
+    val builds = new java.util.concurrent.atomic.AtomicInteger(0)
+    def get(s: org.apache.spark.sql.SparkSession): Int =
+      S.memo(s, key)(builds.incrementAndGet())
+    assert(get(spark) === 1)
+    assert(get(other) === 2)
+    assert(get(spark) === 1 && get(other) === 2)
+    assert(builds.get() === 2)
+  }
+
+  test("nested memo calls on different keys do not deadlock") {
+    // the DedupStore shape: clusters → pairs → hashes, each its own key,
+    // entered concurrently from the outer and the inner end
+    val tag = System.nanoTime().toString
+    def inner(): Int = S.memo(spark, "test.inner:" + tag) { Thread.sleep(100); 1 }
+    def middle(): Int = S.memo(spark, "test.middle:" + tag) { Thread.sleep(100); inner() + 1 }
+    def outer(): Int = S.memo(spark, "test.outer:" + tag) { middle() + 1 }
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
+    try {
+      val calls: Seq[() => Int] = Seq(() => outer(), () => inner(), () => middle(), () => outer())
+      val futures = calls.map(f => pool.submit(
+        new java.util.concurrent.Callable[Int] { def call(): Int = f() }))
+      val got = futures.map(_.get(60, java.util.concurrent.TimeUnit.SECONDS))
+      assert(got === Seq(3, 1, 2, 3))
+    } finally pool.shutdownNow()
+  }
+
+  test("release unpersists a session's memoized DataFrames and the next call rebuilds") {
+    val s = spark.newSession()
+    val key = "test.release:" + System.nanoTime()
+    val builds = new java.util.concurrent.atomic.AtomicInteger(0)
+    def get(): org.apache.spark.sql.DataFrame = S.memo(s, key) {
+      builds.incrementAndGet()
+      val df = s.range(10).toDF("v").persist()
+      df.count()
+      df
+    }
+    val first = get()
+    assert(first.storageLevel !== org.apache.spark.storage.StorageLevel.NONE)
+    assert(get() eq first)
+    S.release(s)
+    assert(first.storageLevel === org.apache.spark.storage.StorageLevel.NONE)
+    val second = get()
+    assert(builds.get() === 2)
+    assert(!(second eq first) && second.count() === 10L)
+    S.release(s)
+  }
 }

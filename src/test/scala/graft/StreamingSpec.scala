@@ -432,6 +432,31 @@ class StreamingSpec extends AnyFunSuite {
     assert(plan.contains("SelectedBucketsCount: 1 out of 4"), s"no pruning:\n$plan")
   }
 
+  test("compact after a stale read keeps every streamed batch") {
+    // the stream appends through its own session: a session that read
+    // the table after batch 0 holds a file list without batch 1, and
+    // compact must not rewrite the table from that list
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val dir = java.nio.file.Files.createTempDirectory("graft_compact_stale").toString
+    val (tbl, path) = ("t_compact_stale_idx", s"$dir/idx")
+    val input = MemoryStream[(Long, String, String, Timestamp)]
+    val q = graft.streaming.StreamingIndex.sinkToIndex(
+      graft.streaming.StreamingIndex
+        .postingsStream(input.toDF().toDF("doc_id", "url", "text", "ingest_t")),
+      tbl, path, s"$dir/ckpt", buckets = 4)
+    try {
+      input.addData((1L, "u1", "the cat sat", ts("10:00")))
+      q.processAllAvailable()
+      assert(spark.table(tbl).count() === 2) // cat,sat
+      input.addData((2L, "u2", "cat and dog", ts("10:05")))
+      q.processAllAvailable()
+    } finally q.stop()
+    graft.streaming.StreamingIndex.compact(spark, tbl, path, buckets = 4)
+    assert(spark.table(tbl).count() === 4) // batch 1's cat,dog survive
+    assert(spark.table(tbl).filter($"doc_id" === 2L).count() === 2)
+  }
+
   test("fresh-session restart: appendBatch over an existing on-disk index must not wipe it (no-CTAS regression)") {
     import spark.implicits._
     import org.apache.hadoop.fs.Path
@@ -957,6 +982,8 @@ class StreamingSpec extends AnyFunSuite {
     assert(graft.streaming.StreamingDedup.processBatch(
       Seq((1L, other.mkString(" "))).toDF("doc_id", "text"), 1L, store))
     assert(graft.queries.DedupQueries.DedupStore.streamedClusters(spark, store).isEmpty)
+    // the superseded frame is released, not left pinned in storage
+    assert(c1.storageLevel === org.apache.spark.storage.StorageLevel.NONE)
   }
 
   test("compact guard: a PENDING sink startup already refuses compaction") {
