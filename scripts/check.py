@@ -8,7 +8,7 @@ DuckDB over the same sf tables and compares: row count, schema (column names),
 and exact cell values after sorting columns by name and rows by all columns.
 Dev tool only — not part of the engine.
 """
-import json, sys, glob, os
+import json, sys, glob, os, tempfile
 import duckdb
 import pandas as pd
 import numpy as np
@@ -16,7 +16,9 @@ import numpy as np
 sf = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 out = sys.argv[2] if len(sys.argv) > 2 else "/tmp/verify_out"
 
-con = duckdb.connect()
+# Let operators that outgrow DuckDB's memory limit spill to disk instead of
+# failing with "Out of Memory" (the doc-graph fixpoint oracles at sf0.01).
+con = duckdb.connect(config={"temp_directory": os.path.join(tempfile.gettempdir(), "graft_check_duckdb")})
 for f in glob.glob(f"{sf}/*.parquet"):
     name = os.path.basename(f).replace(".parquet", "")
     con.execute(f"CREATE VIEW {name} AS SELECT * FROM read_parquet('{f}')")

@@ -233,7 +233,7 @@ object Bench {
     storePart("stream_graph_docs") {
       SparkEntry.queries("q_textrank_streamed")(spark, sfDir).count()
       SparkEntry.queries("q_pagerank_docs_streamed")(spark, sfDir).count(): Unit }
-    // r14: the StreamingEvents fact store serving the six behavioral
+    // r14: the event fact store (StreamingFacts) serving the six behavioral
     // *_streamed twins — three idempotent micro-batches, build-once
     storePart("stream_events") {
       graft.queries.AnalysisQueries.EventStores.streamedEvents(spark, sfDir).count(): Unit }

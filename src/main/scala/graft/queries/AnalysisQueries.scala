@@ -70,27 +70,39 @@ object AnalysisQueries {
       }
   }
 
-  /** Session-scoped StreamingEvents fact store: `dir`'s events
-    * ingested incrementally (three deterministic event_id-mod-3
-    * micro-batches through `processBatch` — the EmbedStores pattern);
-    * facts are idempotent by event_id, so the accumulated relation
-    * equals `Tables.events` under any batching. Built once per
-    * (session, dir); serves every `*_streamed` behavioral twin.
+  /** Session-scoped event fact store (`StreamingFacts` keyed by
+    * `event_id`): `dir`'s events ingested incrementally (three
+    * deterministic event_id-mod-3 micro-batches through `processBatch` —
+    * the EmbedStores pattern); facts are idempotent by event_id, so the
+    * accumulated relation equals `Tables.events` under any batching.
+    * Built once per (session, dir); serves every `*_streamed`
+    * behavioral twin.
     */
   private[graft] object EventStores {
+    import org.apache.spark.sql.types._
+    val Key = "event_id"
+    /** The `Tables.events` shape. */
+    val Schema: StructType = StructType(Seq(
+      StructField("event_id", LongType),
+      StructField("t", TimestampType),
+      StructField("user_id", LongType),
+      StructField("event_type", StringType),
+      StructField("value", DoubleType),
+      StructField("props", StringType)))
+
     def streamedStore(s: SparkSession, dir: String): String =
       SessionStores.memo(s, "stream_events:" + dir) {
         val path = graft.sources.SessionStores.scopedPath("graft_eventstream",
           "store_" + graft.sources.SessionStores.tagOf(dir))
         val ev = Tables.events(s, dir)
         for (b <- 0 until 3)
-          graft.streaming.StreamingEvents.processBatch(
-            ev.filter(col("event_id") % 3 === b), b.toLong, path): Unit
+          graft.streaming.StreamingFacts.processBatch(
+            ev.filter(col("event_id") % 3 === b), b.toLong, path, Key, Schema): Unit
         path
       }
 
     def streamedEvents(s: SparkSession, dir: String): DataFrame =
-      graft.streaming.StreamingEvents.events(s, streamedStore(s, dir))
+      graft.streaming.StreamingFacts.facts(s, streamedStore(s, dir), Key, Schema)
   }
 
   /** q_schema_evolution's two-generation parquet store: generation 1
@@ -1496,7 +1508,7 @@ object AnalysisQueries {
   /** The behavioral-analytics family parameterized over the event
     * relation — each body is shared verbatim by the batch query (over
     * `Tables.events`) and its streamed twin (over the accumulated
-    * `StreamingEvents` store), so the twins hash-check under the batch
+    * event fact store, `EventStores`), so the twins hash-check under the batch
     * oracles by construction.
     */
   /** q_session_window's body — the NATIVE session_window aggregation,
@@ -1858,8 +1870,8 @@ object AnalysisQueries {
     "q_quality_gate" -> ((s, dir) => qualityGateOf(docs(s, dir))),
 
     // Streamed twin over the accumulated DOC-fact store (immutable
-    // facts idempotent by doc_id — StreamingFacts, the StreamingEvents
-    // contract generalized to the corpus): identical batch body, batch
+    // facts idempotent by doc_id — StreamingFacts, the event store's
+    // contract applied to the corpus): identical batch body, batch
     // oracle verbatim.
     "q_quality_gate_streamed" -> ((s, dir) =>
       qualityGateOf(DocStores.streamedDocs(s, dir))),
@@ -2324,7 +2336,7 @@ object AnalysisQueries {
       sessionWindowOf(Tables.events(s, dir))),
 
     // Streamed twin (r16 VERDICT ask #8): the NATIVE session_window
-    // over the ACCUMULATED StreamingEvents fact store — the same
+    // over the ACCUMULATED event fact store (`EventStores`) — the same
     // operator body under the batch oracle (the store's canonical
     // events equal the batch relation; EventStreamSpec proves it, this
     // row hash-checks the native operator over it). The live
@@ -2375,7 +2387,7 @@ object AnalysisQueries {
     "q_scd2" -> ((s, dir) => scd2Of(Tables.events(s, dir))),
 
     // Streamed twins of the behavioral family: the IDENTICAL shared
-    // bodies over the accumulated StreamingEvents fact store (facts
+    // bodies over the accumulated event fact store (facts
     // idempotent by event_id => the store equals the batch relation
     // under any batching), each hash-checked under the batch query's
     // verbatim oracle.

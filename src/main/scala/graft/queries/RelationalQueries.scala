@@ -1880,7 +1880,7 @@ object RelationalQueries {
     "q_user_lag" -> ((s, dir) =>
       userLagOf(graft.sources.Tables.events(s, dir))),
 
-    // Streamed twin over the accumulated StreamingEvents fact store
+    // Streamed twin over the accumulated event fact store
     // (facts idempotent by event_id — AnalysisQueries.EventStores) —
     // same shared body, batch oracle verbatim.
     "q_user_lag_streamed" -> ((s, dir) =>

@@ -1,15 +1,42 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.functions.{coalesce, col, count, lit, max}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.StructType
 
-/** Shared machinery of the streaming stores (`StreamingIndex`,
-  * `StreamingDedup`, `StreamingEmbed`): the per-batch commit-marker
-  * replay gate, the compact/recover rename-swap discipline for
-  * plain-parquet sub-stores, and the pause-compact-resume entry point
-  * (`compactAll`) with its ingest-stopped enforcement. One
-  * implementation so the three stores' replay and crash contracts
-  * cannot silently drift apart.
+/** The streaming-store kernel: every store under `graft.streaming` is an
+  * append → merge → dedupe store built from these parts, so the replay
+  * and crash contracts are stated and implemented once.
+  *
+  *   - MARKER GATE. Each micro-batch runs at most once per (store,
+  *     commit scope, batchId): `runOnce` skips a batch whose marker
+  *     `<store>/_graft_commits/<scope>/<batchId>` exists and writes the
+  *     marker AFTER the batch's appends complete. Delivery is
+  *     at-least-once — a crash between the append and the marker replays
+  *     that one batch (the residual window), which each store's declared
+  *     collapse absorbs. The scope is a digest of the filesystem-qualified
+  *     checkpoint location (`commitScope`), because batchIds restart at 0
+  *     in every checkpoint lineage.
+  *   - REPLAY NOOP. `sink` is the one `foreachBatch` sink: a batch the
+  *     gate skipped still executes through the noop sink, so any stateful
+  *     upstream operator commits its state store.
+  *   - DECLARED COLLAPSE. A `SubStore` names a parquet sub-directory, its
+  *     schema and its collapse rule. Accessors read through `read` and
+  *     `compactStore` rewrites through the same rule, so the rows a store
+  *     serves are the same before and after a compact.
+  *   - RENAME-SWAP CRASH WINDOWS. A compact writes each collapsed
+  *     sub-store to `<sub>__compacting`, renames the live dir to
+  *     `<sub>__pre_compact`, installs the rewrite and drops the old copy
+  *     (`swapInto`). At every crash point either the originals or the
+  *     complete rewrite is on disk; `recoverSub` finishes or unwinds the
+  *     swap, and compaction recovers first. Compaction then clears the
+  *     marker tree (a fresh dedup baseline) and refuses to run while an
+  *     ingest query over the store is active (`assertIngestStopped`).
+  *
+  * `StreamingIndex` and `StreamingSketch` use the gate, the sink and the
+  * text-file helpers but keep their own compaction: the index rebuilds
+  * a bucketed catalog table, the sketches merge their serialized parts.
   */
 object StoreMaintenance {
 
@@ -75,9 +102,9 @@ object StoreMaintenance {
   /** Swap a pending token for its started query: the query is added
     * BEFORE the token is removed, so the guard never sees a gap.
     */
-  private[graft] def completeIngest(conf: org.apache.hadoop.conf.Configuration,
-                                    storePath: String, token: PendingIngest,
-                                    query: org.apache.spark.sql.streaming.StreamingQuery): Unit = {
+  private def completeIngest(conf: org.apache.hadoop.conf.Configuration,
+                             storePath: String, token: PendingIngest,
+                             query: StreamingQuery): Unit = {
     val qs = activeIngest.get(qualified(storePath, conf))
     if (qs != null) { qs.add(query); qs.remove(token): Unit }
   }
@@ -90,12 +117,11 @@ object StoreMaintenance {
   }
 
   /** Start a streaming sink with the begin/complete/abort registration
-    * bracket — the one spelling all three stores share.
+    * bracket.
     */
-  private[graft] def registeredStart(conf: org.apache.hadoop.conf.Configuration,
-                                     storePath: String)(
-      start: => org.apache.spark.sql.streaming.StreamingQuery)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
+  private def registeredStart(conf: org.apache.hadoop.conf.Configuration,
+                              storePath: String)(
+      start: => StreamingQuery): StreamingQuery = {
     val token = beginIngest(conf, storePath)
     val query =
       try start
@@ -103,6 +129,39 @@ object StoreMaintenance {
     completeIngest(conf, storePath, token, query)
     query
   }
+
+  /** The one store sink: append-mode `foreachBatch` over `input`, each
+    * micro-batch handed to `process(batch, batchId, scope)` with this
+    * checkpoint's commit scope. `process` returns false when the marker
+    * gate skipped the batch, which then executes through the noop sink.
+    */
+  private[graft] def sink(input: DataFrame, storePath: String, checkpointDir: String)(
+      process: (DataFrame, Long, String) => Boolean): StreamingQuery = {
+    val conf = input.sparkSession.sparkContext.hadoopConfiguration
+    val scope = commitScope(checkpointDir, conf)
+    registeredStart(conf, storePath) {
+      input.writeStream
+        .outputMode("append")
+        .option("checkpointLocation", checkpointDir)
+        .foreachBatch { (batch: DataFrame, batchId: Long) =>
+          if (!process(batch, batchId, scope)) noopExecute(batch)
+        }
+        .start()
+    }
+  }
+
+  /** Marker namespace for one checkpoint lineage. The path is
+    * filesystem-QUALIFIED before hashing: equivalent spellings of the
+    * same directory (relative vs absolute, trailing slash,
+    * scheme-qualified) across a restart must land in the SAME marker
+    * scope, or a re-delivered batch would be re-appended — the exact
+    * duplication the markers exist to prevent.
+    */
+  private[graft] def commitScope(checkpointDir: String,
+                                 hadoopConf: org.apache.hadoop.conf.Configuration): String =
+    java.security.MessageDigest.getInstance("MD5")
+      .digest(qualified(checkpointDir, hadoopConf).getBytes("UTF-8"))
+      .map("%02x".format(_)).mkString.take(12)
 
   /** Throw unless EVERY registered ingest query over `storePath` has
     * stopped (a PENDING startup token counts as active). Stopped entries
@@ -162,7 +221,7 @@ object StoreMaintenance {
         StreamingIndex.compact(spark, tbl, path, buckets)
     }
     dedupStores.foreach { s =>
-      StreamingDedup.recoverStore(spark, s) // compactSub also self-heals; explicit for symmetry
+      StreamingDedup.recoverStore(spark, s) // compactSubWith also self-heals; explicit for symmetry
       StreamingDedup.compactStore(spark, s)
     }
     embedStores.foreach { s =>
@@ -188,6 +247,9 @@ object StoreMaintenance {
   private[graft] def nextStamp(): Long =
     lastStamp.updateAndGet(prev => math.max(prev + 1, System.currentTimeMillis()))
 
+  /** The marker tree: `<scope>/<batchId>` files under this directory. */
+  private[graft] def commitsDir(store: String): String = s"$store/_graft_commits"
+
   /** Run `body` exactly once per (store, scope, batchId): if the commit
     * marker exists the body is SKIPPED (a replayed batch) and false is
     * returned; otherwise the body runs, the marker is written AFTER it
@@ -197,7 +259,7 @@ object StoreMaintenance {
     */
   private[graft] def runOnce(hadoopConf: org.apache.hadoop.conf.Configuration, store: String,
               scope: String, batchId: Long)(body: => Unit): Boolean = {
-    val marker = new org.apache.hadoop.fs.Path(s"$store/_graft_commits/$scope/$batchId")
+    val marker = new org.apache.hadoop.fs.Path(s"${commitsDir(store)}/$scope/$batchId")
     val fs = marker.getFileSystem(hadoopConf)
     if (fs.exists(marker)) false
     else {
@@ -213,7 +275,7 @@ object StoreMaintenance {
     * STATE_STORE_COMMIT_VALIDATION_FAILED. The noop sink drives the
     * plan — state advances, nothing is written.
     */
-  private[graft] def noopExecute(batch: DataFrame): Unit =
+  private def noopExecute(batch: DataFrame): Unit =
     batch.write.format("noop").mode("overwrite").save()
 
   private[graft] def readOrEmpty(spark: SparkSession, path: String, schema: StructType): DataFrame = {
@@ -223,10 +285,94 @@ object StoreMaintenance {
     else spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
   }
 
-  /** Collapse a parquet sub-store to key-distinct rows: dedup, rewrite
-    * to a side directory, swap via two renames — a crash at any point
-    * leaves every row recoverable on disk (`recoverSub` finishes or
-    * unwinds), never a half-compacted live store.
+  /** One parquet sub-store of a store: the directory `<store>/<name>`,
+    * its on-disk schema and the collapse rule that turns the raw
+    * appended rows (replay residuals, superseded versions) into the
+    * served relation. Built per call when the schema or rule depends on
+    * store state (a persisted key type, the current tombstones).
+    */
+  private[graft] final case class SubStore(name: String, schema: StructType)(
+      val collapse: DataFrame => DataFrame) {
+    def path(store: String): String = s"$store/$name"
+    def raw(spark: SparkSession, store: String): DataFrame =
+      readOrEmpty(spark, path(store), schema)
+    def read(spark: SparkSession, store: String): DataFrame = collapse(raw(spark, store))
+  }
+
+  /** Compact every sub-store through its declared collapse, in the
+    * given order, then clear the commit markers. Refuses while an ingest
+    * query over the store is active.
+    */
+  private[graft] def compactStore(spark: SparkSession, storePath: String,
+                                  subs: Seq[SubStore]): Unit = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    assertIngestStopped(conf, storePath)
+    subs.foreach(s => compactSubWith(spark, s.path(storePath), s.schema, s.collapse))
+    val commits = new org.apache.hadoop.fs.Path(commitsDir(storePath))
+    commits.getFileSystem(conf).delete(commits, true): Unit
+  }
+
+  /** Finish or unwind a compact interrupted at any crash point, for
+    * every sub-store — safe to run unconditionally before restarting
+    * ingest.
+    */
+  private[graft] def recoverStore(spark: SparkSession, storePath: String,
+                                  subs: Seq[SubStore]): Unit =
+    subs.foreach(s => recoverSub(spark, s.path(storePath)))
+
+  /** Change witness of a sub-store for memos of relations DERIVED from
+    * it: (raw row count, latest `ingest_ms` stamp) over the un-collapsed
+    * rows. Every append grows the count; a compact only removes rows, so
+    * it cannot keep both the count and the max stamp. Null stamps rank
+    * as `Long.MinValue`.
+    */
+  private[graft] def version(spark: SparkSession, storePath: String,
+                             sub: SubStore): (Long, Long) = {
+    val r = sub.raw(spark, storePath)
+      .agg(count(lit(1)), max(coalesce(col("ingest_ms"), lit(Long.MinValue))))
+      .head()
+    (r.getLong(0), if (r.isNullAt(1)) Long.MinValue else r.getLong(1))
+  }
+
+  /** UTF-8 content of a small sidecar file, or None if it is absent. */
+  private[graft] def readText(conf: org.apache.hadoop.conf.Configuration,
+                              path: String): Option[String] = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val fs = p.getFileSystem(conf)
+    if (!fs.exists(p)) None
+    else {
+      val buf = new Array[Byte](fs.getFileStatus(p).getLen.toInt)
+      val in = fs.open(p)
+      try in.readFully(0L, buf) finally in.close()
+      Some(new String(buf, java.nio.charset.StandardCharsets.UTF_8))
+    }
+  }
+
+  /** Write a small UTF-8 file atomically for readers: tmp write, then
+    * rename over the destination, with the rename result CHECKED
+    * (HDFS-like filesystems report failure by returning false, not
+    * throwing — an unchecked rename could let a commit marker land with
+    * no file behind it).
+    */
+  private[graft] def writeText(conf: org.apache.hadoop.conf.Configuration,
+                               path: String, content: String): Unit = {
+    val dst = new org.apache.hadoop.fs.Path(path)
+    val fs = dst.getFileSystem(conf)
+    val dir = dst.getParent
+    if (!fs.exists(dir)) fs.mkdirs(dir): Unit
+    val tmp = new org.apache.hadoop.fs.Path(path + ".tmp")
+    val out = fs.create(tmp, true)
+    try out.write(content.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    finally out.close()
+    if (fs.exists(dst)) fs.delete(dst, false): Unit
+    if (!fs.rename(tmp, dst))
+      throw new java.io.IOException(s"rename $tmp -> $dst failed")
+  }
+
+  /** Collapse one parquet sub-store: rewrite it through `collapse` to a
+    * side directory, then swap it in via two renames — a crash at any
+    * point leaves every row recoverable on disk (`recoverSub` finishes
+    * or unwinds), never a half-compacted live store.
     *
     * Recovers FIRST: a previous compact may have crashed between the
     * renames, leaving the rows only in a side directory. A silent no-op
@@ -236,17 +382,8 @@ object StoreMaintenance {
     * Only a store with NO live dir and NO side dirs — genuinely never
     * written — is a true no-op.
     */
-  private[graft] def compactSub(spark: SparkSession, path: String, schema: StructType,
-                 keys: Seq[String]): Unit =
-    compactSubWith(spark, path, schema, _.dropDuplicates(keys))
-
-  /** `compactSub` with a caller-supplied collapse (for sub-stores whose
-    * read accessors collapse rows by a DETERMINISTIC rule rather than an
-    * arbitrary-survivor key dedup — compaction must apply the SAME rule,
-    * or the version the accessors serve silently flips across a compact).
-    */
-  private[graft] def compactSubWith(spark: SparkSession, path: String, schema: StructType,
-                                    collapse: DataFrame => DataFrame): Unit = {
+  private def compactSubWith(spark: SparkSession, path: String, schema: StructType,
+                             collapse: DataFrame => DataFrame): Unit = {
     import org.apache.hadoop.fs.Path
     recoverSub(spark, path) // restores a crashed swap; clears side-dir residue
     val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)

@@ -48,19 +48,14 @@ import graft.operators.Dedup
   *   - `sigs/`    (doc_id, band, sig): banded MinHash signatures;
   *   - `pairs/`   (doc_a, doc_b, jaccard, ingest_ms): verified near-dup
   *     pairs, stamped like the hashes so re-verifications supersede;
-  *   - `_graft_commits/<scope>/<batchId>`: per-batch commit markers,
-  *     scoped by checkpoint lineage exactly like `StreamingIndex`.
+  *   - `_graft_commits/<scope>/<batchId>`: per-batch commit markers.
   *
-  * REPLAY SAFETY is the same at-least-once + marker contract as
-  * `StreamingIndex.sinkToIndex`: a re-delivered batchId whose marker
-  * exists is skipped outright. The residual window (crash AFTER some of
-  * the three appends but BEFORE the marker) can leave duplicate rows in
-  * the stores; `compactStore` restores uniqueness (dedup by key,
-  * side-dir rewrite + rename swap — never a half-compacted live store),
-  * and the read accessors (`pairs`/`hashes`/`sigs`) drop duplicates so
-  * readers are exact even across an uncompacted window. Run
-  * `compactStore` periodically alongside `StreamingIndex.compact`, with
-  * ingest stopped (same pause-compact-resume discipline).
+  * REPLAY SAFETY, compaction and crash recovery are the kernel's
+  * (`StoreMaintenance`). The residual window (crash AFTER some of the
+  * three appends but BEFORE the marker) can leave duplicate rows in the
+  * stores; each sub-store's declared collapse absorbs them, so the read
+  * accessors (`pairs`/`hashes`/`sigs`) are exact even across an
+  * uncompacted window.
   *
   * Input schema: `doc_id LONG, text STRING` (extra columns ignored).
   * doc_ids are assumed UNIQUE across the stream's lifetime (the same
@@ -78,10 +73,6 @@ import graft.operators.Dedup
   * document versions no longer support.
   */
 object StreamingDedup {
-
-  private[graft] def hashesPath(store: String) = s"$store/hashes"
-  private[graft] def sigsPath(store: String) = s"$store/sigs"
-  private[graft] def pairsPath(store: String) = s"$store/pairs"
 
   /** `ingest_ms` is the version stamp of each hash row (wall clock at
     * append): latest-wins collapse needs an order that survives a
@@ -104,6 +95,17 @@ object StreamingDedup {
     StructField("jaccard", DoubleType),
     StructField("ingest_ms", LongType)))
 
+  // each sub-store's collapse is its accessor's rule — hashes to the
+  // canonical version, pairs to the latest verification, sigs to
+  // full-row distinct — so compaction cannot flip the served rows
+  private[graft] val hashesSub =
+    StoreMaintenance.SubStore("hashes", hashSchema)(canonicalHashRows)
+  private[graft] val sigsSub =
+    StoreMaintenance.SubStore("sigs", sigSchema)(_.dropDuplicates("doc_id", "band", "sig"))
+  private[graft] val pairsSub =
+    StoreMaintenance.SubStore("pairs", pairSchema)(canonicalPairRows)
+  private val subs = Seq(hashesSub, sigsSub, pairsSub)
+
   /** Start the incremental near-dup sink over a document stream. The
     * LSH parameters MUST stay fixed for the lifetime of a store —
     * signatures computed under different (n, numBands, bandSize) don't
@@ -111,23 +113,10 @@ object StreamingDedup {
     */
   def sinkNearDup(docs: DataFrame, storePath: String, checkpointDir: String,
                   n: Int = 3, numBands: Int = 24, bandSize: Int = 3,
-                  threshold: Double = 0.5): StreamingQuery = {
-    val conf = docs.sparkSession.sparkContext.hadoopConfiguration
-    val scope = StreamingIndex.commitScope(checkpointDir, conf)
-    StoreMaintenance.registeredStart(conf, storePath) {
-      docs.writeStream
-        .outputMode("append")
-        .option("checkpointLocation", checkpointDir)
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          val appended =
-            processBatch(batch, batchId, storePath, scope, n, numBands, bandSize, threshold)
-          // a SKIPPED replay still executes the batch plan so any stateful
-          // upstream operator commits its state store
-          if (!appended) StoreMaintenance.noopExecute(batch)
-        }
-        .start()
+                  threshold: Double = 0.5): StreamingQuery =
+    StoreMaintenance.sink(docs, storePath, checkpointDir) { (batch, batchId, scope) =>
+      processBatch(batch, batchId, storePath, scope, n, numBands, bandSize, threshold)
     }
-  }
 
   /** Largest batch signature-row count (documents × numBands — the
     * actual broadcast payload, so a recall-tuned numBands cannot defeat
@@ -173,7 +162,7 @@ object StreamingDedup {
       val newHash = newHashAll.filter(size(col("sh")) > 0)
       val newSigs = Dedup.minhashBands(newHash, numBands, bandSize)
 
-      val oldSigs = StoreMaintenance.readOrEmpty(spark, sigsPath(storePath), sigSchema)
+      val oldSigs = sigsSub.raw(spark, storePath)
       val allSigs = oldSigs.select("doc_id", "band", "sig")
         .unionByName(newSigs.select("doc_id", "band", "sig"))
       // the cap is on the broadcast PAYLOAD (sig rows).
@@ -218,13 +207,11 @@ object StreamingDedup {
         // residuals / re-send versions) cannot change the result — the
         // dedup shuffle would be a pure extra exchange per batch
         val newIds = newHashAll.select("doc_id")
-        val resent = StoreMaintenance
-          .readOrEmpty(spark, hashesPath(storePath), hashSchema)
+        val resent = hashesSub.raw(spark, storePath)
           .select("doc_id")
           .join(if (2 * nNewDocs <= MaxBroadcastSigRows) broadcast(newIds) else newIds,
             Seq("doc_id"), "left_semi")
-        val oldPairs = StoreMaintenance
-          .readOrEmpty(spark, pairsPath(storePath), pairSchema)
+        val oldPairs = pairsSub.raw(spark, storePath)
         // re-sent ids ≤ batch size, so the broadcast cap that admitted
         // the batch's sigs admits them; over-cap backfills fall back to
         // AQE-planned joins like every other guarded broadcast here
@@ -280,7 +267,7 @@ object StreamingDedup {
         // once. The relation is verify-ids-sized (bounded by the
         // broadcast gate above), so the persist is small by construction.
         val allHash = canonicalByDoc(
-          StoreMaintenance.readOrEmpty(spark, hashesPath(storePath), hashSchema)
+          hashesSub.raw(spark, storePath)
             .select("doc_id", "sh", "hv", "ingest_ms")
             .unionByName(newHashAll.select("doc_id", "sh", "hv")
               .withColumn("ingest_ms", lit(ingestMs)))
@@ -301,8 +288,8 @@ object StreamingDedup {
           .withColumn("ingest_ms", lit(ingestMs))
 
         // three appends inside the marker window: at-least-once — a crash
-        // mid-window re-appends on replay, collapsed by compactStore / the
-        // accessors (the replayed re-verification scores against the same
+        // mid-window re-appends on replay, collapsed by the declared
+        // sub-store rules (the replayed re-verification scores against the same
         // canonical versions, so re-appended rows stay value-identical).
         // Small batches coalesce to one output file per sub-store: the
         // hash/sig payloads are already materialized (checkpoint), so the
@@ -313,11 +300,11 @@ object StreamingDedup {
         shrink(newHashAll.select("doc_id", "sh", "hv")
             .withColumn("ingest_ms", lit(ingestMs)))
           .write.mode(SaveMode.Append)
-          .parquet(hashesPath(storePath))
+          .parquet(hashesSub.path(storePath))
         shrink(newSigs.select("doc_id", "band", "sig"))
           .write.mode(SaveMode.Append)
-          .parquet(sigsPath(storePath))
-        pairRows.write.mode(SaveMode.Append).parquet(pairsPath(storePath))
+          .parquet(sigsSub.path(storePath))
+        pairRows.write.mode(SaveMode.Append).parquet(pairsSub.path(storePath))
       } finally persisted.foreach(_.unpersist(): Unit)
     }
   }
@@ -362,25 +349,16 @@ object StreamingDedup {
     * rank oldest, so the first stamped re-verification supersedes them.
     */
   def pairs(spark: SparkSession, storePath: String, threshold: Double = 0.5): DataFrame =
-    canonicalPairRows(StoreMaintenance.readOrEmpty(spark, pairsPath(storePath), pairSchema))
+    pairsSub.read(spark, storePath)
       .filter(col("jaccard") >= threshold)
       .select("doc_a", "doc_b", "jaccard")
 
-  /** Cheap change witness for the pair store: (raw row count, latest
-    * stamp). Any ingest batch grows the count; a compaction rewrite that
-    * collapses rows cannot keep the count AND the max stamp of the tree
-    * it replaced (it only removes rows) — callers memoizing relations
-    * DERIVED from `pairs` (e.g. the connected-component clustering)
-    * recompute when this pair changes and serve cached otherwise. One
-    * column-pruned scan of the pair store, which is near-dup-pair-sized,
-    * tiny relative to the corpus.
+  /** Change witness of the pair store (`StoreMaintenance.version`) for
+    * memos DERIVED from `pairs`, e.g. the connected-component clustering.
+    * One column-pruned scan of the near-dup-pair-sized store.
     */
-  def pairsVersion(spark: SparkSession, storePath: String): (Long, Long) = {
-    val v = StoreMaintenance.readOrEmpty(spark, pairsPath(storePath), pairSchema)
-      .agg(count(lit(1)), max(coalesce(col("ingest_ms"), lit(Long.MinValue))))
-      .head()
-    (v.getLong(0), if (v.isNullAt(1)) Long.MinValue else v.getLong(1))
-  }
+  def pairsVersion(spark: SparkSession, storePath: String): (Long, Long) =
+    StoreMaintenance.version(spark, storePath, pairsSub)
 
   /** Latest-stamp-wins collapse KEEPING the stamp (compaction must
     * preserve it — and must keep below-threshold dissolution rows, or a
@@ -399,9 +377,7 @@ object StreamingDedup {
     * same deterministic rule as the verify join (`canonicalByDoc`).
     */
   def hashes(spark: SparkSession, storePath: String): DataFrame =
-    canonicalByDoc(
-      StoreMaintenance.readOrEmpty(spark, hashesPath(storePath), hashSchema)
-        .select("doc_id", "sh", "hv", "ingest_ms"))
+    hashesSub.read(spark, storePath).select("doc_id", "sh", "hv")
 
   /** Collapse a (doc_id, sh, hv, ingest_ms) relation to ONE row per
     * doc_id: LATEST version wins (max ingest_ms — a corrective re-send
@@ -433,42 +409,15 @@ object StreamingDedup {
     * (verification always scores against the canonical version).
     */
   private[graft] def sigs(spark: SparkSession, storePath: String): DataFrame =
-    StoreMaintenance.readOrEmpty(spark, sigsPath(storePath), sigSchema)
-      .dropDuplicates("doc_id", "band", "sig")
+    sigsSub.read(spark, storePath)
 
   /** Collapse replay-residual duplicates and per-batch small files in all
-    * three sub-stores: dedup by key, rewrite to a side directory, then
-    * swap via two renames — a crash at any point leaves every row
-    * recoverable on disk (`recoverStore` finishes or unwinds), never a
-    * half-compacted live store. Marker trees are cleared with the swap
-    * (fresh dedup baseline, same contract as `StreamingIndex.compact`).
-    * MUST run with ingest into this store stopped — enforced in-process:
-    * the call REFUSES (throws) while a `sinkNearDup` query registered
-    * over this store is still active.
+    * three sub-stores (`StoreMaintenance.compactStore`). MUST run with
+    * ingest into this store stopped — enforced in-process.
     */
-  def compactStore(spark: SparkSession, storePath: String): Unit = {
-    StoreMaintenance.assertIngestStopped(spark.sparkContext.hadoopConfiguration, storePath)
-    // each sub-store compacts through ITS accessor's collapse rule —
-    // hashes to the canonical version, pairs to the max jaccard, sigs to
-    // full-row distinct — so what the accessors serve is IDENTICAL before
-    // and after a compact (a keyed dropDuplicates would keep an arbitrary
-    // version and silently flip the served rows)
-    StoreMaintenance.compactSubWith(spark, hashesPath(storePath), hashSchema,
-      df => canonicalHashRows(df.select("doc_id", "sh", "hv", "ingest_ms")))
-    StoreMaintenance.compactSub(spark, sigsPath(storePath), sigSchema,
-      Seq("doc_id", "band", "sig"))
-    StoreMaintenance.compactSubWith(spark, pairsPath(storePath), pairSchema, canonicalPairRows)
-    val commits = new org.apache.hadoop.fs.Path(s"$storePath/_graft_commits")
-    commits.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(commits, true): Unit
-  }
+  def compactStore(spark: SparkSession, storePath: String): Unit =
+    StoreMaintenance.compactStore(spark, storePath, subs)
 
-  /** Finish or unwind a `compactStore` interrupted at any crash point —
-    * safe to run unconditionally before restarting ingest: a live
-    * sub-store survives as-is (pending rewrites discarded); a swapped-out
-    * one is restored from whichever complete side directory survives.
-    */
   def recoverStore(spark: SparkSession, storePath: String): Unit =
-    Seq(hashesPath(storePath), sigsPath(storePath), pairsPath(storePath)).foreach { p =>
-      StoreMaintenance.recoverSub(spark, p)
-    }
+    StoreMaintenance.recoverStore(spark, storePath, subs)
 }

@@ -10,8 +10,8 @@ import graft.operators.{Dedup, Similarity}
   * STREAM — the streaming twin of the batch
   * `Similarity.embeddingDuplicates` (whose output is the oracle-checked
   * `q_embed_dup`), and the embedding-flavored sibling of
-  * `StreamingDedup` (same store/marker/compaction machinery; see that
-  * scaladoc for the replay and residual-window contract).
+  * `StreamingDedup` (replay, compaction and crash recovery are the
+  * `StoreMaintenance` kernel's).
   *
   * Per micro-batch, only the NEW vectors are normalized and
   * sign-bucketed; candidates come from broadcast-joining the batch's
@@ -34,9 +34,6 @@ import graft.operators.{Dedup, Similarity}
   * columns ignored).
   */
 object StreamingEmbed {
-
-  private[graft] def vecsPath(store: String) = s"$store/vecs"
-  private[graft] def pairsPath(store: String) = s"$store/pairs"
 
   /** Largest row count force-broadcast into the candidate/verify joins.
     * Both broadcast relations are KEY-sized — (bucket, vec_id) probe rows
@@ -64,25 +61,26 @@ object StreamingEmbed {
     StructField("vec_b", LongType),
     StructField("sim", DoubleType)))
 
+  private[graft] val vecsSub = StoreMaintenance.SubStore("vecs", vecSchema)(canonicalVecRows)
+
+  /** The pair collapse dissolves pairs touching a canonically deleted
+    * vec_id, so the declaration is built per call over the store's
+    * current tombstones (read when the collapse runs — in a compact,
+    * after vecs was compacted).
+    */
+  private[graft] def pairsSub(spark: SparkSession, storePath: String) =
+    StoreMaintenance.SubStore("pairs", pairSchema)(p =>
+      dissolveDeleted(canonicalPairs(p), deletedIds(vecsSub.raw(spark, storePath))))
+
   /** Start the incremental embedding near-dup sink. `bits` MUST stay
     * fixed for the lifetime of a store (bucket keys are not comparable
     * across widths).
     */
   def sinkEmbedDup(embeddings: DataFrame, storePath: String, checkpointDir: String,
-                   bits: Int = 8, threshold: Double = 0.3): StreamingQuery = {
-    val conf = embeddings.sparkSession.sparkContext.hadoopConfiguration
-    val scope = StreamingIndex.commitScope(checkpointDir, conf)
-    StoreMaintenance.registeredStart(conf, storePath) {
-      embeddings.writeStream
-        .outputMode("append")
-        .option("checkpointLocation", checkpointDir)
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          val appended = processBatch(batch, batchId, storePath, scope, bits, threshold)
-          if (!appended) StoreMaintenance.noopExecute(batch)
-        }
-        .start()
+                   bits: Int = 8, threshold: Double = 0.3): StreamingQuery =
+    StoreMaintenance.sink(embeddings, storePath, checkpointDir) { (batch, batchId, scope) =>
+      processBatch(batch, batchId, storePath, scope, bits, threshold)
     }
-  }
 
   /** One idempotent incremental micro-batch (testable replay unit — the
     * `appendBatch` pattern). @return false = replay of a committed
@@ -103,7 +101,7 @@ object StreamingEmbed {
         Similarity.prepared(batch.select("vec_id", "embedding")
             .filter(col("embedding").isNotNull))
           .withColumn("bucket", Similarity.signBucket(col("v"), bits)))
-      val storeVecs = StoreMaintenance.readOrEmpty(spark, vecsPath(storePath), vecSchema)
+      val storeVecs = vecsSub.raw(spark, storePath)
       // CANDIDATES: the new batch's (bucket, vec_id) keys against all
       // accumulated keys — only the two key columns are read from the
       // store, which is scanned, never shuffled; the micro-batch-sized
@@ -151,8 +149,8 @@ object StreamingEmbed {
         newP.select("vec_id", "v", "norm", "bucket")
           .withColumn("ingest_ms", lit(ingestMs))
           .write.mode(SaveMode.Append)
-          .parquet(vecsPath(storePath))
-        newPairs.write.mode(SaveMode.Append).parquet(pairsPath(storePath))
+          .parquet(vecsSub.path(storePath))
+        newPairs.write.mode(SaveMode.Append).parquet(pairsSub(spark, storePath).path(storePath))
       } finally cands.unpersist(): Unit
     }
     // invalidate AFTER the append lands too (r18 review): a reader that
@@ -190,7 +188,7 @@ object StreamingEmbed {
         .withColumn("norm", lit(null).cast(DoubleType))
         .withColumn("bucket", lit(null).cast(StringType))
         .withColumn("ingest_ms", lit(ingestMs))
-        .write.mode(SaveMode.Append).parquet(vecsPath(storePath))
+        .write.mode(SaveMode.Append).parquet(vecsSub.path(storePath))
     }
     if (appended) invalidateVersion(storePath)
     appended
@@ -215,12 +213,8 @@ object StreamingEmbed {
     * and tombstone-aware: a pair either of whose endpoints is
     * canonically deleted DISSOLVES.
     */
-  def pairs(spark: SparkSession, storePath: String): DataFrame = {
-    val raw = StoreMaintenance.readOrEmpty(spark, vecsPath(storePath), vecSchema)
-    dissolveDeleted(
-      canonicalPairs(StoreMaintenance.readOrEmpty(spark, pairsPath(storePath), pairSchema)),
-      deletedIds(raw))
-  }
+  def pairs(spark: SparkSession, storePath: String): DataFrame =
+    pairsSub(spark, storePath).read(spark, storePath)
 
   private def dissolveDeleted(pairs: DataFrame, deleted: DataFrame): DataFrame =
     pairs
@@ -231,19 +225,8 @@ object StreamingEmbed {
   private def canonicalPairs(p: DataFrame): DataFrame =
     p.groupBy("vec_a", "vec_b").agg(max(col("sim")).as("sim"))
 
-  /** Change witness for structures DERIVED from this store: (raw row
-    * count, latest ingest stamp) over the un-collapsed vecs relation —
-    * any append or re-delivery moves at least one of the two, an
-    * unchanged store reads the same pair (the `pairsVersion` protocol).
-    */
-  private[graft] def storeVersion(spark: SparkSession, storePath: String): (Long, Long) = {
-    val r = StoreMaintenance.readOrEmpty(spark, vecsPath(storePath), vecSchema)
-      .agg(count(lit(1)), max(coalesce(col("ingest_ms"), lit(Long.MinValue))))
-      .collect()(0)
-    (r.getLong(0), if (r.isNullAt(1)) Long.MinValue else r.getLong(1))
-  }
-
-  /** Per-process memo of `storeVersion` — the aggregate is a real Spark
+  /** Per-process memo of the vecs sub-store's change witness
+    * (`StoreMaintenance.version`) — the aggregate is a real Spark
     * job over the vector sub-store, and the version-keyed derived memos
     * (streamedIvf0 / streamedWhitenTable / streamedIvf) resolve it on
     * EVERY served call, so an unmemoized resolve dilutes every timed
@@ -260,7 +243,8 @@ object StreamingEmbed {
   }
 
   private[graft] def storeVersionCached(spark: SparkSession, storePath: String): (Long, Long) =
-    versionCache.computeIfAbsent(storePath, _ => storeVersion(spark, storePath))
+    versionCache.computeIfAbsent(storePath,
+      _ => StoreMaintenance.version(spark, storePath, vecsSub))
 
   /** The accumulated (vec_id, v, norm, bucket) store — feed it to batch
     * similarity consumers over a streamed corpus. One row per vec_id:
@@ -269,7 +253,7 @@ object StreamingEmbed {
     * structure derived from this relation serves the shrunk corpus.
     */
   def vectors(spark: SparkSession, storePath: String): DataFrame =
-    canonicalVecRows(StoreMaintenance.readOrEmpty(spark, vecsPath(storePath), vecSchema))
+    vecsSub.read(spark, storePath)
       .filter(col("v").isNotNull)
       .select("vec_id", "v", "norm", "bucket")
 
@@ -280,26 +264,17 @@ object StreamingEmbed {
       .select(col("vec_id"), col("_m.v").as("v"), col("_m.norm").as("norm"),
         col("_m.bucket").as("bucket"), col("_m._t").as("ingest_ms"))
 
-  /** Collapse replay-residual duplicates and per-batch small files —
-    * same contract and crash discipline as `StreamingDedup.compactStore`
-    * (ingest-stopped enforced in-process; `recoverStore` finishes or
-    * unwinds; each sub-store compacts through its accessor's own
-    * deterministic collapse so served rows never flip across a compact).
+  /** Collapse replay-residual duplicates and per-batch small files
+    * (`StoreMaintenance.compactStore`).
     */
   def compactStore(spark: SparkSession, storePath: String): Unit = {
-    StoreMaintenance.assertIngestStopped(spark.sparkContext.hadoopConfiguration, storePath)
     invalidateVersion(storePath) // the physical collapse changes the raw row count
     // vecs compact FIRST: the canonical collapse keeps tombstone rows
-    // (deletes survive compaction), and the pairs collapse below reads
-    // the compacted vecs to drop dissolved pairs PHYSICALLY — safe to
-    // drop, not just read-filter, because a re-added endpoint is a new
-    // version whose pairs regenerate at its own ingest
-    StoreMaintenance.compactSubWith(spark, vecsPath(storePath), vecSchema, canonicalVecRows)
-    StoreMaintenance.compactSubWith(spark, pairsPath(storePath), pairSchema, p =>
-      dissolveDeleted(canonicalPairs(p),
-        deletedIds(StoreMaintenance.readOrEmpty(spark, vecsPath(storePath), vecSchema))))
-    val commits = new org.apache.hadoop.fs.Path(s"$storePath/_graft_commits")
-    commits.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(commits, true): Unit
+    // (deletes survive compaction), and the pairs collapse reads the
+    // compacted vecs to drop dissolved pairs PHYSICALLY — safe to drop,
+    // not just read-filter, because a re-added endpoint is a new version
+    // whose pairs regenerate at its own ingest
+    StoreMaintenance.compactStore(spark, storePath, Seq(vecsSub, pairsSub(spark, storePath)))
     // and again after the swap: a read during the rewrite window must
     // not pin the pre-compact version (r18 review)
     invalidateVersion(storePath)
@@ -307,9 +282,7 @@ object StreamingEmbed {
 
   def recoverStore(spark: SparkSession, storePath: String): Unit = {
     invalidateVersion(storePath)
-    Seq(vecsPath(storePath), pairsPath(storePath)).foreach { p =>
-      StoreMaintenance.recoverSub(spark, p)
-    }
+    StoreMaintenance.recoverStore(spark, storePath, Seq(vecsSub, pairsSub(spark, storePath)))
     invalidateVersion(storePath) // post-recovery clear (see compactStore)
   }
 }

@@ -4,14 +4,23 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.StructType
 
-/** Generic incremental KEYED-FACT store — `StreamingEvents`' immutable-
-  * fact contract generalized to any row shape: facts accumulate
-  * idempotently under a caller-declared key column, and every analysis
-  * is the identical batch declaration over the accumulated relation
-  * (the `q_quality_gate_streamed` family rides the corpus shaped this
-  * way). A re-sent or replay-re-appended fact is byte-identical to its
-  * first copy, so the read accessor's `dropDuplicates(key)` restores
-  * exact-once semantics over the at-least-once append.
+/** Incremental KEYED-FACT store: facts accumulate idempotently under a
+  * caller-declared key column, and every analysis is the identical batch
+  * declaration over the accumulated relation, hash-checked under the
+  * batch query's oracle. The event store (key `event_id`, serving the
+  * behavioral `*_streamed` twins — funnel, retention, transitions,
+  * growth accounting, sessionization, SCD2), the corpus of the
+  * `q_quality_gate_streamed` family and the lineitem warehouse store
+  * are all shaped this way.
+  *
+  * CONTRACT — facts are IMMUTABLE: a re-sent or replay-re-appended fact
+  * is byte-identical to its first copy, so the read accessor's
+  * `dropDuplicates(key)` restores exact-once semantics over the
+  * at-least-once append (any survivor is THE fact). The accumulated
+  * relation therefore equals the batch fact table under ANY partition
+  * of the stream into batches — no supersede rule like
+  * `StreamingGraph`'s additive deltas, no verify step like the pair
+  * stores.
   *
   * The SCHEMA AND KEY ARE STORE STATE, not per-call parameters: the
   * first append persists both in a `_graft_schema` sidecar (key line +
@@ -19,8 +28,8 @@ import org.apache.spark.sql.types.StructType
   * keyType lesson applied from the start. The caller's arguments only
   * matter for a never-written store (empty read / first ingest).
   *
-  * Same marker/compact/recover machinery as the other value stores
-  * (`StoreMaintenance`).
+  * Replay, compaction and crash recovery are the `StoreMaintenance`
+  * kernel's.
   */
 object StreamingFacts {
 
@@ -90,38 +99,36 @@ object StreamingFacts {
     */
   private[graft] def resolveShape(conf: org.apache.hadoop.conf.Configuration,
                                   storePath: String,
-                                  fallback: (String, StructType)): (String, StructType) = {
-    val p = new org.apache.hadoop.fs.Path(schemaPath(storePath))
-    val fs = p.getFileSystem(conf)
-    if (!fs.exists(p)) fallback
-    else {
-      val buf = new Array[Byte](fs.getFileStatus(p).getLen.toInt)
-      val in = fs.open(p)
-      try in.readFully(0L, buf) finally in.close()
-      val lines = new String(buf, java.nio.charset.StandardCharsets.UTF_8)
-        .split("\n", 2)
+                                  fallback: (String, StructType)): (String, StructType) =
+    StoreMaintenance.readText(conf, schemaPath(storePath)).fold(fallback) { t =>
+      val lines = t.split("\n", 2)
       (lines(0).trim, StructType.fromDDL(lines(1).trim))
     }
-  }
+
+  /** The physical facts sub-store (logical schema plus the batch stamp)
+    * and its compaction collapse: the accessor's key dedup made
+    * deterministic in the batch stamp (min-batch survivor; duplicates
+    * are byte-identical, so the choice only pins `_gbatch`, keeping
+    * `factsAsOf` stable across compaction).
+    */
+  private def factsSub(key: String, sch: StructType) =
+    StoreMaintenance.SubStore("facts", sch.add(batchCol, org.apache.spark.sql.types.LongType)) {
+      d =>
+        import org.apache.spark.sql.functions.{col, row_number}
+        val w = org.apache.spark.sql.expressions.Window
+          .partitionBy(key).orderBy(col(batchCol).asc_nulls_last)
+        d.withColumn("_grk", row_number().over(w))
+          .filter(col("_grk") === 1).drop("_grk")
+    }
 
   /** Start the incremental fact sink: `facts` must stream rows carrying
     * every schema column (extra columns are dropped by the cast-select).
     */
   def sinkFacts(facts: DataFrame, storePath: String, checkpointDir: String,
-                keyCol: String, schema: StructType): StreamingQuery = {
-    val conf = facts.sparkSession.sparkContext.hadoopConfiguration
-    val scope = StreamingIndex.commitScope(checkpointDir, conf)
-    StoreMaintenance.registeredStart(conf, storePath) {
-      facts.writeStream
-        .outputMode("append")
-        .option("checkpointLocation", checkpointDir)
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          val appended = processBatch(batch, batchId, storePath, keyCol, schema, scope)
-          if (!appended) StoreMaintenance.noopExecute(batch)
-        }
-        .start()
+                keyCol: String, schema: StructType): StreamingQuery =
+    StoreMaintenance.sink(facts, storePath, checkpointDir) { (batch, batchId, scope) =>
+      processBatch(batch, batchId, storePath, keyCol, schema, scope)
     }
-  }
 
   /** One idempotent incremental micro-batch (testable replay unit).
     * @param filesPerBatch ≥1 coalesces the append to that many files
@@ -145,11 +152,7 @@ object StreamingFacts {
       clean.getFileSystem(conf).delete(clean, false): Unit
       // sidecar first: idempotent content, and a crash between sidecar
       // and append leaves only a correct shape record behind
-      val p = new org.apache.hadoop.fs.Path(schemaPath(storePath))
-      val out = p.getFileSystem(conf).create(p, true)
-      try out.write((key + "\n" + sch.toDDL)
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally out.close()
+      StoreMaintenance.writeText(conf, schemaPath(storePath), key + "\n" + sch.toDDL)
       val projected = batch.select(sch.fields.toSeq.map(f =>
           org.apache.spark.sql.functions.col(f.name).cast(f.dataType)): _*)
         .withColumn(batchCol, org.apache.spark.sql.functions.lit(batchId))
@@ -220,28 +223,16 @@ object StreamingFacts {
     if (isClean(conf, storePath)) sliced else sliced.dropDuplicates(key)
   }
 
-  /** Collapse replay-residual duplicates and per-batch small files —
-    * the collapse is the accessor's own key dedup rule, made
-    * deterministic in the batch stamp (min-batch survivor; duplicates
-    * are byte-identical so the choice only pins `_gbatch`, keeping
-    * `factsAsOf` stable across compaction). Sets the clean marker so
-    * subsequent reads serve dedup-free until the next append.
+  /** Collapse replay-residual duplicates and per-batch small files
+    * (`StoreMaintenance.compactStore` through `factsSub`'s collapse).
+    * Sets the clean marker AFTER the compact so subsequent reads serve
+    * dedup-free until the next append.
     */
   def compactStore(spark: SparkSession, storePath: String,
                    keyCol: String, schema: StructType): Unit = {
-    import org.apache.spark.sql.functions.{col, row_number}
     val conf = spark.sparkContext.hadoopConfiguration
-    StoreMaintenance.assertIngestStopped(conf, storePath)
     val (key, sch) = resolveShape(conf, storePath, (keyCol, schema))
-    val physical = sch.add(batchCol, org.apache.spark.sql.types.LongType)
-    StoreMaintenance.compactSubWith(spark, factsPath(storePath), physical, { d =>
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(key).orderBy(col(batchCol).asc_nulls_last)
-      d.withColumn("_grk", row_number().over(w))
-        .filter(col("_grk") === 1).drop("_grk")
-    })
-    val commits = new org.apache.hadoop.fs.Path(s"$storePath/_graft_commits")
-    commits.getFileSystem(conf).delete(commits, true): Unit
+    StoreMaintenance.compactStore(spark, storePath, Seq(factsSub(key, sch)))
     val clean = new org.apache.hadoop.fs.Path(cleanPath(storePath))
     clean.getFileSystem(conf).create(clean, true).close()
   }

@@ -36,13 +36,9 @@ import graft.operators.{Dedup, FuzzyJoin}
   *   - `pairs/` (url_a, url_b): verified ED-1 pairs;
   *   - `_graft_commits/<scope>/<batchId>`: idempotent-replay markers.
   * URLs are VALUES (no version semantics — a re-sent url is the same
-  * url), so the read accessors just distinct; `compactStore` restores
-  * key uniqueness across the replay residual window.
+  * url), so each sub-store's declared collapse is a plain distinct.
   */
 object StreamingFuzzy {
-
-  private[graft] def varsPath(store: String) = s"$store/vars"
-  private[graft] def pairsPath(store: String) = s"$store/pairs"
 
   /** Same scale as `StreamingEmbed.MaxBroadcastKeyRows`: variant rows
     * are short strings, a backfill batch over the cap joins by shuffle
@@ -58,24 +54,19 @@ object StreamingFuzzy {
     StructField("url_a", StringType),
     StructField("url_b", StringType)))
 
+  private[graft] val varsSub =
+    StoreMaintenance.SubStore("vars", varSchema)(_.dropDuplicates("url", "v"))
+  private[graft] val pairsSub = StoreMaintenance.SubStore("pairs", pairSchema)(_.distinct())
+  private val subs = Seq(varsSub, pairsSub)
+
   /** Start the incremental fuzzy-pair sink: `urls` must stream a
     * `url STRING` column (extra columns ignored).
     */
   def sinkFuzzyPairs(urls: DataFrame, storePath: String,
-                     checkpointDir: String): StreamingQuery = {
-    val conf = urls.sparkSession.sparkContext.hadoopConfiguration
-    val scope = StreamingIndex.commitScope(checkpointDir, conf)
-    StoreMaintenance.registeredStart(conf, storePath) {
-      urls.writeStream
-        .outputMode("append")
-        .option("checkpointLocation", checkpointDir)
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          val appended = processBatch(batch, batchId, storePath, scope)
-          if (!appended) StoreMaintenance.noopExecute(batch)
-        }
-        .start()
+                     checkpointDir: String): StreamingQuery =
+    StoreMaintenance.sink(urls, storePath, checkpointDir) { (batch, batchId, scope) =>
+      processBatch(batch, batchId, storePath, scope)
     }
-  }
 
   /** One idempotent incremental micro-batch (testable replay unit).
     * @return false = replay of a committed batchId, skipped.
@@ -89,7 +80,7 @@ object StreamingFuzzy {
       val newV = Dedup.materializeOnce(
         batch.select(col("url")).filter(col("url").isNotNull).distinct()
           .select(col("url"), explode(FuzzyJoin.variants(col("url"))).as("v")))
-      val storeVars = StoreMaintenance.readOrEmpty(spark, varsPath(storePath), varSchema)
+      val storeVars = varsSub.raw(spark, storePath)
       val allVars = storeVars.select("url", "v").unionByName(newV)
       val newSide = newV.select(col("v"), col("url").as("_nu"))
       val probe =
@@ -101,8 +92,8 @@ object StreamingFuzzy {
         .distinct()
         .filter(levenshtein(col("url_a"), col("url_b")) === 1)
       newV.withColumn("ingest_ms", lit(stamp))
-        .coalesce(1).write.mode(SaveMode.Append).parquet(varsPath(storePath))
-      newPairs.coalesce(1).write.mode(SaveMode.Append).parquet(pairsPath(storePath))
+        .coalesce(1).write.mode(SaveMode.Append).parquet(varsSub.path(storePath))
+      newPairs.coalesce(1).write.mode(SaveMode.Append).parquet(pairsSub.path(storePath))
     }
   }
 
@@ -111,28 +102,18 @@ object StreamingFuzzy {
     * distinct is the whole collapse).
     */
   def pairs(spark: SparkSession, storePath: String): DataFrame =
-    StoreMaintenance.readOrEmpty(spark, pairsPath(storePath), pairSchema)
-      .select("url_a", "url_b").distinct()
+    pairsSub.read(spark, storePath)
 
   /** Every ingested url (the accumulated frontier). */
   def urls(spark: SparkSession, storePath: String): DataFrame =
-    StoreMaintenance.readOrEmpty(spark, varsPath(storePath), varSchema)
-      .select("url").distinct()
+    varsSub.raw(spark, storePath).select("url").distinct()
 
-  /** Collapse replay-residual duplicates and per-batch small files —
-    * the collapse is the accessors' own distinct rule.
+  /** Collapse replay-residual duplicates and per-batch small files
+    * (`StoreMaintenance.compactStore`).
     */
-  def compactStore(spark: SparkSession, storePath: String): Unit = {
-    StoreMaintenance.assertIngestStopped(spark.sparkContext.hadoopConfiguration, storePath)
-    StoreMaintenance.compactSub(spark, varsPath(storePath), varSchema, Seq("url", "v"))
-    StoreMaintenance.compactSub(spark, pairsPath(storePath), pairSchema,
-      Seq("url_a", "url_b"))
-    val commits = new org.apache.hadoop.fs.Path(s"$storePath/_graft_commits")
-    commits.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(commits, true): Unit
-  }
+  def compactStore(spark: SparkSession, storePath: String): Unit =
+    StoreMaintenance.compactStore(spark, storePath, subs)
 
   def recoverStore(spark: SparkSession, storePath: String): Unit =
-    Seq(varsPath(storePath), pairsPath(storePath)).foreach { p =>
-      StoreMaintenance.recoverSub(spark, p)
-    }
+    StoreMaintenance.recoverStore(spark, storePath, subs)
 }

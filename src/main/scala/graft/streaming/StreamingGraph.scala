@@ -7,10 +7,7 @@ import org.apache.spark.sql.types._
 
 /** Incremental graph analytics over an EDGE-DELTA stream — the
   * streaming twin of the batch `Graph.pageRank` (whose nation-graph
-  * output is the oracle-checked `q_pagerank`), built on the same
-  * store/marker/compaction machinery as `StreamingDedup`/
-  * `StreamingEmbed` (see those scaladocs for the replay and residual-
-  * window contract).
+  * output is the oracle-checked `q_pagerank`).
   *
   * CONTRACT — edge weights are ADDITIVE DELTAS: each micro-batch
   * appends (src, dst, w) contributions and the served edge relation is
@@ -21,6 +18,8 @@ import org.apache.spark.sql.types._
   * bit-for-bit, and PageRank over the accumulated store equals the
   * batch fixpoint under the SAME oracle (GraphStreamSpec proves replay
   * equality; the `q_pagerank_streamed` row hash-checks it).
+  * Replay, compaction and crash recovery are the `StoreMaintenance`
+  * kernel's; the high-water mark below is this store's addition.
   *
   * Rank serving is VERSION-KEYED (the `streamedIvf` memo protocol):
   * the power iteration runs only when the store's change witness
@@ -76,12 +75,11 @@ import org.apache.spark.sql.types._
   */
 object StreamingGraph {
 
-  private[graft] def edgesPath(store: String) = s"$store/edges"
   private[graft] def hwmPath(store: String, scope: String) = s"$store/_graft_hwm/$scope"
   private[graft] def schemaPath(store: String) = s"$store/_graft_schema"
 
   /** Synthetic scope of compaction-collapsed rows (batch -1). Real
-    * scopes come from `StreamingIndex.commitScope` / the "default"
+    * scopes come from `StoreMaintenance.commitScope` / the "default"
     * fallback and are never empty.
     */
   private val CollapsedScope = ""
@@ -100,49 +98,33 @@ object StreamingGraph {
     StructField("batch", LongType),
     StructField("scope", StringType)))
 
+  /** The edge sub-store under a key type, collapsed by the shared
+    * read/compact rule (`collapse`).
+    */
+  private def edgesSub(keyType: DataType) =
+    StoreMaintenance.SubStore("edges", edgeSchema(keyType))(collapse)
+
   /** The authoritative key type: the persisted sidecar if the store has
     * ever been written, the caller's parameter otherwise.
     */
   private[graft] def resolveKeyType(conf: org.apache.hadoop.conf.Configuration,
-                                    storePath: String, fallback: DataType): DataType = {
-    val p = new org.apache.hadoop.fs.Path(schemaPath(storePath))
-    val fs = p.getFileSystem(conf)
-    if (!fs.exists(p)) fallback
-    else {
-      val buf = new Array[Byte](fs.getFileStatus(p).getLen.toInt)
-      val in = fs.open(p)
-      try in.readFully(0L, buf) finally in.close()
-      DataType.fromDDL(new String(buf, java.nio.charset.StandardCharsets.UTF_8).trim)
-    }
-  }
+                                    storePath: String, fallback: DataType): DataType =
+    StoreMaintenance.readText(conf, schemaPath(storePath))
+      .fold(fallback)(t => DataType.fromDDL(t.trim))
 
-  private def writeSidecar(conf: org.apache.hadoop.conf.Configuration,
-                           path: String, content: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val out = p.getFileSystem(conf).create(p, true)
-    try out.write(content.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-  }
+  /** `edgesSub` under the store's resolved key type. */
+  private def edgesOf(spark: SparkSession, storePath: String, keyType: DataType) =
+    edgesSub(resolveKeyType(spark.sparkContext.hadoopConfiguration, storePath, keyType))
 
   /** Start the incremental edge-delta sink: `contribs` must stream
     * (src, dst, w) rows.
     */
   def sinkEdges(contribs: DataFrame, storePath: String,
                 checkpointDir: String,
-                keyType: DataType = LongType): StreamingQuery = {
-    val conf = contribs.sparkSession.sparkContext.hadoopConfiguration
-    val scope = StreamingIndex.commitScope(checkpointDir, conf)
-    StoreMaintenance.registeredStart(conf, storePath) {
-      contribs.writeStream
-        .outputMode("append")
-        .option("checkpointLocation", checkpointDir)
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          val appended = processBatch(batch, batchId, storePath, scope, keyType)
-          if (!appended) StoreMaintenance.noopExecute(batch)
-        }
-        .start()
+                keyType: DataType = LongType): StreamingQuery =
+    StoreMaintenance.sink(contribs, storePath, checkpointDir) { (batch, batchId, scope) =>
+      processBatch(batch, batchId, storePath, scope, keyType)
     }
-  }
 
   /** One idempotent incremental micro-batch (testable replay unit).
     * @return false = replay of a committed batchId, skipped.
@@ -166,7 +148,7 @@ object StreamingGraph {
       storePath, scope, batchId) {
       // sidecar first: idempotent content, and a crash between sidecar
       // and append leaves only a correct type record behind
-      writeSidecar(conf, schemaPath(storePath), kt.catalogString)
+      StoreMaintenance.writeText(conf, schemaPath(storePath), kt.catalogString)
       val stamp = StoreMaintenance.nextStamp()
       batch.select(col("src").cast(kt), col("dst").cast(kt),
           col("w").cast("long"))
@@ -175,7 +157,7 @@ object StreamingGraph {
         .withColumn("batch", lit(batchId))
         .withColumn("scope", lit(scope))
         .coalesce(1) // small per-batch appends: one file, not one per task
-        .write.mode(SaveMode.Append).parquet(edgesPath(storePath))
+        .write.mode(SaveMode.Append).parquet(edgesSub(kt).path(storePath))
     }
   }
 
@@ -183,11 +165,8 @@ object StreamingGraph {
     * latest-stamp rows of every batch.
     */
   def edges(spark: SparkSession, storePath: String,
-            keyType: DataType = LongType): DataFrame = {
-    val kt = resolveKeyType(spark.sparkContext.hadoopConfiguration, storePath, keyType)
-    collapse(StoreMaintenance.readOrEmpty(spark, edgesPath(storePath), edgeSchema(kt)))
-      .select("src", "dst", "w")
-  }
+            keyType: DataType = LongType): DataFrame =
+    edgesOf(spark, storePath, keyType).read(spark, storePath).select("src", "dst", "w")
 
   /** Per (scope, batchId), only the rows of the LATEST append survive
     * (a residual-window replay supersedes its crashed predecessor — see
@@ -224,19 +203,10 @@ object StreamingGraph {
       .withColumn("batch", lit(-1L))
       .withColumn("scope", lit(CollapsedScope))
 
-  /** Change witness for structures DERIVED from this store: (raw row
-    * count, latest ingest stamp) over the un-collapsed edge relation —
-    * any append moves at least one of the two (`storeVersion`
-    * protocol shared with `StreamingEmbed`).
-    */
+  /** Change witness of the edge sub-store (`StoreMaintenance.version`). */
   private[graft] def storeVersion(spark: SparkSession, storePath: String,
-                                  keyType: DataType = LongType): (Long, Long) = {
-    val kt = resolveKeyType(spark.sparkContext.hadoopConfiguration, storePath, keyType)
-    val r = StoreMaintenance.readOrEmpty(spark, edgesPath(storePath), edgeSchema(kt))
-      .agg(count(lit(1)), max(coalesce(col("ingest_ms"), lit(Long.MinValue))))
-      .collect()(0)
-    (r.getLong(0), if (r.isNullAt(1)) Long.MinValue else r.getLong(1))
-  }
+                                  keyType: DataType = LongType): (Long, Long) =
+    StoreMaintenance.version(spark, storePath, edgesOf(spark, storePath, keyType))
 
   /** A version-keyed DERIVED structure over the accumulated edges:
     * `compute` runs only when the store's change witness moves; an
@@ -269,59 +239,17 @@ object StreamingGraph {
       graft.operators.Graph.pageRank(e, nodes, iters, damping)
     }
 
-  /** r15 changed `_graft_hwm` from a single scope-blind FILE to a
-    * per-scope DIRECTORY. A store compacted under the old layout would
-    * otherwise (a) silently ignore its mark — `readHwm` finds no
-    * `<scope>` child under what is actually a file, re-exposing the
-    * post-compact replay double-count the mark exists to close — and
-    * (b) fail its next compaction (the file blocks creating the
-    * directory). On first access the old file's value is folded into
-    * `_graft_hwm/default`: every pre-scope store ingested under the
-    * "default" commit scope (the only scope that existed), so the old
-    * scope-blind mark IS that scope's mark. Idempotent; a crash between
-    * delete and rewrite loses only the mark a pre-r15 compact wrote,
-    * which the next `compactStore` re-derives from markers + stored
-    * batchIds.
-    */
-  private def migrateLegacyHwm(conf: org.apache.hadoop.conf.Configuration,
-                               storePath: String): Unit = {
-    val dir = new org.apache.hadoop.fs.Path(s"$storePath/_graft_hwm")
-    val fs = dir.getFileSystem(conf)
-    if (fs.exists(dir) && fs.getFileStatus(dir).isFile) {
-      val buf = new Array[Byte](fs.getFileStatus(dir).getLen.toInt)
-      val in = fs.open(dir)
-      try in.readFully(0L, buf) finally in.close()
-      val value = new String(buf, java.nio.charset.StandardCharsets.UTF_8).trim
-      fs.delete(dir, false)
-      writeSidecar(conf, hwmPath(storePath, "default"), value)
-    }
-  }
-
   /** The largest batchId OF THIS SCOPE absorbed by a compaction
     * (Long.MinValue if never compacted, or if this scope is new) —
     * `processBatch` skips replays at or below it.
     */
   private[graft] def readHwm(conf: org.apache.hadoop.conf.Configuration,
-                             storePath: String, scope: String): Long = {
-    migrateLegacyHwm(conf, storePath)
-    val p = new org.apache.hadoop.fs.Path(hwmPath(storePath, scope))
-    val fs = p.getFileSystem(conf)
-    if (!fs.exists(p) || fs.getFileStatus(p).isDirectory) Long.MinValue
-    else {
-      val buf = new Array[Byte](fs.getFileStatus(p).getLen.toInt)
-      val in = fs.open(p)
-      try in.readFully(0L, buf) finally in.close()
-      new String(buf, java.nio.charset.StandardCharsets.UTF_8).trim.toLong
-    }
-  }
-
-  private def writeHwm(conf: org.apache.hadoop.conf.Configuration,
-                       storePath: String, scope: String, hwm: Long): Unit =
-    writeSidecar(conf, hwmPath(storePath, scope), hwm.toString)
+                             storePath: String, scope: String): Long =
+    StoreMaintenance.readText(conf, hwmPath(storePath, scope)).fold(Long.MinValue)(_.trim.toLong)
 
   /** Collapse replay-residual duplicates and per-batch small files —
     * the collapse IS the accessor's sum rule, so served edges never
-    * flip across a compact (`compactSubWith` contract). NOTE the
+    * flip across a compact (the `SubStore` declaration). NOTE the
     * collapse changes the raw row count, so the store version moves
     * and the next `ranks` read rebuilds once — to the same fixpoint,
     * since the collapsed edges are equal by construction.
@@ -340,11 +268,11 @@ object StreamingGraph {
   def compactStore(spark: SparkSession, storePath: String,
                    keyType: DataType = LongType): Unit = {
     val conf = spark.sparkContext.hadoopConfiguration
-    val kt = resolveKeyType(conf, storePath, keyType)
-    StoreMaintenance.assertIngestStopped(conf, storePath)
-    migrateLegacyHwm(conf, storePath) // before the hwm-dir listing below
-    StoreMaintenance.recoverSub(spark, edgesPath(storePath))
-    val commits = new org.apache.hadoop.fs.Path(s"$storePath/_graft_commits")
+    val edges = edgesOf(spark, storePath, keyType)
+    StoreMaintenance.assertIngestStopped(conf, storePath) // before the hwm write below
+    // a crashed swap must be restored before the stored maxima are read
+    StoreMaintenance.recoverSub(spark, edges.path(storePath))
+    val commits = new org.apache.hadoop.fs.Path(StoreMaintenance.commitsDir(storePath))
     val fs = commits.getFileSystem(conf)
     // per-scope marker maxima: markers live under <scope>/<batchId>
     val markerMax = scala.collection.mutable.Map[String, Long]()
@@ -359,8 +287,7 @@ object StreamingGraph {
     }
     // per-scope stored maxima: a residual-window batch (append visible,
     // marker crashed) has rows but no marker — its scope rides the rows
-    val storedMax = StoreMaintenance
-      .readOrEmpty(spark, edgesPath(storePath), edgeSchema(kt))
+    val storedMax = edges.raw(spark, storePath)
       .filter(col("batch") >= 0 && col("scope").isNotNull)
       .groupBy("scope").agg(max(col("batch")).as("m"))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
@@ -369,17 +296,18 @@ object StreamingGraph {
     val marked =
       if (!fs.exists(hwmDir)) Seq.empty[String]
       else fs.listStatus(hwmDir).toSeq.map(_.getPath.getName)
+        .filterNot(_.endsWith(".tmp")) // a crashed `writeText` leftover
     val scopes = (markerMax.keySet ++ storedMax.keySet ++ marked) - CollapsedScope
     for (scope <- scopes) {
       val hwm = Seq(readHwm(conf, storePath, scope),
         markerMax.getOrElse(scope, Long.MinValue),
         storedMax.getOrElse(scope, Long.MinValue)).max
-      if (hwm > Long.MinValue) writeHwm(conf, storePath, scope, hwm)
+      if (hwm > Long.MinValue)
+        StoreMaintenance.writeText(conf, hwmPath(storePath, scope), hwm.toString)
     }
-    StoreMaintenance.compactSubWith(spark, edgesPath(storePath), edgeSchema(kt), collapse)
-    fs.delete(commits, true): Unit
+    StoreMaintenance.compactStore(spark, storePath, Seq(edges))
   }
 
   def recoverStore(spark: SparkSession, storePath: String): Unit =
-    StoreMaintenance.recoverSub(spark, edgesPath(storePath))
+    StoreMaintenance.recoverStore(spark, storePath, Seq(edgesOf(spark, storePath, LongType)))
 }

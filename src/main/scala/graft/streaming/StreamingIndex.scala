@@ -39,121 +39,20 @@ object StreamingIndex {
     * one file per bucket per batch; run the batch sink periodically to
     * compact (the standard streaming-ingest + batch-compaction split).
     *
-    * REPLAY SAFETY: `foreachBatch` is at-least-once — after a failure/
-    * restart the engine re-delivers the last uncommitted micro-batch, and
-    * a blind append would duplicate its (term, doc_id) rows, silently
+    * REPLAY SAFETY is the kernel's marker gate (`StoreMaintenance`):
+    * `foreachBatch` is at-least-once, and a blind append of a
+    * re-delivered batch would duplicate its (term, doc_id) rows, silently
     * breaking consumers that rely on posting uniqueness (`BooleanQuery
-    * .and` counts plain hits). Each appended batch therefore commits a
-    * marker under `<path>/_graft_commits/<checkpoint-scope>/<batchId>`
-    * AFTER its append job commits; a re-delivered batchId whose marker
-    * exists is skipped. Markers are SCOPED by a digest of the
-    * checkpoint location because batchIds are only meaningful within
-    * one checkpoint lineage — a stream restarted with a FRESH
-    * checkpoint (or a second stream ingesting into the same table)
-    * restarts batchIds at 0, and unscoped markers would silently drop
-    * its first batches as "already committed".
-    * Residual window: a crash BETWEEN the append's job commit and the
-    * marker write still replays that one batch (exact-once would need a
-    * transactional table format); the periodic batch-sink compaction
-    * restores uniqueness, and readers that must be exact across an
-    * uncompacted window should `dropDuplicates("term", "doc_id")` first.
+    * .and` counts plain hits). Exact-once would need a transactional
+    * table format, so readers that must be exact across an uncompacted
+    * residual window should `dropDuplicates("term", "doc_id")` first;
+    * `compact` restores uniqueness.
     */
   def sinkToIndex(postings: DataFrame, tableName: String, path: String,
-                  checkpointDir: String, buckets: Int = 32,
-                  migrateLegacyMarkers: Boolean = false): StreamingQuery = {
-    val conf = postings.sparkSession.sparkContext.hadoopConfiguration
-    val scope = commitScope(checkpointDir, conf)
-    // EXPLICIT one-time migration: marker trees written before scopes were
-    // filesystem-qualified hash the RAW checkpoint string. An upgrading
-    // deployment passes migrateLegacyMarkers=true ONCE; the legacy tree is
-    // RENAMED into the qualified scope before the stream starts, so a batch
-    // replayed across the upgrade still sees its old marker. The default is
-    // OFF because the legacy scope does not identify a lineage: a FRESH
-    // stream whose raw checkpoint spelling happens to collide with an old
-    // run's (relative path from another cwd, same spelling on another
-    // filesystem) would otherwise find legacy markers for batchIds 0..N and
-    // silently drop its first batches — the exact loss mode qualified
-    // scoping exists to prevent. The rename also makes the window expire by
-    // construction: after one migrated start the legacy tree is gone.
-    if (migrateLegacyMarkers)
-      migrateLegacyScope(path, legacyCommitScope(checkpointDir), scope, conf)
-    StoreMaintenance.registeredStart(conf, path) {
-      postings.writeStream
-        .outputMode("append")
-        .option("checkpointLocation", checkpointDir)
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          val appended = appendBatch(batch, batchId, tableName, path, buckets, scope)
-          // a SKIPPED replay must still EXECUTE the batch plan: the engine
-          // validates that every stateful operator in the micro-batch
-          // (dropDuplicatesWithinWatermark here) committed its state store,
-          // and an unexecuted batch fails with
-          // STATE_STORE_COMMIT_VALIDATION_FAILED. The noop sink drives the
-          // plan — state advances, nothing is written.
-          if (!appended) batch.write.format("noop").mode("overwrite").save()
-        }
-        .start()
+                  checkpointDir: String, buckets: Int = 32): StreamingQuery =
+    StoreMaintenance.sink(postings, path, checkpointDir) { (batch, batchId, scope) =>
+      appendBatch(batch, batchId, tableName, path, buckets, scope)
     }
-  }
-
-  /** Marker namespace for one checkpoint lineage (see `sinkToIndex`).
-    * The path is filesystem-QUALIFIED before hashing: equivalent
-    * spellings of the same directory (relative vs absolute, trailing
-    * slash, scheme-qualified) across a restart must land in the SAME
-    * marker scope, or a re-delivered batch would be re-appended — the
-    * exact duplication the markers exist to prevent.
-    */
-  private[graft] def commitScope(checkpointDir: String,
-                                 hadoopConf: org.apache.hadoop.conf.Configuration): String = {
-    val p = new org.apache.hadoop.fs.Path(checkpointDir)
-    val qualified = p.getFileSystem(hadoopConf).makeQualified(p).toString
-    md5Scope(qualified)
-  }
-
-  /** Pre-qualification scope (the raw checkpoint string, e.g. '/tmp/ckpt'
-    * vs the qualified 'file:/tmp/ckpt') — used only by the OPT-IN one-time
-    * migration (`sinkToIndex(migrateLegacyMarkers = true)`) of marker trees
-    * written by pre-qualification releases. Never consulted on lookup.
-    */
-  private[graft] def legacyCommitScope(checkpointDir: String): String =
-    md5Scope(checkpointDir)
-
-  private def md5Scope(s: String): String =
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
-
-  /** One-time marker-tree migration (see `sinkToIndex`): rename the legacy
-    * (raw-string-hashed) marker tree into the qualified scope. If the
-    * qualified tree already exists — e.g. the stream already ran once
-    * post-upgrade — individual markers are moved only where no qualified
-    * marker claims that batchId (the qualified marker is newer truth), and
-    * the legacy tree is removed either way so the migration never re-runs.
-    */
-  private[graft] def migrateLegacyScope(path: String, legacyScope: String, scope: String,
-                                        hadoopConf: org.apache.hadoop.conf.Configuration): Unit = {
-    if (legacyScope == scope) return
-    import org.apache.hadoop.fs.Path
-    val legacyDir = new Path(s"$path/_graft_commits/$legacyScope")
-    val fs = legacyDir.getFileSystem(hadoopConf)
-    if (!fs.exists(legacyDir)) return
-    val dst = new Path(s"$path/_graft_commits/$scope")
-    if (!fs.exists(dst)) {
-      fs.mkdirs(dst.getParent)
-      if (!fs.rename(legacyDir, dst))
-        throw new java.io.IOException(s"migrateLegacyScope: cannot rename $legacyDir to $dst")
-    } else {
-      // every unclaimed marker must MOVE before the legacy tree goes: a
-      // swallowed rename failure followed by the delete would erase a
-      // commit marker, and the engine would re-append that batch on
-      // replay — the exact duplication the markers prevent
-      fs.listStatus(legacyDir).foreach { st =>
-        val t = new Path(dst, st.getPath.getName)
-        if (!fs.exists(t) && !fs.rename(st.getPath, t))
-          throw new java.io.IOException(
-            s"migrateLegacyScope: cannot move marker ${st.getPath} to $t")
-      }
-      fs.delete(legacyDir, true): Unit
-    }
-  }
 
   /** One idempotent micro-batch append (factored out of `sinkToIndex` so
     * replay behavior is directly testable). @return whether the batch was

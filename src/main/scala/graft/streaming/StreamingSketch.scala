@@ -25,8 +25,17 @@ import graft.operators.Sketches
   * never double-count — the same idempotency-by-key discipline as the
   * pair/posting stores, without their latest-wins collapse (the key IS
   * the batch). The `runOnce` marker additionally short-circuits clean
-  * replays. The partial file is written tmp-then-rename so a reader
-  * never observes a torn part.
+  * replays. The partial file is written tmp-then-rename
+  * (`StoreMaintenance.writeText`) so a reader never observes a torn
+  * part.
+  *
+  * Parts and markers are keyed by the bare batchId, NOT scoped by
+  * checkpoint lineage (the parts of every family share one directory
+  * per store). A sink restarted over an existing store with a FRESH
+  * checkpoint would restart batchIds at 0 and have its first batches
+  * skipped as "already committed", so the first sink over a store
+  * records its commit scope in `_graft_lineage`, and a sink under any
+  * other scope is refused.
   *
   * The MG guarantees survive accumulation: each part obeys the bound
   * for its batch, and `merge` preserves completeness and the
@@ -76,32 +85,6 @@ object StreamingSketch {
     Sketches.MGState(counters, n)
   }
 
-  /** The ONE atomic part write: mkdirs, tmp write, delete-dst, rename —
-    * with the rename result CHECKED (HDFS-like filesystems report
-    * failure by returning false, not throwing; an unchecked rename would
-    * let the commit marker land with no part behind it, silently losing
-    * the batch's contribution on every replay — same convention as
-    * `StoreMaintenance`'s swap renames).
-    */
-  private def writeAtomic(conf: org.apache.hadoop.conf.Configuration,
-                          path: String, content: String): Unit = {
-    val dst = new org.apache.hadoop.fs.Path(path)
-    val fs = dst.getFileSystem(conf)
-    val dir = dst.getParent
-    if (!fs.exists(dir)) fs.mkdirs(dir): Unit
-    val tmp = new org.apache.hadoop.fs.Path(path + ".tmp")
-    val out = fs.create(tmp, true)
-    try out.write(content.getBytes("UTF-8")) finally out.close()
-    if (fs.exists(dst)) fs.delete(dst, false): Unit
-    if (!fs.rename(tmp, dst))
-      throw new java.io.IOException(s"rename $tmp -> $dst failed")
-  }
-
-  private def writePart(conf: org.apache.hadoop.conf.Configuration,
-                        store: String, batchId: Long,
-                        st: Sketches.MGState): Unit =
-    writeAtomic(conf, partPath(store, batchId), stateJson(st))
-
   /** Fold one micro-batch of documents into its own partial summary and
     * write it (idempotent by batchId). @return false on a clean replay
     * of a committed batch (skipped).
@@ -118,7 +101,7 @@ object StreamingSketch {
         .as[String]
         .select(new Sketches.MisraGriesAgg(capacity).toColumn.name("s"))
         .head()
-      writePart(conf, storePath, batchId, partial)
+      StoreMaintenance.writeText(conf, partPath(storePath, batchId), stateJson(partial))
     }
     // outside the commit marker: compaction is state-preserving, so a
     // crash mid-compact after the marker landed loses nothing a replay
@@ -141,25 +124,15 @@ object StreamingSketch {
     val dir = new org.apache.hadoop.fs.Path(partsDir(storePath))
     val fs = dir.getFileSystem(conf)
     if (!fs.exists(dir)) new Sketches.MisraGriesAgg(capacity).zero
-    else mergeMgFiles(fs, livePartFiles(fs, dir, ".json"), capacity)
+    else mergeMgFiles(conf, livePartFiles(fs, dir, ".json"), capacity)
   }
 
-  private def mergeMgFiles(fs: org.apache.hadoop.fs.FileSystem,
+  private def mergeMgFiles(conf: org.apache.hadoop.conf.Configuration,
                            files: Seq[org.apache.hadoop.fs.Path],
                            capacity: Int): Sketches.MGState = {
     val agg = new Sketches.MisraGriesAgg(capacity)
-    files.map(p => parseState(readUtf8(fs, p))).foldLeft(agg.zero)(agg.merge)
-  }
-
-  private def readUtf8(fs: org.apache.hadoop.fs.FileSystem,
-                       p: org.apache.hadoop.fs.Path): String = {
-    val len = fs.getFileStatus(p).getLen.toInt
-    val in = fs.open(p)
-    try {
-      val bytes = new Array[Byte](len)
-      in.readFully(bytes)
-      new String(bytes, "UTF-8")
-    } finally in.close()
+    files.map(p => parseState(StoreMaintenance.readText(conf, p.toString).get))
+      .foldLeft(agg.zero)(agg.merge)
   }
 
   /** The accumulated summary as a relation (term, mg_weight) — the
@@ -204,7 +177,7 @@ object StreamingSketch {
         .as[String]
         .select(new Sketches.CountMinAgg(depth, width).toColumn.name("s"))
         .head()
-      writeAtomic(conf, cmsPartPath(storePath, batchId), partial.mkString(","))
+      StoreMaintenance.writeText(conf, cmsPartPath(storePath, batchId), partial.mkString(","))
     }
     if (appended)
       autoCompact(conf, cmsPartsDir(storePath), ".txt", autoCompactAt)(
@@ -224,14 +197,14 @@ object StreamingSketch {
     val fs = dir.getFileSystem(conf)
     val zero = new Array[Long](depth * width + 1)
     if (!fs.exists(dir)) zero
-    else mergeCmsFiles(fs, livePartFiles(fs, dir, ".txt"), depth, width)
+    else mergeCmsFiles(conf, livePartFiles(fs, dir, ".txt"), depth, width)
   }
 
-  private def mergeCmsFiles(fs: org.apache.hadoop.fs.FileSystem,
+  private def mergeCmsFiles(conf: org.apache.hadoop.conf.Configuration,
                             files: Seq[org.apache.hadoop.fs.Path],
                             depth: Int, width: Int): Array[Long] =
     files.foldLeft(new Array[Long](depth * width + 1)) { (acc, p) =>
-      val part = readUtf8(fs, p).split(',').map(_.toLong)
+      val part = StoreMaintenance.readText(conf, p.toString).get.split(',').map(_.toLong)
       require(part.length == acc.length,
         s"CMS part ${p.getName} has ${part.length} counters, " +
           s"store expects ${acc.length} — depth/width changed mid-store")
@@ -290,7 +263,7 @@ object StreamingSketch {
         .as[Int]
         .select(new Sketches.GKAgg(1.0 / accuracy).toColumn.name("s"))
         .head()
-      writeAtomic(conf, gkPartPath(storePath, batchId), gkSerialize(partial))
+      StoreMaintenance.writeText(conf, gkPartPath(storePath, batchId), gkSerialize(partial))
     }
     if (appended)
       autoCompact(conf, gkPartsDir(storePath), ".txt", autoCompactAt)(
@@ -309,16 +282,16 @@ object StreamingSketch {
     val relErr = 1.0 / accuracy
     if (!fs.exists(dir))
       new QuantileSummaries(QuantileSummaries.defaultCompressThreshold, relErr).compress()
-    else mergeGkFiles(fs, livePartFiles(fs, dir, ".txt"), accuracy)
+    else mergeGkFiles(conf, livePartFiles(fs, dir, ".txt"), accuracy)
   }
 
-  private def mergeGkFiles(fs: org.apache.hadoop.fs.FileSystem,
+  private def mergeGkFiles(conf: org.apache.hadoop.conf.Configuration,
                            files: Seq[org.apache.hadoop.fs.Path],
                            accuracy: Int): QuantileSummaries = {
     val relErr = 1.0 / accuracy
     val zero = new QuantileSummaries(
       QuantileSummaries.defaultCompressThreshold, relErr).compress()
-    files.map(p => gkParse(readUtf8(fs, p), relErr))
+    files.map(p => gkParse(StoreMaintenance.readText(conf, p.toString).get, relErr))
       .foldLeft(zero)((a, b) => a.merge(b))
   }
 
@@ -371,7 +344,7 @@ object StreamingSketch {
     val conf = shingles.sparkSession.sparkContext.hadoopConfiguration
     val appended = StoreMaintenance.runOnce(conf, storePath, "bloomsketch", batchId) {
       val partial = shingles.stat.bloomFilter("s", BloomItemCapacity, BloomFpp)
-      writeAtomic(conf, bloomPartPath(storePath, batchId), bloomB64(partial))
+      StoreMaintenance.writeText(conf, bloomPartPath(storePath, batchId), bloomB64(partial))
     }
     if (appended)
       autoCompact(conf, bloomPartsDir(storePath), ".b64", autoCompactAt)(
@@ -389,21 +362,21 @@ object StreamingSketch {
     val fs = dir.getFileSystem(conf)
     val bf =
       if (!fs.exists(dir)) emptyBloom()
-      else mergeBloomFiles(fs, livePartFiles(fs, dir, ".b64"))
+      else mergeBloomFiles(conf, livePartFiles(fs, dir, ".b64"))
     graft.plans.BloomContains.serialize(bf)
   }
 
-  private def mergeBloomFiles(fs: org.apache.hadoop.fs.FileSystem,
+  private def mergeBloomFiles(conf: org.apache.hadoop.conf.Configuration,
                               files: Seq[org.apache.hadoop.fs.Path])
       : org.apache.spark.util.sketch.BloomFilter =
     files.foldLeft(emptyBloom()) { (acc, p) =>
-      acc.mergeInPlace(bloomParse(readUtf8(fs, p)))
+      acc.mergeInPlace(bloomParse(StoreMaintenance.readText(conf, p.toString).get))
     }
 
   private def bloomMergeContent(
-      fs: org.apache.hadoop.fs.FileSystem,
+      conf: org.apache.hadoop.conf.Configuration,
       files: Seq[org.apache.hadoop.fs.Path]): String =
-    bloomB64(mergeBloomFiles(fs, files))
+    bloomB64(mergeBloomFiles(conf, files))
 
   // ---- HLL family: per-source vocabulary-cardinality registers ----
   //
@@ -450,7 +423,7 @@ object StreamingSketch {
         .agg(hll_sketch_agg(col("term"), lit(HllLgK)).as("sk"))
         .collect()
         .map(r => r.getString(0) -> r.getAs[Array[Byte]](1)).toSeq
-      writeAtomic(conf, hllPartPath(storePath, batchId), hllJson(rows))
+      StoreMaintenance.writeText(conf, hllPartPath(storePath, batchId), hllJson(rows))
     }
     if (appended)
       autoCompact(conf, hllPartsDir(storePath), ".json", autoCompactAt)(
@@ -468,15 +441,15 @@ object StreamingSketch {
     }
   }
 
-  private def mergeHllFiles(fs: org.apache.hadoop.fs.FileSystem,
+  private def mergeHllFiles(conf: org.apache.hadoop.conf.Configuration,
                             files: Seq[org.apache.hadoop.fs.Path])
       : Map[String, Array[Byte]] =
-    mergeHllMaps(files.map(p => hllParse(readUtf8(fs, p))))
+    mergeHllMaps(files.map(p => hllParse(StoreMaintenance.readText(conf, p.toString).get)))
 
   private def hllMergeContent(
-      fs: org.apache.hadoop.fs.FileSystem,
+      conf: org.apache.hadoop.conf.Configuration,
       files: Seq[org.apache.hadoop.fs.Path]): String =
-    hllJson(mergeHllFiles(fs, files).toSeq)
+    hllJson(mergeHllFiles(conf, files).toSeq)
 
   /** The accumulated per-source estimates (source, approx_vocab) as a
     * DataFrame — union of every live part's registers, estimated with
@@ -489,7 +462,7 @@ object StreamingSketch {
     val fs = dir.getFileSystem(conf)
     val merged: Seq[(String, Array[Byte])] =
       if (!fs.exists(dir)) Seq.empty
-      else mergeHllFiles(fs, livePartFiles(fs, dir, ".json")).toSeq
+      else mergeHllFiles(conf, livePartFiles(fs, dir, ".json")).toSeq
     import spark.implicits._
     merged.toDF("source", "sk")
       .groupBy("source")
@@ -557,17 +530,17 @@ object StreamingSketch {
   // and the per-append auto-compaction (each append path compacts only
   // ITS family: the families have independent writers in principle)
   private def mgMergeContent(capacity: Int)(
-      fs: org.apache.hadoop.fs.FileSystem,
+      conf: org.apache.hadoop.conf.Configuration,
       files: Seq[org.apache.hadoop.fs.Path]): String =
-    stateJson(mergeMgFiles(fs, files, capacity))
+    stateJson(mergeMgFiles(conf, files, capacity))
   private def cmsMergeContent(depth: Int, width: Int)(
-      fs: org.apache.hadoop.fs.FileSystem,
+      conf: org.apache.hadoop.conf.Configuration,
       files: Seq[org.apache.hadoop.fs.Path]): String =
-    mergeCmsFiles(fs, files, depth, width).mkString(",")
+    mergeCmsFiles(conf, files, depth, width).mkString(",")
   private def gkMergeContent(accuracy: Int)(
-      fs: org.apache.hadoop.fs.FileSystem,
+      conf: org.apache.hadoop.conf.Configuration,
       files: Seq[org.apache.hadoop.fs.Path]): String =
-    gkSerialize(mergeGkFiles(fs, files, accuracy))
+    gkSerialize(mergeGkFiles(conf, files, accuracy))
 
   /** One family-dir compaction. The merged content is computed from the
     * SAME file list that determined `upto` — re-listing inside the merge
@@ -577,7 +550,7 @@ object StreamingSketch {
     */
   private def collapse(conf: org.apache.hadoop.conf.Configuration,
                        dirPath: String, ext: String)(
-      mergeFiles: (org.apache.hadoop.fs.FileSystem,
+      mergeFiles: (org.apache.hadoop.conf.Configuration,
                    Seq[org.apache.hadoop.fs.Path]) => String): Unit = {
     val dir = new org.apache.hadoop.fs.Path(dirPath)
     val fs = dir.getFileSystem(conf)
@@ -590,10 +563,10 @@ object StreamingSketch {
       })
       if (liveBatchIds.nonEmpty) {
         val upto = liveBatchIds.max
-        val content = mergeFiles(fs, live) // exactly the listed view
+        val content = mergeFiles(conf, live) // exactly the listed view
         val dst = new org.apache.hadoop.fs.Path(
           s"$dirPath/compacted_upto_$upto$ext")
-        writeAtomic(conf, dst.toString, content)
+        StoreMaintenance.writeText(conf, dst.toString, content)
         // GC strictly the superseded files: batch parts with id ≤ upto
         // and any OLDER compacted file — a part a racing ingest might
         // have appended (contract violation) is left intact AND is not
@@ -607,7 +580,7 @@ object StreamingSketch {
           })
           .foreach(p => fs.delete(p, false): Unit)
       }
-      // orphan-tmp GC: a crash between `writeAtomic`'s create and rename
+      // orphan-tmp GC: a crash between `writeText`'s create and rename
       // leaves `<name>.tmp`, which no reader ever matches (livePartFiles
       // keys on the bare names) — never live by construction, so any tmp
       // present here is garbage. Safe against in-flight writes because
@@ -636,7 +609,7 @@ object StreamingSketch {
     */
   private def autoCompact(conf: org.apache.hadoop.conf.Configuration,
                           dirPath: String, ext: String, threshold: Int)(
-      mergeFiles: (org.apache.hadoop.fs.FileSystem,
+      mergeFiles: (org.apache.hadoop.conf.Configuration,
                    Seq[org.apache.hadoop.fs.Path]) => String): Unit = {
     val dir = new org.apache.hadoop.fs.Path(dirPath)
     val fs = dir.getFileSystem(conf)
@@ -649,26 +622,33 @@ object StreamingSketch {
     }
   }
 
+  private def lineagePath(store: String) = s"$store/_graft_lineage"
+
   /** Start the incremental heavy-hitter sink over a document stream.
     * `capacity` MUST stay fixed for the lifetime of a store (summaries
     * of different capacities merge to the coarser bound — re-ingest
-    * into a fresh store to re-tune).
+    * into a fresh store to re-tune). Only the checkpoint lineage that
+    * first fed the store may feed it (`_graft_lineage`, see the object
+    * doc): a start under another checkpoint throws
+    * `IllegalStateException` instead of silently dropping its first
+    * batches.
     */
   def sinkHeavyHitters(docs: DataFrame, storePath: String,
                        checkpointDir: String,
                        capacity: Int = DefaultCapacity): StreamingQuery = {
     val conf = docs.sparkSession.sparkContext.hadoopConfiguration
-    StoreMaintenance.registeredStart(conf, storePath) {
-      docs.writeStream
-        .outputMode("append")
-        .option("checkpointLocation", checkpointDir)
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          val appended = processBatch(batch, batchId, storePath, capacity)
-          // a SKIPPED replay still executes the batch plan so any stateful
-          // upstream operator commits its state store
-          if (!appended) StoreMaintenance.noopExecute(batch)
-        }
-        .start()
+    val scope = StoreMaintenance.commitScope(checkpointDir, conf)
+    StoreMaintenance.readText(conf, lineagePath(storePath)) match {
+      case None => StoreMaintenance.writeText(conf, lineagePath(storePath), scope)
+      case Some(first) if first != scope =>
+        throw new IllegalStateException(
+          s"sinkHeavyHitters refused: $storePath is fed by another checkpoint lineage " +
+            s"— restart from that checkpoint, or ingest into a fresh store ($checkpointDir " +
+            "would restart batchIds at 0 and its first batches would be skipped)")
+      case Some(_) => ()
+    }
+    StoreMaintenance.sink(docs, storePath, checkpointDir) { (batch, batchId, _) =>
+      processBatch(batch, batchId, storePath, capacity)
     }
   }
 }

@@ -3,7 +3,8 @@ package graft
 import java.sql.Timestamp
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.streaming.StreamingEvents
+import graft.streaming.StreamingFacts
+import graft.queries.AnalysisQueries.EventStores
 
 class EventStreamSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
@@ -19,6 +20,12 @@ class EventStreamSpec extends AnyFunSuite {
   private def freshStore(tag: String): String =
     java.nio.file.Files.createTempDirectory(s"graft_events_$tag").toString
 
+  // the event store is the keyed-fact store under the event key and shape
+  private def process(batch: org.apache.spark.sql.DataFrame, batchId: Long, store: String) =
+    StreamingFacts.processBatch(batch, batchId, store, EventStores.Key, EventStores.Schema)
+  private def events(store: String) =
+    StreamingFacts.facts(spark, store, EventStores.Key, EventStores.Schema)
+
   private def rows(df: org.apache.spark.sql.DataFrame) =
     df.select("event_id", "t", "user_id", "event_type", "value", "props")
       .as[(Long, Timestamp, Long, String, Double, String)].collect().toSet
@@ -26,24 +33,24 @@ class EventStreamSpec extends AnyFunSuite {
   test("accumulated facts equal the batch relation under any batching") {
     val store = freshStore("accum")
     for (b <- 0 until 3)
-      assert(StreamingEvents.processBatch(
+      assert(process(
         facts.filter(col("event_id") % 3 === b), b, store))
-    assert(rows(StreamingEvents.events(spark, store)) === rows(facts))
+    assert(rows(events(store)) === rows(facts))
   }
 
   test("replayed batchId is skipped; a residual-window re-append dedupes by event_id") {
     val store = freshStore("replay")
-    assert(StreamingEvents.processBatch(facts, 0L, store))
-    assert(!StreamingEvents.processBatch(facts, 0L, store)) // marker gate
+    assert(process(facts, 0L, store))
+    assert(!process(facts, 0L, store)) // marker gate
     // crash window: append landed, marker write did not — the re-run
     // re-appends, and the read's event_id dedup restores exact-once
     val marker = new java.io.File(s"$store/_graft_commits/default/0")
     assert(marker.exists && marker.delete())
-    assert(StreamingEvents.processBatch(facts, 0L, store))
-    assert(rows(StreamingEvents.events(spark, store)) === rows(facts))
+    assert(process(facts, 0L, store))
+    assert(rows(events(store)) === rows(facts))
     // compaction physically drops the duplicates and preserves the relation
-    StreamingEvents.compactStore(spark, store)
-    assert(rows(StreamingEvents.events(spark, store)) === rows(facts))
+    StreamingFacts.compactStore(spark, store, EventStores.Key, EventStores.Schema)
+    assert(rows(events(store)) === rows(facts))
   }
 
   test("sinkEvents end-to-end: MemoryStream micro-batches accumulate the fact table") {
@@ -51,16 +58,16 @@ class EventStreamSpec extends AnyFunSuite {
     implicit val sqlCtx = spark.sqlContext
     val dir = java.nio.file.Files.createTempDirectory("graft_events_sink").toString
     val input = MemoryStream[(Long, Timestamp, Long, String, Double, String)]
-    val q = StreamingEvents.sinkEvents(
+    val q = StreamingFacts.sinkFacts(
       input.toDF().toDF("event_id", "t", "user_id", "event_type", "value", "props"),
-      s"$dir/store", s"$dir/ckpt")
+      s"$dir/store", s"$dir/ckpt", EventStores.Key, EventStores.Schema)
     try {
       (0 until 3).foreach { b =>
         input.addData(facts.filter(col("event_id") % 3 === b)
           .as[(Long, Timestamp, Long, String, Double, String)].collect().toSeq)
         q.processAllAvailable()
       }
-      assert(rows(StreamingEvents.events(spark, s"$dir/store")) === rows(facts))
+      assert(rows(events(s"$dir/store")) === rows(facts))
     } finally q.stop()
   }
 
@@ -75,10 +82,10 @@ class EventStreamSpec extends AnyFunSuite {
       val store = freshStore(s"anybatch$trial")
       for (b <- 0 until nBatches) {
         val ids = assign.collect { case (id, bb) if bb == b => id }.toSeq
-        StreamingEvents.processBatch(
+        process(
           facts.filter(col("event_id").isin(ids: _*)), b, store): Unit
       }
-      assert(rows(StreamingEvents.events(spark, store)) === rows(facts),
+      assert(rows(events(store)) === rows(facts),
         s"trial $trial ($nBatches batches)")
     }
   }

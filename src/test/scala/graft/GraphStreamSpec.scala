@@ -244,29 +244,6 @@ class GraphStreamSpec extends AnyFunSuite {
       Set(("a", "b", 2L), ("b", "c", 3L), ("c", "d", 1L)))
   }
 
-  test("a pre-r15 FILE high-water mark migrates to _graft_hwm/default on first access") {
-    // old layout: `_graft_hwm` was a single scope-blind FILE. Unmigrated,
-    // (a) readHwm finds no <scope> child → the mark is silently ignored
-    // and a post-compact replay double-counts, and (b) the next compact
-    // fails because the file blocks creating the directory.
-    val store = freshStore("legacyhwm")
-    assert(StreamingGraph.processBatch(facts.limit(10), 6L, store))
-    val committed = edgeSet(StreamingGraph.edges(spark, store))
-    // simulate the old-layout store: a value FILE where the dir now lives
-    val legacy = new java.io.File(s"$store/_graft_hwm")
-    val w = new java.io.PrintWriter(legacy); w.print("5"); w.close()
-    // the old mark must be honored (migrated into the default scope)…
-    assert(!StreamingGraph.processBatch(facts.limit(10), 5L, store))
-    assert(new java.io.File(s"$store/_graft_hwm/default").isFile)
-    assert(edgeSet(StreamingGraph.edges(spark, store)) === committed)
-    // …a later batch still ingests, and compaction no longer trips on
-    // the legacy file (and must not regress the migrated mark)
-    assert(StreamingGraph.processBatch(facts.limit(6), 7L, store))
-    StreamingGraph.compactStore(spark, store)
-    assert(!StreamingGraph.processBatch(facts.limit(10), 5L, store))
-    assert(!StreamingGraph.processBatch(facts.limit(6), 7L, store))
-  }
-
   test("compaction preserves served edges and the rebuilt fixpoint") {
     val store = freshStore("compact")
     for (b <- 0 until 3)

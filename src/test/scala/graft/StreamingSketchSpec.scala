@@ -94,6 +94,24 @@ class StreamingSketchSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
+  test("streamed MG sink: a fresh checkpoint over a fed store is refused, not silently skipped") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val store = tmpDir("graft-mgsketch-lineage-") + "/store"
+    val inA = MemoryStream[(Long, String)]
+    val a = StreamingSketch.sinkHeavyHitters(
+      inA.toDF().toDF("doc_id", "text"), store, tmpDir("graft-mgsketch-ckpt-a-"), capacity = 4)
+    try { inA.addData(batches.head: _*); a.processAllAvailable() } finally a.stop()
+    val before = StreamingSketch.state(spark, store, capacity = 4)
+    assert(before.n > 0)
+    // sink B's batchIds restart at 0: unrefused, its batch 0 would hit
+    // sink A's marker and its counts would vanish
+    val inB = MemoryStream[(Long, String)]
+    intercept[IllegalStateException](StreamingSketch.sinkHeavyHitters(
+      inB.toDF().toDF("doc_id", "text"), store, tmpDir("graft-mgsketch-ckpt-b-"), capacity = 4))
+    assert(StreamingSketch.state(spark, store, capacity = 4) === before)
+  }
+
   test("streamed CMS store: linearity — merged parts EQUAL the single-pass sketch") {
     import spark.implicits._
     val store = tmpDir("graft-cmssketch-") + "/store"
@@ -316,7 +334,7 @@ class StreamingSketchSpec extends AnyFunSuite {
       StreamingSketch.processBatchCms(docsDf(b), id.toLong, store, depth, width): Unit
       StreamingSketch.processBatchGk(docsDf(b), id.toLong, store, acc): Unit
     }
-    // simulate a crash between writeAtomic's create and rename in each family
+    // simulate a crash between writeText's create and rename in each family
     val orphans = Seq(s"$store/mg_parts/batch_9.json.tmp",
       s"$store/cms_parts/batch_9.txt.tmp",
       s"$store/gk_parts/compacted_upto_9.txt.tmp")

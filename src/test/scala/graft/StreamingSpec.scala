@@ -287,109 +287,14 @@ class StreamingSpec extends AnyFunSuite {
     // must append, not be mistaken for the first stream's committed 0
     assert(graft.streaming.StreamingIndex
       .appendBatch(batch.filter($"term" === "dog"), 0L, "t_replay_idx", s"$dir/idx",
-        buckets = 4, scope = graft.streaming.StreamingIndex.commitScope("other-ckpt",
+        buckets = 4, scope = graft.streaming.StoreMaintenance.commitScope("other-ckpt",
           spark.sparkContext.hadoopConfiguration)))
     assert(spark.table("t_replay_idx").count() === 4)
   }
 
-  test("legacy marker migration is opt-in: default lookup never consults the legacy scope") {
-    import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_legacy_off").toString
-    val (tbl, path, ckpt) = ("t_legacy_off_idx", s"$dir/idx", s"$dir/ckpt")
-    val conf = spark.sparkContext.hadoopConfiguration
-    val scope = graft.streaming.StreamingIndex.commitScope(ckpt, conf)
-    val legacy = graft.streaming.StreamingIndex.legacyCommitScope(ckpt)
-    assert(scope !== legacy) // raw '/…' vs qualified 'file:/…' hash apart
-    // a PREVIOUS lineage (or a raw-spelling collision) left a legacy marker
-    // claiming batch 0 — a fresh stream that did NOT ask for migration must
-    // ignore it, or its first batch would be silently dropped
-    val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(conf)
-    fs.mkdirs(new org.apache.hadoop.fs.Path(s"$path/_graft_commits/$legacy"))
-    fs.create(new org.apache.hadoop.fs.Path(s"$path/_graft_commits/$legacy/0"), true).close()
-    val batch = Seq(("cat", 1L, "u1")).toDF("term", "doc_id", "url")
-    assert(graft.streaming.StreamingIndex.appendBatch(batch, 0L, tbl, path, 4, scope))
-    assert(spark.table(tbl).count() === 1) // batch 0 landed despite the legacy marker
-  }
-
-  test("legacy marker migration: opted-in upgrade replays skip, window expires, merge keeps qualified truth") {
-    import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_legacy_mig").toString
-    val (tbl, path, ckpt) = ("t_legacy_mig_idx", s"$dir/idx", s"$dir/ckpt")
-    val conf = spark.sparkContext.hadoopConfiguration
-    val scope = graft.streaming.StreamingIndex.commitScope(ckpt, conf)
-    val legacy = graft.streaming.StreamingIndex.legacyCommitScope(ckpt)
-    val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(conf)
-    def mark(s: String, id: Long) = {
-      fs.mkdirs(new org.apache.hadoop.fs.Path(s"$path/_graft_commits/$s"))
-      fs.create(new org.apache.hadoop.fs.Path(s"$path/_graft_commits/$s/$id"), true).close()
-    }
-    // pre-upgrade run committed batches 0 and 1 under the raw-string scope
-    mark(legacy, 0L); mark(legacy, 1L)
-    graft.streaming.StreamingIndex.migrateLegacyScope(path, legacy, scope, conf)
-    // post-upgrade replay of batch 1 must SKIP — its marker migrated
-    val batch = Seq(("cat", 1L, "u1")).toDF("term", "doc_id", "url")
-    assert(!graft.streaming.StreamingIndex.appendBatch(batch, 1L, tbl, path, 4, scope))
-    // …and the window has EXPIRED: the legacy tree is gone
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$path/_graft_commits/$legacy")))
-    // a new batch appends into the qualified scope as usual
-    assert(graft.streaming.StreamingIndex.appendBatch(batch, 2L, tbl, path, 4, scope))
-    assert(fs.exists(new org.apache.hadoop.fs.Path(s"$path/_graft_commits/$scope/2")))
-    // MERGE case: qualified scope already has batch 3 (post-upgrade run
-    // happened before a second migration attempt); legacy claims 3 and 4.
-    // Migration must keep the qualified 3, adopt 4, and remove the tree.
-    mark(legacy, 3L); mark(legacy, 4L)
-    assert(graft.streaming.StreamingIndex.appendBatch(batch, 3L, tbl, path, 4, scope))
-    graft.streaming.StreamingIndex.migrateLegacyScope(path, legacy, scope, conf)
-    assert(!graft.streaming.StreamingIndex.appendBatch(batch, 4L, tbl, path, 4, scope))
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$path/_graft_commits/$legacy")))
-    // migrating when no legacy tree exists is a no-op
-    graft.streaming.StreamingIndex.migrateLegacyScope(path, legacy, scope, conf)
-  }
-
-  test("sinkToIndex(migrateLegacyMarkers=true): pre-upgrade batch 0 marker suppresses the stream's replayed batch 0") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_legacy_e2e").toString
-    val (path, ckpt) = (s"$dir/idx", s"$dir/ckpt")
-    val conf = spark.sparkContext.hadoopConfiguration
-    val legacy = graft.streaming.StreamingIndex.legacyCommitScope(ckpt)
-    val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(conf)
-    fs.mkdirs(new org.apache.hadoop.fs.Path(s"$path/_graft_commits/$legacy"))
-    fs.create(new org.apache.hadoop.fs.Path(s"$path/_graft_commits/$legacy/0"), true).close()
-    val input = MemoryStream[(Long, String, String, Timestamp)]
-    // micro-batch 0: in the upgrade-replay scenario this is the batch the
-    // pre-upgrade run already appended (its rows are on disk via that
-    // run; here the table starts empty so a skip leaves count 0). Data is
-    // added BEFORE start so batch 0 deterministically carries doc 1.
-    input.addData((1L, "u1", "the cat sat", ts("10:00")))
-    val q = graft.streaming.StreamingIndex.sinkToIndex(
-      graft.streaming.StreamingIndex
-        .postingsStream(input.toDF().toDF("doc_id", "url", "text", "ingest_t")),
-      "t_legacy_e2e_idx", path, ckpt, buckets = 4, migrateLegacyMarkers = true)
-    try {
-      q.processAllAvailable()
-      // skipped, not re-appended: doc 1's postings never land (the
-      // pre-upgrade run's rows would already be on disk in the real
-      // scenario). A trailing no-data watermark-advance batch may create
-      // the table empty — content, not existence, is the contract.
-      if (spark.catalog.tableExists("t_legacy_e2e_idx"))
-        assert(spark.table("t_legacy_e2e_idx").count() === 0)
-      // a later micro-batch is new — it lands normally
-      input.addData((2L, "u2", "cat and dog", ts("10:05")))
-      q.processAllAvailable()
-      // the count() above cached this session's (empty) relation; the
-      // append ran in the stream's CLONED session, whose refresh doesn't
-      // reach this session's cache — standard cross-session visibility
-      spark.catalog.refreshTable("t_legacy_e2e_idx")
-      assert(spark.table("t_legacy_e2e_idx").select("term", "doc_id", "url")
-        .as[(String, Long, String)].collect().toSet
-        === Set(("cat", 2L, "u2"), ("dog", 2L, "u2"))) // doc 1 stayed suppressed
-    } finally q.stop()
-  }
-
   test("commitScope: equivalent spellings of one checkpoint dir share a marker scope") {
     val conf = spark.sparkContext.hadoopConfiguration
-    def scope(s: String) = graft.streaming.StreamingIndex.commitScope(s, conf)
+    def scope(s: String) = graft.streaming.StoreMaintenance.commitScope(s, conf)
     assert(scope("/tmp/ckpt") === scope("/tmp/ckpt/"))
     assert(scope("/tmp/ckpt") === scope("file:/tmp/ckpt"))
     assert(scope("/tmp/ckpt") !== scope("/tmp/other"))
@@ -694,7 +599,7 @@ class StreamingSpec extends AnyFunSuite {
     // re-append, compactStore restores physical uniqueness
     val b = fixture.take(8).toDF("vec_id", "embedding")
     assert(!graft.streaming.StreamingEmbed.processBatch(b, 0L, store,
-      graft.streaming.StreamingIndex.commitScope(ckpt, spark.sparkContext.hadoopConfiguration),
+      graft.streaming.StoreMaintenance.commitScope(ckpt, spark.sparkContext.hadoopConfiguration),
       bits = 4))
     assert(graft.streaming.StreamingEmbed.processBatch(b, 99L, store, bits = 4)) // new scope+id appends
     val expected = graft.streaming.StreamingEmbed.pairs(spark, store)
