@@ -312,32 +312,24 @@ object RelationalQueries {
     private def withKey(d: DataFrame): DataFrame =
       d.withColumn("l_key", md5(to_json(struct(d.columns.map(col): _*))))
 
-    // skips servedPath's eager parquet read once built this process —
-    // the accessor below re-reads through StreamingFacts.facts anyway,
-    // so the served DataFrame here would be thrown away every call
-    private val built = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
     def store(s: SparkSession, dir: String): String = {
       val path = graft.sources.SessionStores.scopedPath("graft_listream",
         "store_" + graft.sources.SessionStores.tagOf(dir))
-      if (!built.contains(path)) {
-        graft.sources.SessionStores.servedPath(s,
-          graft.streaming.StreamingFacts.factsPath(path)) {
-          val d = withKey(tbl(s, dir, "lineitem"))
-          for (b <- 0 until 3)
-            graft.streaming.StreamingFacts.processBatch(
-              d.filter(col("l_orderkey") % 3 === b), b.toLong, path,
-              "l_key", d.schema, filesPerBatch = 0): Unit
-          // settle the store ONCE at build: the three warehouse twins
-          // serve it on every timed read, and re-proving exact-once
-          // with a full fact-table exchange per query is repeated work
-          // that grows with the table — compaction collapses the
-          // replay-residual window physically, and the clean marker
-          // lets StreamingFacts.facts serve raw until the next append
-          graft.streaming.StreamingFacts.compactStore(s, path, "l_key", d.schema)
-        }: Unit
-        built.add(path): Unit
-      }
+      graft.sources.SessionStores.servedPath(s,
+        graft.streaming.StreamingFacts.factsPath(path)) {
+        val d = withKey(tbl(s, dir, "lineitem"))
+        for (b <- 0 until 3)
+          graft.streaming.StreamingFacts.processBatch(
+            d.filter(col("l_orderkey") % 3 === b), b.toLong, path,
+            "l_key", d.schema, filesPerBatch = 0): Unit
+        // settle the store ONCE at build: the three warehouse twins
+        // serve it on every timed read, and re-proving exact-once
+        // with a full fact-table exchange per query is repeated work
+        // that grows with the table — compaction collapses the
+        // replay-residual window physically, and the clean marker
+        // lets StreamingFacts.facts serve raw until the next append
+        graft.streaming.StreamingFacts.compactStore(s, path, "l_key", d.schema)
+      }: Unit
       path
     }
 

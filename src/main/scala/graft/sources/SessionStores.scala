@@ -12,7 +12,8 @@ import org.apache.spark.sql.functions.col
   * LIFETIMES — the one rule for choosing a backing:
   *   - file-backed stores (`servedPath` / `servedTable`) live for the
   *     PROCESS: built once per target path or table, served to every
-  *     session, deleted by the shutdown hook below;
+  *     session, deleted by the shutdown hook below; a `servedPath`
+  *     relation is resolved once per SESSION (a `memo` entry);
   *   - `memo` entries live for the SESSION: built once per
   *     (session, key), evicted by the first miss after that session's
   *     context stops, and released early (persisted blocks
@@ -110,7 +111,12 @@ private[graft] object SessionStores {
 
   /** Serve a plain parquet path store, running `build` (which must write
     * `path`) at most once per process. No catalog involved, so no
-    * staleness guard is needed: the path embeds the process scope.
+    * staleness guard is needed: the path embeds the process scope. The
+    * relation is resolved (file listing, schema) once per session and
+    * memoized: the target is written once per process, and the only
+    * later rewrites of a served path — a directory swap or its crash
+    * recovery in `StoreMaintenance` — drop its resolved relations
+    * (`unresolve`), so a session never reads a file list that is gone.
     */
   def servedPath(spark: SparkSession, path: String)(build: => Unit): DataFrame = {
     lockFor(path).synchronized {
@@ -119,8 +125,14 @@ private[graft] object SessionStores {
         verified.add(path): Unit
       }
     }
-    spark.read.parquet(path)
+    memo(spark, "served:" + path)(spark.read.parquet(path))
   }
+
+  /** Drop every session's resolved `servedPath` relation of `path`; the
+    * next call lists the path again. No-op for a path never served.
+    */
+  private[graft] def unresolve(path: String): Unit =
+    memos.keySet.removeIf(_._2 == "served:" + path): Unit
 
   private val memos =
     new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), AnyRef]()

@@ -250,8 +250,10 @@ object Sinks {
 /** Session-scoped registry of persisted, term-bucketed posting tables —
   * one per corpus directory. First access builds the index ONCE via the
   * K2 sink; every subsequent point/boolean query against the same corpus
-  * reads the bucketed table with bucket pruning (the plan shows
-  * `SelectedBucketsCount: k out of n`, no Exchange before the filter).
+  * reads only the files of its terms' buckets, with no Exchange before
+  * the filter. The scan is flat unless an operator above it uses the term
+  * partitioning (`PrunedBucketScan`), so it runs one task per selected
+  * file split, not one per bucket.
   */
 object IndexStore {
 

@@ -396,7 +396,9 @@ object StoreMaintenance {
   /** The two-rename directory swap every compaction ends with: install
     * the completed `<path>__compacting` rewrite at `path`, moving the
     * previous live directory aside as `<path>__pre_compact` and dropping
-    * it once the install lands. A crash at any point leaves either the
+    * it once the install lands; the sessions' resolved `servedPath`
+    * relations of `path` are dropped with it (`SessionStores.unresolve`),
+    * since they list the old files. A crash at any point leaves either the
     * originals or the rewrite complete on disk (`recoverSub`'s crash
     * windows) — shared so the index compact and the sub-store compacts
     * cannot drift.
@@ -411,6 +413,7 @@ object StoreMaintenance {
       throw new java.io.IOException(s"swapInto: cannot move $path aside")
     if (!fs.rename(tmp, live))
       throw new java.io.IOException(s"swapInto: cannot install $tmp at $path")
+    graft.sources.SessionStores.unresolve(path)
     fs.delete(old, true): Unit
   }
 
@@ -434,6 +437,7 @@ object StoreMaintenance {
         if (!fs.rename(old, live))
           throw new java.io.IOException(s"recoverSub: cannot restore $old at $path")
       }
+      graft.sources.SessionStores.unresolve(path)
     }
     fs.delete(tmp, true); fs.delete(old, true): Unit
   }

@@ -5,6 +5,11 @@ import org.apache.spark.sql.SparkSession
   * picks the corpus (default sf0.001); `SPARK_GRAFT_PLAN_MODE=formatted`
   * switches from the executed-plan tree to `explain("formatted")`
   * (the representation the optimization-round plan artifacts use).
+  *
+  * Printing a plan builds the query's DataFrame, so a store-backed query
+  * builds its session stores first, as a side effect: the persisted
+  * index, the term statistics, and for the ft gate (`q_quality_ft*`)
+  * the 48-round fit.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {

@@ -14,13 +14,19 @@ import org.apache.spark.sql.SparkSession
   *     default just fragments tiny exchanges);
   *   - UTC session timezone (date/timestamp parity with the DuckDB
   *     oracle);
-  *   - autoBucketedScan OFF so term-bucketed index lookups bucket-prune;
   *   - nanosAsLong (events.parquet ships TIMESTAMP(NANOS) in some
   *     generations — see Tables.events);
   *   - json.enablePartialResults OFF (r16 ADVICE: a jar bump that
   *     retains partially-parsed fields on malformed records would
   *     silently flip the q_bad_records quarantine masses);
   *   - the engine's Catalyst extensions (native codegen expressions).
+  *
+  * Bucketed scans are left to two rules, with no pin: Spark's
+  * `DisableUnnecessaryBucketedScan` (on by default) flattens a bucketed
+  * scan no operator needs the partitioning of — a term lookup — and the
+  * engine's `PrunedBucketScan` flattens a bucket-pruned scan whenever
+  * doing so adds no shuffle (phrase, AND-NOT, the BM25 tf slice). A flat
+  * scan still reads only the files of the selected buckets.
   */
 object EngineSession {
   def builder(master: String, shufflePartitions: String): SparkSession.Builder =
@@ -29,7 +35,6 @@ object EngineSession {
       .config("spark.sql.shuffle.partitions", shufflePartitions)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-      .config("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.json.enablePartialResults", "false")
       .config("spark.sql.extensions", "graft.plans.GraftExtensions")

@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Plan-shape regression tests: the scale-critical physical-plan
@@ -151,9 +153,11 @@ class PlanSpec extends AnyFunSuite {
     assert(p.contains("TakeOrderedAndProject"), "top-k should be TakeOrdered, not global sort")
   }
 
+  private def query(name: String) = SparkEntry.queries(name)(spark, dir)
+
   test("q_term_lookup: bucket-pruned persisted index, zero exchanges") {
     val p = plan("q_term_lookup")
-    assert(p.contains("SelectedBucketsCount: 1 out of 32"), s"no bucket pruning:\n$p")
+    PlanScans.assertBucketPruned(query("q_term_lookup"), _ == 1)
     assert(shuffles(p) === 0 && broadcasts(p) === 0)
   }
 
@@ -161,25 +165,20 @@ class PlanSpec extends AnyFunSuite {
     // the SymSpell dictionary match lifts its (bounded) matched-term set
     // to the driver precisely so the postings read is a STATIC IN filter
     // — "park" matches {part, spark}, two terms → at most two buckets
-    val p = plan("q_term_fuzzy")
-    assert("SelectedBucketsCount: [12] out of 32".r.findFirstIn(p).isDefined,
-      s"postings scan not bucket-pruned:\n$p")
+    PlanScans.assertBucketPruned(query("q_term_fuzzy"), n => n == 1 || n == 2)
   }
 
   test("q_phrase: every phrase-term slice bucket-prunes the persisted positional index") {
-    val p = plan("q_phrase")
     // two phrase terms → two term-filtered scans of the positional table,
     // each pruned to its term's single bucket — the corpus is never
     // re-tokenized to answer a phrase query
-    assert("SelectedBucketsCount: 1 out of 32".r.findAllIn(p).length === 2,
-      s"phrase-term scans not bucket-pruned:\n$p")
+    PlanScans.assertBucketPruned(query("q_phrase"), _ == 1, scans = 2)
   }
 
   test("q_near: both proximity slices bucket-pruned, no corpus scan") {
-    val exec = SparkEntry.queries("q_near")(spark, dir).queryExecution.executedPlan
-    val p = exec.toString
-    assert("SelectedBucketsCount: 1 out of 32".r.findAllIn(p).length === 2,
-      s"proximity slices not bucket-pruned:\n$p")
+    val near = query("q_near")
+    PlanScans.assertBucketPruned(near, _ == 1, scans = 2)
+    val exec = near.queryExecution.executedPlan
     val scansDocs = PlanScans.fileScans(exec).exists(
       _.relation.location.rootPaths.exists(_.toString.contains("documents.parquet")))
     assert(!scansDocs, "q_near re-tokenizes the corpus instead of reading the positional store")
@@ -191,12 +190,11 @@ class PlanSpec extends AnyFunSuite {
     // joined broadcast-side — never a sort-merge join of unpruned
     // posting relations (which at 100 TB would shuffle the whole index
     // per phrase term)
-    val p = graft.operators.InvertedIndex.phraseQuery(
+    val phrase = graft.operators.InvertedIndex.phraseQuery(
       graft.sources.IndexStore.positionalPostings(spark, dir),
       Seq("value", "table", "spark", "hash"))
-      .queryExecution.executedPlan.toString
-    assert("SelectedBucketsCount: 1 out of 32".r.findAllIn(p).length === 4,
-      s"phrase-term scans not bucket-pruned:\n$p")
+    val p = phrase.queryExecution.executedPlan.toString
+    PlanScans.assertBucketPruned(phrase, _ == 1, scans = 4)
     assert(!p.contains("SortMergeJoin"), s"phrase slices joined by SMJ:\n$p")
   }
 
@@ -576,14 +574,51 @@ class PlanSpec extends AnyFunSuite {
 
   test("boolean queries read the bucket-pruned index with one scan pass per side") {
     val and = plan("q_bool_and")
-    assert(and.contains("SelectedBucketsCount"), "AND not bucket-pruned")
+    PlanScans.assertBucketPruned(query("q_bool_and"), n => n == 1 || n == 2)
     assert(shuffles(and) === 1, "AND should be filter + one aggregation shuffle")
     // the match counter is a plain count over the (term, doc_id)-unique
     // posting relation — a countDistinct here plans an Expand + two-phase
     // distinct aggregate, doubling the shuffle width
     assert(!and.contains("Expand"), s"AND regressed to a distinct aggregate:\n$and")
-    val not = plan("q_bool_not")
-    assert(not.contains("SelectedBucketsCount"), "NOT not bucket-pruned")
+    PlanScans.assertBucketPruned(query("q_bool_not"), _ == 1, scans = 2)
+  }
+
+  test("one-term lookup on IndexStore.postings reads its bucket's file in one task") {
+    val lookup = graft.operators.InvertedIndex.lookup(
+      graft.sources.IndexStore.postings(spark, dir), "spark")
+    val r = PlanScans.assertBucketPruned(lookup, _ == 1).head
+    assert(r.partitions === 1, s"lookup scheduled ${r.partitions} scan tasks")
+  }
+
+  test("phrase, AND-NOT and the BM25 tf slice read pruned buckets through flat scans") {
+    // a broadcast join sits between each slice and its aggregate, so
+    // Spark's own DisableUnnecessaryBucketedScan keeps the bucketed scan
+    // (one task per bucket); PrunedBucketScan flattens it, since no
+    // operator above needs the term partitioning
+    val positional = graft.sources.IndexStore.positionalPostings(spark, dir)
+    val postings = graft.sources.IndexStore.postings(spark, dir)
+    Seq(
+      "phrase" -> (graft.operators.InvertedIndex.phraseQuery(positional, Seq("value", "table")), 2),
+      "andNot" -> (graft.operators.BooleanQuery.andNot(postings, "spark", Seq("hash")), 2),
+      "bm25" -> (graft.sources.TermStatsStore.bm25(spark, dir, Seq("spark", "hash"), 10), 1)
+    ).foreach { case (name, (df, scans)) =>
+      val reads = PlanScans.assertBucketPruned(df, n => n == 1 || n == 2, scans)
+      assert(reads.forall(!_.scan.bucketedScan),
+        s"$name kept a bucketed scan:\n${df.queryExecution.executedPlan}")
+    }
+  }
+
+  test("PrunedBucketScan refuses a plan that uses the layout: term-keyed count stays bucketed") {
+    // grouping by the bucket key is satisfied by the bucketed scan's
+    // partitioning; a flat scan would need a shuffle, so the rule leaves it
+    val counts = graft.sources.IndexStore.postings(spark, dir)
+      .filter(col("term").isin("spark", "hash")).groupBy("term").count()
+    val reads = PlanScans.assertBucketPruned(counts, n => n == 1 || n == 2)
+    val exec = counts.queryExecution.executedPlan
+    assert(reads.forall(_.scan.bucketedScan), s"term-keyed count lost its bucketed scan:\n$exec")
+    assert(PlanScans.nodes(exec) { case e: ShuffleExchangeLike => e }.isEmpty,
+      s"term-keyed count gained a shuffle:\n$exec")
+    assert(counts.collect().length === 2)
   }
 
   test("q_colocated_join: bucketed large×large join plus per-key agg with ZERO exchanges") {

@@ -44,6 +44,51 @@ class SessionStoresSpec extends AnyFunSuite {
 
   private val S = graft.sources.SessionStores
 
+  /** Spark jobs `body` starts on this thread: tagged with a job group and
+    * counted up to a marker job, so listener delivery is complete.
+    */
+  private def jobsStartedBy(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val group = "jobs_" + System.nanoTime()
+    val seen = new java.util.concurrent.LinkedBlockingQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == group)
+          seen.put(Option(e.properties.getProperty("spark.job.description")).getOrElse(""))
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "")
+    try {
+      body
+      sc.setJobDescription("marker")
+      sc.parallelize(Seq(1), 1).count()
+      var n = 0
+      var d = seen.poll(30, java.util.concurrent.TimeUnit.SECONDS)
+      while (d != null && d != "marker") { n += 1; d = seen.poll(30, java.util.concurrent.TimeUnit.SECONDS) }
+      assert(d === "marker", "marker job never reached the listener")
+      n
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  test("servedPath resolves its relation once per session: a repeat call starts no job") {
+    val path = S.scopedPath("graft_test_store", "resolve_" + System.nanoTime())
+    val first = S.servedPath(spark, path) {
+      (0L until 10L).toDF("v").write.mode("overwrite").parquet(path)
+    }
+    var again: org.apache.spark.sql.DataFrame = null
+    assert(jobsStartedBy { again = S.servedPath(spark, path)(fail("built twice")) } === 0,
+      "a repeat call re-listed or re-inferred the store")
+    assert(again eq first)
+    val other = spark.newSession()
+    val theirs = S.servedPath(other, path)(fail("built twice"))
+    assert(!(theirs eq first), "a new session must resolve its own relation")
+    assert(theirs.sparkSession eq other)
+    assert(theirs.count() === 10L)
+  }
+
   test("memo builds once under 4 concurrent first calls on one (session, key)") {
     val key = "test.concurrent:" + System.nanoTime()
     val builds = new java.util.concurrent.atomic.AtomicInteger(0)

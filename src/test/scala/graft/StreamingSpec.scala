@@ -237,8 +237,7 @@ class StreamingSpec extends AnyFunSuite {
       assert(tbl.count() === 4) // cat,sat / cat,dog — both batches landed
       val lookup = tbl.filter($"term" === "cat")
       assert(lookup.select("doc_id").as[Long].collect().sorted === Seq(1L, 2L))
-      val plan = lookup.queryExecution.executedPlan.toString
-      assert(plan.contains("SelectedBucketsCount: 1 out of 8"), s"no pruning:\n$plan")
+      PlanScans.assertBucketPruned(lookup, _ == 1)
     } finally q.stop()
   }
 
@@ -332,9 +331,7 @@ class StreamingSpec extends AnyFunSuite {
     // marker tree cleared with the swap
     assert(!new java.io.File(s"$path/_graft_commits").exists())
     // bucket pruning still active over the re-registered table
-    val plan = spark.table(tbl).filter($"term" === "cat")
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("SelectedBucketsCount: 1 out of 4"), s"no pruning:\n$plan")
+    PlanScans.assertBucketPruned(spark.table(tbl).filter($"term" === "cat"), _ == 1)
   }
 
   test("compact after a stale read keeps every streamed batch") {
@@ -385,9 +382,7 @@ class StreamingSpec extends AnyFunSuite {
     // and replay of batch 0 is still recognized as committed
     assert(!graft.streaming.StreamingIndex.appendBatch(b0, 0L, tbl, path, buckets = 4))
     // bucket pruning intact over the re-registered table
-    val plan = spark.table(tbl).filter($"term" === "cat")
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("SelectedBucketsCount: 1 out of 4"), s"no pruning:\n$plan")
+    PlanScans.assertBucketPruned(spark.table(tbl).filter($"term" === "cat"), _ == 1)
   }
 
   test("compact crash windows: every row recoverable on disk, recoverCompact restores the table from each state") {
@@ -458,9 +453,7 @@ class StreamingSpec extends AnyFunSuite {
     assert(spark.table(tbl).as[(String, Long, String)].collect().toSet === distinctRows)
     assert(!fs.exists(new Path(oldPath)))
     // bucket pruning survives recovery (the re-registered spec matches the files)
-    val plan = spark.table(tbl).filter($"term" === "cat")
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("SelectedBucketsCount: 1 out of 4"), s"no pruning:\n$plan")
+    PlanScans.assertBucketPruned(spark.table(tbl).filter($"term" === "cat"), _ == 1)
   }
 
   test("batch and streaming agree on the same input") {
