@@ -200,7 +200,7 @@ object Dedup {
 
   /** `decontaminateBloom` over an ALREADY-BUILT serialized filter — the
     * form a pipeline maintaining its eval filter incrementally calls
-    * (`StreamingSketch.bloomState`): the probe pass is identical, only
+    * (`StreamingSketch.Bloom.state`): the probe pass is identical, only
     * the filter's provenance differs.
     */
   def decontaminateBloomWith(corpusShingles: DataFrame,

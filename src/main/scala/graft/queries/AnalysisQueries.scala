@@ -2651,7 +2651,7 @@ object AnalysisQueries {
       val store = SketchStores.streamedMgStore(s, dir)
       graft.operators.Sketches.heavyHittersCheckedFromState(
         graft.sources.IndexStore.postings(s, dir).select("term"),
-        graft.streaming.StreamingSketch.state(s, store))
+        graft.streaming.StreamingSketch.Mg().state(s, store))
     }),
     // CMS streamed twin — CMS is LINEAR, so the merged part arrays equal
     // the union-stream sketch exactly; identical oracle SQL as the batch
@@ -2660,7 +2660,7 @@ object AnalysisQueries {
       val store = SketchStores.streamedMgStore(s, dir)
       graft.operators.Sketches.cmsWatchlistCheckedFromState(
         graft.sources.IndexStore.postings(s, dir).select("term"),
-        graft.streaming.StreamingSketch.cmsState(s, store),
+        graft.streaming.StreamingSketch.Cms().state(s, store),
         Seq("spark", "hash", "join", "graftabsent"))
     }),
     // GK streamed twin: quantile values queried from the merged per-batch
@@ -2669,7 +2669,7 @@ object AnalysisQueries {
     // union stream).
     "q_quantiles_gk_streamed" -> ((s, dir) => {
       val store = SketchStores.streamedMgStore(s, dir)
-      val summary = graft.streaming.StreamingSketch.gkState(s, store)
+      val summary = graft.streaming.StreamingSketch.Gk().state(s, store)
       val qs = Seq(0.5, 0.9, 0.99).map(p => summary.query(p).getOrElse(0.0))
       graft.operators.Sketches.tokenCountQuantilesCheckedFromValues(
         docs(s, dir), qs, summary.count)

@@ -414,7 +414,7 @@ object DedupQueries {
     // level, hash-checked.
     "q_bloom_decontaminate_streamed" -> ((s, dir) => {
       val store = AnalysisQueries.SketchStores.streamedMgStore(s, dir)
-      val filter = graft.streaming.StreamingSketch.bloomState(s, store)
+      val filter = graft.streaming.StreamingSketch.Bloom.state(s, store)
       bloomDecontChecked(s, dir, (c, _) => Dedup.decontaminateBloomWith(c, filter))
     }),
   )

@@ -34,9 +34,13 @@ import org.apache.spark.sql.types.StructType
   *     marker tree (a fresh dedup baseline) and refuses to run while an
   *     ingest query over the store is active (`assertIngestStopped`).
   *
-  * `StreamingIndex` and `StreamingSketch` use the gate, the sink and the
-  * text-file helpers but keep their own compaction: the index rebuilds
-  * a bucketed catalog table, the sketches merge their serialized parts.
+  * `StreamingIndex` and `StreamingSketch` use the gate, the sink, the
+  * ingest guard and the text-file helpers but keep their own compaction.
+  * The index rewrites a bucketed catalog table and swaps it in through
+  * `swapInto`/`recoverSub`. Each sketch family (`StreamingSketch.Family`)
+  * merges its text parts `<family>_parts/batch_<id><ext>` into one
+  * `compacted_upto_<id><ext>` part and keeps its markers, so a replay of
+  * a merged-away batch stays skipped.
   */
 object StoreMaintenance {
 

@@ -99,10 +99,10 @@ object StreamingGraph {
     StructField("scope", StringType)))
 
   /** The edge sub-store under a key type, collapsed by the shared
-    * read/compact rule (`collapse`).
+    * read/compact rule (`netEdges`).
     */
   private def edgesSub(keyType: DataType) =
-    StoreMaintenance.SubStore("edges", edgeSchema(keyType))(collapse)
+    StoreMaintenance.SubStore("edges", edgeSchema(keyType))(netEdges)
 
   /** The authoritative key type: the persisted sidecar if the store has
     * ever been written, the caller's parameter otherwise.
@@ -195,7 +195,7 @@ object StreamingGraph {
     * the bare-edge consumers (HITS/BFS) equal to the batch relation
     * over the surviving facts.
     */
-  private def collapse(e: DataFrame): DataFrame =
+  private def netEdges(e: DataFrame): DataFrame =
     latestPerBatch(e).groupBy("src", "dst")
       .agg(sum(col("w")).as("w"))
       .filter(col("w") =!= 0)

@@ -1,24 +1,29 @@
 package graft.streaming
 
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import graft.functions.Text
 import graft.operators.Sketches
 
-/** Incremental Misra-Gries heavy-hitter maintenance over a DOCUMENT
-  * STREAM — the streaming twin of the batch `Sketches.heavyHitters`
-  * pass, and the monitoring shape a large ingest pipeline actually
-  * runs: a fixed-size summary of the hottest terms, kept current per
-  * micro-batch, readable at any time without touching the corpus.
+/** Incremental sketch maintenance over a DOCUMENT STREAM — the streaming
+  * twins of the batch `Sketches` passes (Misra-Gries heavy hitters,
+  * Count-Min, Greenwald-Khanna quantiles, Bloom, HLL), and the
+  * monitoring shape a large ingest pipeline actually runs: a fixed-size
+  * summary, kept current per micro-batch, readable at any time without
+  * touching the corpus.
   *
   * MERGEABILITY IS THE WHOLE DESIGN (Agarwal et al., PODS'12): per
-  * micro-batch only the BATCH's terms are folded into a partial
-  * summary (map-side, O(capacity) state per partition), and that
-  * partial is APPENDED to the store as `part/batch=<id>.json` — the
-  * accumulated state is the merge of all parts, computed at read time
-  * (driver-side; #batches × O(capacity) — a compaction can collapse
-  * parts at any time because merge is associative).
+  * micro-batch only the BATCH's rows are folded into a partial summary
+  * (map-side, fixed state per partition), and that partial is APPENDED
+  * to the store as `<family>_parts/batch_<id><ext>` — the accumulated
+  * state is the merge of all live parts, computed at read time
+  * (driver-side; #live-parts × state — a compaction can collapse parts
+  * at any time because merge is associative). Each family is one
+  * `Family` declaration (directory, extension, marker namespace, codec
+  * and merge); append, read and compact are written once, in `Family`.
   *
   * REPLAY CONTRACT: a replayed batch OVERWRITES its own part file
   * (per-batch content keyed by batchId), so at-least-once delivery can
@@ -46,11 +51,147 @@ import graft.operators.Sketches
   */
 object StreamingSketch {
 
-  val DefaultCapacity = 48
+  /** One sketch family's part store under `<store>/<dir>`: per-batch
+    * parts `batch_<id><ext>`, compacted parts `compacted_upto_<id><ext>`,
+    * commit markers under `marker`. `merge` must be associative and
+    * order-insensitive; `merge(Nil)` is the state an absent store reads
+    * as.
+    */
+  final class Family[S](dir: String, ext: String, marker: String)(
+      encode: S => String, decode: String => S, merge: Seq[S] => S) {
 
-  private def partsDir(store: String) = s"$store/mg_parts"
-  private def partPath(store: String, batchId: Long) =
-    s"${partsDir(store)}/batch_$batchId.json"
+    private val batchPart = ("""batch_(\d+)""" + java.util.regex.Pattern.quote(ext)).r
+    private val compactedPart =
+      ("""compacted_upto_(\d+)""" + java.util.regex.Pattern.quote(ext)).r
+    private def partsDir(store: String) = new Path(s"$store/$dir")
+
+    /** Write `partial` as batch `batchId`'s part (idempotent by batchId),
+      * then compact the family if `autoCompactAt` live batch parts have
+      * accumulated. @return false on a clean replay of a committed batch
+      * (skipped, `partial` never evaluated).
+      */
+    private[streaming] def append(spark: SparkSession, store: String, batchId: Long,
+                                  autoCompactAt: Int)(partial: => S): Boolean = {
+      val conf = spark.sparkContext.hadoopConfiguration
+      val appended = StoreMaintenance.runOnce(conf, store, marker, batchId) {
+        StoreMaintenance.writeText(conf, s"$store/$dir/batch_$batchId$ext", encode(partial))
+      }
+      // outside the commit marker: compaction is state-preserving, so a
+      // crash mid-compact after the marker landed loses nothing a replay
+      // would need. It runs on the writer's own thread — the compaction
+      // the `compactParts` caller contract requires a paused ingest for is
+      // exactly this call when the ingest itself makes it, so it needs no
+      // external coordination (and must not take the ingest guard, which
+      // this very sink holds). The one extra `listStatus` per append is
+      // driver-side metadata.
+      if (appended) compact(conf, store, autoCompactAt)
+      appended
+    }
+
+    /** The accumulated state: merge of every live part (associative —
+      * listing order does not matter). #live-parts is bounded by
+      * `AutoCompactParts` under any ingest (the append path
+      * self-compacts past the threshold).
+      */
+    def state(spark: SparkSession, store: String): S = {
+      val conf = spark.sparkContext.hadoopConfiguration
+      val d = partsDir(store)
+      val fs = d.getFileSystem(conf)
+      if (!fs.exists(d)) merge(Nil) else mergeParts(conf, liveParts(fs, d))
+    }
+
+    private def mergeParts(conf: Configuration, files: Seq[Path]): S =
+      merge(files.map(p => decode(StoreMaintenance.readText(conf, p.toString).get)))
+
+    /** The LIVE part files under the compaction contract:
+      * `compacted_upto_<maxBatchId>` supersedes every `batch_<id>` part
+      * with id ≤ maxBatchId (those are either merged into it or crashed-
+      * delete leftovers whose content it already carries) and every OLDER
+      * compacted file; `batch_<id>` parts with id > maxBatchId are new
+      * ingest since the compact and merge on top. With no compacted file,
+      * all batch parts are live.
+      */
+    private def liveParts(fs: FileSystem, d: Path): Seq[Path] = {
+      val all = fs.listStatus(d).toSeq.map(_.getPath)
+      val comps = all.flatMap(p => p.getName match {
+        case compactedPart(id) => Some(id.toLong -> p)
+        case _ => None
+      })
+      val batches = all.flatMap(p => p.getName match {
+        case batchPart(id) => Some(id.toLong -> p)
+        case _ => None
+      })
+      comps.sortBy(_._1).lastOption match {
+        case None => batches.sortBy(_._1).map(_._2)
+        case Some((upto, cp)) =>
+          cp +: batches.filter(_._1 > upto).sortBy(_._1).map(_._2)
+      }
+    }
+
+    /** Collapse the live parts into ONE `compacted_upto_<maxBatchId>`
+      * part iff at least `atLeast` live batch parts exist (0: always).
+      * The merged content is computed from the SAME listing that
+      * determined `upto` — re-listing inside the merge would let a part
+      * appended between the two listings fold into the compacted file
+      * while also surviving as a live part (double-counted forever). The
+      * merge lands tmp-then-rename BEFORE any original is deleted and
+      * readers apply the supersede rule (`liveParts`), so a crash
+      * mid-delete leaves only ignorable garbage — the delete pass is pure
+      * GC.
+      */
+    private[streaming] def compact(conf: Configuration, store: String, atLeast: Int): Unit = {
+      val d = partsDir(store)
+      val fs = d.getFileSystem(conf)
+      if (fs.exists(d)) {
+        val live = liveParts(fs, d)
+        val liveBatchIds = live.flatMap(p => p.getName match {
+          case batchPart(id) => Some(id.toLong)
+          case _ => None
+        })
+        if (liveBatchIds.size >= atLeast) {
+          if (liveBatchIds.nonEmpty) {
+            val upto = liveBatchIds.max
+            StoreMaintenance.writeText(conf, s"$store/$dir/compacted_upto_$upto$ext",
+              encode(mergeParts(conf, live)))
+            // GC strictly the superseded files: batch parts with id ≤ upto
+            // and any OLDER compacted file — a part a racing ingest might
+            // have appended (contract violation) is left intact AND is not
+            // in the merged content (it was never in `live`)
+            fs.listStatus(d).toSeq.map(_.getPath)
+              .filter(p => p.getName match {
+                case batchPart(id) => id.toLong <= upto
+                case compactedPart(id) => id.toLong < upto
+                case _ => false
+              })
+              .foreach(p => fs.delete(p, false): Unit)
+          }
+          // orphan-tmp GC: a crash between `writeText`'s create and rename
+          // leaves `<name>.tmp`, which no reader ever matches (liveParts
+          // keys on the bare names) — never live by construction, so any
+          // tmp present here is garbage. Safe against in-flight writes
+          // because every writer of this dir runs on the thread invoking
+          // this compaction (the single-writer store contract).
+          fs.listStatus(d).toSeq.map(_.getPath)
+            .filter(_.getName.endsWith(ext + ".tmp"))
+            .foreach(p => fs.delete(p, false): Unit)
+        }
+      }
+    }
+  }
+
+  /** Live batch parts (post-supersede) past which an append triggers its
+    * family's compaction — keeps any unattended ingest's read-side merge
+    * O(AutoCompactParts × state) instead of O(#batches × state), without
+    * anyone ever calling `compactParts`. 64 parts ≈ 64 driver file reads
+    * per uncompacted read and a sub-second compaction at any capacity.
+    */
+  val AutoCompactParts = 64
+
+  // ---------------------------------------------------------------------
+  // Misra-Gries heavy hitters.
+  // ---------------------------------------------------------------------
+
+  val DefaultCapacity = 48
 
   // terms are [a-z]+ by tokenizer contract, but escape defensively via
   // the shared escaper so the part-file JSON can never diverge from the
@@ -85,6 +226,16 @@ object StreamingSketch {
     Sketches.MGState(counters, n)
   }
 
+  /** The MG family. `capacity` MUST stay fixed for the lifetime of a
+    * store (summaries of different capacities merge to the coarser
+    * bound — re-ingest into a fresh store to re-tune).
+    */
+  def Mg(capacity: Int = DefaultCapacity): Family[Sketches.MGState] = {
+    val agg = new Sketches.MisraGriesAgg(capacity)
+    new Family[Sketches.MGState]("mg_parts", ".json", "mgsketch")(
+      stateJson, parseState, _.foldLeft(agg.zero)(agg.merge))
+  }
+
   /** Fold one micro-batch of documents into its own partial summary and
     * write it (idempotent by batchId). @return false on a clean replay
     * of a committed batch (skipped).
@@ -95,44 +246,12 @@ object StreamingSketch {
                                   autoCompactAt: Int = AutoCompactParts): Boolean = {
     val spark = batch.sparkSession
     import spark.implicits._
-    val conf = spark.sparkContext.hadoopConfiguration
-    val appended = StoreMaintenance.runOnce(conf, storePath, "mgsketch", batchId) {
-      val partial = batch.select(explode(Text.terms(col("text"))).as("term"))
+    Mg(capacity).append(spark, storePath, batchId, autoCompactAt) {
+      batch.select(explode(Text.terms(col("text"))).as("term"))
         .as[String]
         .select(new Sketches.MisraGriesAgg(capacity).toColumn.name("s"))
         .head()
-      StoreMaintenance.writeText(conf, partPath(storePath, batchId), stateJson(partial))
     }
-    // outside the commit marker: compaction is state-preserving, so a
-    // crash mid-compact after the marker landed loses nothing a replay
-    // would need
-    if (appended)
-      autoCompact(conf, partsDir(storePath), ".json", autoCompactAt)(
-        mgMergeContent(capacity))
-    appended
-  }
-
-  /** The accumulated summary: merge of every batch part (associative —
-    * listing order does not matter). Driver work is O(#live-parts ×
-    * capacity), and #live-parts is bounded by `AutoCompactParts` under
-    * any ingest (the append path self-compacts past the threshold); an
-    * empty/absent store reads as the zero state.
-    */
-  def state(spark: SparkSession, storePath: String,
-            capacity: Int = DefaultCapacity): Sketches.MGState = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val dir = new org.apache.hadoop.fs.Path(partsDir(storePath))
-    val fs = dir.getFileSystem(conf)
-    if (!fs.exists(dir)) new Sketches.MisraGriesAgg(capacity).zero
-    else mergeMgFiles(conf, livePartFiles(fs, dir, ".json"), capacity)
-  }
-
-  private def mergeMgFiles(conf: org.apache.hadoop.conf.Configuration,
-                           files: Seq[org.apache.hadoop.fs.Path],
-                           capacity: Int): Sketches.MGState = {
-    val agg = new Sketches.MisraGriesAgg(capacity)
-    files.map(p => parseState(StoreMaintenance.readText(conf, p.toString).get))
-      .foldLeft(agg.zero)(agg.merge)
   }
 
   /** The accumulated summary as a relation (term, mg_weight) — the
@@ -141,13 +260,11 @@ object StreamingSketch {
   def heavyHitters(spark: SparkSession, storePath: String,
                    capacity: Int = DefaultCapacity): DataFrame = {
     import spark.implicits._
-    val st = state(spark, storePath, capacity)
-    st.counters.toSeq.toDF("term", "mg_weight")
+    Mg(capacity).state(spark, storePath).counters.toSeq.toDF("term", "mg_weight")
   }
 
   // ---------------------------------------------------------------------
-  // Count-Min twin: the SAME part-file discipline for the CMS counter
-  // array. CMS is a LINEAR sketch — the element-wise sum of per-batch
+  // Count-Min. CMS is a LINEAR sketch — the element-wise sum of per-batch
   // partials is EXACTLY the sketch of the union stream (not merely
   // bound-preserving like MG), so the accumulated state is
   // indistinguishable from a batch pass.
@@ -156,13 +273,23 @@ object StreamingSketch {
   val DefaultDepth = 4
   val DefaultWidth = 1024
 
-  private def cmsPartsDir(store: String) = s"$store/cms_parts"
-  private def cmsPartPath(store: String, batchId: Long) =
-    s"${cmsPartsDir(store)}/batch_$batchId.txt"
+  /** The CMS family: comma-separated counters (depth × width + the total
+    * in the last slot), merged by element-wise sum.
+    */
+  def Cms(depth: Int = DefaultDepth, width: Int = DefaultWidth): Family[Array[Long]] =
+    new Family[Array[Long]]("cms_parts", ".txt", "cmssketch")(
+      _.mkString(","), _.split(',').map(_.toLong),
+      _.foldLeft(new Array[Long](depth * width + 1)) { (acc, part) =>
+        require(part.length == acc.length,
+          s"CMS part has ${part.length} counters, " +
+            s"store expects ${acc.length} — depth/width changed mid-store")
+        var i = 0
+        while (i < acc.length) { acc(i) += part(i); i += 1 }
+        acc
+      })
 
-  /** Fold one micro-batch into its own CMS partial (comma-separated
-    * longs, tmp-then-rename, idempotent by batchId). @return false on a
-    * clean replay of a committed batch.
+  /** Fold one micro-batch into its own CMS partial (idempotent by
+    * batchId). @return false on a clean replay of a committed batch.
     */
   private[graft] def processBatchCms(batch: DataFrame, batchId: Long,
                                      storePath: String,
@@ -171,50 +298,16 @@ object StreamingSketch {
                                      autoCompactAt: Int = AutoCompactParts): Boolean = {
     val spark = batch.sparkSession
     import spark.implicits._
-    val conf = spark.sparkContext.hadoopConfiguration
-    val appended = StoreMaintenance.runOnce(conf, storePath, "cmssketch", batchId) {
-      val partial = batch.select(explode(Text.terms(col("text"))).as("term"))
+    Cms(depth, width).append(spark, storePath, batchId, autoCompactAt) {
+      batch.select(explode(Text.terms(col("text"))).as("term"))
         .as[String]
         .select(new Sketches.CountMinAgg(depth, width).toColumn.name("s"))
         .head()
-      StoreMaintenance.writeText(conf, cmsPartPath(storePath, batchId), partial.mkString(","))
     }
-    if (appended)
-      autoCompact(conf, cmsPartsDir(storePath), ".txt", autoCompactAt)(
-        cmsMergeContent(depth, width))
-    appended
   }
-
-  /** The accumulated CMS counter array: element-wise sum of every batch
-    * part (≡ the sketch of the union stream — linearity). Absent store
-    * reads as the zero array.
-    */
-  def cmsState(spark: SparkSession, storePath: String,
-               depth: Int = DefaultDepth,
-               width: Int = DefaultWidth): Array[Long] = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val dir = new org.apache.hadoop.fs.Path(cmsPartsDir(storePath))
-    val fs = dir.getFileSystem(conf)
-    val zero = new Array[Long](depth * width + 1)
-    if (!fs.exists(dir)) zero
-    else mergeCmsFiles(conf, livePartFiles(fs, dir, ".txt"), depth, width)
-  }
-
-  private def mergeCmsFiles(conf: org.apache.hadoop.conf.Configuration,
-                            files: Seq[org.apache.hadoop.fs.Path],
-                            depth: Int, width: Int): Array[Long] =
-    files.foldLeft(new Array[Long](depth * width + 1)) { (acc, p) =>
-      val part = StoreMaintenance.readText(conf, p.toString).get.split(',').map(_.toLong)
-      require(part.length == acc.length,
-        s"CMS part ${p.getName} has ${part.length} counters, " +
-          s"store expects ${acc.length} — depth/width changed mid-store")
-      var i = 0
-      while (i < acc.length) { acc(i) += part(i); i += 1 }
-      acc
-    }
 
   // ---------------------------------------------------------------------
-  // Greenwald-Khanna twin: per-batch QuantileSummaries partials over the
+  // Greenwald-Khanna: per-batch QuantileSummaries partials over the
   // per-doc token counts, persisted as (value, g, delta) tuple lines and
   // merged at read — GK merge preserves the rank-error bound for the
   // union stream (the same contract percentile_approx's distributed
@@ -222,10 +315,6 @@ object StreamingSketch {
   // ---------------------------------------------------------------------
 
   val DefaultAccuracy = 10000
-
-  private def gkPartsDir(store: String) = s"$store/gk_parts"
-  private def gkPartPath(store: String, batchId: Long) =
-    s"${gkPartsDir(store)}/batch_$batchId.txt"
 
   import org.apache.spark.sql.catalyst.util.QuantileSummaries
 
@@ -247,8 +336,17 @@ object StreamingSketch {
       relativeError, sampled, count, true)
   }
 
+  /** The GK family; an absent store reads as the empty summary (count 0). */
+  def Gk(accuracy: Int = DefaultAccuracy): Family[QuantileSummaries] = {
+    val relErr = 1.0 / accuracy
+    new Family[QuantileSummaries]("gk_parts", ".txt", "gksketch")(
+      gkSerialize, gkParse(_, relErr),
+      _.foldLeft(new QuantileSummaries(
+        QuantileSummaries.defaultCompressThreshold, relErr).compress())((a, b) => a.merge(b)))
+  }
+
   /** Fold one micro-batch's per-doc token counts into a GK partial
-    * (tmp-then-rename, idempotent by batchId). @return false on replay.
+    * (idempotent by batchId). @return false on replay.
     */
   private[graft] def processBatchGk(batch: DataFrame, batchId: Long,
                                     storePath: String,
@@ -256,47 +354,17 @@ object StreamingSketch {
                                     autoCompactAt: Int = AutoCompactParts): Boolean = {
     val spark = batch.sparkSession
     import spark.implicits._
-    val conf = spark.sparkContext.hadoopConfiguration
-    val appended = StoreMaintenance.runOnce(conf, storePath, "gksketch", batchId) {
-      val partial = batch
+    Gk(accuracy).append(spark, storePath, batchId, autoCompactAt) {
+      batch
         .select(size(Text.tokenize(col("text"))).as("n_tokens"))
         .as[Int]
         .select(new Sketches.GKAgg(1.0 / accuracy).toColumn.name("s"))
         .head()
-      StoreMaintenance.writeText(conf, gkPartPath(storePath, batchId), gkSerialize(partial))
     }
-    if (appended)
-      autoCompact(conf, gkPartsDir(storePath), ".txt", autoCompactAt)(
-        gkMergeContent(accuracy))
-    appended
-  }
-
-  /** The accumulated GK summary: merge of every batch part. Absent store
-    * reads as the empty summary (count 0).
-    */
-  def gkState(spark: SparkSession, storePath: String,
-              accuracy: Int = DefaultAccuracy): QuantileSummaries = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val dir = new org.apache.hadoop.fs.Path(gkPartsDir(storePath))
-    val fs = dir.getFileSystem(conf)
-    val relErr = 1.0 / accuracy
-    if (!fs.exists(dir))
-      new QuantileSummaries(QuantileSummaries.defaultCompressThreshold, relErr).compress()
-    else mergeGkFiles(conf, livePartFiles(fs, dir, ".txt"), accuracy)
-  }
-
-  private def mergeGkFiles(conf: org.apache.hadoop.conf.Configuration,
-                           files: Seq[org.apache.hadoop.fs.Path],
-                           accuracy: Int): QuantileSummaries = {
-    val relErr = 1.0 / accuracy
-    val zero = new QuantileSummaries(
-      QuantileSummaries.defaultCompressThreshold, relErr).compress()
-    files.map(p => gkParse(StoreMaintenance.readText(conf, p.toString).get, relErr))
-      .foldLeft(zero)((a, b) => a.merge(b))
   }
 
   // ---------------------------------------------------------------------
-  // Bloom twin: the decontamination eval-set filter, maintained
+  // Bloom: the decontamination eval-set filter, maintained
   // incrementally — the shape a pipeline with a GROWING benchmark suite
   // runs (eval sets arrive in drops; re-building the filter from the
   // full suite per drop re-reads every eval corpus). Bloom is a
@@ -317,66 +385,34 @@ object StreamingSketch {
   val BloomItemCapacity: Long = 1L << 16
   val BloomFpp: Double = 1e-4
 
-  private def bloomPartsDir(store: String) = s"$store/bloom_parts"
-  private def bloomPartPath(store: String, batchId: Long) =
-    s"${bloomPartsDir(store)}/batch_$batchId.b64"
-
-  private def emptyBloom(): org.apache.spark.util.sketch.BloomFilter =
-    org.apache.spark.util.sketch.BloomFilter.create(BloomItemCapacity, BloomFpp)
-
-  private def bloomB64(bf: org.apache.spark.util.sketch.BloomFilter): String =
-    java.util.Base64.getEncoder.encodeToString(graft.plans.BloomContains.serialize(bf))
-
-  private[graft] def bloomParse(text: String): org.apache.spark.util.sketch.BloomFilter =
-    org.apache.spark.util.sketch.BloomFilter.readFrom(
-      new java.io.ByteArrayInputStream(java.util.Base64.getDecoder.decode(text.trim)))
+  /** The Bloom family. State is the SERIALIZED filter — the form
+    * `bloom_contains` probes and `Dedup.decontaminateBloomWith` serves;
+    * parts hold its base64. An absent store reads as the empty filter
+    * (matches nothing).
+    */
+  val Bloom: Family[Array[Byte]] =
+    new Family[Array[Byte]]("bloom_parts", ".b64", "bloomsketch")(
+      java.util.Base64.getEncoder.encodeToString(_),
+      text => java.util.Base64.getDecoder.decode(text.trim),
+      parts => graft.plans.BloomContains.serialize(
+        parts.foldLeft(org.apache.spark.util.sketch.BloomFilter.create(BloomItemCapacity, BloomFpp)) {
+          (acc, b) => acc.mergeInPlace(org.apache.spark.util.sketch.BloomFilter.readFrom(
+            new java.io.ByteArrayInputStream(b)))
+        }))
 
   /** Fold one micro-batch of eval-set SHINGLES (a string column `s`)
-    * into its own Bloom partial (base64 of the public serialization,
-    * tmp-then-rename, idempotent by batchId). The partial builds with
-    * Spark's distributed sketch aggregation — per-partition filters
-    * OR-merged, only the bit array reaching the driver. @return false
-    * on a clean replay of a committed batch.
+    * into its own Bloom partial (idempotent by batchId). The partial
+    * builds with Spark's distributed sketch aggregation — per-partition
+    * filters OR-merged, only the bit array reaching the driver. @return
+    * false on a clean replay of a committed batch.
     */
   private[graft] def processBatchBloom(shingles: DataFrame, batchId: Long,
                                        storePath: String,
-                                       autoCompactAt: Int = AutoCompactParts): Boolean = {
-    val conf = shingles.sparkSession.sparkContext.hadoopConfiguration
-    val appended = StoreMaintenance.runOnce(conf, storePath, "bloomsketch", batchId) {
-      val partial = shingles.stat.bloomFilter("s", BloomItemCapacity, BloomFpp)
-      StoreMaintenance.writeText(conf, bloomPartPath(storePath, batchId), bloomB64(partial))
+                                       autoCompactAt: Int = AutoCompactParts): Boolean =
+    Bloom.append(shingles.sparkSession, storePath, batchId, autoCompactAt) {
+      graft.plans.BloomContains.serialize(
+        shingles.stat.bloomFilter("s", BloomItemCapacity, BloomFpp))
     }
-    if (appended)
-      autoCompact(conf, bloomPartsDir(storePath), ".b64", autoCompactAt)(
-        bloomMergeContent)
-    appended
-  }
-
-  /** The accumulated filter, serialized — the form `bloom_contains`
-    * probes and `Dedup.decontaminateBloomWith` serves. Absent/empty
-    * store reads as the empty filter (matches nothing).
-    */
-  def bloomState(spark: SparkSession, storePath: String): Array[Byte] = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val dir = new org.apache.hadoop.fs.Path(bloomPartsDir(storePath))
-    val fs = dir.getFileSystem(conf)
-    val bf =
-      if (!fs.exists(dir)) emptyBloom()
-      else mergeBloomFiles(conf, livePartFiles(fs, dir, ".b64"))
-    graft.plans.BloomContains.serialize(bf)
-  }
-
-  private def mergeBloomFiles(conf: org.apache.hadoop.conf.Configuration,
-                              files: Seq[org.apache.hadoop.fs.Path])
-      : org.apache.spark.util.sketch.BloomFilter =
-    files.foldLeft(emptyBloom()) { (acc, p) =>
-      acc.mergeInPlace(bloomParse(StoreMaintenance.readText(conf, p.toString).get))
-    }
-
-  private def bloomMergeContent(
-      conf: org.apache.hadoop.conf.Configuration,
-      files: Seq[org.apache.hadoop.fs.Path]): String =
-    bloomB64(mergeBloomFiles(conf, files))
 
   // ---- HLL family: per-source vocabulary-cardinality registers ----
   //
@@ -389,14 +425,10 @@ object StreamingSketch {
   // the batch `vocabularyBySourceChecked`. Part payload is
   // O(#sources × 2^lgK) regardless of vocabulary size.
 
-  private def hllPartsDir(store: String) = s"$store/hll_parts"
-  private def hllPartPath(store: String, batchId: Long) =
-    s"${hllPartsDir(store)}/batch_$batchId.json"
-
   val HllLgK = 12
 
-  private def hllJson(m: Seq[(String, Array[Byte])]): String =
-    m.sortBy(_._1).map { case (src, b) =>
+  private def hllJson(m: Map[String, Array[Byte]]): String =
+    m.toSeq.sortBy(_._1).map { case (src, b) =>
       s"${esc(src)}: ${esc(java.util.Base64.getEncoder.encodeToString(b))}"
     }.mkString("{", ",", "}")
 
@@ -405,51 +437,34 @@ object StreamingSketch {
     */
   private[graft] def hllParse(json: String): Map[String, Array[Byte]] =
     """"((?:[^"\\]|\\.)*)"\s*:\s*"([^"]*)"""".r.findAllMatchIn(json).map { m =>
-      val key = m.group(1).replace("\\\"", "\"").replace("\\\\", "\\")
-      key -> java.util.Base64.getDecoder.decode(m.group(2))
+      graft.util.JsonText.unesc(m.group(1)) -> java.util.Base64.getDecoder.decode(m.group(2))
     }.toMap
 
+  /** The HLL family: one `Union` per source over all parts at once. */
+  val Hll: Family[Map[String, Array[Byte]]] =
+    new Family[Map[String, Array[Byte]]]("hll_parts", ".json", "hllsketch")(
+      hllJson, hllParse, parts => {
+        import org.apache.datasketches.hll.{HllSketch, Union}
+        parts.flatMap(_.toSeq).groupBy(_._1).map { case (src, bs) =>
+          val u = new Union(HllLgK)
+          bs.foreach { case (_, b) => u.update(HllSketch.heapify(b)) }
+          src -> u.getResult.toCompactByteArray
+        }
+      })
+
   /** Fold one micro-batch of (source, term) rows into per-source HLL
-    * partials. Same idempotency contract as every family: `runOnce`
-    * marker + per-batch part keyed by batchId, tmp-then-rename.
+    * partials (idempotent by batchId).
     */
   private[graft] def processBatchHll(terms: DataFrame, batchId: Long,
                                      storePath: String,
-                                     autoCompactAt: Int = AutoCompactParts): Boolean = {
-    val conf = terms.sparkSession.sparkContext.hadoopConfiguration
-    val appended = StoreMaintenance.runOnce(conf, storePath, "hllsketch", batchId) {
-      val rows = terms
+                                     autoCompactAt: Int = AutoCompactParts): Boolean =
+    Hll.append(terms.sparkSession, storePath, batchId, autoCompactAt) {
+      terms
         .groupBy("source")
         .agg(hll_sketch_agg(col("term"), lit(HllLgK)).as("sk"))
         .collect()
-        .map(r => r.getString(0) -> r.getAs[Array[Byte]](1)).toSeq
-      StoreMaintenance.writeText(conf, hllPartPath(storePath, batchId), hllJson(rows))
+        .map(r => r.getString(0) -> r.getAs[Array[Byte]](1)).toMap
     }
-    if (appended)
-      autoCompact(conf, hllPartsDir(storePath), ".json", autoCompactAt)(
-        hllMergeContent)
-    appended
-  }
-
-  private def mergeHllMaps(parts: Seq[Map[String, Array[Byte]]])
-      : Map[String, Array[Byte]] = {
-    import org.apache.datasketches.hll.{HllSketch, Union}
-    parts.flatMap(_.toSeq).groupBy(_._1).map { case (src, bs) =>
-      val u = new Union(HllLgK)
-      bs.foreach { case (_, b) => u.update(HllSketch.heapify(b)) }
-      src -> u.getResult.toCompactByteArray
-    }
-  }
-
-  private def mergeHllFiles(conf: org.apache.hadoop.conf.Configuration,
-                            files: Seq[org.apache.hadoop.fs.Path])
-      : Map[String, Array[Byte]] =
-    mergeHllMaps(files.map(p => hllParse(StoreMaintenance.readText(conf, p.toString).get)))
-
-  private def hllMergeContent(
-      conf: org.apache.hadoop.conf.Configuration,
-      files: Seq[org.apache.hadoop.fs.Path]): String =
-    hllJson(mergeHllFiles(conf, files).toSeq)
 
   /** The accumulated per-source estimates (source, approx_vocab) as a
     * DataFrame — union of every live part's registers, estimated with
@@ -457,181 +472,46 @@ object StreamingSketch {
     * reads as empty.
     */
   def hllVocabEstimates(spark: SparkSession, storePath: String): DataFrame = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val dir = new org.apache.hadoop.fs.Path(hllPartsDir(storePath))
-    val fs = dir.getFileSystem(conf)
-    val merged: Seq[(String, Array[Byte])] =
-      if (!fs.exists(dir)) Seq.empty
-      else mergeHllFiles(conf, livePartFiles(fs, dir, ".json")).toSeq
     import spark.implicits._
-    merged.toDF("source", "sk")
+    Hll.state(spark, storePath).toSeq.toDF("source", "sk")
       .groupBy("source")
       .agg(hll_sketch_estimate(hll_union_agg(col("sk"))).as("approx_vocab"))
   }
 
-  /** The LIVE part files of a family dir, under the compaction contract:
-    * `compacted_upto_<maxBatchId>` supersedes every `batch_<id>` part
-    * with id ≤ maxBatchId (those are either merged into it or crashed-
-    * delete leftovers whose content it already carries) and every OLDER
-    * compacted file; `batch_<id>` parts with id > maxBatchId are new
-    * ingest since the compact and merge on top. With no compacted file,
-    * all batch parts are live.
-    */
-  private def livePartFiles(fs: org.apache.hadoop.fs.FileSystem,
-                            dir: org.apache.hadoop.fs.Path,
-                            ext: String): Seq[org.apache.hadoop.fs.Path] = {
-    val comp = ("""compacted_upto_(\d+)""" + java.util.regex.Pattern.quote(ext)).r
-    val batch = ("""batch_(\d+)""" + java.util.regex.Pattern.quote(ext)).r
-    val all = fs.listStatus(dir).toSeq.map(_.getPath)
-    val comps = all.flatMap(p => p.getName match {
-      case comp(id) => Some(id.toLong -> p)
-      case _ => None
-    })
-    val batches = all.flatMap(p => p.getName match {
-      case batch(id) => Some(id.toLong -> p)
-      case _ => None
-    })
-    comps.sortBy(_._1).lastOption match {
-      case None => batches.sortBy(_._1).map(_._2)
-      case Some((upto, cp)) =>
-        cp +: batches.filter(_._1 > upto).sortBy(_._1).map(_._2)
-    }
-  }
-
-  /** Collapse every accumulated part (MG, CMS, GK, Bloom) into ONE part each —
-    * an all-day stream otherwise accumulates a file per micro-batch and
-    * the read-side merge grows linearly. Safe under replay: the runOnce
+  /** Collapse every family's accumulated parts into ONE part each — an
+    * all-day stream otherwise accumulates a file per micro-batch and the
+    * read-side merge grows linearly. Safe under replay: the runOnce
     * COMMIT MARKERS outlive the parts, so a replayed batch is skipped
     * before it could re-append content the compacted part already
     * carries; associativity makes the merged part ≡ the parts it
-    * replaces. Crash-safe per family: the merge is written
-    * tmp-then-rename as `compacted_upto_<maxBatchId>` BEFORE any
-    * original is deleted, and readers apply the supersede rule
-    * (`livePartFiles`), so a crash mid-delete leaves only ignorable
-    * garbage — the delete pass is pure GC. Post-compact ingest keeps
-    * appending `batch_<id>` parts with LARGER ids, which merge on top.
+    * replaces; crash safety is per family (`Family.compact`). Post-compact
+    * ingest keeps appending `batch_<id>` parts with LARGER ids, which
+    * merge on top.
     *
-    * Caller contract (same as every store compact in this engine):
-    * pause the ingest query over this store first.
+    * Refuses (`IllegalStateException`) while a sink over the store is
+    * active, like every store compact in this engine: this compaction
+    * and the sink's own auto-compaction would race on the same
+    * `compacted_upto_<id><ext>.tmp`, and each one's orphan-tmp GC could
+    * delete the other's file.
     */
   def compactParts(spark: SparkSession, storePath: String,
                    capacity: Int = DefaultCapacity,
                    depth: Int = DefaultDepth, width: Int = DefaultWidth,
                    accuracy: Int = DefaultAccuracy): Unit = {
     val conf = spark.sparkContext.hadoopConfiguration
-    collapse(conf, partsDir(storePath), ".json")(mgMergeContent(capacity))
-    collapse(conf, cmsPartsDir(storePath), ".txt")(cmsMergeContent(depth, width))
-    collapse(conf, gkPartsDir(storePath), ".txt")(gkMergeContent(accuracy))
-    collapse(conf, bloomPartsDir(storePath), ".b64")(bloomMergeContent)
-    collapse(conf, hllPartsDir(storePath), ".json")(hllMergeContent)
-  }
-
-  // per-family merged-content closures — shared by the manual compactParts
-  // and the per-append auto-compaction (each append path compacts only
-  // ITS family: the families have independent writers in principle)
-  private def mgMergeContent(capacity: Int)(
-      conf: org.apache.hadoop.conf.Configuration,
-      files: Seq[org.apache.hadoop.fs.Path]): String =
-    stateJson(mergeMgFiles(conf, files, capacity))
-  private def cmsMergeContent(depth: Int, width: Int)(
-      conf: org.apache.hadoop.conf.Configuration,
-      files: Seq[org.apache.hadoop.fs.Path]): String =
-    mergeCmsFiles(conf, files, depth, width).mkString(",")
-  private def gkMergeContent(accuracy: Int)(
-      conf: org.apache.hadoop.conf.Configuration,
-      files: Seq[org.apache.hadoop.fs.Path]): String =
-    gkSerialize(mergeGkFiles(conf, files, accuracy))
-
-  /** One family-dir compaction. The merged content is computed from the
-    * SAME file list that determined `upto` — re-listing inside the merge
-    * would let a part appended between the two listings fold into the
-    * compacted file while also surviving as a live part (double-counted
-    * forever).
-    */
-  private def collapse(conf: org.apache.hadoop.conf.Configuration,
-                       dirPath: String, ext: String)(
-      mergeFiles: (org.apache.hadoop.conf.Configuration,
-                   Seq[org.apache.hadoop.fs.Path]) => String): Unit = {
-    val dir = new org.apache.hadoop.fs.Path(dirPath)
-    val fs = dir.getFileSystem(conf)
-    if (fs.exists(dir)) {
-      val batch = ("""batch_(\d+)""" + java.util.regex.Pattern.quote(ext)).r
-      val live = livePartFiles(fs, dir, ext)
-      val liveBatchIds = live.flatMap(p => p.getName match {
-        case batch(id) => Some(id.toLong)
-        case _ => None
-      })
-      if (liveBatchIds.nonEmpty) {
-        val upto = liveBatchIds.max
-        val content = mergeFiles(conf, live) // exactly the listed view
-        val dst = new org.apache.hadoop.fs.Path(
-          s"$dirPath/compacted_upto_$upto$ext")
-        StoreMaintenance.writeText(conf, dst.toString, content)
-        // GC strictly the superseded files: batch parts with id ≤ upto
-        // and any OLDER compacted file — a part a racing ingest might
-        // have appended (contract violation) is left intact AND is not
-        // in the merged content (it was never in `live`)
-        val comp = ("""compacted_upto_(\d+)""" + java.util.regex.Pattern.quote(ext)).r
-        fs.listStatus(dir).toSeq.map(_.getPath).filter(_ != dst)
-          .filter(p => p.getName match {
-            case batch(id) => id.toLong <= upto
-            case comp(id) => id.toLong < upto
-            case _ => false
-          })
-          .foreach(p => fs.delete(p, false): Unit)
-      }
-      // orphan-tmp GC: a crash between `writeText`'s create and rename
-      // leaves `<name>.tmp`, which no reader ever matches (livePartFiles
-      // keys on the bare names) — never live by construction, so any tmp
-      // present here is garbage. Safe against in-flight writes because
-      // every writer of this dir runs on the thread invoking this
-      // compaction (the single-writer store contract).
-      fs.listStatus(dir).toSeq.map(_.getPath)
-        .filter(_.getName.endsWith(ext + ".tmp"))
-        .foreach(p => fs.delete(p, false): Unit)
-    }
-  }
-
-  /** Live batch parts (post-supersede) past which an append triggers its
-    * family's compaction — keeps any unattended ingest's read-side merge
-    * O(AutoCompactParts × state) instead of O(#batches × state), without
-    * anyone ever calling `compactParts`. 64 parts ≈ 64 driver file reads
-    * per uncompacted read and a sub-second compaction at any capacity.
-    */
-  val AutoCompactParts = 64
-
-  /** Compact `dirPath` iff its live batch-part count reached the
-    * threshold. Invoked from the append path AFTER the part landed, on
-    * the writer's own thread — the compaction the `compactParts` caller
-    * contract requires a paused ingest for is exactly this call when the
-    * ingest itself makes it, so it needs no external coordination. The
-    * one extra `listStatus` per append is driver-side metadata.
-    */
-  private def autoCompact(conf: org.apache.hadoop.conf.Configuration,
-                          dirPath: String, ext: String, threshold: Int)(
-      mergeFiles: (org.apache.hadoop.conf.Configuration,
-                   Seq[org.apache.hadoop.fs.Path]) => String): Unit = {
-    val dir = new org.apache.hadoop.fs.Path(dirPath)
-    val fs = dir.getFileSystem(conf)
-    if (fs.exists(dir)) {
-      val batch = ("""batch_(\d+)""" + java.util.regex.Pattern.quote(ext)).r
-      val liveBatches = livePartFiles(fs, dir, ext).count(p =>
-        batch.pattern.matcher(p.getName).matches)
-      if (liveBatches >= threshold)
-        collapse(conf, dirPath, ext)(mergeFiles)
-    }
+    StoreMaintenance.assertIngestStopped(conf, storePath)
+    Seq[Family[_]](Mg(capacity), Cms(depth, width), Gk(accuracy), Bloom, Hll)
+      .foreach(_.compact(conf, storePath, atLeast = 0))
   }
 
   private def lineagePath(store: String) = s"$store/_graft_lineage"
 
   /** Start the incremental heavy-hitter sink over a document stream.
-    * `capacity` MUST stay fixed for the lifetime of a store (summaries
-    * of different capacities merge to the coarser bound — re-ingest
-    * into a fresh store to re-tune). Only the checkpoint lineage that
-    * first fed the store may feed it (`_graft_lineage`, see the object
-    * doc): a start under another checkpoint throws
-    * `IllegalStateException` instead of silently dropping its first
-    * batches.
+    * `capacity` MUST stay fixed for the lifetime of a store (see `Mg`).
+    * Only the checkpoint lineage that first fed the store may feed it
+    * (`_graft_lineage`, see the object doc): a start under another
+    * checkpoint throws `IllegalStateException` instead of silently
+    * dropping its first batches.
     */
   def sinkHeavyHitters(docs: DataFrame, storePath: String,
                        checkpointDir: String,
