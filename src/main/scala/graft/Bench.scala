@@ -9,7 +9,8 @@ import org.apache.spark.sql.functions.{col, sum, xxhash64}
   *   - a warm-up pass (JVM/codegen/parquet reader, including the TPC-H
   *     join-chain tables) runs before timing, reported as `warmup_sec`;
   *   - the two one-time builds run untimed and are reported separately —
-  *     `index_build_sec` (persisted K2 index) and `dedup_build_sec`
+  *     `index_build_sec` (the persisted K2 index family: both posting
+  *     tables and the term statistics) and `dedup_build_sec`
   *     (shared LSH pair + cluster relations) — so point/boolean/dedup
   *     queries are measured at steady state: build once, query many;
   *   - each query is timed as the MIN OF 2 runs taken from two FULL
@@ -101,7 +102,10 @@ object Bench {
     }
     // one-time index build (the K2 sink) — reported, not hidden — plus an
     // untimed bucket-pruned read so the first timed index query measures
-    // the steady-state read path, not first-touch table/file-listing costs
+    // the steady-state read path, not first-touch table/file-listing costs.
+    // The first postings() call builds the whole index family as one
+    // concurrent job set (`IndexFamily`): both posting tables AND the four
+    // term-statistics relations, so this part carries the family's build
     val indexBuildSec = subBuild("index") {
       val p = graft.sources.IndexStore.postings(spark, sfDir)
       p.count()
@@ -172,9 +176,10 @@ object Bench {
       graft.sources.VectorStore.ivf(spark, sfDir)._1.count()
       graft.sources.VectorStore.ivf(spark, sfDir, iters = 2)._1.count(): Unit }
     // term-statistics store serving the tf-idf/LM/BM25 scoring
-    // family: stats() builds the bucketed tf table first, scalars()
-    // builds doclen; the filtered read warms the bucket-pruned path
-    // the ranked/BM25 point queries measure
+    // family: already built with the index family above, so this part
+    // reads about 0 and stays only to keep `store_build_parts`
+    // comparable; the filtered read warms the bucket-pruned path the
+    // ranked/BM25 point queries measure
     storePart("termstats") {
       graft.sources.TermStatsStore.stats(spark, sfDir).count()
       graft.sources.TermStatsStore.scalars(spark, sfDir).count()

@@ -39,7 +39,8 @@ import org.apache.spark.sql.functions.col
   * shutdown hook that deletes it — the UUID guarantees the hook can
   * only ever delete THIS process's copies, and without it every run
   * leaves table-sized garbage (a full z-ordered lineitem copy, bucketed
-  * lineitem+orders) accumulating in the temp dir.
+  * lineitem+orders) accumulating in the temp dir. A killed JVM runs no
+  * hook; the next process sweeps its scopes (`claim`).
   */
 private[graft] object SessionStores {
 
@@ -82,12 +83,47 @@ private[graft] object SessionStores {
 
   /** Target path for one store under this process's scope directory of
     * `family` (e.g. `graft_index`); the scope dir is registered for
-    * end-of-process deletion.
+    * end-of-process deletion. The first call of a family claims the
+    * scope and sweeps the scopes dead processes left (`claim`).
     */
   def scopedPath(family: String, name: String): String = {
     val d = s"${sys.props.getOrElse("java.io.tmpdir", "/tmp")}/$family/$processScope"
-    scopeDirs.add(d)
+    if (scopeDirs.add(d)) claim(new java.io.File(d))
     s"$d/$name"
+  }
+
+  // the owner locks this process holds, one per claimed scope, and the
+  // channels of live in-JVM locks met by a sweep (see `claim`)
+  private val owned = new java.util.concurrent.ConcurrentLinkedQueue[AnyRef]()
+
+  /** Hold an OS lock on `<scope>/.owner` for the process's lifetime, then
+    * delete every sibling scope whose `.owner` lock can be taken: its
+    * process is gone, and so is the shutdown hook that would have deleted
+    * it (a killed JVM). The lock file is created and locked under a
+    * temporary name and then renamed, so a sweep never sees an unlocked
+    * `.owner` of a live scope; a sibling with no `.owner` is left alone.
+    * A lock this JVM already holds counts as live, and its sweep channel
+    * stays open: closing any channel on a file releases every lock the
+    * process holds on it. Best effort: an I/O error skips the sweep.
+    */
+  private def claim(scope: java.io.File): Unit = {
+    import java.nio.channels.{FileChannel, OverlappingFileLockException}
+    import java.nio.file.{Files, StandardCopyOption, StandardOpenOption}
+    try {
+      Files.createDirectories(scope.toPath)
+      val tmp = Files.createTempFile(scope.toPath, ".owner", ".tmp")
+      val lock = FileChannel.open(tmp, StandardOpenOption.WRITE).tryLock()
+      Files.move(tmp, scope.toPath.resolve(".owner"), StandardCopyOption.ATOMIC_MOVE)
+      owned.add(lock)
+      for (sib <- Option(scope.getParentFile.listFiles()).toSeq.flatten
+           if sib.getName != processScope && new java.io.File(sib, ".owner").isFile) {
+        val ch = FileChannel.open(sib.toPath.resolve(".owner"), StandardOpenOption.WRITE)
+        try {
+          if (ch.tryLock() != null) deleteRecursively(sib) // null: another process holds it
+          ch.close()
+        } catch { case _: OverlappingFileLockException => owned.add(ch) }
+      }
+    } catch { case _: java.io.IOException => }
   }
 
   /** Serve catalog table `tbl`, running `build` (which must create the

@@ -248,12 +248,13 @@ object Sinks {
 }
 
 /** Session-scoped registry of persisted, term-bucketed posting tables —
-  * one per corpus directory. First access builds the index ONCE via the
-  * K2 sink; every subsequent point/boolean query against the same corpus
-  * reads only the files of its terms' buckets, with no Exchange before
-  * the filter. The scan is flat unless an operator above it uses the term
-  * partitioning (`PrunedBucketScan`), so it runs one task per selected
-  * file split, not one per bucket.
+  * one per corpus directory. First access builds both posting tables,
+  * together with the four term-statistics relations, as one concurrent
+  * job set (`IndexFamily`); every subsequent point/boolean query against
+  * the same corpus reads only the files of its terms' buckets, with no
+  * Exchange before the filter. The scan is flat unless an operator above
+  * it uses the term partitioning (`PrunedBucketScan`), so it runs one
+  * task per selected file split, not one per bucket.
   */
 object IndexStore {
 
@@ -261,10 +262,24 @@ object IndexStore {
     "graft_postings_" + dir.replaceAll("[^a-zA-Z0-9]", "_") + "_" + SessionStores.tagOf(dir)
 
   /** The posting relation for `dir`, served from the persisted bucketed
-    * table (building it on first use in this session; process scoping,
-    * staleness guard and end-of-process cleanup are `SessionStores`).
+    * table (its family built on first use; process scoping, staleness
+    * guard and end-of-process cleanup are `SessionStores`).
     */
   def postings(spark: SparkSession, dir: String): DataFrame = {
+    IndexFamily.ensure(spark, dir)
+    servedPostings(spark, dir)
+  }
+
+  /** The POSITIONAL posting relation (term, doc_id, pos) for `dir`,
+    * persisted in the same term-bucketed layout — phrase queries prune
+    * to their terms' buckets instead of re-tokenizing the corpus.
+    */
+  def positionalPostings(spark: SparkSession, dir: String): DataFrame = {
+    IndexFamily.ensure(spark, dir)
+    servedPositional(spark, dir)
+  }
+
+  private[sources] def servedPostings(spark: SparkSession, dir: String): DataFrame = {
     val tbl = tableNameFor(dir)
     val path = SessionStores.scopedPath("graft_index", tbl)
     SessionStores.servedTable(spark, tbl, path) {
@@ -274,11 +289,7 @@ object IndexStore {
     }
   }
 
-  /** The POSITIONAL posting relation (term, doc_id, pos) for `dir`,
-    * persisted in the same term-bucketed layout — phrase queries prune
-    * to their terms' buckets instead of re-tokenizing the corpus.
-    */
-  def positionalPostings(spark: SparkSession, dir: String): DataFrame = {
+  private[sources] def servedPositional(spark: SparkSession, dir: String): DataFrame = {
     val tbl = "graft_positional_" + dir.replaceAll("[^a-zA-Z0-9]", "_") +
       "_" + SessionStores.tagOf(dir)
     val path = SessionStores.scopedPath("graft_index", tbl)

@@ -12,8 +12,9 @@ import graft.operators.TermScoring
   * df/c(term)/N from the raw corpus inside every query charges one full
   * tokenization pass per call.
   *
-  * Four relations, one tokenization pass total (every other relation
-  * aggregates the first):
+  * Four relations, built with the two posting tables as one concurrent
+  * job set (`IndexFamily`): each is its own job over the corpus, and
+  * none reads another's output.
   *
   *   - `tf`: (doc_id, term, tf) over the FULL token stream (stopwords
   *     INCLUDED — the LM score needs them; the stopword-free variant is
@@ -25,13 +26,15 @@ import graft.operators.TermScoring
   *   - `stats`: (term, df, c, stop) — VOCAB-sized; df = docs containing
   *     the term, c = total occurrences, stop = membership in the
   *     engine's stopword list (precomputed so serving never plans a
-  *     200-literal `isin` over a corpus-sized relation).
+  *     200-literal `isin` over a corpus-sized relation). Aggregated from
+  *     the same `tfRows` that `tf` writes.
   *   - `docLengths`: (doc_id, dl, dl_all) — per-doc stopword-free / full
-  *     token counts, built as a map-side projection of `documents` (NOT
-  *     from `tf`: zero-token docs have no tf rows but must count in
+  *     token counts, a map-side projection of `documents` (NOT from the
+  *     tf rows: zero-token docs have no tf rows but must count in
   *     N/avgdl).
   *   - `scalars`: ONE row (n_docs, n_docs_distinct, avgdl, n_corpus) —
-  *     broadcast by every consumer.
+  *     broadcast by every consumer. Aggregated from the same
+  *     `docLengthRows` that `docLengths` writes.
   *
   * Serving plans the same `TermScoring` combinators as the direct path,
   * so stored ≡ direct bit-for-bit (TermStatsSpec pins it): df/c/N
@@ -42,28 +45,67 @@ object TermStatsStore {
   private def tfTableName(dir: String): String =
     "graft_tf_" + dir.replaceAll("[^a-zA-Z0-9]", "_") + "_" + SessionStores.tagOf(dir)
 
+  private def storePath(kind: String, dir: String): String =
+    SessionStores.scopedPath("graft_termstats", kind + "_" + SessionStores.tagOf(dir))
+
+  /** (doc_id, term, tf) over the full token stream: the rows `tf` stores
+    * and `stats` aggregates.
+    */
+  private def tfRows(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"), explode(Text.tokenize(col("text"))).as("term"))
+      .groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
+
+  /** (doc_id, dl, dl_all), one row per document: the rows `docLengths`
+    * stores and `scalars` aggregates.
+    */
+  private def docLengthRows(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"),
+      size(Text.tokensNoStop(col("text"))).as("dl"),
+      size(Text.tokenize(col("text"))).as("dl_all"))
+
   /** The persisted full-stream term-frequency relation for `dir`,
-    * term-bucketed (built on first use; process scoping, staleness
-    * guard and end-of-process cleanup are `SessionStores`).
+    * term-bucketed (its family built on first use; process scoping,
+    * staleness guard and end-of-process cleanup are `SessionStores`).
     */
   def tf(spark: SparkSession, dir: String): DataFrame = {
-    val tbl = tfTableName(dir)
-    val path = SessionStores.scopedPath("graft_termstats", tbl)
-    SessionStores.servedTable(spark, tbl, path) {
-      Sinks.writeIndex(
-        Corpus.documents(spark, dir)
-          .select(col("doc_id"), explode(Text.tokenize(col("text"))).as("term"))
-          .groupBy("doc_id", "term").agg(count(lit(1)).as("tf")),
-        tbl, path)
-    }
+    IndexFamily.ensure(spark, dir)
+    servedTf(spark, dir)
   }
 
   /** The vocab-sized per-term statistics (term, df, c, stop). */
   def stats(spark: SparkSession, dir: String): DataFrame = {
-    val path = SessionStores.scopedPath("graft_termstats",
-      "stats_" + SessionStores.tagOf(dir))
+    IndexFamily.ensure(spark, dir)
+    servedStats(spark, dir)
+  }
+
+  /** Per-doc token lengths (doc_id, dl, dl_all); includes zero-token docs. */
+  def docLengths(spark: SparkSession, dir: String): DataFrame = {
+    IndexFamily.ensure(spark, dir)
+    servedDocLengths(spark, dir)
+  }
+
+  /** The 1-row corpus scalars (n_docs, n_docs_distinct, avgdl, n_corpus),
+    * with exact integer sums: avg over INT is an exact long sum divided
+    * once, so the value is identical to computing it inline over the same
+    * per-doc lengths.
+    */
+  def scalars(spark: SparkSession, dir: String): DataFrame = {
+    IndexFamily.ensure(spark, dir)
+    servedScalars(spark, dir)
+  }
+
+  private[sources] def servedTf(spark: SparkSession, dir: String): DataFrame = {
+    val tbl = tfTableName(dir)
+    val path = SessionStores.scopedPath("graft_termstats", tbl)
+    SessionStores.servedTable(spark, tbl, path) {
+      Sinks.writeIndex(tfRows(Corpus.documents(spark, dir)), tbl, path)
+    }
+  }
+
+  private[sources] def servedStats(spark: SparkSession, dir: String): DataFrame = {
+    val path = storePath("stats", dir)
     SessionStores.servedPath(spark, path) {
-      tf(spark, dir)
+      tfRows(Corpus.documents(spark, dir))
         .groupBy("term")
         .agg(count(lit(1)).as("df"), sum(col("tf")).as("c"))
         .withColumn("stop", col("term").isin(Text.EffectiveStopwords: _*))
@@ -71,29 +113,18 @@ object TermStatsStore {
     }
   }
 
-  /** Per-doc token lengths (doc_id, dl, dl_all); includes zero-token docs. */
-  def docLengths(spark: SparkSession, dir: String): DataFrame = {
-    val path = SessionStores.scopedPath("graft_termstats",
-      "doclen_" + SessionStores.tagOf(dir))
+  private[sources] def servedDocLengths(spark: SparkSession, dir: String): DataFrame = {
+    val path = storePath("doclen", dir)
     SessionStores.servedPath(spark, path) {
-      Corpus.documents(spark, dir)
-        .select(col("doc_id"),
-          size(Text.tokensNoStop(col("text"))).as("dl"),
-          size(Text.tokenize(col("text"))).as("dl_all"))
+      docLengthRows(Corpus.documents(spark, dir))
         .write.mode(SaveMode.Overwrite).parquet(path)
     }
   }
 
-  /** The 1-row corpus scalars (n_docs, n_docs_distinct, avgdl, n_corpus).
-    * All derived from `docLengths` with exact integer sums: avg over INT
-    * is an exact long sum divided once, so the value is identical to
-    * computing it inline over the same per-doc lengths.
-    */
-  def scalars(spark: SparkSession, dir: String): DataFrame = {
-    val path = SessionStores.scopedPath("graft_termstats",
-      "scalars_" + SessionStores.tagOf(dir))
+  private[sources] def servedScalars(spark: SparkSession, dir: String): DataFrame = {
+    val path = storePath("scalars", dir)
     SessionStores.servedPath(spark, path) {
-      docLengths(spark, dir)
+      docLengthRows(Corpus.documents(spark, dir))
         .agg(
           count(lit(1)).as("n_docs"),
           countDistinct(col("doc_id")).as("n_docs_distinct"),

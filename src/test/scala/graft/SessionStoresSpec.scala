@@ -44,34 +44,7 @@ class SessionStoresSpec extends AnyFunSuite {
 
   private val S = graft.sources.SessionStores
 
-  /** Spark jobs `body` starts on this thread: tagged with a job group and
-    * counted up to a marker job, so listener delivery is complete.
-    */
-  private def jobsStartedBy(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val group = "jobs_" + System.nanoTime()
-    val seen = new java.util.concurrent.LinkedBlockingQueue[String]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == group)
-          seen.put(Option(e.properties.getProperty("spark.job.description")).getOrElse(""))
-    }
-    sc.addSparkListener(listener)
-    sc.setJobGroup(group, "")
-    try {
-      body
-      sc.setJobDescription("marker")
-      sc.parallelize(Seq(1), 1).count()
-      var n = 0
-      var d = seen.poll(30, java.util.concurrent.TimeUnit.SECONDS)
-      while (d != null && d != "marker") { n += 1; d = seen.poll(30, java.util.concurrent.TimeUnit.SECONDS) }
-      assert(d === "marker", "marker job never reached the listener")
-      n
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-    }
-  }
+  private def jobsStartedBy(body: => Unit): Int = Jobs.startedBy(spark)(body).size
 
   test("servedPath resolves its relation once per session: a repeat call starts no job") {
     val path = S.scopedPath("graft_test_store", "resolve_" + System.nanoTime())
@@ -155,5 +128,44 @@ class SessionStoresSpec extends AnyFunSuite {
     assert(builds.get() === 2)
     assert(!(second eq first) && second.count() === 10L)
     S.release(s)
+  }
+
+  test("first scopedPath of a family deletes dead-process scopes, keeps live and bare ones") {
+    // a killed JVM never runs the shutdown hook, so its scope dir stays
+    // behind; its `.owner` lock died with it, and the next process sweeps it
+    import java.nio.channels.FileChannel
+    import java.nio.file.{Files, StandardOpenOption}
+    val family = "graft_test_sweep_" + System.nanoTime()
+    val root = new java.io.File(sys.props.getOrElse("java.io.tmpdir", "/tmp"), family)
+    def scope(name: String, owner: Boolean): java.io.File = {
+      val d = new java.io.File(root, name)
+      Files.createDirectories(d.toPath.resolve("store"))
+      Files.writeString(d.toPath.resolve("store/part-0.parquet"), "x")
+      if (owner) Files.createFile(d.toPath.resolve(".owner"))
+      d
+    }
+    val dead = scope("dead0001", owner = true)
+    val held = scope("held0001", owner = true)
+    val bare = scope("bare0001", owner = false)
+    // the test holds `held`'s lock: an in-JVM holder counts as live
+    val ch = FileChannel.open(held.toPath.resolve(".owner"), StandardOpenOption.WRITE)
+    val lock = ch.lock()
+    try {
+      val own = new java.io.File(S.scopedPath(family, "store")).getParentFile
+      assert(!dead.exists(), "a scope with no live lock holder must be swept")
+      assert(held.exists() && new java.io.File(held, "store/part-0.parquet").isFile,
+        "a scope whose lock is held must survive")
+      assert(bare.exists(), "a scope with no .owner may be mid-claim and must survive")
+      assert(new java.io.File(own, ".owner").isFile, "the live scope must hold its .owner")
+      assert(own.listFiles().forall(f => f.getName == ".owner"), "no stray claim files")
+      S.scopedPath(family, "other")
+      assert(held.exists() && own.exists())
+    } finally {
+      lock.release()
+      ch.close()
+      Seq(held, bare).foreach { d =>
+        Files.walk(d.toPath).sorted(java.util.Comparator.reverseOrder()).forEach(p => Files.delete(p))
+      }
+    }
   }
 }
