@@ -35,9 +35,12 @@ object StreamingIndex {
     * layout the batch K2 sink writes (`Sinks.writeIndex`): `foreachBatch`
     * appends each micro-batch with identical bucketing, so point/boolean
     * queries over the growing table keep bucket pruning — the streaming
-    * half of "build once, query many". Micro-batch appends accumulate
-    * one file per bucket per batch; run the batch sink periodically to
-    * compact (the standard streaming-ingest + batch-compaction split).
+    * half of "build once, query many". Each micro-batch append writes
+    * one file per bucket per state partition (the dedup's
+    * `spark.sql.shuffle.partitions` tasks each write their own bucket
+    * files: 128 files per batch at 4 partitions and 32 buckets); run the
+    * batch sink periodically to compact (the standard streaming-ingest +
+    * batch-compaction split).
     *
     * REPLAY SAFETY is the kernel's marker gate (`StoreMaintenance`):
     * `foreachBatch` is at-least-once, and a blind append of a
@@ -84,11 +87,11 @@ object StreamingIndex {
 
   /** Compact a streaming-appended index table (the periodic batch half of
     * the streaming-ingest + batch-compaction split `sinkToIndex`
-    * documents): rewrite the accumulated one-file-per-bucket-per-batch
-    * table through the batch K2 layout, restoring (term, doc_id)
-    * uniqueness across the replay residual window (`url` is functionally
-    * dependent on `doc_id`, so dropping duplicate keys loses nothing) and
-    * collapsing each bucket to a single file.
+    * documents): rewrite the accumulated files (one per bucket per
+    * state partition per batch) through the batch K2 layout, restoring
+    * (term, doc_id) uniqueness across the replay residual window (`url`
+    * is functionally dependent on `doc_id`, so dropping duplicate keys
+    * loses nothing) and collapsing each bucket to a single file.
     *
     * MUST run while ingest into `tableName` is stopped (stop the
     * `sinkToIndex` query, compact, restart from the same checkpoint) —

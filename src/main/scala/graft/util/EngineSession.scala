@@ -19,7 +19,20 @@ import org.apache.spark.sql.SparkSession
   *   - json.enablePartialResults OFF (r16 ADVICE: a jar bump that
   *     retains partially-parsed fields on malformed records would
   *     silently flip the q_bad_records quarantine masses);
-  *   - the engine's Catalyst extensions (native codegen expressions).
+  *   - the engine's Catalyst extensions (native codegen expressions);
+  *   - `fs.file.impl` and `fs.AbstractFileSystem.file.impl` = the
+  *     fork-free local filesystem (`LocalFs.scala`). Without a native
+  *     `libhadoop`, stock Hadoop forks `chmod` on every file create and
+  *     `mkdirs`, and `readlink` twice per `FileContext` rename (streaming
+  *     checkpoints, state stores): one 4-core perfbench ingest run
+  *     (seed 7) started 2,674 processes, 1,979 `chmod` and 688
+  *     `readlink`, and the wait showed as task run time with almost no
+  *     CPU samples. With the pins the same run starts 8: six `rm` from
+  *     Spark's temp-dir cleanup, one `getconf`, and the `setsid` probe
+  *     Hadoop's `Shell` runs once when it loads; no `chmod` and no
+  *     `readlink`. Same files on disk, `.crc` included. Unpinned, `file:`
+  *     resolves to hive-exec's service-loaded `ProxyLocalFileSystem`
+  *     (a filter over the same `LocalFileSystem`).
   *
   * Bucketed scans are left to two rules, with no pin: Spark's
   * `DisableUnnecessaryBucketedScan` (on by default) flattens a bucketed
@@ -38,4 +51,6 @@ object EngineSession {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.json.enablePartialResults", "false")
       .config("spark.sql.extensions", "graft.plans.GraftExtensions")
+      .config("spark.hadoop.fs.file.impl", classOf[ForkFreeLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[ForkFreeLocalFs].getName)
 }
