@@ -21,6 +21,20 @@ import org.apache.spark.sql.types.StructType
   *   - REPLAY NOOP. `sink` is the one `foreachBatch` sink: a batch the
   *     gate skipped still executes through the noop sink, so any stateful
   *     upstream operator commits its state store.
+  *   - NO WATERMARK-ONLY BATCHES. A store query runs a batch only when
+  *     data arrives: `sink` starts it with
+  *     `spark.sql.streaming.noDataMicroBatches.enabled=false`, so an
+  *     advancing watermark alone (the index's dedup) no longer costs a
+  *     second Spark batch with an empty append. State eviction moves to
+  *     the next data batch, so state stays bounded by stream lag. Spark
+  *     has no per-query setting: the query clones its session inside
+  *     `.start()` and reads the flag from the clone once. So the flag is
+  *     set on the caller's session around `.start()` only, under one lock
+  *     for all sinks, and its prior state ("unset" included) is restored;
+  *     streams that need no-data batches to close windows
+  *     (`EventPipeline`) keep them. Another thread starting a query on
+  *     the same session inside that window would inherit the flag. Every
+  *     batch that does run still executes (REPLAY NOOP).
   *   - DECLARED COLLAPSE. A `SubStore` names a parquet sub-directory, its
   *     schema and its collapse rule. Accessors read through `read` and
   *     `compactStore` rewrites through the same rule, so the rows a store
@@ -138,21 +152,44 @@ object StoreMaintenance {
     * micro-batch handed to `process(batch, batchId, scope)` with this
     * checkpoint's commit scope. `process` returns false when the marker
     * gate skipped the batch, which then executes through the noop sink.
+    * The query runs without watermark-only batches (NO WATERMARK-ONLY
+    * BATCHES above).
     */
   private[graft] def sink(input: DataFrame, storePath: String, checkpointDir: String)(
       process: (DataFrame, Long, String) => Boolean): StreamingQuery = {
     val conf = input.sparkSession.sparkContext.hadoopConfiguration
     val scope = commitScope(checkpointDir, conf)
     registeredStart(conf, storePath) {
-      input.writeStream
-        .outputMode("append")
-        .option("checkpointLocation", checkpointDir)
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          if (!process(batch, batchId, scope)) noopExecute(batch)
-        }
-        .start()
+      withoutNoDataBatches(input.sparkSession) {
+        input.writeStream
+          .outputMode("append")
+          .option("checkpointLocation", checkpointDir)
+          .foreachBatch { (batch: DataFrame, batchId: Long) =>
+            if (!process(batch, batchId, scope)) noopExecute(batch)
+          }
+          .start()
+      }
     }
   }
+
+  private val NoDataBatchesKey = "spark.sql.streaming.noDataMicroBatches.enabled"
+
+  /** Keeps two sinks' conf windows from interleaving, which could leave
+    * the flag set on the session.
+    */
+  private val noDataBatchesLock = new Object
+
+  /** Run `start` with no-data batches off on `spark`, then restore the
+    * caller's setting (the kernel's NO WATERMARK-ONLY BATCHES rule).
+    */
+  private def withoutNoDataBatches(spark: SparkSession)(
+      start: => StreamingQuery): StreamingQuery =
+    noDataBatchesLock.synchronized {
+      val prior = spark.conf.getAll.get(NoDataBatchesKey)
+      spark.conf.set(NoDataBatchesKey, "false")
+      try start
+      finally prior.fold(spark.conf.unset(NoDataBatchesKey))(spark.conf.set(NoDataBatchesKey, _))
+    }
 
   /** Marker namespace for one checkpoint lineage. The path is
     * filesystem-QUALIFIED before hashing: equivalent spellings of the

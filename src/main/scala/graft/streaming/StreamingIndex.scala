@@ -16,7 +16,16 @@ import graft.functions.Text
   * re-deliveries inside the watermark horizon are dropped and state is
   * EVICTED once the watermark passes — state stays bounded by stream lag
   * (the reference's R3 dedupe assumes a finite batch; an unbounded
-  * stream needs exactly this horizon trade-off).
+  * stream needs exactly this horizon trade-off). Eviction runs in the
+  * first data batch after the watermark passes: the store sink runs no
+  * watermark-only batches (`StoreMaintenance`), and the dedup emits a
+  * posting on first sight, so the emitted postings do not depend on when
+  * state is evicted.
+  *
+  * Each micro-batch is one Spark batch whose append writes at most one
+  * file per bucket (32 at the default bucket count), like the paper's
+  * mapper writing one term-grouped file per partition; `compact` merges
+  * them into one file per bucket.
   *
   * Input schema: `doc_id LONG, url STRING, text STRING, ingest_t
   * TIMESTAMP` (arrival time for the watermark).
@@ -35,12 +44,14 @@ object StreamingIndex {
     * layout the batch K2 sink writes (`Sinks.writeIndex`): `foreachBatch`
     * appends each micro-batch with identical bucketing, so point/boolean
     * queries over the growing table keep bucket pruning — the streaming
-    * half of "build once, query many". Each micro-batch append writes
-    * one file per bucket per state partition (the dedup's
-    * `spark.sql.shuffle.partitions` tasks each write their own bucket
-    * files: 128 files per batch at 4 partitions and 32 buckets); run the
-    * batch sink periodically to compact (the standard streaming-ingest +
-    * batch-compaction split).
+    * half of "build once, query many". Each micro-batch append
+    * repartitions by bucket id before the bucketed write, so it writes at
+    * most one file per bucket whatever the dedup's state partition count
+    * (32 files per batch at 32 buckets; a lookup opens one file per
+    * batch); run the batch sink periodically to compact (the standard
+    * streaming-ingest + batch-compaction split). The query runs a batch
+    * only when data arrives, so dedup state past the watermark is evicted
+    * by the next data batch.
     *
     * REPLAY SAFETY is the kernel's marker gate (`StoreMaintenance`):
     * `foreachBatch` is at-least-once, and a blind append of a
@@ -78,7 +89,11 @@ object StreamingIndex {
       // insert-into-existing-table path, which never clears.
       if (!spark.catalog.tableExists(tableName))
         registerBucketedTable(spark, tableName, path, buckets, batch.schema.toDDL)
-      batch.write.mode(SaveMode.Append)
+      // each bucket's rows into one write task (Spark's bucket id is
+      // pmod(hash(term), buckets)), so the append writes one file per bucket
+      val tasks = math.min(spark.conf.get("spark.sql.shuffle.partitions").toInt, buckets)
+      batch.repartition(tasks, pmod(hash(col("term")), lit(buckets)))
+        .write.mode(SaveMode.Append)
         .option("path", path)
         .bucketBy(buckets, "term").sortBy("term")
         .saveAsTable(tableName)
@@ -87,8 +102,8 @@ object StreamingIndex {
 
   /** Compact a streaming-appended index table (the periodic batch half of
     * the streaming-ingest + batch-compaction split `sinkToIndex`
-    * documents): rewrite the accumulated files (one per bucket per
-    * state partition per batch) through the batch K2 layout, restoring
+    * documents): rewrite the accumulated files (at most one per bucket
+    * per batch) through the batch K2 layout, restoring
     * (term, doc_id) uniqueness across the replay residual window (`url`
     * is functionally dependent on `doc_id`, so dropping duplicate keys
     * loses nothing) and collapsing each bucket to a single file.

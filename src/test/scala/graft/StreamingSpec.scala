@@ -268,6 +268,125 @@ class StreamingSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
+  test("streaming index sink: one Spark batch per data batch, and a later data batch evicts dedup state") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val dir = java.nio.file.Files.createTempDirectory("graft_sink_batches").toString
+    val input = MemoryStream[(Long, String, String, Timestamp)]
+    val q = graft.streaming.StreamingIndex.sinkToIndex(
+      graft.streaming.StreamingIndex
+        .postingsStream(input.toDF().toDF("doc_id", "url", "text", "ingest_t")),
+      "t_batches_idx", s"$dir/idx", s"$dir/ckpt", buckets = 8)
+    // batches that ran: an idle trigger may also post a progress entry,
+    // but it runs no addBatch
+    def ran = q.recentProgress.filter(_.durationMs.containsKey("addBatch")).toSeq
+    try {
+      input.addData((1L, "u1", "the cat sat", ts("10:00")))
+      q.processAllAvailable()
+      input.addData((2L, "u2", "cat and dog", ts("10:05")))
+      q.processAllAvailable()
+      // both batches advanced the watermark; no watermark-only batch followed
+      assert(ran.map(_.batchId) === Seq(0L, 1L))
+      assert(ran.forall(_.numInputRows > 0))
+      // 13:00 moves the watermark past the 1-hour horizon of both
+      // documents; the next data batch evicts their state
+      input.addData((3L, "u3", "owl", ts("13:00")))
+      q.processAllAvailable()
+      input.addData((4L, "u4", "bat", ts("13:01")))
+      q.processAllAvailable()
+      assert(ran.map(_.batchId) === Seq(0L, 1L, 2L, 3L))
+      assert(ran.last.stateOperators.map(_.numRowsRemoved).sum > 0)
+      assert(spark.table("t_batches_idx").count() === 6)
+    } finally q.stop()
+  }
+
+  test("store sink leaves the caller's session conf as it found it; windowed streams keep their no-data batch") {
+    val key = "spark.sql.streaming.noDataMicroBatches.enabled"
+    val s = spark.newSession()
+    import s.implicits._
+    implicit val sqlCtx = s.sqlContext
+    val dir = java.nio.file.Files.createTempDirectory("graft_sink_conf").toString
+    def startAndStopIndex(tag: String): Unit = {
+      val in = MemoryStream[(Long, String, String, Timestamp)]
+      graft.streaming.StreamingIndex.sinkToIndex(
+        graft.streaming.StreamingIndex
+          .postingsStream(in.toDF().toDF("doc_id", "url", "text", "ingest_t")),
+        s"t_conf_idx_$tag", s"$dir/$tag/idx", s"$dir/$tag/ckpt", buckets = 4).stop()
+    }
+    assert(!s.conf.getAll.contains(key))
+    startAndStopIndex("unset")
+    assert(!s.conf.getAll.contains(key), s"the sink left $key set on the session")
+    // a windowed stream started afterwards on the same session still
+    // closes its window in the no-data batch, with no further data
+    val events = MemoryStream[(Timestamp, String, Double)]
+    val w = EventPipeline.windowedCounts(events.toDF().toDF("t", "event_type", "value"))
+      .writeStream.format("memory").queryName("ev_counts_after_sink").outputMode("append").start()
+    try {
+      events.addData((ts("10:05"), "click", 1.5), (ts("10:40"), "click", 2.5),
+        (ts("11:30"), "view", 1.0)) // watermark 11:20 closes the 10:00 window
+      w.processAllAvailable()
+      assert(s.table("ev_counts_after_sink").as[(String, String, Long, Double)].collect().toSet
+        === Set(("2024-01-01 10:00:00", "click", 2L, 4.0)))
+    } finally w.stop()
+    s.conf.set(key, "true")
+    startAndStopIndex("set")
+    assert(s.conf.getAll.get(key) === Some("true"))
+  }
+
+  test("streamed index appends write at most one file per bucket per batch at shuffle partitions 1, 4 and 7") {
+    // letters only: the tokenizer strips digits
+    val words = for (a <- 'a' to 'f'; b <- 'a' to 'j') yield s"term$a$b"
+    val corpus = (0 until 120).map { i =>
+      (i.toLong, s"u$i", (0 until 8).map(j => words((i * 7 + j * 13) % words.size)).mkString(" "))
+    }
+    // bucket file name: part-<task>-<write job id>_<bucket>.c<n>...parquet
+    val BucketFile = """part-\d{5}-(.+)_(\d{5})\.c\d{3}.*\.parquet""".r
+    def filesPerBatchBucket(path: String): Map[(String, String), Int] =
+      new java.io.File(path).listFiles().map(_.getName).toSeq
+        .collect { case BucketFile(job, bucket) => (job, bucket) }
+        .groupBy(identity).map { case (k, v) => k -> v.size }
+    for (n <- Seq(1, 4, 7)) {
+      val s = spark.newSession()
+      s.conf.set("spark.sql.shuffle.partitions", n.toString)
+      import s.implicits._
+      implicit val sqlCtx = s.sqlContext
+      val dir = java.nio.file.Files.createTempDirectory(s"graft_files_per_bucket_$n").toString
+      val docs = corpus.toDF("doc_id", "url", "text")
+      val expected = graft.operators.InvertedIndex.postings(docs)
+        .as[(String, Long, String)].collect().sorted.toSeq
+      val halves = Seq(0, 1).map(i => docs.filter($"doc_id" % 2 === i))
+
+      val in = MemoryStream[(Long, String, String, Timestamp)]
+      val (streamTbl, streamPath) = (s"t_files_stream_$n", s"$dir/stream")
+      val q = graft.streaming.StreamingIndex.sinkToIndex(
+        graft.streaming.StreamingIndex
+          .postingsStream(in.toDF().toDF("doc_id", "url", "text", "ingest_t")),
+        streamTbl, streamPath, s"$dir/ckpt", buckets = 8)
+      try Seq(0, 1).foreach { i =>
+        in.addData(corpus.filter(_._1 % 2 == i).map { case (d, u, t) => (d, u, t, ts(s"10:0$i")) })
+        q.processAllAvailable()
+      } finally q.stop()
+
+      // direct appends of batches whose rows of one bucket sit in n tasks
+      val (directTbl, directPath) = (s"t_files_direct_$n", s"$dir/direct")
+      halves.zipWithIndex.foreach { case (h, i) =>
+        assert(graft.streaming.StreamingIndex.appendBatch(
+          graft.operators.InvertedIndex.postings(h).repartition(n), i.toLong,
+          directTbl, directPath, buckets = 8))
+      }
+
+      for ((tbl, path) <- Seq(streamTbl -> streamPath, directTbl -> directPath)) {
+        val files = filesPerBatchBucket(path)
+        assert(files.keys.map(_._1).toSet.size === 2, s"$tbl at $n partitions: $files")
+        assert(files.values.forall(_ == 1), s"$tbl at $n partitions: $files")
+        val table = s.table(tbl)
+        assert(table.select("term", "doc_id", "url").as[(String, Long, String)]
+          .collect().sorted.toSeq === expected, s"$tbl at $n partitions")
+        PlanScans.assertBucketPruned(table.filter($"term" === expected.head._1), _ == 1)
+      }
+    }
+  }
+
   test("replayed micro-batch id is skipped, not re-appended") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft_replay_stream").toString
