@@ -216,17 +216,11 @@ object Graph {
     out
   }
 
-  /** Single-source shortest HOPS (BFS levels) by iterative
-    * min-relaxation: after k rounds every node holds its exact
-    * shortest hop count if it is ≤ k (unreachable-within-k nodes are
-    * absent from the output). Integer arithmetic throughout — no
-    * float determinism protocol needed. Returns (node, hops) for
-    * reached nodes only.
-    *
-    * Same lineage discipline as [[hits]]: the distance relation is
-    * referenced twice per round (the frontier join and the outer
-    * merge), so each round materializes behind a node-sized plan
-    * boundary; edges distinct + persisted once + released.
+  /** Single-source shortest HOPS (BFS levels): [[shortestPaths]] over
+    * the distinct (src, dst) edges at unit weight, so after k rounds
+    * every node holds its exact shortest hop count if it is ≤ k
+    * (unreachable-within-k nodes are absent from the output). Returns
+    * (node, hops) for reached nodes only.
     */
   def shortestHops(edges: DataFrame, nodes: DataFrame, source: Long,
                    maxHops: Int,
@@ -239,46 +233,22 @@ object Graph {
     */
   def shortestHopsAt(edges: DataFrame, nodes: DataFrame,
                      source: org.apache.spark.sql.Column, maxHops: Int,
-                     broadcastRanksMax: Long = BroadcastRanksMaxDefault): DataFrame = {
-    val n = nodes.count()
-    require(n > 0, "shortestHops needs a non-empty node set")
-    require(maxHops >= 0)
-    val hint: DataFrame => DataFrame =
-      if (n <= broadcastRanksMax) broadcast else identity
-    // src-keyed, src-sorted cache (r22): every round's frontier join
-    // probes edges ON SRC — the distinct() exchange's (src, dst) hash
-    // layout served none of them, so each round re-exchanged the full
-    // edge relation at scale (guide §2.4)
-    val e = edges.select("src", "dst").distinct()
-      .repartition(col("src")).sortWithinPartitions("src")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    var dist = nodes.select(col("node"),
-      when(col("node") === source, lit(0L)).otherwise(lit(null).cast("long"))
-        .as("hops"))
-    for (_ <- 1 to maxHops) {
-      val relax = e.join(hint(dist.filter(col("hops").isNotNull)),
-          col("src") === col("node"))
-        .groupBy("dst").agg(min(col("hops") + lit(1L)).as("nh"))
-      dist = Dedup.materializeOnce(
-        dist.join(hint(relax), col("node") === col("dst"), "left_outer")
-          .select(col("node"),
-            when(col("hops").isNull, col("nh"))
-              .when(col("nh").isNull, col("hops"))
-              .otherwise(least(col("hops"), col("nh"))).as("hops")))
-    }
-    val out = Dedup.materializeOnce(dist.filter(col("hops").isNotNull))
-    e.unpersist()
-    out
-  }
+                     broadcastRanksMax: Long = BroadcastRanksMaxDefault): DataFrame =
+    shortestPaths(edges.select("src", "dst").distinct().withColumn("w", lit(1L)),
+        nodes, source, maxHops, broadcastRanksMax)
+      .withColumnRenamed("dist", "hops")
 
   /** Weighted single-source shortest PATHS (SSSP) by iterative
-    * min-relaxation — the weighted sibling of [[shortestHops]]: after
-    * k rounds every node holds the exact minimum path WEIGHT over
-    * paths of at most k edges (distributed Bellman-Ford; nodes
-    * unreachable within k edges are absent). Long weights, integer
-    * arithmetic throughout — no float protocol needed. Same lineage,
-    * hint-gate, and edge-cache discipline as [[shortestHops]].
+    * min-relaxation: after k rounds every node holds the exact minimum
+    * path WEIGHT over paths of at most k edges (distributed
+    * Bellman-Ford; nodes unreachable within k edges are absent). Long
+    * weights, integer arithmetic throughout — no float protocol needed.
     * Returns (node, dist) for reached nodes.
+    *
+    * Same lineage discipline as [[hits]]: the distance relation is
+    * referenced twice per round (the frontier join and the outer
+    * merge), so each round materializes behind a node-sized plan
+    * boundary; edges persisted once + released.
     */
   def shortestPaths(edges: DataFrame, nodes: DataFrame,
                     source: org.apache.spark.sql.Column, maxRounds: Int,
@@ -288,7 +258,9 @@ object Graph {
     require(maxRounds >= 0)
     val hint: DataFrame => DataFrame =
       if (n <= broadcastRanksMax) broadcast else identity
-    // src-keyed, src-sorted cache — the shortestHops discipline (r22)
+    // src-keyed, src-sorted cache (r22): every round's frontier join
+    // probes edges ON SRC, so each round reads the cached layout
+    // instead of re-exchanging the full edge relation at scale (guide §2.4)
     val e = edges.select(col("src"), col("dst"), col("w").cast("long").as("w"))
       .repartition(col("src")).sortWithinPartitions("src")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)

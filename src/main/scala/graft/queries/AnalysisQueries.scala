@@ -21,61 +21,49 @@ object AnalysisQueries {
     * part) runs at store build, and the timed pair join reads the
     * store.
     */
-  private[graft] def prunedSourceShingleStore(s: SparkSession, dir: String): DataFrame = {
-    val path = graft.sources.SessionStores.scopedPath("graft_overlap",
-      "src_shingles_" + graft.sources.SessionStores.tagOf(dir))
-    graft.sources.SessionStores.servedPath(s, path) {
+  private[graft] def prunedSourceShingleStore(s: SparkSession, dir: String): DataFrame =
+    SessionStores.parquet(s, "graft_overlap", "src_shingles", dir) {
       graft.operators.Dedup.prunedSourceShingles(docs(s, dir))
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(path)
+    }
+
+  /** Session-scoped `StreamingSketch` stores holding `dir`'s corpus
+    * ingested incrementally (`SessionStores.streamed`), so
+    * `q_heavy_hitters_streamed` exercises the real accumulate path.
+    */
+  object SketchStores {
+    def streamedMgStore(s: SparkSession, dir: String): String = {
+      lazy val d = docs(s, dir).select("doc_id", "source", "text")
+      SessionStores.streamed(s, "graft_mgsketch", "store", dir) { (slice, path) =>
+        // persist: the three sketch passes each run their own action —
+        // unpersisted, every pass re-reads and re-filters the corpus
+        // (9 scans instead of 3)
+        val batch = d.filter(slice(col("doc_id"))).persist()
+        try {
+          graft.streaming.StreamingSketch.processBatch(batch, slice.id, path): Unit
+          graft.streaming.StreamingSketch.processBatchCms(batch, slice.id, path): Unit
+          graft.streaming.StreamingSketch.processBatchGk(batch, slice.id, path): Unit
+          // bloom family: only the batch's EVAL-slice shingles feed the
+          // incremental decontamination filter (the batch twin's bench
+          // side, arriving in drops)
+          graft.streaming.StreamingSketch.processBatchHll(
+            batch.select(col("source"),
+              explode(Text.terms(col("text"))).as("term")),
+            slice.id, path): Unit
+          graft.streaming.StreamingSketch.processBatchBloom(
+            graft.operators.Dedup.shingleSets(
+                batch.filter(DedupQueries.evalDocPred), 3)
+              .select(explode(col("sh")).as("s")),
+            slice.id, path): Unit
+        } finally batch.unpersist(): Unit
+      }
     }
   }
 
-  /** Session-scoped `StreamingSketch` stores holding `dir`'s corpus
-    * ingested incrementally (three deterministic doc_id-mod-3
-    * micro-batches through `processBatch` — the same ingest shape as
-    * `DedupStore.streamedStorePath`), so `q_heavy_hitters_streamed`
-    * exercises the real accumulate path. Built once per (session, dir);
-    * files live under the `SessionStores` process scope.
-    */
-  object SketchStores {
-    def streamedMgStore(s: SparkSession, dir: String): String =
-      SessionStores.memo(s, "stream_mg:" + dir) {
-        val path = graft.sources.SessionStores.scopedPath("graft_mgsketch",
-          "store_" + graft.sources.SessionStores.tagOf(dir))
-        val d = docs(s, dir).select("doc_id", "source", "text")
-        for (b <- 0 until 3) {
-          // persist: the three sketch passes each run their own action —
-          // unpersisted, every pass re-reads and re-filters the corpus
-          // (9 scans instead of 3)
-          val batch = d.filter(col("doc_id") % 3 === b).persist()
-          try {
-            graft.streaming.StreamingSketch.processBatch(batch, b.toLong, path): Unit
-            graft.streaming.StreamingSketch.processBatchCms(batch, b.toLong, path): Unit
-            graft.streaming.StreamingSketch.processBatchGk(batch, b.toLong, path): Unit
-            // bloom family: only the batch's EVAL-slice shingles feed the
-            // incremental decontamination filter (the batch twin's bench
-            // side, arriving in drops)
-            graft.streaming.StreamingSketch.processBatchHll(
-              batch.select(col("source"),
-                explode(Text.terms(col("text"))).as("term")),
-              b.toLong, path): Unit
-            graft.streaming.StreamingSketch.processBatchBloom(
-              graft.operators.Dedup.shingleSets(
-                  batch.filter(DedupQueries.evalDocPred), 3)
-                .select(explode(col("sh")).as("s")),
-              b.toLong, path): Unit
-          } finally batch.unpersist(): Unit
-        }
-        path
-      }
-  }
-
   /** Session-scoped event fact store (`StreamingFacts` keyed by
-    * `event_id`): `dir`'s events ingested incrementally (three
-    * deterministic event_id-mod-3 micro-batches through `processBatch` —
-    * the EmbedStores pattern); facts are idempotent by event_id, so the
-    * accumulated relation equals `Tables.events` under any batching.
-    * Built once per (session, dir); serves every `*_streamed`
+    * `event_id`): `dir`'s events ingested incrementally
+    * (`SessionStores.streamed`, sliced on event_id); facts are
+    * idempotent by event_id, so the accumulated relation equals
+    * `Tables.events` under any batching. Serves every `*_streamed`
     * behavioral twin.
     */
   private[graft] object EventStores {
@@ -90,16 +78,13 @@ object AnalysisQueries {
       StructField("value", DoubleType),
       StructField("props", StringType)))
 
-    def streamedStore(s: SparkSession, dir: String): String =
-      SessionStores.memo(s, "stream_events:" + dir) {
-        val path = graft.sources.SessionStores.scopedPath("graft_eventstream",
-          "store_" + graft.sources.SessionStores.tagOf(dir))
-        val ev = Tables.events(s, dir)
-        for (b <- 0 until 3)
-          graft.streaming.StreamingFacts.processBatch(
-            ev.filter(col("event_id") % 3 === b), b.toLong, path, Key, Schema): Unit
-        path
+    def streamedStore(s: SparkSession, dir: String): String = {
+      lazy val ev = Tables.events(s, dir)
+      SessionStores.streamed(s, "graft_eventstream", "store", dir) { (slice, path) =>
+        graft.streaming.StreamingFacts.processBatch(
+          ev.filter(slice(col("event_id"))), slice.id, path, Key, Schema): Unit
       }
+    }
 
     def streamedEvents(s: SparkSession, dir: String): DataFrame =
       graft.streaming.StreamingFacts.facts(s, streamedStore(s, dir), Key, Schema)
@@ -301,15 +286,10 @@ object AnalysisQueries {
     * operator under measure is training, not a store read.
     */
   private[graft] object BpeStores {
-    def merges(s: SparkSession, dir: String): DataFrame = {
-      val path = graft.sources.SessionStores.scopedPath("graft_bpe",
-        "merges_" + graft.sources.SessionStores.tagOf(dir))
-      graft.sources.SessionStores.servedPath(s, path) {
-        graft.operators.Bpe.train(bpeWords(s, dir), rounds = 8)
-          .coalesce(1)
-          .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(path)
+    def merges(s: SparkSession, dir: String): DataFrame =
+      SessionStores.parquet(s, "graft_bpe", "merges", dir) {
+        graft.operators.Bpe.train(bpeWords(s, dir), rounds = 8).coalesce(1)
       }
-    }
   }
 
   /** q_lang_id's body, shared verbatim by the batch query and the
@@ -522,10 +502,8 @@ object AnalysisQueries {
     * inputs static per process.
     */
   private def ftSeedStore(s: SparkSession, kind: String, dir: String,
-                          d: => DataFrame): DataFrame = {
-    val S = graft.sources.SessionStores
-    val path = S.scopedPath("graft_ftseed", kind + "_" + S.tagOf(dir))
-    S.servedPath(s, path) {
+                          d: => DataFrame): DataFrame =
+    SessionStores.parquet(s, "graft_ftseed", kind, dir) {
       val stop = graft.functions.Text.EffectiveStopwords
       val toks = Text.tokenize(col("text"))
       val stripped = graft.plans.StripStops.stripStops(toks, stop)
@@ -541,9 +519,7 @@ object AnalysisQueries {
           lit(y).as("y"),
           graft.operators.Classifier.hashedGramVector(xs, FtD, FtNs).as("rx"))
       seedOf(1.0, toks).unionByName(seedOf(0.0, stripped))
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(path)
     }
-  }
 
   private def qualityFtOf(s: SparkSession, modelKey: String, kind: String,
                           dir: String, d: => DataFrame): DataFrame = {
@@ -1365,18 +1341,13 @@ object AnalysisQueries {
     */
   private[graft] object DriftStores {
     def streamedStore(s: SparkSession, dir: String): String =
-      SessionStores.memo(s, "stream_drift:" + dir) {
-        val path = graft.sources.SessionStores.scopedPath("graft_graphstream",
-          "drift_store_" + graft.sources.SessionStores.tagOf(dir))
-        for (b <- 0 until 3) {
-          val contribs = docs(s, dir).filter(col("doc_id") % 3 === b)
-            .select(col("source").as("src"),
-              explode(graft.functions.Text.tokenize(col("text"))).as("dst"),
-              lit(1L).as("w"))
-          graft.streaming.StreamingGraph.processBatch(contribs, b.toLong, path,
-            keyType = org.apache.spark.sql.types.StringType): Unit
-        }
-        path
+      SessionStores.streamed(s, "graft_graphstream", "drift_store", dir) { (slice, path) =>
+        val contribs = docs(s, dir).filter(slice(col("doc_id")))
+          .select(col("source").as("src"),
+            explode(graft.functions.Text.tokenize(col("text"))).as("dst"),
+            lit(1L).as("w"))
+        graft.streaming.StreamingGraph.processBatch(contribs, slice.id, path,
+          keyType = org.apache.spark.sql.types.StringType): Unit
       }
 
     def counts(s: SparkSession, dir: String): DataFrame =
@@ -1386,7 +1357,7 @@ object AnalysisQueries {
   }
 
   /** q_bpe_train_streamed's additive word-frequency store: (word, "w")
-    * unit deltas per mod-3 doc slice through the string-keyed
+    * unit deltas per doc slice through the string-keyed
     * `StreamingGraph` (the DriftStores pattern). Word counts are
     * additive over any doc partition, so the accumulated relation
     * equals `bpeWords` bit-for-bit — and BPE training is a pure
@@ -1397,17 +1368,12 @@ object AnalysisQueries {
     */
   private[graft] object BpeStreamStores {
     def store(s: SparkSession, dir: String): String =
-      SessionStores.memo(s, "stream_bpe:" + dir) {
-        val path = graft.sources.SessionStores.scopedPath("graft_graphstream",
-          "bpewords_store_" + graft.sources.SessionStores.tagOf(dir))
-        for (b <- 0 until 3) {
-          val contribs = docs(s, dir).filter(col("doc_id") % 3 === b)
-            .select(explode(Text.tokenize(col("text"))).as("src"),
-              lit("w").as("dst"), lit(1L).as("w"))
-          graft.streaming.StreamingGraph.processBatch(contribs, b.toLong, path,
-            keyType = org.apache.spark.sql.types.StringType): Unit
-        }
-        path
+      SessionStores.streamed(s, "graft_graphstream", "bpewords_store", dir) { (slice, path) =>
+        val contribs = docs(s, dir).filter(slice(col("doc_id")))
+          .select(explode(Text.tokenize(col("text"))).as("src"),
+            lit("w").as("dst"), lit(1L).as("w"))
+        graft.streaming.StreamingGraph.processBatch(contribs, slice.id, path,
+          keyType = org.apache.spark.sql.types.StringType): Unit
       }
 
     def words(s: SparkSession, dir: String): DataFrame =
@@ -1425,55 +1391,44 @@ object AnalysisQueries {
     */
   private[graft] object PmiStores {
     def store(s: SparkSession, dir: String): String =
-      SessionStores.memo(s, "stream_pmi:" + dir) {
-        val path = graft.sources.SessionStores.scopedPath("graft_graphstream",
-          "pmi_store_" + graft.sources.SessionStores.tagOf(dir))
-        for (b <- 0 until 3) {
-          val toks = docs(s, dir).filter(col("doc_id") % 3 === b)
-            .select(Text.tokenize(col("text")).as("ts"))
-          val uni = toks.select(explode(col("ts")).as("src"),
-            lit("u").as("dst"), lit(1L).as("w"))
-          val bi = toks.select(
-            explode(Text.shinglesFromTokens(col("ts"), 2)).as("src"),
-            lit("g").as("dst"), lit(1L).as("w"))
-          val tot = toks.select(explode(array(
-            struct(lit("").as("src"), lit("tt").as("dst"),
-              size(col("ts")).cast("long").as("w")),
-            struct(lit("").as("src"), lit("bb").as("dst"),
-              greatest(size(col("ts")) - 1, lit(0)).cast("long").as("w")))).as("e"))
-            .select(col("e.src"), col("e.dst"), col("e.w"))
-          graft.streaming.StreamingGraph.processBatch(
-            uni.unionByName(bi).unionByName(tot), b.toLong, path,
-            keyType = org.apache.spark.sql.types.StringType): Unit
-        }
-        path
+      SessionStores.streamed(s, "graft_graphstream", "pmi_store", dir) { (slice, path) =>
+        val toks = docs(s, dir).filter(slice(col("doc_id")))
+          .select(Text.tokenize(col("text")).as("ts"))
+        val uni = toks.select(explode(col("ts")).as("src"),
+          lit("u").as("dst"), lit(1L).as("w"))
+        val bi = toks.select(
+          explode(Text.shinglesFromTokens(col("ts"), 2)).as("src"),
+          lit("g").as("dst"), lit(1L).as("w"))
+        val tot = toks.select(explode(array(
+          struct(lit("").as("src"), lit("tt").as("dst"),
+            size(col("ts")).cast("long").as("w")),
+          struct(lit("").as("src"), lit("bb").as("dst"),
+            greatest(size(col("ts")) - 1, lit(0)).cast("long").as("w")))).as("e"))
+          .select(col("e.src"), col("e.dst"), col("e.w"))
+        graft.streaming.StreamingGraph.processBatch(
+          uni.unionByName(bi).unionByName(tot), slice.id, path,
+          keyType = org.apache.spark.sql.types.StringType): Unit
       }
   }
 
   /** q_histogram_streamed's additive bucket-count store: Long-keyed
     * StreamingGraph deltas (src = bucket, sentinel dst = 0) over
-    * o_orderkey-mod-3 order slices.
+    * o_orderkey order slices.
     */
   private[graft] object HistStores {
     def store(s: SparkSession, dir: String): String =
-      SessionStores.memo(s, "stream_hist:" + dir) {
-        val path = graft.sources.SessionStores.scopedPath("graft_graphstream",
-          "hist_store_" + graft.sources.SessionStores.tagOf(dir))
-        for (b <- 0 until 3) {
-          val contribs = Tables.tbl(s, dir, "orders")
-            .filter(col("o_orderkey") % 3 === b)
-            .select(floor(col("o_totalprice") / 25000.0).cast("long").as("src"),
-              lit(0L).as("dst"), lit(1L).as("w"))
-          graft.streaming.StreamingGraph.processBatch(contribs, b.toLong, path): Unit
-        }
-        path
+      SessionStores.streamed(s, "graft_graphstream", "hist_store", dir) { (slice, path) =>
+        val contribs = Tables.tbl(s, dir, "orders")
+          .filter(slice(col("o_orderkey")))
+          .select(floor(col("o_totalprice") / 25000.0).cast("long").as("src"),
+            lit(0L).as("dst"), lit(1L).as("w"))
+        graft.streaming.StreamingGraph.processBatch(contribs, slice.id, path): Unit
       }
   }
 
   /** q_quality_gate_streamed's accumulated DOC-fact store: the corpus
-    * ingested as three doc_id-mod-3 micro-batches through the generic
-    * `StreamingFacts` keyed-fact machinery (immutable rows, idempotent
-    * by doc_id).
+    * ingested by doc_id slice through the generic `StreamingFacts`
+    * keyed-fact machinery (immutable rows, idempotent by doc_id).
     */
   private[graft] object DocStores {
     import org.apache.spark.sql.types._
@@ -1481,17 +1436,13 @@ object AnalysisQueries {
       StructField("doc_id", LongType),
       StructField("source", StringType),
       StructField("text", StringType)))
-    def streamedStore(s: SparkSession, dir: String): String =
-      SessionStores.memo(s, "stream_docs:" + dir) {
-        val path = graft.sources.SessionStores.scopedPath("graft_docstream",
-          "store_" + graft.sources.SessionStores.tagOf(dir))
-        val d = docs(s, dir).select("doc_id", "source", "text")
-        for (b <- 0 until 3)
-          graft.streaming.StreamingFacts.processBatch(
-            d.filter(col("doc_id") % 3 === b), b.toLong, path,
-            "doc_id", docSchema): Unit
-        path
+    def streamedStore(s: SparkSession, dir: String): String = {
+      lazy val d = docs(s, dir).select("doc_id", "source", "text")
+      SessionStores.streamed(s, "graft_docstream", "store", dir) { (slice, path) =>
+        graft.streaming.StreamingFacts.processBatch(
+          d.filter(slice(col("doc_id"))), slice.id, path, "doc_id", docSchema): Unit
       }
+    }
 
     def streamedDocs(s: SparkSession, dir: String): DataFrame =
       graft.streaming.StreamingFacts.facts(s, streamedStore(s, dir),

@@ -40,19 +40,15 @@ object DedupQueries {
     * corpus-proportional decode pass runs at store build; the timed
     * query is the banded pair join over the fingerprint read.
     */
-  private[graft] def dHashStore(s: SparkSession, dir: String): DataFrame = {
-    val path = graft.sources.SessionStores.scopedPath("graft_imgdedup",
-      "dhash_" + graft.sources.SessionStores.tagOf(dir))
-    graft.sources.SessionStores.servedPath(s, path) {
+  private[graft] def dHashStore(s: SparkSession, dir: String): DataFrame =
+    SessionStores.parquet(s, "graft_imgdedup", "dhash", dir) {
       val base = docs(s, dir).select(col("doc_id"), col("text"))
       val variants = base.select((col("doc_id") + VariantIdOffset).as("doc_id"),
         translate(col("text"), shiftFrom, shiftTo).as("text"))
       val payloads = base.unionByName(variants)
         .select(col("doc_id"), encode(col("text"), "utf-8").as("payload"))
       graft.operators.Multimodal.dHashesStub(payloads)
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(path)
     }
-  }
 
   /** q_clip_dedup's per-frame fingerprint relation: every payload of
     * the [[dHashStore]] set (corpus + shifted re-encodes) sampled into
@@ -65,10 +61,8 @@ object DedupQueries {
     */
   private val ClipFrames = 4
   private val ClipFrameBytes = 96
-  private[graft] def clipHashStore(s: SparkSession, dir: String): DataFrame = {
-    val path = graft.sources.SessionStores.scopedPath("graft_clipdedup",
-      "clipdhash_" + graft.sources.SessionStores.tagOf(dir))
-    graft.sources.SessionStores.servedPath(s, path) {
+  private[graft] def clipHashStore(s: SparkSession, dir: String): DataFrame =
+    SessionStores.parquet(s, "graft_clipdedup", "clipdhash", dir) {
       val base = docs(s, dir).select(col("doc_id"), col("text"))
       val variants = base.select((col("doc_id") + VariantIdOffset).as("doc_id"),
         translate(col("text"), shiftFrom, shiftTo).as("text"))
@@ -82,9 +76,7 @@ object DedupQueries {
       graft.operators.Multimodal.dHashesStub(frames)
         .select(expr("doc_id DIV 8").as("clip_id"), (col("doc_id") % 8).as("frame"),
           col("dhash"))
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(path)
     }
-  }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q_dedup_exact" -> ((s, dir) => Dedup.exact(docs(s, dir))),
@@ -600,24 +592,18 @@ object DedupQueries {
     }
 
     /** Path of a session-scoped `StreamingDedup` store holding `dir`'s
-      * corpus INGESTED INCREMENTALLY — the corpus split into three
-      * deterministic micro-batches (doc_id mod 3, ids 0/1/2) and fed
-      * through `processBatch`, so the store exercises the real
-      * accumulate path (new×old candidates against the growing
-      * signature store) rather than one batch-sized pass. Built once
-      * per (session, dir); files live under the `SessionStores` process
-      * scope and are deleted by its end-of-process hook.
+      * corpus INGESTED INCREMENTALLY (`SessionStores.streamed`, sliced
+      * on doc_id), so the store exercises the real accumulate path
+      * (new×old candidates against the growing signature store) rather
+      * than one batch-sized pass.
       */
-    def streamedStorePath(s: SparkSession, dir: String): String =
-      SessionStores.memo(s, "dedup.stream_store:" + dir) {
-        val path = graft.sources.SessionStores.scopedPath("graft_streamcur",
-          "store_" + graft.sources.SessionStores.tagOf(dir))
-        val d = Corpus.documents(s, dir).select("doc_id", "text")
-        for (b <- 0 until 3)
-          graft.streaming.StreamingDedup.processBatch(
-            d.filter(col("doc_id") % 3 === b), b, path)
-        path
+    def streamedStorePath(s: SparkSession, dir: String): String = {
+      lazy val d = Corpus.documents(s, dir).select("doc_id", "text")
+      SessionStores.streamed(s, "graft_streamcur", "store", dir) { (slice, path) =>
+        graft.streaming.StreamingDedup.processBatch(
+          d.filter(slice(col("doc_id"))), slice.id, path): Unit
       }
+    }
   }
 
   /** Tokens (stopwords kept) per doc — mirror of `Text.tokenize`. */

@@ -155,18 +155,14 @@ object RelationalQueries {
     * safe in any downstream position.
     */
   private[graft] object PriceQuantiles {
-    def of(s: SparkSession, dir: String): DataFrame = {
-      val path = graft.sources.SessionStores.scopedPath("graft_quantiles",
-        "price_" + graft.sources.SessionStores.tagOf(dir))
-      graft.sources.SessionStores.servedPath(s, path) {
+    def of(s: SparkSession, dir: String): DataFrame =
+      SessionStores.parquet(s, "graft_quantiles", "price", dir) {
         graft.operators.Percentiles.exactQuantiles(
             tbl(s, dir, "lineitem"), "l_returnflag", "l_extendedprice",
             Seq("p05" -> 0.05, "p25" -> 0.25, "p50" -> 0.5,
               "p75" -> 0.75, "p95" -> 0.95))
           .coalesce(1)
-          .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(path)
       }
-    }
 
     /** The DEVIATION median per group (the MAD), one more named part of
       * the quantile store: the deviation relation depends only on
@@ -177,10 +173,8 @@ object RelationalQueries {
       * (parquet read, never cached lineage — the RangeRank refusal
       * contract `of` documents).
       */
-    def mad(s: SparkSession, dir: String): DataFrame = {
-      val path = graft.sources.SessionStores.scopedPath("graft_quantiles",
-        "mad_" + graft.sources.SessionStores.tagOf(dir))
-      graft.sources.SessionStores.servedPath(s, path) {
+    def mad(s: SparkSession, dir: String): DataFrame =
+      SessionStores.parquet(s, "graft_quantiles", "mad", dir) {
         val med = of(s, dir).select(col("l_returnflag"), col("p50").as("median"))
         val dev = tbl(s, dir, "lineitem")
           .join(broadcast(med), "l_returnflag")
@@ -189,36 +183,23 @@ object RelationalQueries {
         graft.operators.Percentiles.exactQuantiles(dev, "l_returnflag", "d",
             Seq("mad" -> 0.5))
           .coalesce(1)
-          .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(path)
       }
-    }
   }
 
   /** Session-scoped StreamingGraph store holding the nation trade
-    * graph's edge deltas ingested incrementally (three deterministic
-    * l_orderkey-mod-3 micro-batches through `processBatch` — each
-    * batch contributes its lineitem slice's (src nation, dst nation,
-    * count) partial weights, which SUM to the batch edge relation
-    * because counts are additive deltas). Built once per
-    * (session, dir); the EmbedStores pattern.
+    * graph's edge deltas ingested incrementally (`SessionStores.streamed`,
+    * sliced on l_orderkey): each batch contributes its lineitem slice's
+    * (src nation, dst nation, count) partial weights, which SUM to the
+    * batch edge relation because counts are additive deltas.
     */
   private[graft] object GraphStores {
     def streamedStore(s: SparkSession, dir: String): String =
-      SessionStores.memo(s, "stream_graph:" + dir) {
-        val path = graft.sources.SessionStores.scopedPath("graft_graphstream",
-          "store_" + graft.sources.SessionStores.tagOf(dir))
-        for (b <- 0 until 3)
-          graft.streaming.StreamingGraph.processBatch(
-            nationEdgeContribs(s, dir, b), b.toLong, path): Unit
-        path
+      SessionStores.streamed(s, "graft_graphstream", "store", dir) { (slice, path) =>
+        graft.streaming.StreamingGraph.processBatch(
+          nationTradeEdges(s, dir, Some(slice)), slice.id, path): Unit
       }
   }
 
-  /** The nation trade graph's edge relation (supplier nation →
-    * customer nation, w = lineitem count) over an optional lineitem
-    * slice — the full relation for q_pagerank/q_ppr, the mod-3 slices
-    * for the streamed twin's delta batches.
-    */
   /** q1_agg's body, shared verbatim by the batch query and the
     * lineitem-fact-store streamed twin.
     */
@@ -289,9 +270,10 @@ object RelationalQueries {
   }
 
   /** Streamed warehouse-fact ingest: the lineitem table accumulated as
-    * three idempotent micro-batches through the generic `StreamingFacts`
-    * value store (the doc/event ingest discipline extended to the
-    * TPC-H fact table). The fixture carries NO surrogate key — even
+    * idempotent micro-batches (`SessionStores.streamed`, sliced on
+    * l_orderkey) through the generic `StreamingFacts` value store (the
+    * doc/event ingest discipline extended to the TPC-H fact table).
+    * The fixture carries NO surrogate key — even
     * the (orderkey, linenumber, partkey, suppkey) tuple collides once
     * at sf0.001 with different content — so `l_key` is the FULL-ROW
     * content digest over `to_json(struct(*))` — KEY-NAMED fields make
@@ -302,9 +284,10 @@ object RelationalQueries {
     * row-content grain (two truly identical fact rows would collapse;
     * none exist at any shipped SF, FactsStreamSpec pins the count so a
     * fixture regeneration that introduces one fails loudly). Dropped
-    * at serve time. Build-once guarded by the facts subpath through
-    * `SessionStores.servedPath` (processBatch is idempotent per
-    * batchId, so a lost race is harmless); fact-table-grain batches
+    * at serve time. Build-once per process, guarded by the facts
+    * subpath through `SessionStores.servedPath`: the build's compaction
+    * clears the replay markers, so a second session's ingest would
+    * append every batch again; fact-table-grain batches
     * keep their task parallelism (filesPerBatch = 0 — the coalesce(1)
     * default exists for SMALL per-batch appends).
     */
@@ -313,24 +296,23 @@ object RelationalQueries {
       d.withColumn("l_key", md5(to_json(struct(d.columns.map(col): _*))))
 
     def store(s: SparkSession, dir: String): String = {
-      val path = graft.sources.SessionStores.scopedPath("graft_listream",
-        "store_" + graft.sources.SessionStores.tagOf(dir))
-      graft.sources.SessionStores.servedPath(s,
-        graft.streaming.StreamingFacts.factsPath(path)) {
-        val d = withKey(tbl(s, dir, "lineitem"))
-        for (b <- 0 until 3)
-          graft.streaming.StreamingFacts.processBatch(
-            d.filter(col("l_orderkey") % 3 === b), b.toLong, path,
-            "l_key", d.schema, filesPerBatch = 0): Unit
-        // settle the store ONCE at build: the three warehouse twins
-        // serve it on every timed read, and re-proving exact-once
-        // with a full fact-table exchange per query is repeated work
-        // that grows with the table — compaction collapses the
-        // replay-residual window physically, and the clean marker
-        // lets StreamingFacts.facts serve raw until the next append
-        graft.streaming.StreamingFacts.compactStore(s, path, "l_key", d.schema)
-      }: Unit
-      path
+      lazy val d = withKey(tbl(s, dir, "lineitem"))
+      SessionStores.streamed(s, "graft_listream", "store", dir,
+          build = (path, ingest) => SessionStores.servedPath(s,
+            graft.streaming.StreamingFacts.factsPath(path)) {
+            ingest()
+            // settle the store ONCE at build: the three warehouse twins
+            // serve it on every timed read, and re-proving exact-once
+            // with a full fact-table exchange per query is repeated work
+            // that grows with the table — compaction collapses the
+            // replay-residual window physically, and the clean marker
+            // lets StreamingFacts.facts serve raw until the next append
+            graft.streaming.StreamingFacts.compactStore(s, path, "l_key", d.schema)
+          }: Unit) { (slice, path) =>
+        graft.streaming.StreamingFacts.processBatch(
+          d.filter(slice(col("l_orderkey"))), slice.id, path,
+          "l_key", d.schema, filesPerBatch = 0): Unit
+      }
     }
 
     def streamedLineitem(s: SparkSession, dir: String): DataFrame =
@@ -766,10 +748,15 @@ object RelationalQueries {
       .limit(100)
   }
 
+  /** The nation trade graph's edge relation (supplier nation →
+    * customer nation, w = lineitem count) over an optional lineitem
+    * slice — the full relation for q_pagerank/q_ppr, the slices for the
+    * streamed twin's delta batches.
+    */
   private def nationTradeEdges(s: SparkSession, dir: String,
-                               slice: Option[Int] = None): DataFrame = {
+                               slice: Option[SessionStores.Slice] = None): DataFrame = {
     val liAll = tbl(s, dir, "lineitem").select("l_orderkey", "l_suppkey")
-    val li = slice.fold(liAll)(b => liAll.filter(col("l_orderkey") % 3 === b))
+    val li = slice.fold(liAll)(b => liAll.filter(b(col("l_orderkey"))))
     val sup = tbl(s, dir, "supplier").select("s_suppkey", "s_nationkey")
     val ord = tbl(s, dir, "orders").select("o_orderkey", "o_custkey")
     val cust = tbl(s, dir, "customer").select("c_custkey", "c_nationkey")
@@ -780,9 +767,6 @@ object RelationalQueries {
       .agg(count(lit(1)).as("w"))
   }
 
-  private def nationEdgeContribs(s: SparkSession, dir: String, b: Int): DataFrame =
-    nationTradeEdges(s, dir, Some(b))
-
   /** The nation trade edge relation persisted once per (process,
     * corpus) — FIVE graph queries (q_pagerank, q_ppr, q_hits, q_bfs,
     * q_triangles) consume it, and the q5-style join chain that builds
@@ -790,14 +774,8 @@ object RelationalQueries {
     * ≤ nations² rows at any scale. Same store discipline as the fuzzy
     * batch pair store and DedupStore.
     */
-  private[graft] def nationEdgesStore(s: SparkSession, dir: String): DataFrame = {
-    val path = graft.sources.SessionStores.scopedPath("graft_nationgraph",
-      "edges_" + graft.sources.SessionStores.tagOf(dir))
-    graft.sources.SessionStores.servedPath(s, path) {
-      nationTradeEdges(s, dir)
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(path)
-    }
-  }
+  private[graft] def nationEdgesStore(s: SparkSession, dir: String): DataFrame =
+    SessionStores.parquet(s, "graft_nationgraph", "edges", dir)(nationTradeEdges(s, dir))
 
   /** The streamed nation-graph fixpoints — shared by the registered
     * queries and Bench's untimed store-build warms.
@@ -964,25 +942,25 @@ object RelationalQueries {
     * `nodes(node)`, `h$i(node,h)` in scope.
     */
   private[queries] def hitsIterSql(i: Int): String =
-    s"""ar$i AS (
+    s"""ar$i AS MATERIALIZED (
        |  SELECT e.dst AS node,
        |         CAST(SUM(CAST(h.h AS DECIMAL(27,12))) AS DOUBLE) AS ar
        |  FROM e JOIN h$i h ON e.src = h.node GROUP BY e.dst
-       |), an$i AS (
+       |), an$i AS MATERIALIZED (
        |  SELECT coalesce(CAST(SUM(CAST(ar AS DECIMAL(27,12))) AS DOUBLE),
        |                  CAST(1 AS DOUBLE)) AS an FROM ar$i
-       |), a${i + 1} AS (
+       |), a${i + 1} AS MATERIALIZED (
        |  SELECT n.node,
        |         round(coalesce(ar, CAST(0 AS DOUBLE)) / an, 6) AS a
        |  FROM nodes n LEFT JOIN ar$i USING (node) CROSS JOIN an$i
-       |), hr$i AS (
+       |), hr$i AS MATERIALIZED (
        |  SELECT e.src AS node,
        |         CAST(SUM(CAST(a.a AS DECIMAL(27,12))) AS DOUBLE) AS hr
        |  FROM e JOIN a${i + 1} a ON e.dst = a.node GROUP BY e.src
-       |), hn$i AS (
+       |), hn$i AS MATERIALIZED (
        |  SELECT coalesce(CAST(SUM(CAST(hr AS DECIMAL(27,12))) AS DOUBLE),
        |                  CAST(1 AS DOUBLE)) AS hn FROM hr$i
-       |), h${i + 1} AS (
+       |), h${i + 1} AS MATERIALIZED (
        |  SELECT n.node,
        |         round(coalesce(hr, CAST(0 AS DOUBLE)) / hn, 6) AS h
        |  FROM nodes n LEFT JOIN hr$i USING (node) CROSS JOIN hn$i
@@ -1488,7 +1466,7 @@ object RelationalQueries {
     }),
 
     // Streamed twin of q_pagerank: the SAME nation trade graph, but the
-    // edge relation accumulated from three l_orderkey-mod-3 micro-batch
+    // edge relation accumulated from l_orderkey-sliced micro-batch
     // DELTA contributions through StreamingGraph.processBatch (edge
     // weights are additive counts, so any batching accumulates to the
     // batch edge relation bit-for-bit), with the fixpoint served from

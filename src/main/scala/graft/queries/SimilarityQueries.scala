@@ -415,22 +415,18 @@ object SimilarityQueries {
   }
 
   /** Session-scoped StreamingEmbed store holding `dir`'s embeddings
-    * ingested incrementally (three deterministic vec_id-mod-3
-    * micro-batches through `processBatch` — the accumulate path the
-    * streamed twins serve from). Built once per (session, dir).
+    * ingested incrementally (`SessionStores.streamed`, sliced on
+    * vec_id) — the accumulate path the streamed twins serve from.
     */
   private[graft] object EmbedStores {
-    def streamedStore(s: SparkSession, dir: String): String =
-      SessionStores.memo(s, "stream_embed:" + dir) {
-        import org.apache.spark.sql.functions.col
-        val path = graft.sources.SessionStores.scopedPath("graft_embstream",
-          "store_" + graft.sources.SessionStores.tagOf(dir))
-        val emb = graft.sources.Tables.tbl(s, dir, "embeddings")
-        for (b <- 0 until 3)
-          graft.streaming.StreamingEmbed.processBatch(
-            emb.filter(col("vec_id") % 3 === b), b.toLong, path): Unit
-        path
+    def streamedStore(s: SparkSession, dir: String): String = {
+      import org.apache.spark.sql.functions.col
+      lazy val emb = graft.sources.Tables.tbl(s, dir, "embeddings")
+      SessionStores.streamed(s, "graft_embstream", "store", dir) { (slice, path) =>
+        graft.streaming.StreamingEmbed.processBatch(
+          emb.filter(slice(col("vec_id"))), slice.id, path): Unit
       }
+    }
   }
 
   /** Session-scoped WHITENED-COORDINATE store: fit the 4-component

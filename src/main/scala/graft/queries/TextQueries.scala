@@ -128,52 +128,47 @@ object TextQueries {
       array_join(transform(slice(sort_array(collect_list(col("doc_id"))), 1, 100),
         d => d.cast("string")), ",").as("postings_csv"))
 
-  /** Session-scoped streamed index table per (session, dir) — built on
-    * first use, compacted once (restores (term, doc_id) uniqueness and
-    * per-bucket single files), then served read-only.
+  /** Session-scoped streamed index table — ingested by doc_id slice
+    * (`SessionStores.streamed`), compacted once (restores
+    * (term, doc_id) uniqueness and per-bucket single files), then served
+    * read-only under its table name.
     */
   private[graft] object StreamedIndex {
-    def table(s: SparkSession, dir: String): String =
-      SessionStores.memo(s, "stream_index:" + dir) {
-        val tag = graft.sources.SessionStores.tagOf(dir)
-        val path = graft.sources.SessionStores.scopedPath("graft_stridx", "store_" + tag)
-        val tbl = s"graft_stridx_$tag"
-        val d = docs(s, dir)
-        for (b <- 0 until 3)
-          graft.streaming.StreamingIndex.appendBatch(
-            InvertedIndex.postings(d.filter(col("doc_id") % 3 === b)),
-            b.toLong, tbl, path, buckets = 32): Unit
-        graft.streaming.StreamingIndex.compact(s, tbl, path, buckets = 32)
-        tbl
-      }
+    def table(s: SparkSession, dir: String): String = {
+      val tbl = "graft_stridx_" + SessionStores.tagOf(dir)
+      lazy val d = docs(s, dir)
+      SessionStores.streamed(s, "graft_stridx", "store", dir,
+          build = (path, ingest) => {
+            ingest()
+            graft.streaming.StreamingIndex.compact(s, tbl, path, buckets = 32)
+          }) { (slice, path) =>
+        graft.streaming.StreamingIndex.appendBatch(
+          InvertedIndex.postings(d.filter(slice(col("doc_id")))),
+          slice.id, tbl, path, buckets = 32): Unit
+      }: Unit
+      tbl
+    }
   }
 
   /** Session-scoped StreamingFuzzy store holding `dir`'s urls ingested
-    * incrementally (three deterministic doc_id-mod-3 micro-batches —
-    * the EmbedStores pattern). Built once per (session, dir).
+    * incrementally (`SessionStores.streamed`, sliced on doc_id).
     */
   private[graft] object FuzzyStores {
-    def streamedStore(s: SparkSession, dir: String): String =
-      SessionStores.memo(s, "stream_fuzzy:" + dir) {
-        val path = graft.sources.SessionStores.scopedPath("graft_fuzzystream",
-          "store_" + graft.sources.SessionStores.tagOf(dir))
-        val d = docs(s, dir)
-        for (b <- 0 until 3)
-          graft.streaming.StreamingFuzzy.processBatch(
-            d.filter(col("doc_id") % 3 === b).select("url"),
-            b.toLong, path): Unit
-        path
+    def streamedStore(s: SparkSession, dir: String): String = {
+      lazy val d = docs(s, dir)
+      SessionStores.streamed(s, "graft_fuzzystream", "store", dir) { (slice, path) =>
+        graft.streaming.StreamingFuzzy.processBatch(
+          d.filter(slice(col("doc_id"))).select("url"), slice.id, path): Unit
       }
+    }
 
     /** The word co-occurrence edge relation for TextRank, persisted
       * once per (process, corpus): symmetric count-weighted
       * adjacent-term pairs — bigram-vocab-sized, the corpus tokenize
       * runs at store build, not per query.
       */
-    def cooccurrenceEdges(s: SparkSession, dir: String): DataFrame = {
-      val path = graft.sources.SessionStores.scopedPath("graft_fuzzystream",
-        "cooc_edges_" + graft.sources.SessionStores.tagOf(dir))
-      graft.sources.SessionStores.servedPath(s, path) {
+    def cooccurrenceEdges(s: SparkSession, dir: String): DataFrame =
+      SessionStores.parquet(s, "graft_fuzzystream", "cooc_edges", dir) {
         val bg = docs(s, dir).select(explode(
             Text.shinglesFromTokens(Text.tokensNoStop(col("text")), 2)).as("bg"))
           .select(split(col("bg"), " ").getItem(0).as("a"),
@@ -184,18 +179,16 @@ object TextQueries {
           struct(col("b").as("src"), col("a").as("dst")))).as("e"))
           .select(col("e.src"), col("e.dst"))
           .groupBy("src", "dst").agg(count(lit(1)).as("w"))
-          .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(path)
       }
-    }
 
-    /** The b-th of three doc_id-mod-3 co-occurrence edge CONTRIBUTION
-      * slices: bigram counts are additive over any partition of the
-      * doc set, so the three slices' deltas accumulate to
-      * `cooccurrenceEdges` bit-for-bit — the StreamingGraph additive
-      * contract, now on STRING (term) keys.
+    /** One doc_id slice's co-occurrence edge CONTRIBUTIONS: bigram
+      * counts are additive over any partition of the doc set, so the
+      * slices' deltas accumulate to `cooccurrenceEdges` bit-for-bit —
+      * the StreamingGraph additive contract, now on STRING (term) keys.
       */
-    private def coocContribs(s: SparkSession, dir: String, b: Int): DataFrame = {
-      val bg = docs(s, dir).filter(col("doc_id") % 3 === b)
+    private def coocContribs(s: SparkSession, dir: String,
+                             slice: SessionStores.Slice): DataFrame = {
+      val bg = docs(s, dir).filter(slice(col("doc_id")))
         .select(explode(
           Text.shinglesFromTokens(Text.tokensNoStop(col("text")), 2)).as("bg"))
         .select(split(col("bg"), " ").getItem(0).as("a"),
@@ -208,43 +201,32 @@ object TextQueries {
     }
 
     /** String-keyed StreamingGraph store accumulating the TextRank
-      * co-occurrence edge deltas (three mod-3 micro-batches through
-      * `processBatch`) — the `GraphStores.streamedStore` pattern at
-      * term keys. Built once per (session, dir).
+      * co-occurrence edge deltas — the `GraphStores.streamedStore`
+      * pattern at term keys.
       */
     def streamedCoocStore(s: SparkSession, dir: String): String =
-      SessionStores.memo(s, "stream_cooc:" + dir) {
-        val path = graft.sources.SessionStores.scopedPath("graft_graphstream",
-          "cooc_store_" + graft.sources.SessionStores.tagOf(dir))
-        for (b <- 0 until 3)
-          graft.streaming.StreamingGraph.processBatch(
-            coocContribs(s, dir, b), b.toLong, path,
-            keyType = org.apache.spark.sql.types.StringType): Unit
-        path
+      SessionStores.streamed(s, "graft_graphstream", "cooc_store", dir) { (slice, path) =>
+        graft.streaming.StreamingGraph.processBatch(
+          coocContribs(s, dir, slice), slice.id, path,
+          keyType = org.apache.spark.sql.types.StringType): Unit
       }
 
     /** String-keyed StreamingGraph store accumulating the DOC-graph
-      * edge deltas: the ED-1 fuzzy pair relation sliced three ways on
-      * a url hash (each pair lands in exactly one slice, so the unit
-      * weights are additive), exploded both directions. Feeds the
-      * streamed twin of the SHUFFLE-path q_pagerank_docs.
+      * edge deltas: the ED-1 fuzzy pair relation sliced on a url hash
+      * (each pair lands in exactly one slice, so the unit weights are
+      * additive), exploded both directions. Feeds the streamed twin of
+      * the SHUFFLE-path q_pagerank_docs.
       */
     def streamedDocGraphStore(s: SparkSession, dir: String): String =
-      SessionStores.memo(s, "stream_docgraph:" + dir) {
-        val path = graft.sources.SessionStores.scopedPath("graft_graphstream",
-          "docgraph_store_" + graft.sources.SessionStores.tagOf(dir))
-        val pairs = batchPairs(s, dir)
-        for (b <- 0 until 3) {
-          val slice = pairs.filter(pmod(xxhash64(col("url_a")), lit(3)) === b)
-          val contribs = slice.select(explode(array(
+      SessionStores.streamed(s, "graft_graphstream", "docgraph_store", dir) { (slice, path) =>
+        val contribs = batchPairs(s, dir).filter(slice(xxhash64(col("url_a"))))
+          .select(explode(array(
             struct(col("url_a").as("src"), col("url_b").as("dst")),
             struct(col("url_b").as("src"), col("url_a").as("dst")))).as("e"))
-            .select(col("e.src"), col("e.dst"), lit(1L).as("w"))
-          graft.streaming.StreamingGraph.processBatch(
-            contribs, b.toLong, path,
-            keyType = org.apache.spark.sql.types.StringType): Unit
-        }
-        path
+          .select(col("e.src"), col("e.dst"), lit(1L).as("w"))
+        graft.streaming.StreamingGraph.processBatch(
+          contribs, slice.id, path,
+          keyType = org.apache.spark.sql.types.StringType): Unit
       }
 
     /** The BATCH corpus-wide ED-1 pair relation, persisted once per
@@ -253,14 +235,10 @@ object TextQueries {
       * and the doc-graph PageRank all consume this relation, so the
       * variant self-join runs once, not once per consuming query.
       */
-    def batchPairs(s: SparkSession, dir: String): DataFrame = {
-      val path = graft.sources.SessionStores.scopedPath("graft_fuzzystream",
-        "batch_pairs_" + graft.sources.SessionStores.tagOf(dir))
-      graft.sources.SessionStores.servedPath(s, path) {
+    def batchPairs(s: SparkSession, dir: String): DataFrame =
+      SessionStores.parquet(s, "graft_fuzzystream", "batch_pairs", dir) {
         graft.operators.FuzzyJoin.ed1Pairs(docs(s, dir), "url")
-          .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(path)
       }
-    }
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -284,7 +262,7 @@ object TextQueries {
     "q_index_stats" -> ((s, dir) => indexStatsOf(postings(s, dir))),
 
     // STREAMED-INDEX twins: the flagship index built incrementally —
-    // three doc_id-mod-3 posting micro-batches appended through
+    // doc_id-sliced posting micro-batches appended through
     // `StreamingIndex.appendBatch` into the bucketed table layout, one
     // compaction (the pause-compact-resume discipline). The accumulated
     // table equals the batch index relation, so both rows hash-check
@@ -310,8 +288,8 @@ object TextQueries {
     // relation; the variant self-join runs once at store build).
     "q_fuzzy_urls" -> ((s, dir) => FuzzyStores.batchPairs(s, dir)),
 
-    // Streamed twin: the crawl frontier arriving incrementally — three
-    // doc_id-mod-3 url micro-batches through StreamingFuzzy.processBatch
+    // Streamed twin: the crawl frontier arriving incrementally —
+    // doc_id-sliced url micro-batches through StreamingFuzzy.processBatch
     // (new urls' variants broadcast-join the accumulated variant store;
     // a pair lands in the batch where its later endpoint arrives), the
     // accumulated pair store hash-checked under the batch oracle.
@@ -663,14 +641,10 @@ object TextQueries {
     * the node set instead of re-deriving it.
     */
   private[graft] object DocGraphStores {
-    def nodes(s: SparkSession, dir: String): DataFrame = {
-      val path = graft.sources.SessionStores.scopedPath("graft_docgraph",
-        "nodes_" + graft.sources.SessionStores.tagOf(dir))
-      graft.sources.SessionStores.servedPath(s, path) {
+    def nodes(s: SparkSession, dir: String): DataFrame =
+      SessionStores.parquet(s, "graft_docgraph", "nodes", dir) {
         docs(s, dir).select(col("url").as("node")).distinct()
-          .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(path)
       }
-    }
   }
 
   /** Session-scoped community-label store: the shuffle-path LPA over
@@ -679,10 +653,8 @@ object TextQueries {
     * centroid-store discipline).
     */
   private[graft] object CommunityStores {
-    def labels(s: SparkSession, dir: String): DataFrame = {
-      val path = graft.sources.SessionStores.scopedPath("graft_communities",
-        "labels_" + graft.sources.SessionStores.tagOf(dir))
-      graft.sources.SessionStores.servedPath(s, path) {
+    def labels(s: SparkSession, dir: String): DataFrame =
+      SessionStores.parquet(s, "graft_communities", "labels", dir) {
         val pairs = FuzzyStores.batchPairs(s, dir)
         val edges = pairs.select(explode(array(
           struct(col("url_a").as("src"), col("url_b").as("dst")),
@@ -692,9 +664,7 @@ object TextQueries {
         graft.operators.Graph.labelPropagation(edges, nodes, iters = 4,
             broadcastRanksMax = 0)
           .coalesce(1)
-          .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(path)
       }
-    }
   }
 
   /** Per-(source, term) DOC-FREQUENCY delta store: doc-distinct
@@ -703,18 +673,13 @@ object TextQueries {
     */
   private[graft] object TermDfStores {
     def store(s: SparkSession, dir: String): String =
-      SessionStores.memo(s, "stream_termdf:" + dir) {
-        val path = graft.sources.SessionStores.scopedPath("graft_graphstream",
-          "termdf_store_" + graft.sources.SessionStores.tagOf(dir))
-        for (b <- 0 until 3) {
-          val contribs = docs(s, dir).filter(col("doc_id") % 3 === b)
-            .select(col("source").as("src"),
-              explode(graft.functions.Text.terms(col("text"))).as("dst"),
-              lit(1L).as("w"))
-          graft.streaming.StreamingGraph.processBatch(contribs, b.toLong, path,
-            keyType = org.apache.spark.sql.types.StringType): Unit
-        }
-        path
+      SessionStores.streamed(s, "graft_graphstream", "termdf_store", dir) { (slice, path) =>
+        val contribs = docs(s, dir).filter(slice(col("doc_id")))
+          .select(col("source").as("src"),
+            explode(graft.functions.Text.terms(col("text"))).as("dst"),
+            lit(1L).as("w"))
+        graft.streaming.StreamingGraph.processBatch(contribs, slice.id, path,
+          keyType = org.apache.spark.sql.types.StringType): Unit
       }
   }
 
@@ -898,7 +863,7 @@ object TextQueries {
     // doc-graph HITS: the fuzzy-pair CTEs verbatim, then the shared
     // HITS half-step CTEs (RelationalQueries.hitsIterSql)
     "q_hits_docs" ->
-      s"""WITH u AS (
+      s"""WITH u AS MATERIALIZED (
          |  SELECT DISTINCT $urlSql AS url FROM documents
          |), dels AS (
          |  SELECT url,
@@ -910,11 +875,11 @@ object TextQueries {
          |  FROM dels a JOIN dels b ON a.v = b.v AND a.url < b.url
          |), prs AS (
          |  SELECT url_a, url_b FROM cand WHERE levenshtein(url_a, url_b) = 1
-         |), e AS (
+         |), e AS MATERIALIZED (
          |  SELECT url_a AS src, url_b AS dst FROM prs
          |  UNION ALL
          |  SELECT url_b AS src, url_a AS dst FROM prs
-         |), nodes AS (
+         |), nodes AS MATERIALIZED (
          |  SELECT url AS node FROM u
          |), h0 AS (
          |  SELECT node, CAST(1 AS DOUBLE) AS h FROM nodes

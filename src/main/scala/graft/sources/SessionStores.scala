@@ -1,7 +1,7 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.functions.{col, lit, pmod}
 
 /** Shared scaffolding for the session-scoped derived stores (the
   * persisted index, the co-located bucketed tables, the z-ordered
@@ -26,6 +26,19 @@ import org.apache.spark.sql.functions.col
   * PROCESS SCOPING: store files live under a per-process UUID directory
   * so two concurrent JVMs (each overwriting on build) can never race
   * each other's files.
+  *
+  * DERIVED STORES — one declaration each:
+  *   - naming: a store of a corpus `dir` is named by (family, name, dir);
+  *     its files are `scopedPath(family, name + "_" + tagOf(dir))` and
+  *     its session key derives from that path, so two stores can share
+  *     neither a path nor a key;
+  *   - `parquet` writes a DataFrame to that path once per process and
+  *     serves it (`servedPath`);
+  *   - `streamed` ingests a streamed twin's store as [[SliceCount]]
+  *     micro-batches, batch ids 0, 1, 2 in order, slice `b` holding the
+  *     rows whose key is `b` modulo the slice count (every sliced key is
+  *     a non-negative id or a hash reduced with `pmod`), once per
+  *     (session, store), and returns the path.
   *
   * STALENESS GUARD (catalog tables): with a PERSISTENT metastore, a new
   * JVM can see `tableExists = true` for a table whose files live under
@@ -215,6 +228,43 @@ private[graft] object SessionStores {
         }
         it.remove()
       }
+    }
+  }
+
+  /** The number of micro-batches a streamed store ingests its input in. */
+  val SliceCount = 3
+
+  /** Micro-batch `id` of a streamed store's ingest. */
+  final case class Slice(id: Long) {
+    /** This slice's rows: those whose `key` is `id` modulo [[SliceCount]]. */
+    def apply(key: Column): Column = pmod(key, lit(SliceCount)) === id
+  }
+
+  private def storePath(family: String, name: String, dir: String): String =
+    scopedPath(family, name + "_" + tagOf(dir))
+
+  /** The parquet store (family, name, dir): `frame` written once per
+    * process, the relation resolved once per session (`servedPath`).
+    */
+  def parquet(s: SparkSession, family: String, name: String, dir: String)(
+      frame: => DataFrame): DataFrame = {
+    val path = storePath(family, name, dir)
+    servedPath(s, path)(frame.write.mode(SaveMode.Overwrite).parquet(path))
+  }
+
+  /** The path of the streamed store (family, name, dir), built once per
+    * session: `build(path, ingest)` runs `ingest()`, which calls
+    * `slice(Slice(b), path)` for b = 0 until [[SliceCount]] in order. A
+    * store that settles after its ingest (a compaction) or guards it for
+    * the process passes its own `build`.
+    */
+  def streamed(s: SparkSession, family: String, name: String, dir: String,
+               build: (String, () => Unit) => Unit = (_, ingest) => ingest())(
+      slice: (Slice, String) => Unit): String = {
+    val path = storePath(family, name, dir)
+    memo(s, "streamed:" + path) {
+      build(path, () => (0 until SliceCount).foreach(b => slice(Slice(b), path)))
+      path
     }
   }
 

@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.Text
 import graft.operators.TermScoring
@@ -44,9 +44,6 @@ object TermStatsStore {
 
   private def tfTableName(dir: String): String =
     "graft_tf_" + dir.replaceAll("[^a-zA-Z0-9]", "_") + "_" + SessionStores.tagOf(dir)
-
-  private def storePath(kind: String, dir: String): String =
-    SessionStores.scopedPath("graft_termstats", kind + "_" + SessionStores.tagOf(dir))
 
   /** (doc_id, term, tf) over the full token stream: the rows `tf` stores
     * and `stats` aggregates.
@@ -102,37 +99,29 @@ object TermStatsStore {
     }
   }
 
-  private[sources] def servedStats(spark: SparkSession, dir: String): DataFrame = {
-    val path = storePath("stats", dir)
-    SessionStores.servedPath(spark, path) {
+  private[sources] def servedStats(spark: SparkSession, dir: String): DataFrame =
+    SessionStores.parquet(spark, "graft_termstats", "stats", dir) {
       tfRows(Corpus.documents(spark, dir))
         .groupBy("term")
         .agg(count(lit(1)).as("df"), sum(col("tf")).as("c"))
         .withColumn("stop", col("term").isin(Text.EffectiveStopwords: _*))
-        .write.mode(SaveMode.Overwrite).parquet(path)
     }
-  }
 
-  private[sources] def servedDocLengths(spark: SparkSession, dir: String): DataFrame = {
-    val path = storePath("doclen", dir)
-    SessionStores.servedPath(spark, path) {
+  private[sources] def servedDocLengths(spark: SparkSession, dir: String): DataFrame =
+    SessionStores.parquet(spark, "graft_termstats", "doclen", dir) {
       docLengthRows(Corpus.documents(spark, dir))
-        .write.mode(SaveMode.Overwrite).parquet(path)
     }
-  }
 
-  private[sources] def servedScalars(spark: SparkSession, dir: String): DataFrame = {
-    val path = storePath("scalars", dir)
-    SessionStores.servedPath(spark, path) {
+  private[sources] def servedScalars(spark: SparkSession, dir: String): DataFrame =
+    SessionStores.parquet(spark, "graft_termstats", "scalars", dir) {
       docLengthRows(Corpus.documents(spark, dir))
         .agg(
           count(lit(1)).as("n_docs"),
           countDistinct(col("doc_id")).as("n_docs_distinct"),
           avg(col("dl")).as("avgdl"),
           sum(col("dl_all")).cast("long").as("n_corpus"))
-        .coalesce(1).write.mode(SaveMode.Overwrite).parquet(path)
+        .coalesce(1)
     }
-  }
 
   // ---- serving surface: the stored twins of the TermScoring queries ----
 

@@ -47,15 +47,11 @@ object VectorStore {
   /** The persisted prepared + sign-bucketed vector relation
     * (vec_id, v, norm, bucket) for `dir`, built on first use.
     */
-  def vectors(spark: SparkSession, dir: String, bits: Int = 8): DataFrame = {
-    val path = SessionStores.scopedPath("graft_vec",
-      s"v_b${bits}_" + SessionStores.tagOf(dir))
-    SessionStores.servedPath(spark, path) {
+  def vectors(spark: SparkSession, dir: String, bits: Int = 8): DataFrame =
+    SessionStores.parquet(spark, "graft_vec", s"v_b$bits", dir) {
       Similarity.prepared(emb(spark, dir))
         .withColumn("bucket", Similarity.signBucket(col("v"), bits))
-        .write.mode(SaveMode.Overwrite).parquet(path)
     }
-  }
 
   /** The persisted IVF structure for `dir`: cell-partitioned assigned
     * vectors + the centroid sequence. `iters = 0` is the deterministic

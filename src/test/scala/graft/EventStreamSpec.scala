@@ -91,11 +91,18 @@ class EventStreamSpec extends AnyFunSuite {
   }
 
   test("behavioral twins over the store equal the batch queries on the real corpus") {
-    // the six registered *_streamed twins hash-check under the batch
-    // oracles in Verify; this pins the sharper claim directly — the
-    // store-served DataFrames are row-identical to the batch ones
+    // the registered *_streamed twins hash-check under the batch oracles
+    // in Verify; this pins the sharper claim directly — the store-served
+    // DataFrames are row-identical to the batch ones. One twin per
+    // `SessionStores.streamed` store beside the event-store twins.
     val dir = "/root/testdata/sf0.001"
-    for (q <- Seq("q_funnel", "q_transitions", "q_scd2")) {
+    for (q <- Seq("q_funnel", "q_transitions", "q_scd2",
+                  "q_heavy_hitters", "q_source_drift", "q_bpe_train", "q_pmi",
+                  "q_histogram", "q_hapax", "q_curate", "q_pagerank", "q1_agg",
+                  "q_embed_dup", "q_index_stats", "q_fuzzy_urls", "q_textrank",
+                  "q_pagerank_docs", "q_top_terms_per_source")) {
+      assert(SparkEntry.oracleSql(q) === SparkEntry.oracleSql(q + "_streamed"),
+        s"$q: a twin is judged by its batch query's oracle")
       val batch = SparkEntry.queries(q)(spark, dir).collect().map(_.toString).sorted
       val streamed = SparkEntry.queries(q + "_streamed")(spark, dir).collect().map(_.toString).sorted
       assert(batch.sameElements(streamed), q)

@@ -130,6 +130,72 @@ class SessionStoresSpec extends AnyFunSuite {
     S.release(s)
   }
 
+  test("streamed runs slices 0, 1, 2 in order once per session and returns a path under its family") {
+    val family = "graft_test_streamed"
+    val name = "store_" + System.nanoTime()
+    val seen = scala.collection.mutable.ArrayBuffer.empty[(Long, String)]
+    def store(s: org.apache.spark.sql.SparkSession, dir: String): String =
+      S.streamed(s, family, name, dir) { (slice, path) => seen += slice.id -> path: Unit }
+    val path = store(spark, "/corpus/a")
+    assert(seen.map(_._1) === Seq(0L, 1L, 2L))
+    assert(seen.forall(_._2 == path), "every slice ingests into the returned path")
+    val tmp = sys.props.getOrElse("java.io.tmpdir", "/tmp")
+    assert(path.startsWith(s"$tmp/$family/"), path)
+    assert(store(spark, "/corpus/a") === path)
+    assert(seen.size === 3, "a second call in the same session must run nothing")
+    val other = spark.newSession()
+    assert(store(other, "/corpus/a") === path)
+    assert(seen.map(_._1) === Seq(0L, 1L, 2L, 0L, 1L, 2L), "each session ingests once")
+    // another dir or name is another store
+    val byDir = store(spark, "/corpus/b")
+    val byName = S.streamed(spark, family, name + "_b", "/corpus/a")((_, _) => ())
+    assert(Set(path, byDir, byName).size === 3)
+    // `build` wraps the ingest: a finishing step runs after slice 2
+    val order = scala.collection.mutable.ArrayBuffer.empty[String]
+    var built = ""
+    val wrapped = S.streamed(spark, family, name + "_c", "/corpus/a",
+        build = (p, ingest) => { built = p; order += "start"; ingest(); order += "finish": Unit }) {
+      (slice, _) => order += slice.id.toString: Unit
+    }
+    assert(order === Seq("start", "0", "1", "2", "finish"))
+    assert(built === wrapped && wrapped.startsWith(s"$tmp/$family/"))
+  }
+
+  test("a Slice selects the rows of its key modulo the slice count, each row in exactly one") {
+    val keys = spark.range(0, 30).toDF("k")
+    val slices = (0 until S.SliceCount).map(b =>
+      keys.filter(S.Slice(b)(org.apache.spark.sql.functions.col("k"))).as[Long].collect().toSet)
+    for ((got, b) <- slices.zipWithIndex)
+      assert(got === (0L until 30L).filter(_ % S.SliceCount == b).toSet)
+    assert(slices.map(_.size).sum === 30)
+  }
+
+  test("parquet writes once per process and resolves once per session; (family, name) names the store") {
+    val name = "parquet_" + System.nanoTime()
+    val builds = new java.util.concurrent.atomic.AtomicInteger(0)
+    def store(s: org.apache.spark.sql.SparkSession, family: String, n: String, v: Long) =
+      S.parquet(s, family, n, "/corpus/a") { builds.incrementAndGet(); Seq(v).toDF("v") }
+    val first = store(spark, "graft_test_store", name, 1L)
+    assert(first.as[Long].collect().toSeq === Seq(1L))
+    var again: org.apache.spark.sql.DataFrame = null
+    assert(jobsStartedBy { again = store(spark, "graft_test_store", name, 9L) } === 0,
+      "a repeat call re-wrote or re-listed the store")
+    assert(again eq first)
+    val other = spark.newSession()
+    val theirs = store(other, "graft_test_store", name, 9L)
+    assert(!(theirs eq first), "a new session must resolve its own relation")
+    assert(theirs.as[Long].collect().toSeq === Seq(1L))
+    assert(builds.get() === 1, "written once per process")
+    // another name or family is another path, so another key
+    val byName = store(spark, "graft_test_store", name + "_b", 2L)
+    val byFamily = store(spark, "graft_test_store_b", name, 3L)
+    assert(byName.as[Long].head() === 2L && byFamily.as[Long].head() === 3L)
+    assert(builds.get() === 3)
+    val dirs = Seq(first, byName, byFamily).map(df =>
+      new org.apache.hadoop.fs.Path(df.inputFiles.head).getParent.toString)
+    assert(dirs.distinct.size === 3, dirs)
+  }
+
   test("first scopedPath of a family deletes dead-process scopes, keeps live and bare ones") {
     // a killed JVM never runs the shutdown hook, so its scope dir stays
     // behind; its `.owner` lock died with it, and the next process sweeps it
