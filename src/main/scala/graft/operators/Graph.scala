@@ -33,6 +33,9 @@ object Graph {
     */
   private[graft] val BroadcastRanksMaxDefault = 1000000L
 
+  /** Power-iteration rounds between two materializations of the inflow. */
+  private val CheckpointEvery = 10
+
   /** Weighted PageRank. `edges`: (src, dst, w); `nodes`: (node).
     * Dangling nodes (no out-edges) leak their mass — the simple
     * formulation; the oracle mirrors it. Returns (node, pr).
@@ -49,7 +52,7 @@ object Graph {
     * move, ≪ edges). Keying e by dst in the shuffle path would instead
     * re-exchange the full edge relation on src EVERY iteration.
     *
-    * Lineage/cache lifecycle: every `checkpointEvery` iterations the
+    * Lineage/cache lifecycle: every [[CheckpointEvery]] iterations the
     * rank state is materialized behind a plan boundary
     * (`Dedup.materializeOnce` — reliable checkpoint on a cluster,
     * localCheckpoint in local mode), so a convergence-driven caller can
@@ -61,14 +64,12 @@ object Graph {
     */
   def pageRank(edges: DataFrame, nodes: DataFrame, iters: Int,
                damping: Double = 0.85,
-               checkpointEvery: Int = 10,
                broadcastRanksMax: Long = BroadcastRanksMaxDefault): DataFrame = {
     val n = nodes.count() // one metadata-sized action, node count only
     require(n > 0, "pageRank needs a non-empty node set")
     val nodeBase = nodes.select(col("node"),
       lit((1.0 - damping) / n).as("base"), lit(1.0 / n).as("pr"))
-    powerIterate(edges, nodeBase, n, iters, damping, checkpointEvery,
-      broadcastRanksMax)
+    powerIterate(edges, nodeBase, n, iters, damping, broadcastRanksMax)
   }
 
   /** PERSONALIZED PageRank: teleport mass goes only to `seeds` (a
@@ -82,7 +83,6 @@ object Graph {
     */
   def personalizedPageRank(edges: DataFrame, nodes: DataFrame, seeds: DataFrame,
                            iters: Int, damping: Double = 0.85,
-                           checkpointEvery: Int = 10,
                            broadcastRanksMax: Long = BroadcastRanksMaxDefault): DataFrame = {
     val n = nodes.count()
     require(n > 0, "personalizedPageRank needs a non-empty node set")
@@ -96,8 +96,7 @@ object Graph {
           .otherwise(lit(0.0)).as("base"),
         when(col("_s").isNotNull, lit(1.0 / nS))
           .otherwise(lit(0.0)).as("pr"))
-    powerIterate(edges, nodeBase, n, iters, damping, checkpointEvery,
-      broadcastRanksMax)
+    powerIterate(edges, nodeBase, n, iters, damping, broadcastRanksMax)
   }
 
   /** HITS hubs & authorities (Kleinberg '99): the two-sided fixpoint —
@@ -168,52 +167,54 @@ object Graph {
     // subtrees). Every half-step therefore materializes behind a plan
     // boundary; the raw-sum relations are node-sized, so each cut is
     // metadata-cheap.
-    var ar: DataFrame = null // (dst, ar) — raw authority sums
-    var an: DataFrame = null // 1-row L1 norm of ar
-    var hr: DataFrame = null // (src, hr) — raw hub sums
-    var hn: DataFrame = null // 1-row L1 norm of hr
-    for (i <- 1 to iters) {
-      ar = Dedup.materializeOnce(
-        if (i == 1)
-          // hubs start at 1.0 for EVERY node, so the first authority
-          // sums are plain unit sums over the in-edges — no join needed
-          eSrc.groupBy("dst")
-            .agg(sum(lit(1.0).cast(DecimalType(27, 12))).cast("double").as("ar"))
-        else {
-          val hScores = hr.crossJoin(hint(hn))
-            .select(col("src").as("node"), round(col("hr") / col("hn"), 6).as("h"))
-          eSrc.join(hint(hScores), col("src") === col("node"))
-            .groupBy("dst")
-            .agg(sum(col("h").cast(DecimalType(27, 12))).cast("double").as("ar"))
-        })
-      an = ar.agg(coalesce(
-        sum(col("ar").cast(DecimalType(27, 12))).cast("double"), lit(1.0)).as("an"))
-      val aScores = ar.crossJoin(hint(an))
-        .select(col("dst").as("node"), round(col("ar") / col("an"), 6).as("a"))
-      hr = Dedup.materializeOnce(
-        eDst.join(hint(aScores), col("dst") === col("node"))
-          .groupBy("src")
-          .agg(sum(col("a").cast(DecimalType(27, 12))).cast("double").as("hr")))
-      hn = hr.agg(coalesce(
-        sum(col("hr").cast(DecimalType(27, 12))).cast("double"), lit(1.0)).as("hn"))
+    try {
+      var ar: DataFrame = null // (dst, ar) — raw authority sums
+      var an: DataFrame = null // 1-row L1 norm of ar
+      var hr: DataFrame = null // (src, hr) — raw hub sums
+      var hn: DataFrame = null // 1-row L1 norm of hr
+      for (i <- 1 to iters) {
+        ar = Dedup.materializeOnce(
+          if (i == 1)
+            // hubs start at 1.0 for EVERY node, so the first authority
+            // sums are plain unit sums over the in-edges — no join needed
+            eSrc.groupBy("dst")
+              .agg(sum(lit(1.0).cast(DecimalType(27, 12))).cast("double").as("ar"))
+          else {
+            val hScores = hr.crossJoin(hint(hn))
+              .select(col("src").as("node"), round(col("hr") / col("hn"), 6).as("h"))
+            eSrc.join(hint(hScores), col("src") === col("node"))
+              .groupBy("dst")
+              .agg(sum(col("h").cast(DecimalType(27, 12))).cast("double").as("ar"))
+          })
+        an = ar.agg(coalesce(
+          sum(col("ar").cast(DecimalType(27, 12))).cast("double"), lit(1.0)).as("an"))
+        val aScores = ar.crossJoin(hint(an))
+          .select(col("dst").as("node"), round(col("ar") / col("an"), 6).as("a"))
+        hr = Dedup.materializeOnce(
+          eDst.join(hint(aScores), col("dst") === col("node"))
+            .groupBy("src")
+            .agg(sum(col("a").cast(DecimalType(27, 12))).cast("double").as("hr")))
+        hn = hr.agg(coalesce(
+          sum(col("hr").cast(DecimalType(27, 12))).cast("double"), lit(1.0)).as("hn"))
+      }
+      // node restore, ONCE after the fixpoint (was twice per iteration):
+      // the exact r21 score expressions, absent raw sums coalesced to 0
+      Dedup.materializeOnce(
+        if (iters == 0)
+          nd.select(col("node"), lit(1.0).as("hub"), lit(1.0).as("auth"))
+        else
+          nd.join(hint(hr), col("node") === col("src"), "left_outer")
+            .crossJoin(hint(hn))
+            .join(hint(ar), col("node") === col("dst"), "left_outer")
+            .crossJoin(hint(an))
+            .select(col("node"),
+              round(coalesce(col("hr"), lit(0.0)) / col("hn"), 6).as("hub"),
+              round(coalesce(col("ar"), lit(0.0)) / col("an"), 6).as("auth")))
+    } finally {
+      eSrc.unpersist()
+      eDst.unpersist()
+      nd.unpersist()
     }
-    // node restore, ONCE after the fixpoint (was twice per iteration):
-    // the exact r21 score expressions, absent raw sums coalesced to 0
-    val out = Dedup.materializeOnce(
-      if (iters == 0)
-        nd.select(col("node"), lit(1.0).as("hub"), lit(1.0).as("auth"))
-      else
-        nd.join(hint(hr), col("node") === col("src"), "left_outer")
-          .crossJoin(hint(hn))
-          .join(hint(ar), col("node") === col("dst"), "left_outer")
-          .crossJoin(hint(an))
-          .select(col("node"),
-            round(coalesce(col("hr"), lit(0.0)) / col("hn"), 6).as("hub"),
-            round(coalesce(col("ar"), lit(0.0)) / col("an"), 6).as("auth")))
-    eSrc.unpersist()
-    eDst.unpersist()
-    nd.unpersist()
-    out
   }
 
   /** Single-source shortest HOPS (BFS levels): [[shortestPaths]] over
@@ -264,23 +265,23 @@ object Graph {
     val e = edges.select(col("src"), col("dst"), col("w").cast("long").as("w"))
       .repartition(col("src")).sortWithinPartitions("src")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    var dist = nodes.select(col("node"),
-      when(col("node") === source, lit(0L)).otherwise(lit(null).cast("long"))
-        .as("dist"))
-    for (_ <- 1 to maxRounds) {
-      val relax = e.join(hint(dist.filter(col("dist").isNotNull)),
-          col("src") === col("node"))
-        .groupBy("dst").agg(min(col("dist") + col("w")).as("nd"))
-      dist = Dedup.materializeOnce(
-        dist.join(hint(relax), col("node") === col("dst"), "left_outer")
-          .select(col("node"),
-            when(col("dist").isNull, col("nd"))
-              .when(col("nd").isNull, col("dist"))
-              .otherwise(least(col("dist"), col("nd"))).as("dist")))
-    }
-    val out = Dedup.materializeOnce(dist.filter(col("dist").isNotNull))
-    e.unpersist()
-    out
+    try {
+      var dist = nodes.select(col("node"),
+        when(col("node") === source, lit(0L)).otherwise(lit(null).cast("long"))
+          .as("dist"))
+      for (_ <- 1 to maxRounds) {
+        val relax = e.join(hint(dist.filter(col("dist").isNotNull)),
+            col("src") === col("node"))
+          .groupBy("dst").agg(min(col("dist") + col("w")).as("nd"))
+        dist = Dedup.materializeOnce(
+          dist.join(hint(relax), col("node") === col("dst"), "left_outer")
+            .select(col("node"),
+              when(col("dist").isNull, col("nd"))
+                .when(col("nd").isNull, col("dist"))
+                .otherwise(least(col("dist"), col("nd"))).as("dist")))
+      }
+      Dedup.materializeOnce(dist.filter(col("dist").isNotNull))
+    } finally e.unpersist()
   }
 
   /** Synchronous weighted LABEL PROPAGATION (Raghavan et al. '07) —
@@ -315,30 +316,30 @@ object Graph {
     val e = edges.groupBy("src", "dst").agg(sum(col("w").cast("long")).as("w"))
       .repartition(col("src")).sortWithinPartitions("src")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    var labels = nodes.select(col("node"), col("node").as("label"))
-    for (_ <- 1 to iters) {
-      // ONE-PASS deterministic argmax (r22 second pass): min_by over the
-      // ordering struct (−vw, label) picks the row maximizing vw then
-      // minimizing label — exactly the old max-join-min chain — in a
-      // single stacked aggregate over the vote stream, with NO tie
-      // ambiguity because the ordering key embeds the label and votes
-      // are unique per (dst, label). This drops the per-round best/
-      // winner join AND the votes materialization (votes now has one
-      // consumer); the round's only cut is the labels update, halving
-      // the per-round action count. Still aggregation-only: a celebrity
-      // node's votes never serialize onto one task.
-      val votes = e.join(hint(labels), col("src") === col("node"))
-        .groupBy(col("dst"), col("label"))
-        .agg(sum(col("w")).as("vw"))
-      val winner = votes.groupBy("dst")
-        .agg(min_by(col("label"), struct(-col("vw"), col("label"))).as("nl"))
-      labels = Dedup.materializeOnce(
-        labels.join(hint(winner), col("node") === col("dst"), "left_outer")
-          .select(col("node"), coalesce(col("nl"), col("label")).as("label")))
-    }
-    val out = Dedup.materializeOnce(labels)
-    e.unpersist()
-    out
+    try {
+      var labels = nodes.select(col("node"), col("node").as("label"))
+      for (_ <- 1 to iters) {
+        // ONE-PASS deterministic argmax (r22 second pass): min_by over the
+        // ordering struct (−vw, label) picks the row maximizing vw then
+        // minimizing label — exactly the old max-join-min chain — in a
+        // single stacked aggregate over the vote stream, with NO tie
+        // ambiguity because the ordering key embeds the label and votes
+        // are unique per (dst, label). This drops the per-round best/
+        // winner join AND the votes materialization (votes now has one
+        // consumer); the round's only cut is the labels update, halving
+        // the per-round action count. Still aggregation-only: a celebrity
+        // node's votes never serialize onto one task.
+        val votes = e.join(hint(labels), col("src") === col("node"))
+          .groupBy(col("dst"), col("label"))
+          .agg(sum(col("w")).as("vw"))
+        val winner = votes.groupBy("dst")
+          .agg(min_by(col("label"), struct(-col("vw"), col("label"))).as("nl"))
+        labels = Dedup.materializeOnce(
+          labels.join(hint(winner), col("node") === col("dst"), "left_outer")
+            .select(col("node"), coalesce(col("nl"), col("label")).as("label")))
+      }
+      Dedup.materializeOnce(labels)
+    } finally e.unpersist()
   }
 
   /** The shared power-iteration core. `nodeBase`: (node, base, pr) —
@@ -346,9 +347,9 @@ object Graph {
     * (one row per node; referenced once per iteration like the ranks).
     */
   private def powerIterate(edges: DataFrame, nodeBase: DataFrame, n: Long,
-                           iters: Int, damping: Double, checkpointEvery: Int,
+                           iters: Int, damping: Double,
                            broadcastRanksMax: Long): DataFrame = {
-    require(iters >= 0 && checkpointEvery > 0)
+    require(iters >= 0)
     // gate decided ONCE from the driver-known node count — the hinted
     // relation is exactly node-sized by construction (one row per node)
     val broadcastRanks = n <= broadcastRanksMax
@@ -385,35 +386,35 @@ object Graph {
       .drop("node")
       .repartition(col(key)).sortWithinPartitions(key)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    var inflow: DataFrame = null
-    for (i <- 1 to iters) {
-      val contrib =
-        if (i == 1)
-          e.select(col("dst"),
-            (col("src_init") * col("w") / col("outw"))
-              .cast(DecimalType(27, 12)).as("c"))
-        else
-          e.join(hint(inflow.withColumnRenamed("dst", "idst")),
-              col("src") === col("idst"), "left_outer")
-            .select(col("dst"),
-              (round(col("src_base")
-                  + lit(damping) * coalesce(col("inflow"), lit(0.0)), 6)
-                * col("w") / col("outw")).cast(DecimalType(27, 12)).as("c"))
-      inflow = contrib.groupBy("dst")
-        .agg(sum(col("c")).cast("double").as("inflow"))
-      if (i % checkpointEvery == 0 && i < iters)
-        inflow = Dedup.materializeOnce(inflow)
-    }
-    val ranks =
-      if (iters == 0) nodeBase.select("node", "pr")
-      else nodeBase.join(hint(inflow), col("node") === col("dst"), "left_outer")
-        .select(col("node"),
-          round(col("base") + lit(damping) * coalesce(col("inflow"), lit(0.0)), 6)
-            .as("pr"))
-    // materialize the fixpoint (node-sized) so the edge cache can be
-    // dropped NOW instead of leaking until storage eviction
-    val out = Dedup.materializeOnce(ranks)
-    e.unpersist()
-    out
+    try {
+      var inflow: DataFrame = null
+      for (i <- 1 to iters) {
+        val contrib =
+          if (i == 1)
+            e.select(col("dst"),
+              (col("src_init") * col("w") / col("outw"))
+                .cast(DecimalType(27, 12)).as("c"))
+          else
+            e.join(hint(inflow.withColumnRenamed("dst", "idst")),
+                col("src") === col("idst"), "left_outer")
+              .select(col("dst"),
+                (round(col("src_base")
+                    + lit(damping) * coalesce(col("inflow"), lit(0.0)), 6)
+                  * col("w") / col("outw")).cast(DecimalType(27, 12)).as("c"))
+        inflow = contrib.groupBy("dst")
+          .agg(sum(col("c")).cast("double").as("inflow"))
+        if (i % CheckpointEvery == 0 && i < iters)
+          inflow = Dedup.materializeOnce(inflow)
+      }
+      val ranks =
+        if (iters == 0) nodeBase.select("node", "pr")
+        else nodeBase.join(hint(inflow), col("node") === col("dst"), "left_outer")
+          .select(col("node"),
+            round(col("base") + lit(damping) * coalesce(col("inflow"), lit(0.0)), 6)
+              .as("pr"))
+      // materialize the fixpoint (node-sized) so the edge cache can be
+      // dropped NOW instead of leaking until storage eviction
+      Dedup.materializeOnce(ranks)
+    } finally e.unpersist()
   }
 }

@@ -119,36 +119,24 @@ object AnalysisQueries {
     * store block; lazily on first use elsewhere.
     */
   private[graft] object EnrichedStores {
-    // path-keyed build-once via SessionStores.servedPath (the BpeStores
-    // shape) — a second SparkSession over the same scoped path serves
-    // the existing files instead of rebuilding
-    private def pathOf(dir: String, kind: String, tag: String): String =
-      graft.sources.SessionStores.scopedPath("graft_enriched",
-        s"${kind}_${tag}_" + graft.sources.SessionStores.tagOf(dir))
-
     def urlFrontier(s: SparkSession, dir: String, tag: String,
-                    d: => DataFrame): DataFrame = {
-      val p = pathOf(dir, "urls", tag)
-      graft.sources.SessionStores.servedPath(s, p) {
-        urlFrontierOf(d).write.mode("overwrite").parquet(p)
-      }
-    }
+                    d: => DataFrame): DataFrame =
+      SessionStores.parquet(s, "graft_enriched", s"urls_$tag", dir)(urlFrontierOf(d))
 
+    // Hive-partitioned by `snap`, so not a `SessionStores.parquet` store
     def snapshots(s: SparkSession, dir: String, tag: String,
                   d: => DataFrame): DataFrame = {
-      val p = pathOf(dir, "snaps", tag)
-      graft.sources.SessionStores.servedPath(s, p) {
+      val p = SessionStores.scopedPath("graft_enriched",
+        s"snaps_${tag}_" + SessionStores.tagOf(dir))
+      SessionStores.servedPath(s, p) {
         snapshotsOf(d).write.mode("overwrite").partitionBy("snap").parquet(p)
       }
     }
 
     def lineSegments(s: SparkSession, dir: String, tag: String,
-                     d: => DataFrame): DataFrame = {
-      val p = pathOf(dir, "linesegs", tag)
-      graft.sources.SessionStores.servedPath(s, p) {
-        DedupQueries.lineSegmentsOf(d).write.mode("overwrite").parquet(p)
-      }
-    }
+                     d: => DataFrame): DataFrame =
+      SessionStores.parquet(s, "graft_enriched", s"linesegs_$tag", dir)(
+        DedupQueries.lineSegmentsOf(d))
   }
 
   /** q_bad_records' corrupt-ingest fixture: the corpus as JSONL with

@@ -440,19 +440,13 @@ object SimilarityQueries {
     def table(s: SparkSession, dir: String): DataFrame =
       tableFor(s, dir, "batch", s.read.parquet(s"$dir/embeddings.parquet"))
 
-    // path-keyed build-once via SessionStores.servedPath (the BpeStores
-    // shape — no per-session rebuild over the same scoped path)
     def tableFor(s: SparkSession, dir: String, tag: String,
-                 emb: => DataFrame): DataFrame = {
-      val p = graft.sources.SessionStores.scopedPath("graft_whiten",
-        s"store_${tag}_" + graft.sources.SessionStores.tagOf(dir))
-      graft.sources.SessionStores.servedPath(s, p) {
+                 emb: => DataFrame): DataFrame =
+      graft.sources.SessionStores.parquet(s, "graft_whiten", s"store_$tag", dir) {
         val e = emb
         val model = graft.operators.Pca.fit(e, dims = 64, k = 4)
         graft.operators.Pca.whiten(e, model, dims = 64)
-          .write.mode("overwrite").parquet(p)
       }
-    }
   }
 
   /** q_whiten's timed body: the whitened Gram matrix E[z_a z_b] (upper

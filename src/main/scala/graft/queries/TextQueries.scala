@@ -219,13 +219,9 @@ object TextQueries {
       */
     def streamedDocGraphStore(s: SparkSession, dir: String): String =
       SessionStores.streamed(s, "graft_graphstream", "docgraph_store", dir) { (slice, path) =>
-        val contribs = batchPairs(s, dir).filter(slice(xxhash64(col("url_a"))))
-          .select(explode(array(
-            struct(col("url_a").as("src"), col("url_b").as("dst")),
-            struct(col("url_b").as("src"), col("url_a").as("dst")))).as("e"))
-          .select(col("e.src"), col("e.dst"), lit(1L).as("w"))
         graft.streaming.StreamingGraph.processBatch(
-          contribs, slice.id, path,
+          DocGraphStores.edges(batchPairs(s, dir).filter(slice(xxhash64(col("url_a"))))),
+          slice.id, path,
           keyType = org.apache.spark.sql.types.StringType): Unit
       }
 
@@ -324,14 +320,9 @@ object TextQueries {
     // (broadcastRanksMax = 0), so the oracle checks the stats/AQE
     // src-keyed SHUFFLE iteration path — the plan that actually runs at
     // web-scale node counts — not the broadcast fast path q_pagerank
-    // covers. Both directions come from one posexplode-free explode of
-    // the pair relation (a union would plan the fuzzy join twice).
+    // covers.
     "q_pagerank_docs" -> ((s, dir) => {
-      val pairs = FuzzyStores.batchPairs(s, dir)
-      val edges = pairs.select(explode(array(
-        struct(col("url_a").as("src"), col("url_b").as("dst")),
-        struct(col("url_b").as("src"), col("url_a").as("dst")))).as("e"))
-        .select(col("e.src"), col("e.dst"), lit(1L).as("w"))
+      val edges = DocGraphStores.edges(FuzzyStores.batchPairs(s, dir))
       val nodes = DocGraphStores.nodes(s, dir)
       graft.operators.Graph.pageRank(edges, nodes, iters = 8,
         broadcastRanksMax = 0)
@@ -347,11 +338,7 @@ object TextQueries {
     // components' transitive closure, LPA communities respect local
     // edge density — a long chain splits where closure would not.
     "q_communities" -> ((s, dir) => {
-      val pairs = FuzzyStores.batchPairs(s, dir)
-      val edges = pairs.select(explode(array(
-        struct(col("url_a").as("src"), col("url_b").as("dst")),
-        struct(col("url_b").as("src"), col("url_a").as("dst")))).as("e"))
-        .select(col("e.src"), col("e.dst"), lit(1L).as("w"))
+      val edges = DocGraphStores.edges(FuzzyStores.batchPairs(s, dir))
       val nodes = DocGraphStores.nodes(s, dir)
       graft.operators.Graph.labelPropagation(edges, nodes, iters = 4,
           broadcastRanksMax = 0)
@@ -368,11 +355,7 @@ object TextQueries {
     // fixpoint); the timed work is the edge-sized label joins + three
     // aggregates, every join key-equi and AQE-splittable.
     "q_modularity" -> ((s, dir) => {
-      val pairs = FuzzyStores.batchPairs(s, dir)
-      val edges = pairs.select(explode(array(
-        struct(col("url_a").as("src"), col("url_b").as("dst")),
-        struct(col("url_b").as("src"), col("url_a").as("dst")))).as("e"))
-        .select(col("e.src"), col("e.dst"), lit(1L).as("w"))
+      val edges = DocGraphStores.edges(FuzzyStores.batchPairs(s, dir))
       val lab = CommunityStores.labels(s, dir)
       val deg = edges.groupBy("src").agg(sum(col("w")).cast("long").as("k"))
       val tot2 = edges.agg(sum(col("w")).cast("long").as("m2"))
@@ -403,11 +386,7 @@ object TextQueries {
     // the node-sized score relation onto the edge relation without a
     // hint, the plan that runs at web-scale node counts.
     "q_hits_docs" -> ((s, dir) => {
-      val pairs = FuzzyStores.batchPairs(s, dir)
-      val edges = pairs.select(explode(array(
-        struct(col("url_a").as("src"), col("url_b").as("dst")),
-        struct(col("url_b").as("src"), col("url_a").as("dst")))).as("e"))
-        .select(col("e.src"), col("e.dst"))
+      val edges = DocGraphStores.edges(FuzzyStores.batchPairs(s, dir))
       val nodes = DocGraphStores.nodes(s, dir)
       graft.operators.Graph.hits(edges, nodes, iters = 4, broadcastRanksMax = 0)
         .select(col("node").as("url"), col("hub"), col("auth"))
@@ -429,10 +408,7 @@ object TextQueries {
       if (srcRow.isNullAt(0))
         nodes.select(col("node").as("url"), lit(0L).as("hops")).limit(0)
       else {
-        val edges = pairs.select(explode(array(
-          struct(col("url_a").as("src"), col("url_b").as("dst")),
-          struct(col("url_b").as("src"), col("url_a").as("dst")))).as("e"))
-          .select(col("e.src"), col("e.dst"))
+        val edges = DocGraphStores.edges(pairs)
         graft.operators.Graph.shortestHopsAt(edges, nodes, lit(srcRow.getString(0)),
             maxHops = 6, broadcastRanksMax = 0)
           .select(col("node").as("url"), col("hops"))
@@ -645,6 +621,16 @@ object TextQueries {
       SessionStores.parquet(s, "graft_docgraph", "nodes", dir) {
         docs(s, dir).select(col("url").as("node")).distinct()
       }
+
+    /** The doc graph's symmetric edges (src, dst): every ED-1 fuzzy pair
+      * in both directions, from one explode of `pairs` (a union would
+      * plan the pair relation twice), each with unit weight `w`.
+      */
+    def edges(pairs: DataFrame): DataFrame =
+      pairs.select(explode(array(
+          struct(col("url_a").as("src"), col("url_b").as("dst")),
+          struct(col("url_b").as("src"), col("url_a").as("dst")))).as("e"))
+        .select(col("e.src"), col("e.dst"), lit(1L).as("w"))
   }
 
   /** Session-scoped community-label store: the shuffle-path LPA over
@@ -655,11 +641,7 @@ object TextQueries {
   private[graft] object CommunityStores {
     def labels(s: SparkSession, dir: String): DataFrame =
       SessionStores.parquet(s, "graft_communities", "labels", dir) {
-        val pairs = FuzzyStores.batchPairs(s, dir)
-        val edges = pairs.select(explode(array(
-          struct(col("url_a").as("src"), col("url_b").as("dst")),
-          struct(col("url_b").as("src"), col("url_a").as("dst")))).as("e"))
-          .select(col("e.src"), col("e.dst"), lit(1L).as("w"))
+        val edges = DocGraphStores.edges(FuzzyStores.batchPairs(s, dir))
         val nodes = DocGraphStores.nodes(s, dir)
         graft.operators.Graph.labelPropagation(edges, nodes, iters = 4,
             broadcastRanksMax = 0)

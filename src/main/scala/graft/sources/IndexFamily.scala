@@ -24,7 +24,7 @@ import org.apache.spark.sql.SparkSession
   *
   * Every public accessor of the six first calls `ensure`: a memo per
   * (session, dir), so a hit is one map read. A part is the store's own
-  * served call (`servedTable`/`servedPath`), which builds at most once
+  * `SessionStores` call (`bucketed` or `parquet`), which builds at most once
   * per process; a new session runs the parts again and each finds its
   * store built.
   */

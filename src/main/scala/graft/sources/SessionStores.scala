@@ -10,9 +10,9 @@ import org.apache.spark.sql.functions.{col, lit, pmod}
   * catalog tables, and end-of-process cleanup.
   *
   * LIFETIMES — the one rule for choosing a backing:
-  *   - file-backed stores (`servedPath` / `servedTable`) live for the
-  *     PROCESS: built once per target path or table, served to every
-  *     session, deleted by the shutdown hook below; a `servedPath`
+  *   - file-backed stores (`servedPath` paths, `bucketed` tables) live
+  *     for the PROCESS: built once per target path or table, served to
+  *     every session, deleted by the shutdown hook below; a `servedPath`
   *     relation is resolved once per SESSION (a `memo` entry);
   *   - `memo` entries live for the SESSION: built once per
   *     (session, key), evicted by the first miss after that session's
@@ -34,6 +34,9 @@ import org.apache.spark.sql.functions.{col, lit, pmod}
   *     neither a path nor a key;
   *   - `parquet` writes a DataFrame to that path once per process and
   *     serves it (`servedPath`);
+  *   - `bucketed` writes a DataFrame to that path once per process as
+  *     the catalog table `tableName(family, name, dir)`, bucketed and
+  *     sorted by a key (`Sinks.writeBucketed`), and serves the table;
   *   - `streamed` ingests a streamed twin's store as [[SliceCount]]
   *     micro-batches, batch ids 0, 1, 2 in order, slice `b` holding the
   *     rows whose key is `b` modulo the slice count (every sliced key is
@@ -139,25 +142,6 @@ private[graft] object SessionStores {
     } catch { case _: java.io.IOException => }
   }
 
-  /** Serve catalog table `tbl`, running `build` (which must create the
-    * table over `path`) at most once per process — with the staleness
-    * guard above.
-    */
-  def servedTable(spark: SparkSession, tbl: String, path: String)(build: => Unit): DataFrame = {
-    lockFor(tbl).synchronized {
-      if (!verified.contains(tbl)) {
-        val stale = spark.catalog.tableExists(tbl) &&
-          !spark.sql(s"DESCRIBE TABLE EXTENDED $tbl")
-            .filter(col("col_name") === "Location")
-            .collect().headOption.exists(_.getString(1).contains(s"/$processScope/"))
-        if (stale) spark.sql(s"DROP TABLE IF EXISTS $tbl")
-        if (stale || !spark.catalog.tableExists(tbl)) build
-        verified.add(tbl): Unit
-      }
-    }
-    spark.table(tbl)
-  }
-
   /** Serve a plain parquet path store, running `build` (which must write
     * `path`) at most once per process. No catalog involved, so no
     * staleness guard is needed: the path embeds the process scope. The
@@ -250,6 +234,34 @@ private[graft] object SessionStores {
       frame: => DataFrame): DataFrame = {
     val path = storePath(family, name, dir)
     servedPath(s, path)(frame.write.mode(SaveMode.Overwrite).parquet(path))
+  }
+
+  /** The catalog table of the bucketed store (family, name, dir). */
+  private[graft] def tableName(family: String, name: String, dir: String): String =
+    s"${family}_${name}_${tagOf(dir)}"
+
+  /** The bucketed store (family, name, dir): `frame` written once per
+    * process as the catalog table [[tableName]] over the store's path,
+    * `Sinks.Buckets` buckets by `key`, each sorted by `key`
+    * (`Sinks.writeBucketed`), behind the staleness guard.
+    */
+  def bucketed(s: SparkSession, family: String, name: String, dir: String, key: String)(
+      frame: => DataFrame): DataFrame = {
+    val tbl = tableName(family, name, dir)
+    lockFor(tbl).synchronized {
+      if (!verified.contains(tbl)) {
+        val stale = s.catalog.tableExists(tbl) &&
+          !s.sql(s"DESCRIBE TABLE EXTENDED $tbl")
+            .filter(col("col_name") === "Location")
+            .collect().headOption.exists(_.getString(1).contains(s"/$processScope/"))
+        if (stale) s.sql(s"DROP TABLE IF EXISTS $tbl")
+        if (stale || !s.catalog.tableExists(tbl))
+          Sinks.writeBucketed(frame, tbl, storePath(family, name, dir), key, Sinks.Buckets,
+            SaveMode.Overwrite)
+        verified.add(tbl): Unit
+      }
+    }
+    s.table(tbl)
   }
 
   /** The path of the streamed store (family, name, dir), built once per

@@ -6,12 +6,13 @@ import org.apache.spark.sql.functions._
 
 /** Index sinks (reference K2, `reducer/src/processor.py:90-113`).
   *
-  * The engine-native durable artifact is a TERM-BUCKETED parquet table:
-  * `bucketBy(term)` + per-bucket `sortBy(term)` means a point lookup
-  * (`term = 'x'`) or an `isin` filter prunes to the matching buckets at
-  * planning time — no shuffle, no full scan. That is the 100 TB answer to
-  * the reference's "rebuild the index to answer a query" shape: build
-  * once, then every boolean/point query reads a few bucket files.
+  * The engine-native durable artifact is a TERM-BUCKETED parquet table
+  * (`writeBucketed`): bucketed by term and sorted by term within each
+  * bucket, so a point lookup (`term = 'x'`) or an `isin` filter prunes
+  * to the matching buckets at planning time — no shuffle, no full scan.
+  * That is the 100 TB answer to the reference's "rebuild the index to
+  * answer a query" shape: build once, then every boolean/point query
+  * reads a few bucket files.
   *
   * A reference-format JSON envelope writer is provided for compatibility
   * (`{metadata:{...}, index:{term:[{doc_id,url},...]}}`). It materializes
@@ -21,17 +22,52 @@ import org.apache.spark.sql.functions._
   */
 object Sinks {
 
+  /** The bucket count of every bucketed store and index table. */
+  val Buckets = 32
+
   /** Write a posting relation (`term, doc_id, url`) or a nested index
     * (`term, postings`) as a term-bucketed, per-bucket-sorted parquet
     * table registered under `tableName` with files at `path`.
     */
-  def writeIndex(df: DataFrame, tableName: String, path: String, buckets: Int = 32): Unit =
+  def writeIndex(df: DataFrame, tableName: String, path: String, buckets: Int = Buckets): Unit =
+    writeBucketed(df, tableName, path, "term", buckets, SaveMode.Overwrite)
+
+  /** THE bucketed layout: `df` as the parquet table `tableName` over
+    * `path`, `buckets` buckets by `key`, each bucket sorted by `key`.
+    * Two tables bucketed alike on their join keys join without an
+    * exchange. `registerIndex` is the same layout as DDL.
+    */
+  private[graft] def writeBucketed(df: DataFrame, tableName: String, path: String, key: String,
+                                   buckets: Int, mode: SaveMode): Unit =
     df.write
-      .mode(SaveMode.Overwrite)
+      .mode(mode)
       .option("path", path)
-      .bucketBy(buckets, "term")
-      .sortBy("term")
+      .bucketBy(buckets, key)
+      .sortBy(key)
       .saveAsTable(tableName)
+
+  /** (Re-)register `tableName` with columns `schemaDdl` as the external
+    * term index table `writeBucketed` writes over `path` (`key` "term").
+    * The directory is created first: resolving a table over a missing
+    * path makes Spark log a `FileNotFoundException` at WARN although
+    * nothing failed.
+    */
+  private[graft] def registerIndex(spark: SparkSession, tableName: String, path: String,
+                                   buckets: Int, schemaDdl: String): Unit = {
+    val dir = new org.apache.hadoop.fs.Path(path)
+    dir.getFileSystem(spark.sparkContext.hadoopConfiguration).mkdirs(dir)
+    spark.sql(s"DROP TABLE IF EXISTS ${quoteIdent(tableName)}")
+    spark.sql(
+      s"""CREATE TABLE ${quoteIdent(tableName)} ($schemaDdl) USING PARQUET
+         |CLUSTERED BY (`term`) SORTED BY (`term`) INTO $buckets BUCKETS
+         |LOCATION '${path.replace("'", "''")}'""".stripMargin): Unit
+  }
+
+  /** Backtick-quote a (possibly db-qualified) identifier for
+    * interpolation into generated DDL.
+    */
+  private[graft] def quoteIdent(name: String): String =
+    name.split('.').map(p => "`" + p.replace("`", "``") + "`").mkString(".")
 
   /** Reference-compatible final JSON envelope
     * (`reducer/src/processor.py:98-110`): `{"metadata": {"creation_time",
@@ -258,12 +294,8 @@ object Sinks {
   */
 object IndexStore {
 
-  private def tableNameFor(dir: String): String =
-    "graft_postings_" + dir.replaceAll("[^a-zA-Z0-9]", "_") + "_" + SessionStores.tagOf(dir)
-
   /** The posting relation for `dir`, served from the persisted bucketed
-    * table (its family built on first use; process scoping, staleness
-    * guard and end-of-process cleanup are `SessionStores`).
+    * table (its family built on first use).
     */
   def postings(spark: SparkSession, dir: String): DataFrame = {
     IndexFamily.ensure(spark, dir)
@@ -279,26 +311,15 @@ object IndexStore {
     servedPositional(spark, dir)
   }
 
-  private[sources] def servedPostings(spark: SparkSession, dir: String): DataFrame = {
-    val tbl = tableNameFor(dir)
-    val path = SessionStores.scopedPath("graft_index", tbl)
-    SessionStores.servedTable(spark, tbl, path) {
-      Sinks.writeIndex(
-        graft.operators.InvertedIndex.postings(Corpus.documents(spark, dir)),
-        tbl, path)
+  private[sources] def servedPostings(spark: SparkSession, dir: String): DataFrame =
+    SessionStores.bucketed(spark, "graft_index", "postings", dir, "term") {
+      graft.operators.InvertedIndex.postings(Corpus.documents(spark, dir))
     }
-  }
 
-  private[sources] def servedPositional(spark: SparkSession, dir: String): DataFrame = {
-    val tbl = "graft_positional_" + dir.replaceAll("[^a-zA-Z0-9]", "_") +
-      "_" + SessionStores.tagOf(dir)
-    val path = SessionStores.scopedPath("graft_index", tbl)
-    SessionStores.servedTable(spark, tbl, path) {
-      Sinks.writeIndex(
-        graft.operators.InvertedIndex.positionalPostings(Corpus.documents(spark, dir)),
-        tbl, path)
+  private[sources] def servedPositional(spark: SparkSession, dir: String): DataFrame =
+    SessionStores.bucketed(spark, "graft_index", "positional", dir, "term") {
+      graft.operators.InvertedIndex.positionalPostings(Corpus.documents(spark, dir))
     }
-  }
 }
 
 /** Session-scoped CO-LOCATED bucketed copies of lineitem and orders —
@@ -307,48 +328,16 @@ object IndexStore {
   * bucket i of one table joins bucket i of the other, a property that
   * survives a 1000-executor 100 TB layout where a shuffle join would
   * move both tables. The large×large complement of broadcasting small
-  * dims; served build-once-query-many like `IndexStore` (same process
-  * scoping + metastore staleness guard).
+  * dims.
   */
 object ColocatedStore {
-
-  /** The bucket count is part of the table name: a second call with a
-    * different `buckets` in the same process must build its own store,
-    * not silently serve the first call's shape from the verified cache.
-    */
-  private def tableNameFor(base: String, dir: String, buckets: Int): String =
-    s"graft_${base}_bkt${buckets}_" + dir.replaceAll("[^a-zA-Z0-9]", "_") +
-      "_" + SessionStores.tagOf(dir)
-
-  private def served(spark: SparkSession, dir: String, base: String,
-                     bucketCol: String, buckets: Int): DataFrame = {
-    val tbl = tableNameFor(base, dir, buckets)
-    val path = SessionStores.scopedPath("graft_coloc", tbl)
-    SessionStores.servedTable(spark, tbl, path) {
-      // drop the pre-bucket-count-rename table name if a persistent
-      // metastore still carries it: the staleness guard only ever
-      // consults the NEW name, so without this the orphaned entry would
-      // sit registered over a scope directory the cleanup hook has
-      // deleted. Inside the build block = at most once per process per
-      // target, under the per-target lock — NEVER in the per-query
-      // serving path (a metastore DDL round-trip per timed execution).
-      val legacy = s"graft_${base}_bkt_" + dir.replaceAll("[^a-zA-Z0-9]", "_") +
-        "_" + SessionStores.tagOf(dir)
-      spark.sql(s"DROP TABLE IF EXISTS `$legacy`")
-      Tables.tbl(spark, dir, base).write
-        .mode(SaveMode.Overwrite)
-        .option("path", path)
-        .bucketBy(buckets, bucketCol)
-        .sortBy(bucketCol)
-        .saveAsTable(tbl)
-    }
-  }
 
   /** (lineitem bucketed on l_orderkey, orders bucketed on o_orderkey) —
     * equal bucket counts, ready for the exchange-free join.
     */
-  def orderJoinTables(spark: SparkSession, dir: String,
-                      buckets: Int = 32): (DataFrame, DataFrame) =
-    (served(spark, dir, "lineitem", "l_orderkey", buckets),
-      served(spark, dir, "orders", "o_orderkey", buckets))
+  def orderJoinTables(spark: SparkSession, dir: String): (DataFrame, DataFrame) = {
+    def served(base: String, key: String): DataFrame =
+      SessionStores.bucketed(spark, "graft_coloc", base, dir, key)(Tables.tbl(spark, dir, base))
+    (served("lineitem", "l_orderkey"), served("orders", "o_orderkey"))
+  }
 }

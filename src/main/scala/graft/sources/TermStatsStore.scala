@@ -42,9 +42,6 @@ import graft.operators.TermScoring
   */
 object TermStatsStore {
 
-  private def tfTableName(dir: String): String =
-    "graft_tf_" + dir.replaceAll("[^a-zA-Z0-9]", "_") + "_" + SessionStores.tagOf(dir)
-
   /** (doc_id, term, tf) over the full token stream: the rows `tf` stores
     * and `stats` aggregates.
     */
@@ -61,8 +58,7 @@ object TermStatsStore {
       size(Text.tokenize(col("text"))).as("dl_all"))
 
   /** The persisted full-stream term-frequency relation for `dir`,
-    * term-bucketed (its family built on first use; process scoping,
-    * staleness guard and end-of-process cleanup are `SessionStores`).
+    * term-bucketed (its family built on first use).
     */
   def tf(spark: SparkSession, dir: String): DataFrame = {
     IndexFamily.ensure(spark, dir)
@@ -91,13 +87,10 @@ object TermStatsStore {
     servedScalars(spark, dir)
   }
 
-  private[sources] def servedTf(spark: SparkSession, dir: String): DataFrame = {
-    val tbl = tfTableName(dir)
-    val path = SessionStores.scopedPath("graft_termstats", tbl)
-    SessionStores.servedTable(spark, tbl, path) {
-      Sinks.writeIndex(tfRows(Corpus.documents(spark, dir)), tbl, path)
+  private[sources] def servedTf(spark: SparkSession, dir: String): DataFrame =
+    SessionStores.bucketed(spark, "graft_termstats", "tf", dir, "term") {
+      tfRows(Corpus.documents(spark, dir))
     }
-  }
 
   private[sources] def servedStats(spark: SparkSession, dir: String): DataFrame =
     SessionStores.parquet(spark, "graft_termstats", "stats", dir) {

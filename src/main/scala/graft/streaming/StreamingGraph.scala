@@ -218,11 +218,9 @@ object StreamingGraph {
               keyType: DataType = LongType)
              (compute: DataFrame => DataFrame): DataFrame = {
     val ver = storeVersion(spark, storePath, keyType)
-    val root = graft.sources.SessionStores.scopedPath("graft_graphstream",
-      s"${name}_v${ver._1}_${ver._2}_" + graft.sources.SessionStores.tagOf(storePath))
-    graft.sources.SessionStores.servedPath(spark, s"$root/out") {
+    graft.sources.SessionStores.parquet(spark, "graft_graphstream",
+        s"${name}_v${ver._1}_${ver._2}", storePath) {
       compute(edges(spark, storePath, keyType))
-        .write.mode(SaveMode.Overwrite).parquet(s"$root/out")
     }
   }
 

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import graft.functions.Text
+import graft.sources.Sinks
 
 /** Streaming index build (SURVEY §2.2): the SAME tokenize → distinct →
   * explode pipeline as the batch `InvertedIndex.postings`, declared over
@@ -63,7 +64,7 @@ object StreamingIndex {
     * `compact` restores uniqueness.
     */
   def sinkToIndex(postings: DataFrame, tableName: String, path: String,
-                  checkpointDir: String, buckets: Int = 32): StreamingQuery =
+                  checkpointDir: String, buckets: Int = Sinks.Buckets): StreamingQuery =
     StoreMaintenance.sink(postings, path, checkpointDir) { (batch, batchId, scope) =>
       appendBatch(batch, batchId, tableName, path, buckets, scope)
     }
@@ -88,15 +89,12 @@ object StreamingIndex {
       // Registering first makes the append always take the
       // insert-into-existing-table path, which never clears.
       if (!spark.catalog.tableExists(tableName))
-        registerBucketedTable(spark, tableName, path, buckets, batch.schema.toDDL)
+        Sinks.registerIndex(spark, tableName, path, buckets, batch.schema.toDDL)
       // each bucket's rows into one write task (Spark's bucket id is
       // pmod(hash(term), buckets)), so the append writes one file per bucket
       val tasks = math.min(spark.conf.get("spark.sql.shuffle.partitions").toInt, buckets)
-      batch.repartition(tasks, pmod(hash(col("term")), lit(buckets)))
-        .write.mode(SaveMode.Append)
-        .option("path", path)
-        .bucketBy(buckets, "term").sortBy("term")
-        .saveAsTable(tableName)
+      Sinks.writeBucketed(batch.repartition(tasks, pmod(hash(col("term")), lit(buckets))),
+        tableName, path, "term", buckets, SaveMode.Append)
     }
   }
 
@@ -139,7 +137,7 @@ object StreamingIndex {
     * of accumulating marker files forever.
     */
   def compact(spark: org.apache.spark.sql.SparkSession, tableName: String,
-              path: String, buckets: Int = 32): Unit = {
+              path: String, buckets: Int = Sinks.Buckets): Unit = {
     StoreMaintenance.assertIngestStopped(spark.sparkContext.hadoopConfiguration, path)
     val tmpTable = tableName + "__compacting"
     // `sinkToIndex` appends through the stream's own session, so a session
@@ -148,8 +146,8 @@ object StreamingIndex {
     spark.catalog.refreshTable(tableName)
     val compacted = spark.table(tableName).dropDuplicates("term", "doc_id")
     val schemaDdl = compacted.schema.toDDL
-    graft.sources.Sinks.writeIndex(compacted, tmpTable, path + "__compacting", buckets)
-    spark.sql(s"DROP TABLE IF EXISTS ${quoteIdent(tmpTable)}") // files stay (external path)
+    Sinks.writeIndex(compacted, tmpTable, path + "__compacting", buckets)
+    spark.sql(s"DROP TABLE IF EXISTS ${Sinks.quoteIdent(tmpTable)}") // files stay (external path)
     // Renames FIRST, catalog swap LAST: a crash mid-rename leaves the old
     // catalog entry pointing at whichever complete directory survives
     // (`path` or `__pre_compact`), and a crash before the swap leaves the
@@ -164,7 +162,7 @@ object StreamingIndex {
     // the narrowest remaining window, and runs only after the data swap
     // is durable — recovery from a crash here is `recoverCompact` (which
     // re-runs this DDL).
-    registerBucketedTable(spark, tableName, path, buckets, schemaDdl)
+    Sinks.registerIndex(spark, tableName, path, buckets, schemaDdl)
   }
 
   /** Recover from a compact() interrupted at ANY point — the executable
@@ -188,7 +186,7 @@ object StreamingIndex {
     * — "run unconditionally" must hold for a restart script's first run.
     */
   def recoverCompact(spark: org.apache.spark.sql.SparkSession, tableName: String,
-                     path: String, buckets: Int = 32): Unit = {
+                     path: String, buckets: Int = Sinks.Buckets): Unit = {
     // the path-level rename-swap recovery is the shared store machinery
     // (install __compacting, else restore __pre_compact, clear side
     // dirs); only the catalog re-registration is index-specific
@@ -197,25 +195,6 @@ object StreamingIndex {
     if (!dst.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(dst))
       return // fresh deployment: nothing to recover, nothing to register
     val schemaDdl = spark.read.parquet(path).schema.toDDL
-    registerBucketedTable(spark, tableName, path, buckets, schemaDdl)
+    Sinks.registerIndex(spark, tableName, path, buckets, schemaDdl)
   }
-
-  /** (Re-)register `tableName` as an external bucketed parquet table over
-    * `path` — the shared final step of compact() and recoverCompact().
-    */
-  private def registerBucketedTable(spark: org.apache.spark.sql.SparkSession,
-                                    tableName: String, path: String, buckets: Int,
-                                    schemaDdl: String): Unit = {
-    spark.sql(s"DROP TABLE IF EXISTS ${quoteIdent(tableName)}")
-    spark.sql(
-      s"""CREATE TABLE ${quoteIdent(tableName)} ($schemaDdl) USING PARQUET
-         |CLUSTERED BY (term) SORTED BY (term) INTO $buckets BUCKETS
-         |LOCATION '${path.replace("'", "''")}'""".stripMargin): Unit
-  }
-
-  /** Backtick-quote a (possibly db-qualified) table identifier for
-    * interpolation into generated DDL.
-    */
-  private def quoteIdent(name: String): String =
-    name.split('.').map(p => "`" + p.replace("`", "``") + "`").mkString(".")
 }

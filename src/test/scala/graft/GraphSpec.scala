@@ -112,6 +112,27 @@ class GraphSpec extends AnyFunSuite {
     assert(sec < 120.0, s"30-iteration pagerank took $sec s")
   }
 
+  test("shortestPaths releases its edge cache when a round fails") {
+    // under ANSI arithmetic the second round's distance overflows a long,
+    // after the first round has built the persisted edge layout
+    val s = spark.newSession()
+    s.conf.set("spark.sql.ansi.enabled", "true")
+    import org.apache.spark.sql.functions.lit
+    val edges = s.createDataFrame(Seq((0L, 1L, Long.MaxValue), (1L, 2L, 1L)))
+      .toDF("src", "dst", "w")
+    val nodes = s.range(0, 3).toDF("node")
+    // the edge layout's `persist` is a cache entry of the shared state
+    // until it is unpersisted; no GC removes it (`numCachedEntries` is
+    // `private[sql]` in Scala, public in bytecode)
+    val cache = s.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager
+    def cached = cache.getClass.getMethod("numCachedEntries").invoke(cache)
+    val before = cached
+    val e = intercept[Exception](Graph.shortestPaths(edges, nodes, lit(0L), maxRounds = 3))
+    assert(e.getMessage.contains("ARITHMETIC_OVERFLOW"), e.getMessage)
+    assert(cached === before)
+  }
+
   test("personalized pagerank: all-nodes seed set degenerates to pagerank") {
     val edges = (0L until 40L).map(i => (i % 8, (i * 3) % 8, 1L + i % 5))
       .toDF("src", "dst", "w")

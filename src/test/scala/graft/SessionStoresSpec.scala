@@ -234,4 +234,56 @@ class SessionStoresSpec extends AnyFunSuite {
       }
     }
   }
+
+  private def tableMeta(tbl: String) =
+    spark.sessionState.catalog.getTableMetadata(
+      org.apache.spark.sql.catalyst.TableIdentifier(tbl))
+
+  test("bucketed builds once per process, newSession() serves it, 32 buckets by key; (family, name) names the store") {
+    val name = "bucketed_" + System.nanoTime()
+    val builds = new java.util.concurrent.atomic.AtomicInteger(0)
+    def store(s: org.apache.spark.sql.SparkSession, family: String, n: String, v: Long) =
+      S.bucketed(s, family, n, "/corpus/a", "k") {
+        builds.incrementAndGet(); Seq((v, "x")).toDF("k", "v")
+      }
+    val first = store(spark, "graft_test_bkt", name, 1L)
+    assert(first.select("k").as[Long].collect().toSeq === Seq(1L))
+    assert(jobsStartedBy { store(spark, "graft_test_bkt", name, 9L) } === 0,
+      "a repeat call re-wrote the store")
+    val other = spark.newSession()
+    val theirs = store(other, "graft_test_bkt", name, 9L)
+    assert(theirs.sparkSession eq other)
+    assert(theirs.select("k").as[Long].collect().toSeq === Seq(1L))
+    assert(builds.get() === 1, "written once per process")
+    val tbl = S.tableName("graft_test_bkt", name, "/corpus/a")
+    assert(tableMeta(tbl).bucketSpec ===
+      Some(org.apache.spark.sql.catalyst.catalog.BucketSpec(32, Seq("k"), Seq("k"))))
+    // another name or family is another table over another path
+    val byName = store(spark, "graft_test_bkt", name + "_b", 2L)
+    val byFamily = store(spark, "graft_test_bkt_b", name, 3L)
+    assert(byName.select("k").as[Long].head() === 2L && byFamily.select("k").as[Long].head() === 3L)
+    assert(builds.get() === 3)
+    val tables = Seq(("graft_test_bkt", name), ("graft_test_bkt", name + "_b"),
+      ("graft_test_bkt_b", name)).map { case (f, n) => S.tableName(f, n, "/corpus/a") }
+    assert(tables.distinct.size === 3, tables)
+    val locations = tables.map(t => tableMeta(t).location.getPath)
+    assert(locations.distinct.size === 3, locations)
+    val tmp = sys.props.getOrElse("java.io.tmpdir", "/tmp")
+    assert(locations.head.startsWith(s"$tmp/graft_test_bkt/${S.processScope}/"), locations)
+  }
+
+  test("bucketed drops and rebuilds a table whose files lie outside this process's scope") {
+    // a persistent metastore can hold the table of a previous process,
+    // over files in that process's (deleted) scope directory
+    val (family, name, dir) = ("graft_test_bkt", "stale_" + System.nanoTime(), "/corpus/a")
+    val tbl = S.tableName(family, name, dir)
+    val foreign = java.nio.file.Files.createTempDirectory("graft_foreign_scope").resolve("t").toString
+    Seq((7L, "old")).toDF("k", "v").write.option("path", foreign).saveAsTable(tbl)
+    val served = S.bucketed(spark, family, name, dir, "k")(Seq((1L, "a"), (2L, "b")).toDF("k", "v"))
+    val location = tableMeta(tbl).location.getPath
+    assert(location.contains(s"/${S.processScope}/") && !location.startsWith(foreign), location)
+    assert(served.as[(Long, String)].collect().sorted.toSeq === Seq((1L, "a"), (2L, "b")))
+    assert(jobsStartedBy { S.bucketed(spark, family, name, dir, "k")(fail("built twice")) } === 0,
+      "a verified table must be served without a check or a rebuild")
+  }
 }
