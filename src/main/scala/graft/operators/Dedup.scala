@@ -706,55 +706,55 @@ object Dedup {
     val sym = edges.select(col("doc_a").as("src"), col("doc_b").as("dst"))
       .union(edges.select(col("doc_b").as("src"), col("doc_a").as("dst")))
       .persist()
-    val edgeCount = sym.count() // materializes the cache; also the empty gate
-    if (edgeCount == 0) {
-      // no pairs → no clusters; an agg over the empty frame would yield a
-      // single null row (sum of nothing) and NPE downstream
-      sym.unpersist()
-      import spark.implicits._
-      return spark.emptyDataset[(Long, Long)].toDF("doc_id", "cluster_id")
-    }
-    val durable = spark.sparkContext.getCheckpointDir.isDefined
-    if (durable) recordCheckpointDir(spark.sparkContext)
-    def truncate(df: DataFrame): DataFrame =
-      if (durable) df.checkpoint(false) else df.localCheckpoint(false)
-    def checksum(df: DataFrame): java.math.BigDecimal =
-      df.agg(sum(col("label").cast(org.apache.spark.sql.types.DecimalType(38, 0))))
-        .head().getDecimal(0)
-    // size the label relation's partitioning to the edge count — ~500k
-    // labels per partition — instead of the session shuffle width
-    val parts = math.max(1, math.min(
-      spark.sparkContext.defaultParallelism, (edgeCount / 500000L).toInt + 1))
-    // same truncation discipline as the loop: on the durable branch the
-    // INITIAL label relation must also be a reliable checkpoint (an
-    // executor loss would silently lose localCheckpoint blocks mid-job);
-    // the following checksum action materializes the lazy mark
-    var labels = truncate(sym.select(col("src").as("node")).distinct()
-      .repartition(parts, col("node"))
-      .withColumn("label", col("node")))
-    var prev = checksum(labels)
-    var converged = false
-    while (!converged) {
-      val prop = labels.join(sym, labels("node") === sym("src"))
-        .select(col("dst").as("node"), col("label"))
-      val jump = labels.as("a")
-        .join(labels.as("b"), col("a.label") === col("b.node"))
-        .select(col("a.node").as("node"), col("b.label").as("label"))
-      // repartition BEFORE the groupBy: the aggregate's distribution
-      // requirement is satisfied by the explicit hash partitioning, so
-      // the iteration has exactly one exchange, at the label relation's
-      // own width
-      val next = truncate(
-        labels.union(prop).union(jump)
-          .repartition(parts, col("node"))
-          .groupBy("node").agg(min("label").as("label")))
-      val cur = checksum(next) // one action: materializes checkpoint + sum
-      labels = next
-      converged = cur.compareTo(prev) == 0
-      prev = cur
-    }
-    sym.unpersist()
-    labels.select(col("node").as("doc_id"), col("label").as("cluster_id"))
+    try {
+      val edgeCount = sym.count() // materializes the cache; also the empty gate
+      if (edgeCount == 0) {
+        // no pairs → no clusters; an agg over the empty frame would yield a
+        // single null row (sum of nothing) and NPE downstream
+        import spark.implicits._
+        return spark.emptyDataset[(Long, Long)].toDF("doc_id", "cluster_id")
+      }
+      val durable = spark.sparkContext.getCheckpointDir.isDefined
+      if (durable) recordCheckpointDir(spark.sparkContext)
+      def truncate(df: DataFrame): DataFrame =
+        if (durable) df.checkpoint(false) else df.localCheckpoint(false)
+      def checksum(df: DataFrame): java.math.BigDecimal =
+        df.agg(sum(col("label").cast(org.apache.spark.sql.types.DecimalType(38, 0))))
+          .head().getDecimal(0)
+      // size the label relation's partitioning to the edge count — ~500k
+      // labels per partition — instead of the session shuffle width
+      val parts = math.max(1, math.min(
+        spark.sparkContext.defaultParallelism, (edgeCount / 500000L).toInt + 1))
+      // same truncation discipline as the loop: on the durable branch the
+      // INITIAL label relation must also be a reliable checkpoint (an
+      // executor loss would silently lose localCheckpoint blocks mid-job);
+      // the following checksum action materializes the lazy mark
+      var labels = truncate(sym.select(col("src").as("node")).distinct()
+        .repartition(parts, col("node"))
+        .withColumn("label", col("node")))
+      var prev = checksum(labels)
+      var converged = false
+      while (!converged) {
+        val prop = labels.join(sym, labels("node") === sym("src"))
+          .select(col("dst").as("node"), col("label"))
+        val jump = labels.as("a")
+          .join(labels.as("b"), col("a.label") === col("b.node"))
+          .select(col("a.node").as("node"), col("b.label").as("label"))
+        // repartition BEFORE the groupBy: the aggregate's distribution
+        // requirement is satisfied by the explicit hash partitioning, so
+        // the iteration has exactly one exchange, at the label relation's
+        // own width
+        val next = truncate(
+          labels.union(prop).union(jump)
+            .repartition(parts, col("node"))
+            .groupBy("node").agg(min("label").as("label")))
+        val cur = checksum(next) // one action: materializes checkpoint + sum
+        labels = next
+        converged = cur.compareTo(prev) == 0
+        prev = cur
+      }
+      labels.select(col("node").as("doc_id"), col("label").as("cluster_id"))
+    } finally sym.unpersist(): Unit
   }
 
   /** Near-dup clusters straight from a corpus: MinHash-LSH pairs →

@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.SparkEntry.Query
 import graft.functions.{Text, TextAnalysis}
 import graft.sources.{Corpus, SessionStores, Tables}
 
@@ -88,6 +89,9 @@ object AnalysisQueries {
 
     def streamedEvents(s: SparkSession, dir: String): DataFrame =
       graft.streaming.StreamingFacts.facts(s, streamedStore(s, dir), Key, Schema)
+
+    val twins: graft.SparkEntry.FactTwins =
+      graft.SparkEntry.FactTwins(Tables.events, streamedEvents)
   }
 
   /** q_schema_evolution's two-generation parquet store: generation 1
@@ -1414,9 +1418,9 @@ object AnalysisQueries {
       }
   }
 
-  /** q_quality_gate_streamed's accumulated DOC-fact store: the corpus
-    * ingested by doc_id slice through the generic `StreamingFacts`
-    * keyed-fact machinery (immutable rows, idempotent by doc_id).
+  /** The accumulated DOC-fact store: the corpus ingested by doc_id
+    * slice through the generic `StreamingFacts` keyed-fact machinery
+    * (immutable rows, idempotent by doc_id). Serves the doc-fact twins.
     */
   private[graft] object DocStores {
     import org.apache.spark.sql.types._
@@ -1435,6 +1439,9 @@ object AnalysisQueries {
     def streamedDocs(s: SparkSession, dir: String): DataFrame =
       graft.streaming.StreamingFacts.facts(s, streamedStore(s, dir),
         "doc_id", docSchema)
+
+    val twins: graft.SparkEntry.FactTwins =
+      graft.SparkEntry.FactTwins(docs, streamedDocs)
 
     /** Point-in-time corpus read (the warehouse `factsAsOf` applied to
       * the doc store): the corpus as of ingest batch `batchId`.
@@ -1588,33 +1595,7 @@ object AnalysisQueries {
           col("value").as("purchase_value"), col("attr"), col("valid_from"))
     }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_lang_id" -> ((s, dir) => langIdOf(docs(s, dir))),
-
-    // Streamed twin over the accumulated doc-fact store: a stateless
-    // per-doc projection is trivially stream-equal to batch ONCE the
-    // fact relation is (the store contract FactsStreamSpec pins) —
-    // registering it hash-checks that composition end to end.
-    "q_lang_id_streamed" -> ((s, dir) => langIdOf(DocStores.streamedDocs(s, dir))),
-
-    "q_quality" -> ((s, dir) => qualityOf(docs(s, dir))),
-
-    // Streamed twin (doc-fact store; see q_lang_id_streamed).
-    "q_quality_streamed" -> ((s, dir) => qualityOf(DocStores.streamedDocs(s, dir))),
-
-    // TRAINED quality classifier (the CCNet/DCLM/FineWeb-Edu gate):
-    // fixed-round full-batch logistic fit on the self-supervised seed
-    // (positives = documents, negatives = their stopword-stripped
-    // corruptions) under the DECIMAL gradient protocol, then ONE
-    // map-side gate pass reported per source — the trained weights
-    // ride every output row, so the hash check covers the whole
-    // descent, not just the final keep counts.
-    "q_quality_clf" -> ((s, dir) => qualityClfOf(docs(s, dir))),
-
-    // Streamed twin (doc-fact store; see q_lang_id_streamed).
-    "q_quality_clf_streamed" -> ((s, dir) =>
-      qualityClfOf(DocStores.streamedDocs(s, dir))),
-
+  val queries: Map[String, Query] = Map[String, Query](
     // Held-out evaluation of the trained gate: fit on the
     // deterministic md5 train split only, report per-split accuracy.
     "q_quality_clf_eval" -> ((s, dir) => qualityClfEvalOf(docs(s, dir))),
@@ -1641,14 +1622,6 @@ object AnalysisQueries {
         .groupBy("source")
         .agg(count(lit(1)).as("n_docs"), sum("nt").as("n_tokens"))
         .orderBy("source")),
-
-    // Token Shannon entropy + type-token ratio per doc — the
-    // lexical-diversity gate; one shuffle-free codegen'd projection
-    // (native entropy_stats, exact integer internals).
-    "q_entropy" -> ((s, dir) => entropyOf(docs(s, dir))),
-
-    // Streamed twin (doc-fact store; see q_lang_id_streamed).
-    "q_entropy_streamed" -> ((s, dir) => entropyOf(DocStores.streamedDocs(s, dir))),
 
     // TOKEN-BUDGET CURRICULUM SELECTION (data pruning to a fixed token
     // budget by quality — the "train on the best N tokens" step): keep
@@ -1693,31 +1666,6 @@ object AnalysisQueries {
           d.filter(col("quality") > b).unionByName(atBoundary)
       }
     }),
-
-    // The CORPUS CARD — the one-row datasheet a corpus release ships
-    // with: document/token/vocabulary mass, exact-duplicate rate,
-    // English fraction, and mean quality score. Composes the exact-
-    // dedup, lang-ID and quality bodies (each already oracled alone);
-    // every piece is one corpus scan or a vocab-sized aggregate, the
-    // five 1-row relations broadcast into the final projection.
-    "q_corpus_card" -> ((s, dir) => cardOf(docs(s, dir))),
-
-    // Streamed twin: the datasheet of the ACCUMULATED doc-fact store —
-    // every field depends on corpus-wide totals of the exact
-    // accumulated doc set. Batch oracle verbatim.
-    "q_corpus_card_streamed" -> ((s, dir) =>
-      cardOf(DocStores.streamedDocs(s, dir))),
-
-    // RAG CHUNKING (the retrieval-index prep step beside q_pack's
-    // pretraining packing): fixed 64-token windows at stride 48
-    // (overlap 16) per document, each with its token span and an md5
-    // chunk digest — one map-side explode of bounded fan
-    // (⌈n/stride⌉ chunks), zero exchanges.
-    "q_rag_chunks" -> ((s, dir) => ragChunksOf(docs(s, dir))),
-
-    // Streamed twin (doc-fact store; see q_lang_id_streamed).
-    "q_rag_chunks_streamed" -> ((s, dir) =>
-      ragChunksOf(DocStores.streamedDocs(s, dir))),
 
     // Deterministic NESTED scaling-law subsets (p10 ⊂ p25 ⊂ p50 by
     // construction — one md5 threshold per tier over the same salted
@@ -1765,75 +1713,11 @@ object AnalysisQueries {
         .withColumn("url",
           concat(lit("doc://"), col("source"), lit("/"), col("doc_id"))))),
 
-    // Per-source vocabulary audit: token mass, distinct terms, hapax
-    // legomena (terms occurring exactly once in the source) and the
-    // hapax share of the vocabulary — the Heaps-law corpus-health
-    // signal (an unusually high hapax ratio flags OCR noise or
-    // boilerplate IDs; unusually low flags template text). One
-    // (source, term) aggregate with map-side combine, then a 20-key
-    // rollup — hot terms collapse before the shuffle.
-    "q_hapax" -> ((s, dir) => hapaxOf(docs(s, dir))),
-
-    // Streamed twin (doc-fact store; see q_lang_id_streamed) — hapax
-    // counts depend on the accumulated doc SET per source, so this
-    // checks more than a per-doc projection does.
-    "q_hapax_streamed" -> ((s, dir) => hapaxOf(DocStores.streamedDocs(s, dir))),
-
-    // Temperature-based mixture sampling rates (the multilingual /
-    // multi-source UNIMAX-style schedule): per source, the raw token
-    // share and the α=0.3-temperature share p_s ∝ n_s^α that UPWEIGHTS
-    // low-resource sources, plus the resulting boost factor. Each
-    // pow(n, 0.3) is rounded to 6dp and the normalizer summed in
-    // DECIMAL (exact), so the shares are engine-portable; everything
-    // after the per-source aggregate is 20-row arithmetic.
-    "q_mixture" -> ((s, dir) => mixtureOf(docs(s, dir))),
-
-    // Streamed twin (doc-fact store) — the temperature shares divide
-    // corpus-wide totals of the accumulated doc set.
-    "q_mixture_streamed" -> ((s, dir) => mixtureOf(DocStores.streamedDocs(s, dir))),
-
-    // Per-source PII exposure audit (emails / IPv4s / phone numbers +
-    // redaction mass) over deterministically enriched text — one
-    // map-side regex projection, 20-key aggregate.
-    "q_pii_scan" -> ((s, dir) => piiScanOf(docs(s, dir))),
-
-    // Streamed twin (doc-fact store; see q_lang_id_streamed).
-    "q_pii_scan_streamed" -> ((s, dir) => piiScanOf(DocStores.streamedDocs(s, dir))),
-
-    // Quality-percentile curation gate: keep every document at or above
-    // its source's 25th quality percentile — the threshold adapts per
-    // source instead of a global cutoff silently dropping whole weak
-    // sources. percent_rank over (quality, doc_id) is a deterministic
-    // total order; the window partitions by source (data-sized, never a
-    // single global sort).
-    "q_quality_gate" -> ((s, dir) => qualityGateOf(docs(s, dir))),
-
-    // Streamed twin over the accumulated DOC-fact store (immutable
-    // facts idempotent by doc_id — StreamingFacts, the event store's
-    // contract applied to the corpus): identical batch body, batch
-    // oracle verbatim.
-    "q_quality_gate_streamed" -> ((s, dir) =>
-      qualityGateOf(DocStores.streamedDocs(s, dir))),
-
     "q_token_bpe" -> ((s, dir) =>
       docs(s, dir).select(
         col("doc_id"),
         TextAnalysis.wsTokenCount(col("text")).as("n_ws"),
         TextAnalysis.bpeTokenCount(col("text")).as("n_bpe"))),
-
-    // SEQUENCE PACKING (concat-and-chunk — the pretraining batch-prep
-    // step): global token offsets for every doc in doc_id order and the
-    // fixed-budget chunk range it lands in. The global prefix sum runs
-    // through Packing's RangeRank-shaped two-pass (one range exchange,
-    // per-partition totals, #partitions-sized offset window, parallel
-    // local sums) — never a single-task ORDER BY window over the corpus.
-    "q_pack" -> ((s, dir) => packOf(docs(s, dir))),
-
-    // Streamed twin over the accumulated doc-fact store — packing is
-    // ORDER-SENSITIVE (offsets depend on every earlier doc), so this
-    // twin checks more than the per-doc projections do: the store must
-    // reproduce the exact doc SET for any offset to match.
-    "q_pack_streamed" -> ((s, dir) => packOf(DocStores.streamedDocs(s, dir))),
 
     // The loader-side CHUNK MANIFEST (the inverse view of q_pack):
     // per training sequence, the docs it spans and its filled token
@@ -1866,7 +1750,7 @@ object AnalysisQueries {
     "q_export_manifest" -> ((s, dir) => {
       val root = graft.sources.SessionStores.scopedPath("graft_shards",
         "sh_" + graft.sources.SessionStores.tagOf(dir))
-      graft.sources.SessionStores.servedPath(s, s"$root/_graft_manifest") {
+      graft.sources.SessionStores.servedPath(s, graft.sources.Sinks.manifestFiles(root)) {
         graft.sources.Sinks.writeShards(docs(s, dir), root, budget = 2048L): Unit
       }
     }),
@@ -2262,123 +2146,6 @@ object AnalysisQueries {
         TextAnalysis.hashBucket100(col("doc_id")).as("bucket"),
         TextAnalysis.splitLabel(col("doc_id")).as("split"))),
 
-    // Spark's NATIVE session_window operator (SessionWindowing /
-    // UpdatingSessions — the engine-native alternative to the
-    // gaps-and-islands window q_sessions hand-rolls): per (user,
-    // session) event counts with the merged window's exact µs bounds
-    // (end = last event + gap). The oracle re-derives the same merged
-    // intervals from the islands rule, so the NATIVE operator's merge
-    // semantics (half-open windows: a gap of exactly 30 min starts a
-    // NEW session — note the `>=`, where q_sessions' ms rule uses `>`)
-    // are hash-pinned, not assumed.
-    "q_session_window" -> ((s, dir) =>
-      sessionWindowOf(Tables.events(s, dir))),
-
-    // Streamed twin (r16 VERDICT ask #8): the NATIVE session_window
-    // over the ACCUMULATED event fact store (`EventStores`) — the same
-    // operator body under the batch oracle (the store's canonical
-    // events equal the batch relation; EventStreamSpec proves it, this
-    // row hash-checks the native operator over it). The live
-    // readStream + watermark execution of the SAME aggregation is
-    // pinned by StreamingSpec's MemoryStream case.
-    "q_session_window_streamed" -> ((s, dir) =>
-      sessionWindowOf(EventStores.streamedEvents(s, dir))),
-
-    // Batch sessionization (gaps-and-islands): the oracle-checked batch
-    // equivalent of the streaming `flatMapGroupsWithState` sessionizer
-    // (EventPipeline.sessionize) — same 30-minute-gap, ms-precision rule,
-    // so the stateful operator's semantics get a CORRECTNESS row, not
-    // just a spec. One shuffle (the per-user window); the session-number
-    // aggregation reuses the window's partitioning.
-    "q_sessions" -> ((s, dir) => sessionsOf(Tables.events(s, dir))),
-
-    // As-of join (operator Spark lacks natively — union+window, one
-    // shuffle): each event with the user's latest signup at-or-before it.
-    "q_asof_signup" -> ((s, dir) => asofSignupOf(Tables.events(s, dir))),
-
-    // Stream-stream interval join, batch instantiation: each purchase
-    // attributed to the same user's clicks within the preceding hour —
-    // the SAME declared plan `StreamingSpec` runs under MemoryStream
-    // (watermarks are no-ops in batch execution), so the stream-stream
-    // operator's semantics get a CORRECTNESS row, not just a spec.
-    // Output time keys as unix µs (the engine-portable precision of the
-    // nanos-backed events table) rather than raw timestamps.
-    "q_attributed" -> ((s, dir) => attributedOf(Tables.events(s, dir))),
-
-    // LEFT-OUTER interval join, batch instantiation: EVERY click with
-    // its following-hour purchase or NULL — the outer flavor of
-    // q_attributed, same declared plan StreamingSpec drives under
-    // MemoryStream (where null rows emit only once both watermarks
-    // pass — output EXISTENCE is watermark-gated, the semantics this
-    // oracle row pins in batch).
-    "q_attributed_left" -> ((s, dir) => attributedLeftOf(Tables.events(s, dir))),
-
-    // SCD2 (slowly-changing dimension, type 2) built from the change
-    // stream + a POINT-IN-TIME join: each user's signup events become
-    // versioned dimension rows (valid_from = the event, valid_to = the
-    // next version's start via lead(), NULL = current), and every
-    // purchase joins the version valid AT ITS TIME — the standard
-    // warehouse temporal-dimension shape beside the as-of join (which
-    // resolves the same question via union+window instead of interval
-    // predicates). The join is user-keyed (SMJ/BHJ-anchored equality;
-    // the validity interval rides as a post-join filter), versions
-    // partition time so at most one matches.
-    "q_scd2" -> ((s, dir) => scd2Of(Tables.events(s, dir))),
-
-    // Streamed twins of the behavioral family: the IDENTICAL shared
-    // bodies over the accumulated event fact store (facts
-    // idempotent by event_id => the store equals the batch relation
-    // under any batching), each hash-checked under the batch query's
-    // verbatim oracle.
-    "q_sessions_streamed" -> ((s, dir) => sessionsOf(EventStores.streamedEvents(s, dir))),
-    "q_funnel_streamed" -> ((s, dir) => funnelOf(EventStores.streamedEvents(s, dir))),
-    "q_retention_streamed" -> ((s, dir) => retentionOf(EventStores.streamedEvents(s, dir))),
-    "q_growth_streamed" -> ((s, dir) => growthOf(EventStores.streamedEvents(s, dir))),
-    "q_transitions_streamed" -> ((s, dir) => transitionsOf(EventStores.streamedEvents(s, dir))),
-    "q_scd2_streamed" -> ((s, dir) => scd2Of(EventStores.streamedEvents(s, dir))),
-    "q_asof_signup_streamed" -> ((s, dir) => asofSignupOf(EventStores.streamedEvents(s, dir))),
-    "q_attributed_streamed" -> ((s, dir) => attributedOf(EventStores.streamedEvents(s, dir))),
-    "q_attributed_left_streamed" -> ((s, dir) => attributedLeftOf(EventStores.streamedEvents(s, dir))),
-    "q_gapfill_streamed" -> ((s, dir) => gapfillOf(EventStores.streamedEvents(s, dir))),
-    "q_trailing_dau_streamed" -> ((s, dir) => trailingDauOf(EventStores.streamedEvents(s, dir))),
-
-    // Ordered-funnel analysis: users progressing view → click →
-    // purchase, each later stage strictly after the previous one and
-    // within 24 h of the first view. All three stages are user-keyed
-    // aggregates/joins (one key distribution throughout); time keys are
-    // the events table's engine-portable epoch-µs.
-    "q_funnel" -> ((s, dir) => funnelOf(Tables.events(s, dir))),
-
-    // Retention cohorts: users bucketed by the week of their first
-    // event; each cell counts users active `week_offset` weeks later.
-    // Distinct (user, week) activity join first-week — both user-keyed;
-    // the cohort-cell aggregate's key space is weeks² (tiny at any
-    // scale). Offsets are exact integer arithmetic on µs-truncated
-    // weeks, not calendar subtraction.
-    "q_retention" -> ((s, dir) => retentionOf(Tables.events(s, dir))),
-
-    // Time-series resample + forward fill: each user's last reading per
-    // day, re-gridded onto a dense daily spine (their own [min, max]
-    // range) with gap days carrying the previous reading — the
-    // sensor/metrics regularization pass. The spine explode is
-    // per-user-bounded; the fill is one user-partitioned window (never
-    // a global sort).
-    "q_gapfill" -> ((s, dir) => gapfillOf(Tables.events(s, dir))),
-
-    // Growth accounting: per week, users classified new / retained /
-    // resurrected (active now, inactive last week, seen before) plus the
-    // week's churned count (active last week, not this). One distinct
-    // (user, week) projection + one user-partitioned lag window; counts
-    // per (week, state) — weeks×4 key space at any scale.
-    "q_growth" -> ((s, dir) => growthOf(Tables.events(s, dir))),
-
-    // Event-sequence transition matrix: per-user consecutive event-type
-    // pairs (the first-order Markov structure funnels and session
-    // models start from). One user-partitioned lag window (data-sized
-    // partitions) + a transitions² aggregate; probabilities are exact
-    // count ratios.
-    "q_transitions" -> ((s, dir) => transitionsOf(Tables.events(s, dir))),
-
     // Fixed-width histogram of order totals: bucket = floor(x / width) —
     // the one-pass distribution diagnostic (integer bucket keys, exact
     // counts; key space value-range/width at any data size).
@@ -2397,36 +2164,6 @@ object AnalysisQueries {
       graft.streaming.StreamingGraph.edges(s, HistStores.store(s, dir))
         .select(col("src").as("bucket"), col("w").as("n"))
         .orderBy("bucket")),
-
-    // Trailing active-user windows: per day, the distinct users active
-    // that day (DAU) and over the trailing 7 days (WAU) — the
-    // engagement-rollup shape. Exact trailing distinct via contribution
-    // explode (a day of activity feeds 7 window days) + one distinct —
-    // never a per-window re-scan; key spaces are days × users.
-    "q_trailing_dau" -> ((s, dir) => trailingDauOf(Tables.events(s, dir))),
-
-    // Ingest-volume anomaly monitor: daily counts z-scored against the
-    // trailing 7-day history (day-grain window, exact frame moments).
-    "q_anomaly" -> ((s, dir) => anomalyOf(Tables.events(s, dir))),
-
-    // Streamed twin over the accumulated idempotent event-fact store.
-    "q_anomaly_streamed" -> ((s, dir) => anomalyOf(EventStores.streamedEvents(s, dir))),
-
-    // CDC changelog merge (MERGE INTO / upsert compaction): latest
-    // change per key wins under the total (µs, event_id) order,
-    // tombstoned keys deleted — aggregation-only, one key exchange.
-    "q_cdc_merge" -> ((s, dir) => cdcMergeOf(Tables.events(s, dir))),
-    "q_cdc_merge_streamed" -> ((s, dir) => cdcMergeOf(EventStores.streamedEvents(s, dir))),
-
-    // Trailing truncated EWMA ingest trend (exact DECIMAL weights,
-    // contribution-explode lookback — never a non-equi range join).
-    "q_ewma" -> ((s, dir) => ewmaOf(Tables.events(s, dir))),
-    "q_ewma_streamed" -> ((s, dir) => ewmaOf(EventStores.streamedEvents(s, dir))),
-
-    // Interval overlap join over multi-event activity sessions:
-    // hour-banded equi-join candidates + exact strict-overlap verify.
-    "q_interval_join" -> ((s, dir) => intervalJoinOf(Tables.events(s, dir))),
-    "q_interval_join_streamed" -> ((s, dir) => intervalJoinOf(EventStores.streamedEvents(s, dir))),
 
     // Crawl-frontier URL canonicalization: per-source duplication
     // report over the PERSISTED frontier relation (r17: the variant
@@ -2448,12 +2185,6 @@ object AnalysisQueries {
     "q_url_canon_streamed" -> ((s, dir) => urlCanonFromFrontier(
       EnrichedStores.urlFrontier(s, dir, "streamed",
         DocStores.streamedDocs(s, dir)))),
-
-    // Exact per-group quantiles (per-source token-length audit):
-    // source-partitioned rank window + conditional aggregate.
-    "q_group_percentiles" -> ((s, dir) => groupPercentilesOf(docs(s, dir))),
-    "q_group_percentiles_streamed" -> ((s, dir) =>
-      groupPercentilesOf(DocStores.streamedDocs(s, dir))),
 
     // DEAD-LETTER ingest handling: the malformed-JSONL fixture read in
     // PERMISSIVE mode with a _corrupt_record column — bad lines
@@ -2490,26 +2221,6 @@ object AnalysisQueries {
         .agg(count(lit(1)).as("n_docs"),
           count(when(col("lang").isNull, lit(1))).as("n_lang_null"))
     }),
-
-    // K-anonymity release audit over (day × value-bucket) QI cells.
-    "q_k_anon" -> ((s, dir) => kAnonOf(Tables.events(s, dir))),
-    "q_k_anon_streamed" -> ((s, dir) => kAnonOf(EventStores.streamedEvents(s, dir))),
-
-    // L-DIVERSITY release audit (the gate after k-anonymity): distinct
-    // sensitive values per quasi-cell, rolled up per day — see lDiversityOf.
-    "q_l_diversity" -> ((s, dir) => lDiversityOf(Tables.events(s, dir))),
-    "q_l_diversity_streamed" -> ((s, dir) =>
-      lDiversityOf(EventStores.streamedEvents(s, dir))),
-
-    // Deterministic DP histogram release (seeded-Laplace inverse CDF
-    // over md5 uniforms, ε in-row) — see dpReleaseOf.
-    "q_dp_release" -> ((s, dir) => dpReleaseOf(Tables.events(s, dir))),
-    "q_dp_release_streamed" -> ((s, dir) =>
-      dpReleaseOf(EventStores.streamedEvents(s, dir))),
-
-    // Point-in-time feature extraction with a leakage-safe cutoff.
-    "q_pit_features" -> ((s, dir) => pitFeaturesOf(Tables.events(s, dir))),
-    "q_pit_features_streamed" -> ((s, dir) => pitFeaturesOf(EventStores.streamedEvents(s, dir))),
 
     // Cross-source overlap matrix (Dedup.sourceOverlap): shingle-level
     // Jaccard between every source pair over the DISCRIMINATING
@@ -2626,19 +2337,6 @@ object AnalysisQueries {
           col("meta.format").as("format"))
     }),
 
-    // Multimodal resize through the BATCHED mapPartitions plumbing (the
-    // stub codec's grid sample is deterministic integer arithmetic, so
-    // unlike the image codecs it is oracle-expressible): this hash-checks
-    // the per-partition batch path itself — batching, null-payload guard,
-    // row alignment — not just a column expression.
-    // Welch's unequal-variance t-test between the click and view event
-    // cohorts (Stats.welchTTest): the A/B-experiment readout — one
-    // aggregate pass computes both cohorts' DECIMAL moments, the
-    // t statistic + Welch–Satterthwaite df are a two-row projection.
-    "q_ab_test" -> ((s, dir) =>
-      graft.operators.Stats.welchTTest(
-        Tables.events(s, dir), "event_type", "value", "click", "view")),
-
     // Pairwise Jensen–Shannon divergence between per-source term
     // distributions (Stats.jsDivergence): the corpus-DRIFT matrix
     // beside q_source_overlap's shingle Jaccard — inner-join-only
@@ -2661,12 +2359,11 @@ object AnalysisQueries {
       graft.operators.Stats.jsDivergence(
         DriftStores.counts(s, dir), "source", "term", "c")),
 
-    // Streamed twin of q_ab_test over the accumulated event-fact store.
-    "q_ab_test_streamed" -> ((s, dir) =>
-      graft.operators.Stats.welchTTest(
-        EventStores.streamedEvents(s, dir), "event_type", "value",
-        "click", "view")),
-
+    // Multimodal resize through the BATCHED mapPartitions plumbing (the
+    // stub codec's grid sample is deterministic integer arithmetic, so
+    // unlike the image codecs it is oracle-expressible): this hash-checks
+    // the per-partition batch path itself — batching, null-payload guard,
+    // row alignment — not just a column expression.
     "q_resize" -> ((s, dir) => {
       val payload = docs(s, dir).select(
         col("doc_id"), encode(col("text"), "utf-8").as("payload"))
@@ -2719,6 +2416,223 @@ object AnalysisQueries {
           length(col("frame")).cast("long").as("frame_bytes"),
           md5(col("frame")).as("frame_digest"))
     }),
+  ) ++ DocStores.twins(
+    // Each body runs over the corpus and, as `<name>_streamed`, over the
+    // doc-fact store. Bodies that read corpus-wide totals or order
+    // (q_corpus_card, q_hapax, q_mixture, q_pack's offsets) check the
+    // store's exact doc set, not just a per-doc projection.
+    "q_lang_id" -> ((_, _, d) => langIdOf(d)),
+    "q_quality" -> ((_, _, d) => qualityOf(d)),
+
+    // TRAINED quality classifier (the CCNet/DCLM/FineWeb-Edu gate):
+    // fixed-round full-batch logistic fit on the self-supervised seed
+    // (positives = documents, negatives = their stopword-stripped
+    // corruptions) under the DECIMAL gradient protocol, then ONE
+    // map-side gate pass reported per source — the trained weights
+    // ride every output row, so the hash check covers the whole
+    // descent, not just the final keep counts.
+    "q_quality_clf" -> ((_, _, d) => qualityClfOf(d)),
+
+    // Token Shannon entropy + type-token ratio per doc — the
+    // lexical-diversity gate; one shuffle-free codegen'd projection
+    // (native entropy_stats, exact integer internals).
+    "q_entropy" -> ((_, _, d) => entropyOf(d)),
+
+    // The CORPUS CARD — the one-row datasheet a corpus release ships
+    // with: document/token/vocabulary mass, exact-duplicate rate,
+    // English fraction, and mean quality score. Composes the exact-
+    // dedup, lang-ID and quality bodies (each already oracled alone);
+    // every piece is one corpus scan or a vocab-sized aggregate, the
+    // five 1-row relations broadcast into the final projection.
+    "q_corpus_card" -> ((_, _, d) => cardOf(d)),
+
+    // RAG CHUNKING (the retrieval-index prep step beside q_pack's
+    // pretraining packing): fixed 64-token windows at stride 48
+    // (overlap 16) per document, each with its token span and an md5
+    // chunk digest — one map-side explode of bounded fan
+    // (⌈n/stride⌉ chunks), zero exchanges.
+    "q_rag_chunks" -> ((_, _, d) => ragChunksOf(d)),
+
+    // Per-source vocabulary audit: token mass, distinct terms, hapax
+    // legomena (terms occurring exactly once in the source) and the
+    // hapax share of the vocabulary — the Heaps-law corpus-health
+    // signal (an unusually high hapax ratio flags OCR noise or
+    // boilerplate IDs; unusually low flags template text). One
+    // (source, term) aggregate with map-side combine, then a 20-key
+    // rollup — hot terms collapse before the shuffle.
+    "q_hapax" -> ((_, _, d) => hapaxOf(d)),
+
+    // Temperature-based mixture sampling rates (the multilingual /
+    // multi-source UNIMAX-style schedule): per source, the raw token
+    // share and the α=0.3-temperature share p_s ∝ n_s^α that UPWEIGHTS
+    // low-resource sources, plus the resulting boost factor. Each
+    // pow(n, 0.3) is rounded to 6dp and the normalizer summed in
+    // DECIMAL (exact), so the shares are engine-portable; everything
+    // after the per-source aggregate is 20-row arithmetic.
+    "q_mixture" -> ((_, _, d) => mixtureOf(d)),
+
+    // Per-source PII exposure audit (emails / IPv4s / phone numbers +
+    // redaction mass) over deterministically enriched text — one
+    // map-side regex projection, 20-key aggregate.
+    "q_pii_scan" -> ((_, _, d) => piiScanOf(d)),
+
+    // Quality-percentile curation gate: keep every document at or above
+    // its source's 25th quality percentile — the threshold adapts per
+    // source instead of a global cutoff silently dropping whole weak
+    // sources. percent_rank over (quality, doc_id) is a deterministic
+    // total order; the window partitions by source (data-sized, never a
+    // single global sort).
+    "q_quality_gate" -> ((_, _, d) => qualityGateOf(d)),
+
+    // SEQUENCE PACKING (concat-and-chunk — the pretraining batch-prep
+    // step): global token offsets for every doc in doc_id order and the
+    // fixed-budget chunk range it lands in. The global prefix sum runs
+    // through Packing's RangeRank-shaped two-pass (one range exchange,
+    // per-partition totals, #partitions-sized offset window, parallel
+    // local sums) — never a single-task ORDER BY window over the corpus.
+    "q_pack" -> ((_, _, d) => packOf(d)),
+
+    // Exact per-group quantiles (per-source token-length audit):
+    // source-partitioned rank window + conditional aggregate.
+    "q_group_percentiles" -> ((_, _, d) => groupPercentilesOf(d)),
+  ) ++ EventStores.twins(
+    // Each body runs over `Tables.events` and, as `<name>_streamed`, over
+    // the event fact store. The live readStream + watermark execution of
+    // q_session_window's aggregation is pinned by StreamingSpec's
+    // MemoryStream case.
+    // Spark's NATIVE session_window operator (SessionWindowing /
+    // UpdatingSessions — the engine-native alternative to the
+    // gaps-and-islands window q_sessions hand-rolls): per (user,
+    // session) event counts with the merged window's exact µs bounds
+    // (end = last event + gap). The oracle re-derives the same merged
+    // intervals from the islands rule, so the NATIVE operator's merge
+    // semantics (half-open windows: a gap of exactly 30 min starts a
+    // NEW session — note the `>=`, where q_sessions' ms rule uses `>`)
+    // are hash-pinned, not assumed.
+    "q_session_window" -> ((_, _, e) => sessionWindowOf(e)),
+
+    // Batch sessionization (gaps-and-islands): the oracle-checked batch
+    // equivalent of the streaming `flatMapGroupsWithState` sessionizer
+    // (EventPipeline.sessionize) — same 30-minute-gap, ms-precision rule,
+    // so the stateful operator's semantics get a CORRECTNESS row, not
+    // just a spec. One shuffle (the per-user window); the session-number
+    // aggregation reuses the window's partitioning.
+    "q_sessions" -> ((_, _, e) => sessionsOf(e)),
+
+    // As-of join (operator Spark lacks natively — union+window, one
+    // shuffle): each event with the user's latest signup at-or-before it.
+    "q_asof_signup" -> ((_, _, e) => asofSignupOf(e)),
+
+    // Stream-stream interval join, batch instantiation: each purchase
+    // attributed to the same user's clicks within the preceding hour —
+    // the SAME declared plan `StreamingSpec` runs under MemoryStream
+    // (watermarks are no-ops in batch execution), so the stream-stream
+    // operator's semantics get a CORRECTNESS row, not just a spec.
+    // Output time keys as unix µs (the engine-portable precision of the
+    // nanos-backed events table) rather than raw timestamps.
+    "q_attributed" -> ((_, _, e) => attributedOf(e)),
+
+    // LEFT-OUTER interval join, batch instantiation: EVERY click with
+    // its following-hour purchase or NULL — the outer flavor of
+    // q_attributed, same declared plan StreamingSpec drives under
+    // MemoryStream (where null rows emit only once both watermarks
+    // pass — output EXISTENCE is watermark-gated, the semantics this
+    // oracle row pins in batch).
+    "q_attributed_left" -> ((_, _, e) => attributedLeftOf(e)),
+
+    // SCD2 (slowly-changing dimension, type 2) built from the change
+    // stream + a POINT-IN-TIME join: each user's signup events become
+    // versioned dimension rows (valid_from = the event, valid_to = the
+    // next version's start via lead(), NULL = current), and every
+    // purchase joins the version valid AT ITS TIME — the standard
+    // warehouse temporal-dimension shape beside the as-of join (which
+    // resolves the same question via union+window instead of interval
+    // predicates). The join is user-keyed (SMJ/BHJ-anchored equality;
+    // the validity interval rides as a post-join filter), versions
+    // partition time so at most one matches.
+    "q_scd2" -> ((_, _, e) => scd2Of(e)),
+
+    // Ordered-funnel analysis: users progressing view → click →
+    // purchase, each later stage strictly after the previous one and
+    // within 24 h of the first view. All three stages are user-keyed
+    // aggregates/joins (one key distribution throughout); time keys are
+    // the events table's engine-portable epoch-µs.
+    "q_funnel" -> ((_, _, e) => funnelOf(e)),
+
+    // Retention cohorts: users bucketed by the week of their first
+    // event; each cell counts users active `week_offset` weeks later.
+    // Distinct (user, week) activity join first-week — both user-keyed;
+    // the cohort-cell aggregate's key space is weeks² (tiny at any
+    // scale). Offsets are exact integer arithmetic on µs-truncated
+    // weeks, not calendar subtraction.
+    "q_retention" -> ((_, _, e) => retentionOf(e)),
+
+    // Time-series resample + forward fill: each user's last reading per
+    // day, re-gridded onto a dense daily spine (their own [min, max]
+    // range) with gap days carrying the previous reading — the
+    // sensor/metrics regularization pass. The spine explode is
+    // per-user-bounded; the fill is one user-partitioned window (never
+    // a global sort).
+    "q_gapfill" -> ((_, _, e) => gapfillOf(e)),
+
+    // Growth accounting: per week, users classified new / retained /
+    // resurrected (active now, inactive last week, seen before) plus the
+    // week's churned count (active last week, not this). One distinct
+    // (user, week) projection + one user-partitioned lag window; counts
+    // per (week, state) — weeks×4 key space at any scale.
+    "q_growth" -> ((_, _, e) => growthOf(e)),
+
+    // Event-sequence transition matrix: per-user consecutive event-type
+    // pairs (the first-order Markov structure funnels and session
+    // models start from). One user-partitioned lag window (data-sized
+    // partitions) + a transitions² aggregate; probabilities are exact
+    // count ratios.
+    "q_transitions" -> ((_, _, e) => transitionsOf(e)),
+
+    // Trailing active-user windows: per day, the distinct users active
+    // that day (DAU) and over the trailing 7 days (WAU) — the
+    // engagement-rollup shape. Exact trailing distinct via contribution
+    // explode (a day of activity feeds 7 window days) + one distinct —
+    // never a per-window re-scan; key spaces are days × users.
+    "q_trailing_dau" -> ((_, _, e) => trailingDauOf(e)),
+
+    // Ingest-volume anomaly monitor: daily counts z-scored against the
+    // trailing 7-day history (day-grain window, exact frame moments).
+    "q_anomaly" -> ((_, _, e) => anomalyOf(e)),
+
+    // CDC changelog merge (MERGE INTO / upsert compaction): latest
+    // change per key wins under the total (µs, event_id) order,
+    // tombstoned keys deleted — aggregation-only, one key exchange.
+    "q_cdc_merge" -> ((_, _, e) => cdcMergeOf(e)),
+
+    // Trailing truncated EWMA ingest trend (exact DECIMAL weights,
+    // contribution-explode lookback — never a non-equi range join).
+    "q_ewma" -> ((_, _, e) => ewmaOf(e)),
+
+    // Interval overlap join over multi-event activity sessions:
+    // hour-banded equi-join candidates + exact strict-overlap verify.
+    "q_interval_join" -> ((_, _, e) => intervalJoinOf(e)),
+
+    // K-anonymity release audit over (day × value-bucket) QI cells.
+    "q_k_anon" -> ((_, _, e) => kAnonOf(e)),
+
+    // L-DIVERSITY release audit (the gate after k-anonymity): distinct
+    // sensitive values per quasi-cell, rolled up per day — see lDiversityOf.
+    "q_l_diversity" -> ((_, _, e) => lDiversityOf(e)),
+
+    // Deterministic DP histogram release (seeded-Laplace inverse CDF
+    // over md5 uniforms, ε in-row) — see dpReleaseOf.
+    "q_dp_release" -> ((_, _, e) => dpReleaseOf(e)),
+
+    // Point-in-time feature extraction with a leakage-safe cutoff.
+    "q_pit_features" -> ((_, _, e) => pitFeaturesOf(e)),
+
+    // Welch's unequal-variance t-test between the click and view event
+    // cohorts (Stats.welchTTest): the A/B-experiment readout — one
+    // aggregate pass computes both cohorts' DECIMAL moments, the
+    // t statistic + Welch–Satterthwaite df are a two-row projection.
+    "q_ab_test" -> ((_, _, e) =>
+      graft.operators.Stats.welchTTest(e, "event_type", "value", "click", "view")),
   )
 
   private val stopList = Text.EffectiveStopwords.map(w => s"'$w'").mkString(", ")
@@ -3212,7 +3126,7 @@ object AnalysisQueries {
       |       max(us) + 1800000000 AS e_us, count(*) AS n_events
       |FROM g GROUP BY user_id, sn""".stripMargin
 
-  private val baseOracles: Map[String, String] = Map(
+  val oracles: Map[String, String] = Map(
     // HLL relative-error guarantee: per-source exact distinct terms with
     // the deterministically-true bound flag (the engine re-derives the
     // flag from its own estimate; the oracle states the registration
@@ -3229,30 +3143,10 @@ object AnalysisQueries {
          |FROM toks WHERE term <> '' AND term NOT IN ($stopList)
          |GROUP BY source ORDER BY source""".stripMargin,
 
-    // identical SQL: the streamed estimate must satisfy the same bound
-    "q_vocab_hll_streamed" ->
-      s"""WITH toks AS (
-         |  SELECT source,
-         |         unnest(string_split_regex(regexp_replace(lower(text), '[^a-z\\s]', '', 'g'), '\\s+')) AS term
-         |  FROM documents
-         |)
-         |SELECT source, count(DISTINCT term) AS exact_vocab,
-         |       TRUE AS hll_within_bound
-         |FROM toks WHERE term <> '' AND term NOT IN ($stopList)
-         |GROUP BY source ORDER BY source""".stripMargin,
-
     // GK rank guarantee: one row per φ with n_docs and the
     // deterministically-true bound flag (the engine re-derives the flag
     // from exact rank bounds; the oracle states the theorem).
     "q_quantiles_gk" ->
-      """SELECT CAST(phi AS DOUBLE) AS phi, n_docs, TRUE AS within_bound
-        |FROM (VALUES (0.5), (0.9), (0.99)) AS p(phi),
-        |     (SELECT count(*) AS n_docs FROM documents) d
-        |ORDER BY phi""".stripMargin,
-
-    // identical SQL: the streamed (merged-partial) GK summary must serve
-    // the same guarantee rows.
-    "q_quantiles_gk_streamed" ->
       """SELECT CAST(phi AS DOUBLE) AS phi, n_docs, TRUE AS within_bound
         |FROM (VALUES (0.5), (0.9), (0.99)) AS p(phi),
         |     (SELECT count(*) AS n_docs FROM documents) d
@@ -3357,26 +3251,9 @@ object AnalysisQueries {
          |SELECT term, exact_count, TRUE AS in_summary, TRUE AS mg_within_bound
          |FROM cnt, tot WHERE exact_count * 49 > n ORDER BY term""".stripMargin,
 
-    // identical SQL to q_heavy_hitters: the streamed summary must serve
-    // the same completeness rows (merge-path independence).
-    "q_heavy_hitters_streamed" ->
-      s"""$termsCte, tot AS (SELECT count(*) AS n FROM terms),
-         |cnt AS (SELECT term, count(*) AS exact_count FROM terms GROUP BY term)
-         |SELECT term, exact_count, TRUE AS in_summary, TRUE AS mg_within_bound
-         |FROM cnt, tot WHERE exact_count * 49 > n ORDER BY term""".stripMargin,
-
     // CMS watchlist: exact counts (0 for the absent probe key) with the
     // deterministic est≥exact guarantee as literal TRUE.
     "q_cms_watchlist" ->
-      s"""$termsCte, cnt AS (SELECT term, count(*) AS exact_count FROM terms GROUP BY term)
-         |SELECT w.term, coalesce(cnt.exact_count, CAST(0 AS BIGINT)) AS exact_count,
-         |       TRUE AS cms_ge_exact
-         |FROM (VALUES ('graftabsent'), ('hash'), ('join'), ('spark')) AS w(term)
-         |LEFT JOIN cnt ON cnt.term = w.term ORDER BY w.term""".stripMargin,
-
-    // identical SQL: the streamed (linear-merge) CMS must serve the same
-    // guarantee rows.
-    "q_cms_watchlist_streamed" ->
       s"""$termsCte, cnt AS (SELECT term, count(*) AS exact_count FROM terms GROUP BY term)
          |SELECT w.term, coalesce(cnt.exact_count, CAST(0 AS BIGINT)) AS exact_count,
          |       TRUE AS cms_ge_exact
@@ -3657,10 +3534,8 @@ object AnalysisQueries {
 
     // fastText-shaped hashed-gram gate: the full 48-round unrolled
     // descent over the 192-bucket standardized gram shares — see
-    // ftOracleSql. The streamed twin mirrors under the same text (the
-    // doc-fact store reproduces the exact corpus).
+    // ftOracleSql.
     "q_quality_ft" -> ftOracleSql,
-    "q_quality_ft_streamed" -> ftOracleSql,
 
     // the as-of-batch-1 corpus slice recomputed independently: batches
     // are the mod-3 doc_id slices, the token count is the shared
@@ -4584,8 +4459,6 @@ object AnalysisQueries {
     // session_window mirror: islands re-derived at µs precision with the
     // native operator's HALF-OPEN merge rule (a gap of exactly the
     // window size starts a new session → `>=`), end = last event + gap
-    // the event-store twin hash-checks under the identical mirror
-    "q_session_window_streamed" -> sessionWindowOracleSql,
     "q_session_window" -> sessionWindowOracleSql,
 
     // Same µs time key discipline as the asof oracle; the 30-minute gap
@@ -4848,22 +4721,4 @@ object AnalysisQueries {
         |       ELSE 'unknown' END AS format
         |FROM documents""".stripMargin,
   )
-
-  /** Streamed behavioral twins share the batch oracles verbatim — the
-    * accumulated fact store must serve identical analytics.
-    */
-  val oracles: Map[String, String] = baseOracles ++
-    Seq("q_sessions", "q_funnel", "q_retention", "q_growth",
-      "q_transitions", "q_scd2", "q_asof_signup", "q_attributed",
-      "q_attributed_left", "q_gapfill", "q_trailing_dau",
-      "q_source_drift", "q_ab_test", "q_pmi", "q_histogram",
-      "q_quality_gate", "q_lang_id", "q_quality", "q_quality_clf",
-      "q_gram_topk", "q_pack",
-      "q_entropy", "q_pii_scan", "q_dsir", "q_hapax", "q_mixture",
-      "q_bpe_train", "q_corpus_card", "q_anomaly", "q_rag_chunks",
-      "q_validate_docs", "q_cdc_merge", "q_ewma", "q_interval_join",
-      "q_k_anon", "q_pit_features", "q_url_canon", "q_snapshot_diff",
-      "q_group_percentiles", "q_l_diversity", "q_dp_release", "q_ppl",
-      "q_ppl_buckets")
-      .map(q => s"${q}_streamed" -> baseOracles(q))
 }

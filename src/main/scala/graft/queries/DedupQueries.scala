@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.SparkEntry.Query
 import graft.operators.Dedup
 import graft.sources.{Corpus, SessionStores}
 
@@ -78,28 +79,10 @@ object DedupQueries {
           col("dhash"))
     }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val queries: Map[String, Query] = Map[String, Query](
     "q_dedup_exact" -> ((s, dir) => Dedup.exact(docs(s, dir))),
     "q_dedup_near" -> ((s, dir) => DedupStore.pairs(s, dir)),
     "q_dedup_clusters" -> ((s, dir) => DedupStore.clusters(s, dir)),
-
-    // EXACT-SUBSTRING span dedup (the Lee et al. 2022 "Deduplicating
-    // Training Data" operator, distinct from the SET-based Jaccard
-    // family): document pairs sharing verbatim 8-token windows, with
-    // the shared-window count — catches copied passages inside
-    // otherwise-different documents that set-similarity dilutes away.
-    // Candidates come from an equi-join on the window STRING itself
-    // (exact by construction — no hash verify step), with the
-    // rare-window df ∈ [2, 16] band bounding per-window fan exactly
-    // like q_jaccard_pairs' rare-shingle discipline; boilerplate
-    // windows above the cap are dropped (a df-16 window at corpus
-    // scale is a template, not a copy).
-    "q_span_dups" -> ((s, dir) => spanDupsOf(docs(s, dir))),
-
-    // Streamed twin (doc-fact store; direct derivation — span pairs
-    // depend on the exact accumulated doc set). Batch oracle verbatim.
-    "q_span_dups_streamed" -> ((s, dir) =>
-      spanDupsOf(AnalysisQueries.DocStores.streamedDocs(s, dir))),
 
     // DOC-level MIRROR detection: near-dup pairs that CROSS source
     // boundaries, rolled to a source-pair matrix — which sources
@@ -409,6 +392,19 @@ object DedupQueries {
       val filter = graft.streaming.StreamingSketch.Bloom.state(s, store)
       bloomDecontChecked(s, dir, (c, _) => Dedup.decontaminateBloomWith(c, filter))
     }),
+  ) ++ AnalysisQueries.DocStores.twins(
+    // EXACT-SUBSTRING span dedup (the Lee et al. 2022 "Deduplicating
+    // Training Data" operator, distinct from the SET-based Jaccard
+    // family): document pairs sharing verbatim 8-token windows, with
+    // the shared-window count — catches copied passages inside
+    // otherwise-different documents that set-similarity dilutes away.
+    // Candidates come from an equi-join on the window STRING itself
+    // (exact by construction — no hash verify step), with the
+    // rare-window df ∈ [2, 16] band bounding per-window fan exactly
+    // like q_jaccard_pairs' rare-shingle discipline; boilerplate
+    // windows above the cap are dropped (a df-16 window at corpus
+    // scale is a template, not a copy).
+    "q_span_dups" -> ((_, _, d) => spanDupsOf(d)),
   )
 
   /** Shared checked projection for the Bloom decontamination family:
@@ -1025,38 +1021,6 @@ object DedupQueries {
     "q_yield" -> yieldOracleSql,
 
     "q_line_dedup" -> lineDedupOracle,
-    "q_line_dedup_streamed" -> lineDedupOracle,
-
-    "q_dedup_sweep_streamed" ->
-      s"""WITH pairs AS (
-         |${nearDupSql.linesIterator.map("  " + _).mkString("\n")}
-         |), th(t) AS (VALUES (0.9), (0.95), (0.97), (0.98), (0.985)),
-         |e AS (
-         |  SELECT t, doc_a, doc_b FROM pairs, th WHERE jaccard >= CAST(t AS DOUBLE)
-         |), pc AS (
-         |  SELECT t, count(*) AS np FROM e GROUP BY 1
-         |), dc AS (
-         |  SELECT t, count(DISTINCT doc) AS nd
-         |  FROM (SELECT t, unnest([doc_a, doc_b]) AS doc FROM e) GROUP BY 1
-         |)
-         |SELECT CAST(th.t AS DOUBLE) AS threshold,
-         |       coalesce(pc.np, 0) AS n_pairs, coalesce(dc.nd, 0) AS n_docs
-         |FROM th LEFT JOIN pc ON th.t = pc.t LEFT JOIN dc ON th.t = dc.t""".stripMargin,
-
-    "q_mirror_pairs_streamed" ->
-      s"""WITH pairs AS (
-         |${nearDupSql.linesIterator.map("  " + _).mkString("\n")}
-         |), lab AS (
-         |  SELECT least(da.source, db.source) AS source_a,
-         |         greatest(da.source, db.source) AS source_b, p.jaccard
-         |  FROM pairs p
-         |  JOIN documents da ON p.doc_a = da.doc_id
-         |  JOIN documents db ON p.doc_b = db.doc_id
-         |  WHERE da.source <> db.source
-         |)
-         |SELECT source_a, source_b, count(*) AS n_pairs,
-         |       max(jaccard) AS max_jaccard
-         |FROM lab GROUP BY 1, 2""".stripMargin,
 
     // the same pair derivation, rolled to the cross-source matrix
     "q_mirror_pairs" ->
@@ -1092,10 +1056,6 @@ object DedupQueries {
          |       coalesce(pc.np, 0) AS n_pairs, coalesce(dc.nd, 0) AS n_docs
          |FROM th LEFT JOIN pc ON th.t = pc.t LEFT JOIN dc ON th.t = dc.t""".stripMargin,
 
-    // streamed twin under the batch oracle verbatim: the accumulated
-    // doc-fact / dedup stores are contract-equal to the batch relations
-    "q_yield_streamed" -> yieldOracleSql,
-
     // the component CTE again, rolled to sizes, left-joined onto every
     // doc; identical 1/size arithmetic
     "q_dup_weights" ->
@@ -1125,8 +1085,6 @@ object DedupQueries {
 
     // identical window construction (distinct 8-token shingles per
     // doc), identical df band, identical pair aggregation
-    "q_span_dups_streamed" -> spanDupsOracle,
-
     "q_span_dups" -> spanDupsOracle,
 
     // the same recursive component CTE as q_dedup_clusters' oracle,
@@ -1182,8 +1140,6 @@ object DedupQueries {
 
     "q_curate" -> curateOracleSql,
 
-    "q_curate_streamed" -> curateOracleSql,
-
 
     "q_simhash" -> simhashSql,
 
@@ -1233,21 +1189,6 @@ object DedupQueries {
     // novelty: first-seen = min doc_id per shingle over the same
     // distinct shingle sets the hash store holds
     "q_novelty" ->
-      s"""$shingleCte, ex AS (
-         |  SELECT doc_id, t.shingle FROM shs, unnest(sh) AS t(shingle)
-         |), fst AS (
-         |  SELECT shingle, min(doc_id) AS first_doc FROM ex GROUP BY shingle
-         |)
-         |SELECT e.doc_id, count(*) AS n_shingles,
-         |       CAST(count(*) FILTER (e.doc_id = f.first_doc) AS BIGINT) AS n_novel,
-         |       round(CAST(count(*) FILTER (e.doc_id = f.first_doc) AS DOUBLE)
-         |             / count(*), 6) AS novelty
-         |FROM ex e JOIN fst f USING (shingle)
-         |GROUP BY e.doc_id""".stripMargin,
-
-    // streamed twin: identical SQL — the accumulated ingest store's
-    // canonical doc set must equal the batch corpus
-    "q_novelty_streamed" ->
       s"""$shingleCte, ex AS (
          |  SELECT doc_id, t.shingle FROM shs, unnest(sh) AS t(shingle)
          |), fst AS (
@@ -1325,22 +1266,6 @@ object DedupQueries {
     // the Bloom guarantees the oracle can state exactly: the engine's
     // booleans must come back true, n_exact must equal the exact SQL
     "q_bloom_decontaminate" ->
-      s"""$shingleCte, ex AS (
-         |  SELECT doc_id, t.s AS shingle FROM shs, unnest(sh) AS t(s)
-         |), bench AS (
-         |  SELECT DISTINCT shingle FROM ex WHERE doc_id % $EvalDocMod = 0 AND doc_id < $EvalDocCap
-         |), exact AS (
-         |  SELECT DISTINCT e.doc_id
-         |  FROM ex e JOIN bench b ON e.shingle = b.shingle
-         |  WHERE NOT (e.doc_id % $EvalDocMod = 0 AND e.doc_id < $EvalDocCap)
-         |)
-         |SELECT (SELECT count(*) FROM exact) AS n_exact,
-         |       true AS no_false_negatives,
-         |       true AS fp_within_bound""".stripMargin,
-
-    // stream ≡ batch at the guarantee level (bloom OR-merge is bit-exact
-    // for the union stream) — byte-identical oracle SQL as the batch twin
-    "q_bloom_decontaminate_streamed" ->
       s"""$shingleCte, ex AS (
          |  SELECT doc_id, t.s AS shingle FROM shs, unnest(sh) AS t(s)
          |), bench AS (

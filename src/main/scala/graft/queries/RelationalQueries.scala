@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
+import graft.SparkEntry.Query
 import graft.sources.SessionStores
 
 /** Relational capability surface (SURVEY §2.2) over the TPC-H-ish fixtures.
@@ -318,6 +319,9 @@ object RelationalQueries {
     def streamedLineitem(s: SparkSession, dir: String): DataFrame =
       graft.streaming.StreamingFacts.facts(s, store(s, dir),
         "l_key", withKey(tbl(s, dir, "lineitem")).schema).drop("l_key")
+
+    val twins: graft.SparkEntry.FactTwins =
+      graft.SparkEntry.FactTwins((s, dir) => tbl(s, dir, "lineitem"), streamedLineitem)
 
     /** Point-in-time read of the warehouse store: the fact relation as
       * of ingest batch `batchId` — the store is COMPACTED at build, so
@@ -1000,18 +1004,6 @@ object RelationalQueries {
       |FROM events""".stripMargin
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-
-    // TPC-H Q1-style pricing summary: the canonical partial-agg benchmark.
-    "q1_agg" -> ((s, dir) => q1AggOf(tbl(s, dir, "lineitem"))),
-
-    // Streamed WAREHOUSE twin: the identical Q1 body over the lineitem
-    // fact relation ACCUMULATED through the generic StreamingFacts
-    // store (three idempotent micro-batches — the doc/event ingest
-    // discipline extended to the TPC-H fact table), hash-checked under
-    // the batch oracle verbatim.
-    "q1_agg_streamed" -> ((s, dir) =>
-      q1AggOf(LineitemStores.streamedLineitem(s, dir))),
-
     // TPC-H Q3-style: selective filters pushed to all three scans, two joins
     // (customer side broadcast-able), top-10 by revenue.
     "q3_join" -> ((s, dir) => {
@@ -1046,7 +1038,7 @@ object RelationalQueries {
     }),
   )
 
-  val queriesExtra: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val queriesExtra: Map[String, Query] = Map[String, Query](
     // JOIN-KEY SKEW diagnostics (the statistics pass that feeds the
     // salting/AQE-skew decision q_salted_join acts on): per candidate
     // join key, NDV, hottest-key frequency and the skew factor
@@ -1066,33 +1058,6 @@ object RelationalQueries {
         .unionByName(statsOf("l_suppkey"))
     }),
 
-    // TPC-H Q14 shape (promotion effect): monthly revenue share of
-    // promo-type parts — the part dimension joins the fact table on
-    // partkey (dim-sized side left to stats/AQE to broadcast), revenue
-    // in per-row DECIMAL(18,4) exactly like every money aggregate here;
-    // only the final percentage is float. Closes the one fixture table
-    // (part) the surface didn't exercise.
-    "q_promo_share" -> ((s, dir) =>
-      promoShareOf(s, dir, tbl(s, dir, "lineitem"))),
-
-    // Streamed warehouse twin over the accumulated lineitem fact store.
-    "q_promo_share_streamed" -> ((s, dir) =>
-      promoShareOf(s, dir, LineitemStores.streamedLineitem(s, dir))),
-
-    // TPC-H Q18 shape (large-volume customers): orders whose lineitems
-    // sum past a quantity threshold, with customer attribution — the
-    // HAVING-filtered aggregate feeding a join feeding a top-k. The
-    // order-key aggregate runs FIRST (map-side partials absorb the
-    // lineitem mass; the HAVING filter collapses the relation to the
-    // rare heavy orders) so the two joins move only qualifying rows;
-    // TakeOrderedAndProject caps the result without a global sort.
-    "q_big_orders" -> ((s, dir) =>
-      bigOrdersOf(s, dir, tbl(s, dir, "lineitem"))),
-
-    // Streamed warehouse twin over the accumulated lineitem fact store.
-    "q_big_orders_streamed" -> ((s, dir) =>
-      bigOrdersOf(s, dir, LineitemStores.streamedLineitem(s, dir))),
-
     // STORE TIME-TRAVEL: the Q1 pricing summary over the warehouse fact
     // store AS OF ingest batch 1 of 3 — exactly what a `facts` read
     // would have served once batch 1 committed (the mod-3 order-key
@@ -1103,173 +1068,15 @@ object RelationalQueries {
     "q_facts_asof" -> ((s, dir) =>
       q1AggOf(LineitemStores.streamedLineitemAsOf(s, dir, 1L))),
 
-    // TPC-H Q21 shape (suppliers who kept orders waiting): the hardest
-    // classic join shape — a multi-EXISTS/NOT-EXISTS FACT-FACT
-    // self-join. "Late" here is the lineitem's problem flag
-    // (l_returnflag = 'R'; the synthetic schema carries no
-    // commit/receipt dates) on a finalized ('F') order: a supplier
-    // qualifies per late line iff SOME other supplier shipped on the
-    // same order (left SEMI against a self-projection of lineitem) and
-    // NO other supplier was ALSO late on it (left ANTI against the
-    // late-filtered self-projection). Both branches are EQUI-joins on
-    // the order key with the supplier inequality as a join residual —
-    // they plan as hash/sort-merge semi/anti, NEVER a nested-loop
-    // (PlanSpec pins this); the orders dimension filter collapses the
-    // probe side before either self-join moves data.
-    "q_late_suppliers" -> ((s, dir) =>
-      lateSuppliersOf(s, dir, tbl(s, dir, "lineitem"))),
-
-    // Streamed warehouse twin: the semi/anti self-join over the
-    // accumulated lineitem fact store — the hardest classic join shape
-    // also checked against the store's exact-once relation contract.
-    "q_late_suppliers_streamed" -> ((s, dir) =>
-      lateSuppliersOf(s, dir, LineitemStores.streamedLineitem(s, dir))),
-
-    // TPC-H Q11 shape (important stock): per-part revenue HAVING above
-    // a GLOBAL-scalar threshold — the group-aggregate-vs-global-scalar
-    // plan (a correlated scalar subquery in the classic form; here the
-    // 1-row global relation rides a crossJoin that AQE broadcasts).
-    // The threshold is AVERAGE-relative (value·n_parts > total·1.2) so
-    // it is scale-invariant and EVERY comparison stays in exact
-    // DECIMAL — no division, no rounding on either engine.
-    "q_important_parts" -> ((s, dir) =>
-      importantPartsOf(s, dir, tbl(s, dir, "lineitem"))),
-
-    // Streamed warehouse twin over the accumulated lineitem fact store.
-    "q_important_parts_streamed" -> ((s, dir) =>
-      importantPartsOf(s, dir, LineitemStores.streamedLineitem(s, dir))),
-
-    // TPC-H Q19 shape (discounted revenue under a DISJUNCTION of
-    // brand/size/quantity conjunctions): the OR-of-ANDs predicate
-    // spans BOTH join sides, the classic stress of disjunctive
-    // predicate pushdown — Catalyst must extract each side's
-    // derivable disjunction (brand/size to the part scan, the
-    // quantity envelope to the lineitem scan) instead of filtering
-    // the full join product. PlanSpec pins the pushed Or filters.
-    "q_disjunctive_rev" -> ((s, dir) =>
-      disjunctiveRevOf(s, dir, tbl(s, dir, "lineitem"))),
-
-    // Streamed warehouse twin over the accumulated lineitem fact store.
-    "q_disjunctive_rev_streamed" -> ((s, dir) =>
-      disjunctiveRevOf(s, dir, LineitemStores.streamedLineitem(s, dir))),
-
-    // TPC-H Q20 shape (excess stock): suppliers semi-joined through a
-    // part-name filter and gated by a CORRELATED 0.5·sum(l_quantity)
-    // threshold — stock on hand (returned quantity, the fixture's
-    // availqty analog) must exceed half the demand-window shipments.
-    // The fixture's (partkey, suppkey) pairs are near-singletons (avg
-    // 1.16 lineitems at EVERY SF — measured), which would make a
-    // pair-grain correlated aggregate decorative (q > 0.5·q for a
-    // single returned row), so the correlation grain is the supplier's
-    // PRODUCT LINE (the part-name filter already fixes the product):
-    // ~10 lineitems per cell at every SF, the gate binds for real
-    // (65/100 suppliers at sf0.01). Engine plan: aggregate-then-
-    // equi-semi — the lineitem mass collapses to ≤ |supplier| rows
-    // BEFORE any join, then one LeftSemi into supplier; never a
-    // nested-loop (PlanSpec pins it). The threshold compares in exact
-    // DECIMAL as 2·avail > demand — the Q11 no-division discipline.
-    "q_excess_stock" -> ((s, dir) =>
-      excessStockOf(s, dir, tbl(s, dir, "lineitem"))),
-
-    // Streamed warehouse twin: the Q20 chain over the accumulated
-    // (compacted, dedup-free-served) lineitem fact store.
-    "q_excess_stock_streamed" -> ((s, dir) =>
-      excessStockOf(s, dir, LineitemStores.streamedLineitem(s, dir))),
-
-    // TPC-H Q10 shape (returned-item reporting): customers who returned
-    // goods in a half-year window, ranked by lost revenue — the
-    // fact-filter → agg → two dimension joins → top-k chain. Revenue in
-    // per-row DECIMAL(18,4); the order key is the (double-cast revenue,
-    // custkey) pair, identical text both engines.
-    "q_returned_top" -> ((s, dir) =>
-      returnedTopOf(s, dir, tbl(s, dir, "lineitem"))),
-
-    // Streamed warehouse twin over the accumulated lineitem fact store.
-    "q_returned_top_streamed" -> ((s, dir) =>
-      returnedTopOf(s, dir, LineitemStores.streamedLineitem(s, dir))),
-
-    // TPC-H Q12 shape (shipping-priority audit): per problem-flag class
-    // ('A'/'R' — the schema's shipmode analog), how many lines in the
-    // ship window belong to HIGH-priority orders vs not — the
-    // fact ⋈ dim conditional-count aggregate.
-    "q_priority_lines" -> ((s, dir) =>
-      priorityLinesOf(s, dir, tbl(s, dir, "lineitem"))),
-
-    // Streamed warehouse twin over the accumulated lineitem fact store.
-    "q_priority_lines_streamed" -> ((s, dir) =>
-      priorityLinesOf(s, dir, LineitemStores.streamedLineitem(s, dir))),
-
-    // TPC-H Q15 shape (top supplier): quarter revenue per supplier, the
-    // argmax via the Q11 global-scalar pattern (1-row max relation on a
-    // crossJoin AQE broadcasts; equality in exact DECIMAL so ties —
-    // ALL maximal suppliers — resolve identically on both engines).
-    "q_top_supplier" -> ((s, dir) =>
-      topSupplierOf(s, dir, tbl(s, dir, "lineitem"))),
-
-    // Streamed warehouse twin over the accumulated lineitem fact store.
-    "q_top_supplier_streamed" -> ((s, dir) =>
-      topSupplierOf(s, dir, LineitemStores.streamedLineitem(s, dir))),
-
-    // TPC-H Q17 shape (small-quantity-order revenue): lines whose
-    // quantity falls below 0.2× their part's average — the correlated
-    // per-part scalar decorrelated to aggregate-then-join, with the
-    // threshold compared DIVISION-FREE (qty < s/(5n) ⟺ s > qty·5·n;
-    // the s side exact DECIMAL cast to double, the same IEEE products
-    // both engines — no float-average boundary to diverge on).
-    "q_small_qty_rev" -> ((s, dir) =>
-      smallQtyRevOf(tbl(s, dir, "lineitem"))),
-
-    // Streamed warehouse twin over the accumulated lineitem fact store.
-    "q_small_qty_rev_streamed" -> ((s, dir) =>
-      smallQtyRevOf(LineitemStores.streamedLineitem(s, dir))),
-
     // TPC-H Q2 shape (min-cost regional supplier): the correlated
     // regional-min decorrelated to aggregate-then-equi-join over a
     // fact-derived supply-cost relation — see minCostSuppOf.
     "q_min_cost_supp" -> ((s, dir) => minCostSuppOf(s, dir)),
 
-    // TPC-H Q4 shape (order-priority audit): quarter-filtered orders
-    // EXISTS-gated on a problem lineitem — the classic semi-join count.
-    "q_order_priority" -> ((s, dir) =>
-      orderPriorityOf(s, dir, tbl(s, dir, "lineitem"))),
-
-    // Streamed warehouse twin over the accumulated lineitem fact store.
-    "q_order_priority_streamed" -> ((s, dir) =>
-      orderPriorityOf(s, dir, LineitemStores.streamedLineitem(s, dir))),
-
-    // TPC-H Q6 shape (revenue forecast): the PURE-SCAN aggregate — all
-    // three predicates pushed to the parquet scan (PlanSpec pins
-    // PushedFilters), no join, map-side partials only.
-    "q_forecast_rev" -> ((s, dir) =>
-      forecastRevOf(tbl(s, dir, "lineitem"))),
-
-    // Streamed warehouse twin over the accumulated lineitem fact store.
-    "q_forecast_rev_streamed" -> ((s, dir) =>
-      forecastRevOf(LineitemStores.streamedLineitem(s, dir))),
-
-    // TPC-H Q7 shape (two-nation trade volume): both shipping
-    // directions per year, nation filters collapsing the broadcast dim
-    // sides before the fact joins.
-    "q_nation_volume" -> ((s, dir) =>
-      nationVolumeOf(s, dir, tbl(s, dir, "lineitem"))),
-
-    // Streamed warehouse twin over the accumulated lineitem fact store.
-    "q_nation_volume_streamed" -> ((s, dir) =>
-      nationVolumeOf(s, dir, LineitemStores.streamedLineitem(s, dir))),
-
     // TPC-H Q8 shape (national market share): numerator and denominator
     // in ONE conditional aggregate over the region/type-scoped join.
     "q_market_share" -> ((s, dir) =>
       marketShareOf(s, dir, tbl(s, dir, "lineitem"))),
-
-    // TPC-H Q9 shape (product-type profit): per (nation, ship year)
-    // profit with the retail-linked cost proxy, DECIMAL subtraction.
-    "q_product_profit" -> ((s, dir) =>
-      productProfitOf(s, dir, tbl(s, dir, "lineitem"))),
-
-    // Streamed warehouse twin over the accumulated lineitem fact store.
-    "q_product_profit_streamed" -> ((s, dir) =>
-      productProfitOf(s, dir, LineitemStores.streamedLineitem(s, dir))),
 
     // TPC-H Q16 shape (supplier-count audit): NOT IN complaint
     // exclusion + count-distinct over the pre-distinct pair relation.
@@ -1845,17 +1652,6 @@ object RelationalQueries {
           count(lit(1)).as("n"))
     }),
 
-    // Analytic window over event time: each event with the user's
-    // previous value (lag) and running event number.
-    "q_user_lag" -> ((s, dir) =>
-      userLagOf(graft.sources.Tables.events(s, dir))),
-
-    // Streamed twin over the accumulated event fact store
-    // (facts idempotent by event_id — AnalysisQueries.EventStores) —
-    // same shared body, batch oracle verbatim.
-    "q_user_lag_streamed" -> ((s, dir) =>
-      userLagOf(AnalysisQueries.EventStores.streamedEvents(s, dir))),
-
     // RANGE window frame (value-based, vs the ROWS frames above): per
     // customer, trailing-30-day order revenue. Ordered on epoch MICROS
     // (`unix_micros`) so the frame bound is the same µs arithmetic
@@ -2032,9 +1828,130 @@ object RelationalQueries {
           count(lit(1)).over(w3), 6).as("ma3"),
         sum(col("rev_dec")).over(wc).cast("double").as("cum_revenue"))
     }),
+  ) ++ LineitemStores.twins(
+    // Each body runs over `lineitem` and, as `<name>_streamed`, over the
+    // lineitem fact store.
+    // TPC-H Q1-style pricing summary: the canonical partial-agg benchmark.
+    "q1_agg" -> ((_, _, li) => q1AggOf(li)),
+
+    // TPC-H Q14 shape (promotion effect): monthly revenue share of
+    // promo-type parts — the part dimension joins the fact table on
+    // partkey (dim-sized side left to stats/AQE to broadcast), revenue
+    // in per-row DECIMAL(18,4) exactly like every money aggregate here;
+    // only the final percentage is float. Closes the one fixture table
+    // (part) the surface didn't exercise.
+    "q_promo_share" -> promoShareOf,
+
+    // TPC-H Q18 shape (large-volume customers): orders whose lineitems
+    // sum past a quantity threshold, with customer attribution — the
+    // HAVING-filtered aggregate feeding a join feeding a top-k. The
+    // order-key aggregate runs FIRST (map-side partials absorb the
+    // lineitem mass; the HAVING filter collapses the relation to the
+    // rare heavy orders) so the two joins move only qualifying rows;
+    // TakeOrderedAndProject caps the result without a global sort.
+    "q_big_orders" -> bigOrdersOf,
+
+    // TPC-H Q21 shape (suppliers who kept orders waiting): the hardest
+    // classic join shape — a multi-EXISTS/NOT-EXISTS FACT-FACT
+    // self-join. "Late" here is the lineitem's problem flag
+    // (l_returnflag = 'R'; the synthetic schema carries no
+    // commit/receipt dates) on a finalized ('F') order: a supplier
+    // qualifies per late line iff SOME other supplier shipped on the
+    // same order (left SEMI against a self-projection of lineitem) and
+    // NO other supplier was ALSO late on it (left ANTI against the
+    // late-filtered self-projection). Both branches are EQUI-joins on
+    // the order key with the supplier inequality as a join residual —
+    // they plan as hash/sort-merge semi/anti, NEVER a nested-loop
+    // (PlanSpec pins this); the orders dimension filter collapses the
+    // probe side before either self-join moves data.
+    "q_late_suppliers" -> lateSuppliersOf,
+
+    // TPC-H Q11 shape (important stock): per-part revenue HAVING above
+    // a GLOBAL-scalar threshold — the group-aggregate-vs-global-scalar
+    // plan (a correlated scalar subquery in the classic form; here the
+    // 1-row global relation rides a crossJoin that AQE broadcasts).
+    // The threshold is AVERAGE-relative (value·n_parts > total·1.2) so
+    // it is scale-invariant and EVERY comparison stays in exact
+    // DECIMAL — no division, no rounding on either engine.
+    "q_important_parts" -> importantPartsOf,
+
+    // TPC-H Q19 shape (discounted revenue under a DISJUNCTION of
+    // brand/size/quantity conjunctions): the OR-of-ANDs predicate
+    // spans BOTH join sides, the classic stress of disjunctive
+    // predicate pushdown — Catalyst must extract each side's
+    // derivable disjunction (brand/size to the part scan, the
+    // quantity envelope to the lineitem scan) instead of filtering
+    // the full join product. PlanSpec pins the pushed Or filters.
+    "q_disjunctive_rev" -> disjunctiveRevOf,
+
+    // TPC-H Q20 shape (excess stock): suppliers semi-joined through a
+    // part-name filter and gated by a CORRELATED 0.5·sum(l_quantity)
+    // threshold — stock on hand (returned quantity, the fixture's
+    // availqty analog) must exceed half the demand-window shipments.
+    // The fixture's (partkey, suppkey) pairs are near-singletons (avg
+    // 1.16 lineitems at EVERY SF — measured), which would make a
+    // pair-grain correlated aggregate decorative (q > 0.5·q for a
+    // single returned row), so the correlation grain is the supplier's
+    // PRODUCT LINE (the part-name filter already fixes the product):
+    // ~10 lineitems per cell at every SF, the gate binds for real
+    // (65/100 suppliers at sf0.01). Engine plan: aggregate-then-
+    // equi-semi — the lineitem mass collapses to ≤ |supplier| rows
+    // BEFORE any join, then one LeftSemi into supplier; never a
+    // nested-loop (PlanSpec pins it). The threshold compares in exact
+    // DECIMAL as 2·avail > demand — the Q11 no-division discipline.
+    "q_excess_stock" -> excessStockOf,
+
+    // TPC-H Q10 shape (returned-item reporting): customers who returned
+    // goods in a half-year window, ranked by lost revenue — the
+    // fact-filter → agg → two dimension joins → top-k chain. Revenue in
+    // per-row DECIMAL(18,4); the order key is the (double-cast revenue,
+    // custkey) pair, identical text both engines.
+    "q_returned_top" -> returnedTopOf,
+
+    // TPC-H Q12 shape (shipping-priority audit): per problem-flag class
+    // ('A'/'R' — the schema's shipmode analog), how many lines in the
+    // ship window belong to HIGH-priority orders vs not — the
+    // fact ⋈ dim conditional-count aggregate.
+    "q_priority_lines" -> priorityLinesOf,
+
+    // TPC-H Q15 shape (top supplier): quarter revenue per supplier, the
+    // argmax via the Q11 global-scalar pattern (1-row max relation on a
+    // crossJoin AQE broadcasts; equality in exact DECIMAL so ties —
+    // ALL maximal suppliers — resolve identically on both engines).
+    "q_top_supplier" -> topSupplierOf,
+
+    // TPC-H Q17 shape (small-quantity-order revenue): lines whose
+    // quantity falls below 0.2× their part's average — the correlated
+    // per-part scalar decorrelated to aggregate-then-join, with the
+    // threshold compared DIVISION-FREE (qty < s/(5n) ⟺ s > qty·5·n;
+    // the s side exact DECIMAL cast to double, the same IEEE products
+    // both engines — no float-average boundary to diverge on).
+    "q_small_qty_rev" -> ((_, _, li) => smallQtyRevOf(li)),
+
+    // TPC-H Q4 shape (order-priority audit): quarter-filtered orders
+    // EXISTS-gated on a problem lineitem — the classic semi-join count.
+    "q_order_priority" -> orderPriorityOf,
+
+    // TPC-H Q6 shape (revenue forecast): the PURE-SCAN aggregate — all
+    // three predicates pushed to the parquet scan (PlanSpec pins
+    // PushedFilters), no join, map-side partials only.
+    "q_forecast_rev" -> ((_, _, li) => forecastRevOf(li)),
+
+    // TPC-H Q7 shape (two-nation trade volume): both shipping
+    // directions per year, nation filters collapsing the broadcast dim
+    // sides before the fact joins.
+    "q_nation_volume" -> nationVolumeOf,
+
+    // TPC-H Q9 shape (product-type profit): per (nation, ship year)
+    // profit with the retail-linked cost proxy, DECIMAL subtraction.
+    "q_product_profit" -> productProfitOf,
+  ) ++ AnalysisQueries.EventStores.twins(
+    // Analytic window over event time: each event with the user's
+    // previous value (lag) and running event number.
+    "q_user_lag" -> ((_, _, e) => userLagOf(e)),
   )
 
-  private val oraclesBase: Map[String, String] = Map(
+  val oracles: Map[String, String] = Map(
     // skew stats: exact integer inputs, identical (max_f × ndv)/n order
     "q_skew_report" ->
       """WITH s AS (
@@ -2509,10 +2426,6 @@ object RelationalQueries {
          |$rowSql""".stripMargin
     },
 
-    // streamed twin: identical SQL — the accumulated delta store must
-    // serve the batch fixpoint
-    "q_pagerank_streamed" -> pagerankOracleSql,
-
     "q_pagerank" -> pagerankOracleSql,
 
     // BFS levels: UNION-dedup recursion with the same ≤6-hop horizon
@@ -2520,12 +2433,8 @@ object RelationalQueries {
     // shortest hops if ≤ 6, absent otherwise"
     "q_bfs" -> bfsOracleSql,
     "q_sssp" -> ssspOracleSql,
-    // streamed twin: identical SQL (the accumulated delta store's edge
-    // SET equals the batch relation's)
-    "q_bfs_streamed" -> bfsOracleSql,
 
     "q_hits" -> hitsOracleSql,
-    "q_hits_streamed" -> hitsOracleSql,
 
     "q_ppr" ->
       s"""WITH e0 AS (
@@ -2757,7 +2666,6 @@ object RelationalQueries {
         |GROUP BY 1, 2""".stripMargin,
 
     "q_user_lag" -> userLagOracleSql,
-    "q_user_lag_streamed" -> userLagOracleSql,
 
     // epoch-µs RANGE bound ≡ INTERVAL 30 DAY on the µs-resolution
     // timestamps (both are exact 30·86400·10^6 µs arithmetic — no tz/DST
@@ -2929,24 +2837,4 @@ object RelationalQueries {
         |       wc AS (PARTITION BY n_name ORDER BY m
         |              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)""".stripMargin,
   )
-
-  // the streamed warehouse twins hash-check under the batch mirrors
-  // verbatim — the accumulated fact relation's exact-once contract
-  val oracles: Map[String, String] = oraclesBase ++ Map(
-    "q1_agg_streamed" -> "q1_agg",
-    "q_big_orders_streamed" -> "q_big_orders",
-    "q_late_suppliers_streamed" -> "q_late_suppliers",
-    "q_excess_stock_streamed" -> "q_excess_stock",
-    "q_returned_top_streamed" -> "q_returned_top",
-    "q_promo_share_streamed" -> "q_promo_share",
-    "q_important_parts_streamed" -> "q_important_parts",
-    "q_disjunctive_rev_streamed" -> "q_disjunctive_rev",
-    "q_priority_lines_streamed" -> "q_priority_lines",
-    "q_top_supplier_streamed" -> "q_top_supplier",
-    "q_small_qty_rev_streamed" -> "q_small_qty_rev",
-    "q_order_priority_streamed" -> "q_order_priority",
-    "q_forecast_rev_streamed" -> "q_forecast_rev",
-    "q_nation_volume_streamed" -> "q_nation_volume",
-    "q_product_profit_streamed" -> "q_product_profit",
-  ).map { case (twin, base) => twin -> oraclesBase(base) }
 }

@@ -1057,15 +1057,10 @@ object SimilarityQueries {
   val oracles: Map[String, String] = Map(
     "q_ann_eval" -> annEvalSql,
     "q_embed_pca" -> pcaSql,
-    "q_embed_pca_streamed" -> pcaSql,
     "q_embed_pca_k" -> pcaKSql,
-    "q_embed_pca_k_streamed" -> pcaKSql,
     "q_whiten" -> whitenSql,
-    "q_whiten_streamed" -> whitenSql,
     "q_semdedup_whitened" -> semdedupWhitenedSql,
-    "q_semdedup_whitened_streamed" -> semdedupWhitenedSql,
     "q_margin_pairs" -> marginPairsSql,
-    "q_margin_pairs_streamed" -> marginPairsSql,
 
     "q_knn_join" ->
       s"""$prepCte, qs AS (
@@ -1220,10 +1215,6 @@ object SimilarityQueries {
     // SemDeDup mirror: same trained assignment as q_ann_ivf_trained,
     // then the in-cell smaller-id pair pass with 6-dp cosines
     "q_semdedup" -> semdedupSql,
-    // streamed twin: the store's canonical vectors equal the table, so
-    // the identical SQL checks the streamed pipeline end to end
-    "q_semdedup_streamed" -> semdedupSql,
-    "q_embed_dup_streamed" -> embedDupSql,
 
     "q_embed_dup" -> embedDupSql,
 

@@ -731,17 +731,6 @@ object TextQueries {
     "q_term_lookup" ->
       s"""$termsCte SELECT doc_id, $urlSql AS url FROM terms WHERE term = 'spark'""",
 
-    // streamed-index twin: identical SQL — the accumulated+compacted
-    // streamed table must equal the batch posting relation
-    "q_term_lookup_streamed" ->
-      s"""$termsCte SELECT doc_id, $urlSql AS url FROM terms WHERE term = 'spark'""",
-
-    "q_index_stats_streamed" ->
-      s"""$termsCte SELECT term, count(*) AS df, min(doc_id) AS min_doc, max(doc_id) AS max_doc,
-         |  array_to_string(list_transform(list_slice(list(doc_id ORDER BY doc_id), 1, 100),
-         |                  d -> CAST(d AS VARCHAR)), ',') AS postings_csv
-         |FROM terms GROUP BY term""".stripMargin,
-
     "q_doc_freq" ->
       s"""$termsCte SELECT term, count(*) AS df FROM terms GROUP BY term""",
 
@@ -757,10 +746,6 @@ object TextQueries {
          |  array_to_string(list_transform(list_slice(list(doc_id ORDER BY doc_id), 1, 100),
          |                  d -> CAST(d AS VARCHAR)), ',') AS postings_csv
          |FROM terms GROUP BY term""".stripMargin,
-
-    // streamed twin: identical SQL — the accumulated pair store must
-    // equal the batch ED-1 pair relation
-    "q_fuzzy_urls_streamed" -> fuzzyUrlsOracleSql,
 
     // mirror of FuzzyJoin.ed1Pairs: variants = [url itself] ++ all
     // 1-deletions — the identity entry is what lets length-(n, n+1)
@@ -840,7 +825,6 @@ object TextQueries {
     // doc-graph PageRank: the fuzzy-pair CTEs verbatim, then the shared
     // iteration SQL (RelationalQueries.prIterSql — n computed in SQL)
     "q_pagerank_docs" -> pagerankDocsOracleSql,
-    "q_pagerank_docs_streamed" -> pagerankDocsOracleSql,
 
     // doc-graph HITS: the fuzzy-pair CTEs verbatim, then the shared
     // HITS half-step CTEs (RelationalQueries.hitsIterSql)
@@ -902,7 +886,6 @@ object TextQueries {
     // TextRank: ordered stopword-filtered token list → adjacent pairs →
     // symmetric count-weighted edges → the shared PR iteration CTEs
     "q_textrank" -> textrankOracleSql,
-    "q_textrank_streamed" -> textrankOracleSql,
 
     "q_prefix_terms" ->
       s"""$termsCte SELECT term, count(*) AS df FROM terms
@@ -1103,9 +1086,6 @@ object TextQueries {
          |FROM tf JOIN df USING (term) CROSS JOIN n""".stripMargin,
 
     "q_top_terms_per_source" -> topTermsOracleSql,
-    // streamed twin: identical SQL — the accumulated df delta store
-    // must equal the batch document-frequency relation
-    "q_top_terms_per_source_streamed" -> topTermsOracleSql,
   )
 
   private lazy val topTermsOracleSql: String =

@@ -140,16 +140,13 @@ object Sinks {
       .withColumn("shard",
         coalesce(expr(s"first_chunk DIV $chunksPerShard"), lit(-1L)))
     writePartitioned(withShard, path, "shard", "doc_id")
-    val spark = docs.sparkSession
-    val manifest = spark.read.parquet(path)
+    val manifest = docs.sparkSession.read.parquet(path)
       .groupBy("shard").agg(
         count(lit(1)).as("n_docs"),
         sum(col("n_tok")).as("n_tokens"),
         min(col("first_chunk")).as("first_chunk"),
         max(col("last_chunk")).as("last_chunk"))
-    manifest.coalesce(1).write.mode(SaveMode.Overwrite)
-      .parquet(s"$path/_graft_manifest")
-    spark.read.parquet(s"$path/_graft_manifest")
+    persistManifest(manifest, path)
   }
 
   /** TRAINING-SHARD EXPORT, md5-rank edition — `writeTrainingShards`'
@@ -187,18 +184,34 @@ object Sinks {
     // rows sort by start_tok within shards so a loader streams each
     // shard in global (shuffled) offset order
     writePartitioned(withShard, path, "shard_id", "start_tok")
-    val spark = docs.sparkSession
     val fp = conv(substring(md5(concat(col("doc_id").cast("string"), lit(":"),
         col("n_tok").cast("string"))), 1, 12), 16, 10)
       .cast(org.apache.spark.sql.types.DecimalType(38, 0))
-    val manifest = spark.read.parquet(path)
+    val manifest = docs.sparkSession.read.parquet(path)
       .groupBy(col("shard_id").cast("long").as("shard_id"))
       .agg(count(lit(1)).as("n_docs"),
         sum(col("n_tok")).as("n_tokens"),
         (sum(fp) % lit(2305843009213693951L)).cast("long").as("digest"))
-    manifest.coalesce(1).write.mode(SaveMode.Overwrite)
-      .parquet(s"$path/_graft_manifest")
-    spark.read.parquet(s"$path/_graft_manifest")
+    persistManifest(manifest, path)
+  }
+
+  /** Where a shard export at `path` keeps its manifest: an
+    * underscore-prefixed directory, which parquet scans of `path` skip.
+    */
+  private def manifestDir(path: String): String = s"$path/_graft_manifest"
+
+  /** The manifest's part files, the path to read it by: for a read whose
+    * root is underscore-prefixed, Spark's `DataSource` logs "All paths
+    * were ignored", although it reads the files.
+    */
+  def manifestFiles(path: String): String = s"${manifestDir(path)}/*.parquet"
+
+  /** Writes `manifest` as one file under `path`'s manifest directory and
+    * returns it read back from there.
+    */
+  private def persistManifest(manifest: DataFrame, path: String): DataFrame = {
+    manifest.coalesce(1).write.mode(SaveMode.Overwrite).parquet(manifestDir(path))
+    manifest.sparkSession.read.parquet(manifestFiles(path))
   }
 
   /** K1 raw mapper envelope (reference `mapper/src/processor.py:58-68`):

@@ -93,6 +93,22 @@ class DedupSpec extends AnyFunSuite {
     assert(got.count() === 0)
   }
 
+  test("clusters releases its edge cache when the pair relation fails") {
+    // the pairs throw while `sym.count()` materializes the persisted edge
+    // relation; the persist is a cache entry of the shared state until it
+    // is unpersisted (`numCachedEntries` is `private[sql]` in Scala,
+    // public in bytecode)
+    val cache = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager
+    def cached = cache.getClass.getMethod("numCachedEntries").invoke(cache)
+    val before = cached
+    val bad = spark.range(2).select(col("id").as("doc_a"),
+      raise_error(lit("graft: bad pair")).cast("long").as("doc_b"))
+    val e = intercept[Exception](Dedup.clusters(bad))
+    assert(e.getMessage.contains("graft: bad pair"), e.getMessage)
+    assert(cached === before)
+  }
+
   test("clusters: long chain converges (pointer jumping) to one component") {
     // a 16-node path graph — diameter 15; plain propagation needs ~15
     // rounds, pointer jumping a handful — either way the answer is one

@@ -16,6 +16,33 @@ class EngineSpec extends AnyFunSuite {
     assert(missing.isEmpty, s"queries without oracle: $missing")
   }
 
+  test("registry: disjoint modules, 309 names, 89 twins of registered batch queries") {
+    import graft.queries._
+    val modules = Seq(
+      "TextQueries" -> TextQueries.queries,
+      "RelationalQueries" -> RelationalQueries.queries,
+      "RelationalQueries.queriesExtra" -> RelationalQueries.queriesExtra,
+      "DedupQueries" -> DedupQueries.queries,
+      "SimilarityQueries" -> SimilarityQueries.queries,
+      "AnalysisQueries" -> AnalysisQueries.queries)
+    // `++` keeps the last of two equal names: an overlap drops a query silently
+    for (Seq((a, qa), (b, qb)) <- modules.combinations(2)) {
+      val both = qa.keySet & qb.keySet
+      assert(both.isEmpty, s"$a and $b both register $both")
+    }
+    val names = SparkEntry.queries.keySet
+    val twins = names.filter(_.endsWith(SparkEntry.Streamed))
+    assert(names.size === 309)
+    assert(twins.size === 89)
+    val orphans = twins.filterNot(t => names(t.stripSuffix(SparkEntry.Streamed)))
+    assert(orphans.isEmpty, s"twins without a batch query: $orphans")
+    // a twin's oracle is derived from its batch query's, never declared
+    val declared = Seq(TextQueries.oracles, RelationalQueries.oracles,
+      DedupQueries.oracles, SimilarityQueries.oracles, AnalysisQueries.oracles)
+      .flatMap(_.keys).filter(_.endsWith(SparkEntry.Streamed))
+    assert(declared.isEmpty, s"declared twin oracles: $declared")
+  }
+
   test("unknown pipeline name fails fast with the catalog in the message") {
     val e = intercept[NoSuchElementException](Engine.pipeline("q_nope"))
     assert(e.getMessage.contains("q_nope"))

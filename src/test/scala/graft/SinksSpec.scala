@@ -220,4 +220,20 @@ class SinksSpec extends AnyFunSuite {
     assert(!back.columns.contains("n_docs"))
     assert(spark.read.parquet(s"$path/_graft_manifest").count() === manifest.count())
   }
+
+  test("shard exports read their manifest back without Spark's ignored-path WARN") {
+    // DataSource logs "All paths were ignored" for a read whose root is
+    // the underscore-named manifest directory, although it reads it
+    val root = Files.createTempDirectory("graft_manifest_warn").toString
+    val (_, events) = LogCapture.warnings {
+      Sinks.writeShards(docs, s"$root/md5", budget = 4L).collect()
+      Sinks.writeTrainingShards(docs, s"$root/packed", budget = 4L).collect()
+      // a new session resolves the served manifest again, even when an
+      // earlier suite already built the export in this process
+      SparkEntry.queries("q_export_manifest")(spark.newSession(), "/root/testdata/sf0.001")
+        .collect()
+    }
+    val ignored = events.filter(_.getMessage.getFormattedMessage.contains("All paths were ignored"))
+    assert(ignored.isEmpty, LogCapture.show(ignored))
+  }
 }

@@ -390,40 +390,17 @@ class StreamingSpec extends AnyFunSuite {
   test("a first appendBatch into a fresh path logs no FileNotFoundException") {
     // registering the table over a missing directory made Spark log a
     // FileNotFoundException stack trace at WARN, although nothing failed
-    import org.apache.logging.log4j.{Level, LogManager}
-    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
-    import org.apache.logging.log4j.core.appender.AbstractAppender
-    import org.apache.logging.log4j.core.config.Property
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft_fresh_append").toString
     val batch = Seq(("cat", 1L, "u1"), ("dog", 2L, "u2")).toDF("term", "doc_id", "url")
-    val events = new java.util.concurrent.ConcurrentLinkedQueue[LogEvent]()
-    val capture = new AbstractAppender("graft-capture-" + System.nanoTime(), null, null, true,
-        Property.EMPTY_ARRAY) {
-      override def append(e: LogEvent): Unit = events.add(e.toImmutable): Unit
-    }
-    capture.start()
-    val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
-    val root = ctx.getConfiguration.getRootLogger
-    val level = root.getLevel
-    root.addAppender(capture, Level.WARN, null)
-    if (level.isMoreSpecificThan(Level.ERROR)) root.setLevel(Level.WARN)
-    ctx.updateLoggers()
-    try assert(graft.streaming.StreamingIndex
+    val (appended, events) = LogCapture.warnings(graft.streaming.StreamingIndex
       .appendBatch(batch, 0L, "t_fresh_append_idx", s"$dir/idx", buckets = 4))
-    finally {
-      root.removeAppender(capture.getName)
-      root.setLevel(level)
-      ctx.updateLoggers()
-      capture.stop()
-    }
+    assert(appended)
     def notFound(t: Throwable): Boolean =
       t != null && (t.isInstanceOf[java.io.FileNotFoundException] || notFound(t.getCause))
-    import scala.jdk.CollectionConverters._
-    val hits = events.asScala.filter(e => notFound(e.getThrown) ||
+    val hits = events.filter(e => notFound(e.getThrown) ||
       e.getMessage.getFormattedMessage.contains("FileNotFoundException"))
-    assert(hits.isEmpty,
-      hits.map(e => s"${e.getLoggerName}: ${e.getMessage.getFormattedMessage}").mkString("\n"))
+    assert(hits.isEmpty, LogCapture.show(hits))
     assert(spark.table("t_fresh_append_idx").count() === 2)
   }
 
