@@ -214,8 +214,10 @@ object Dedup {
     * family h_k(v) = (a_k·v + b_k) mod P. a_k < 2^20 keeps a·v+b < 2^52
     * for the 32-bit base values — no overflow in any engine's BIGINT.
     * Deterministic so the DuckDB oracle embeds the identical literals.
+    * The modulus is a constant, so `minhash_sigs`' kernel divides by a
+    * literal.
     */
-  private[graft] val HashModulus: Long = 2147483647L
+  private[graft] final val HashModulus = 2147483647L
   private[graft] def hashParams(k: Int): (Long, Long) = {
     val a = ((2654435761L * (k + 1)) % 1048573L) | 1L
     val b = (40503L * (k + 7)) % 65521L

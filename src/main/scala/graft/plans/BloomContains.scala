@@ -63,14 +63,12 @@ case class BloomContains(left: Expression, right: Expression) extends BinaryExpr
   override def nullSafeEval(f: Any, v: Any): Any =
     filter.mightContainBinary(v.asInstanceOf[UTF8String].getBytes)
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    // the deserialized filter object itself is the reference — executors
-    // get it via the references array, not a per-row deserialization
-    val ref = ctx.addReferenceObj("graftBloomFilter", filter,
-      classOf[BloomFilter].getName)
-    nullSafeCodeGen(ctx, ev, (_, v) =>
-      s"${ev.value} = $ref.mightContainBinary($v.getBytes());")
-  }
+  // the deserialized filter object itself is the kernel: executors get
+  // it through the references array, not a per-row deserialization
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (_, v) => KernelCall(ctx, ev, classOf[BloomFilter],
+      s"mightContainBinary($v.getBytes())", KernelCall.NeverNull,
+      init = ctx.addReferenceObj("graftBloomFilter", filter, classOf[BloomFilter].getName)))
 
   override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)

@@ -68,30 +68,14 @@ case class ClfStats(first: Expression, second: Expression, third: Expression)
         s"${third.dataType.simpleString})")
 
   override def nullSafeEval(toksAny: Any, stopsAny: Any, distAny: Any): Any =
-    evalKernel.get().compute(
-      toksAny.asInstanceOf[ArrayData], stopsAny.asInstanceOf[ArrayData],
-      distAny.asInstanceOf[Boolean])
+    kernel.get().compute(toksAny.asInstanceOf[ArrayData],
+      stopsAny.asInstanceOf[ArrayData], distAny.asInstanceOf[Boolean])
 
-  @transient private lazy val evalKernel = new ThreadLocal[ClfStatsKernel] {
-    override def initialValue(): ClfStatsKernel = new ClfStatsKernel
-  }
+  @transient private lazy val kernel = ThreadLocal.withInitial(() => new ClfStatsKernel)
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val kernel = ctx.addMutableState("graft.plans.ClfStatsKernel", "graftClfKernel",
-      v => s"$v = new graft.plans.ClfStatsKernel();")
-    // CONSTRAINT (Md5Prefix32): no emitted line may BEGIN with '|'.
-    nullSafeCodeGen(ctx, ev, (toks, stops, dist) => {
-      val tmp = ctx.freshName("clfStats")
-      s"""
-         |InternalRow $tmp = $kernel.compute($toks, $stops, $dist);
-         |if ($tmp == null) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  ${ev.value} = $tmp;
-         |}
-       """.stripMargin
-    })
-  }
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (toks, stops, dist) => KernelCall(ctx, ev,
+      classOf[ClfStatsKernel], s"compute($toks, $stops, $dist)", KernelCall.IfNullRef))
 
   override protected def withNewChildrenInternal(newFirst: Expression,
       newSecond: Expression, newThird: Expression): Expression =
@@ -106,12 +90,7 @@ case class ClfStats(first: Expression, second: Expression, third: Expression)
 final class ClfStatsKernel {
   private var stopSet: java.util.HashSet[UTF8String] = null
 
-  /** `withDistinct = false` skips the sort-and-count-runs pass and
-    * returns 0 for both distinct cells — the ratio-only consumers
-    * (stopword ratio, mean token length, the quality bands) never read
-    * them, and the per-row sort was the kernel's dominant cost there.
-    */
-  def compute(arr: ArrayData, stops: ArrayData, withDistinct: Boolean): InternalRow = {
+  private def stopSetOf(stops: ArrayData): java.util.HashSet[UTF8String] = {
     if (stopSet == null) {
       stopSet = new java.util.HashSet[UTF8String]()
       var i = 0
@@ -120,6 +99,16 @@ final class ClfStatsKernel {
         i += 1
       }
     }
+    stopSet
+  }
+
+  /** `withDistinct = false` skips the sort-and-count-runs pass and
+    * returns 0 for both distinct cells — the ratio-only consumers
+    * (stopword ratio, mean token length, the quality bands) never read
+    * them, and the per-row sort was the kernel's dominant cost there.
+    */
+  def compute(arr: ArrayData, stops: ArrayData, withDistinct: Boolean): InternalRow = {
+    val stopSet = stopSetOf(stops)
     val len = arr.numElements()
     var nStop = 0
     var sumLen = 0L
@@ -140,15 +129,9 @@ final class ClfStatsKernel {
         i += 1
       }
     } else {
-      val toks = new Array[UTF8String](len)
+      val toks = RunsKernel.sorted(arr)
+      if (toks == null) return null
       var i = 0
-      while (i < len) {
-        if (arr.isNullAt(i)) return null
-        toks(i) = arr.getUTF8String(i)
-        i += 1
-      }
-      java.util.Arrays.sort(toks.asInstanceOf[Array[AnyRef]])
-      i = 0
       while (i < len) {
         val t = toks(i)
         var j = i + 1
@@ -174,14 +157,7 @@ final class ClfStatsKernel {
     * not-true semantics).
     */
   def strip(arr: ArrayData, stops: ArrayData): org.apache.spark.sql.catalyst.util.GenericArrayData = {
-    if (stopSet == null) {
-      stopSet = new java.util.HashSet[UTF8String]()
-      var i = 0
-      while (i < stops.numElements()) {
-        if (!stops.isNullAt(i)) stopSet.add(stops.getUTF8String(i).clone()): Unit
-        i += 1
-      }
-    }
+    val stopSet = stopSetOf(stops)
     val len = arr.numElements()
     val out = new Array[AnyRef](len)
     var n = 0
@@ -224,21 +200,13 @@ case class StripStops(left: Expression, right: Expression)
         s"(${left.dataType.simpleString}, ${right.dataType.simpleString})")
 
   override def nullSafeEval(toksAny: Any, stopsAny: Any): Any =
-    evalKernel.get().strip(
-      toksAny.asInstanceOf[ArrayData], stopsAny.asInstanceOf[ArrayData])
+    kernel.get().strip(toksAny.asInstanceOf[ArrayData], stopsAny.asInstanceOf[ArrayData])
 
-  @transient private lazy val evalKernel = new ThreadLocal[ClfStatsKernel] {
-    override def initialValue(): ClfStatsKernel = new ClfStatsKernel
-  }
+  @transient private lazy val kernel = ThreadLocal.withInitial(() => new ClfStatsKernel)
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val kernel = ctx.addMutableState("graft.plans.ClfStatsKernel", "graftClfKernel",
-      v => s"$v = new graft.plans.ClfStatsKernel();")
-    // CONSTRAINT (Md5Prefix32): no emitted line may BEGIN with '|'.
-    nullSafeCodeGen(ctx, ev, (toks, stops) => {
-      s"${ev.value} = $kernel.strip($toks, $stops);"
-    })
-  }
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (toks, stops) => KernelCall(ctx, ev, classOf[ClfStatsKernel],
+      s"strip($toks, $stops)", KernelCall.NeverNull))
 
   override protected def withNewChildrenInternal(newLeft: Expression,
       newRight: Expression): Expression =
@@ -251,16 +219,6 @@ object StripStops {
     call_function("strip_stops", toks,
       org.apache.spark.sql.functions.array(
         stopwords.map(org.apache.spark.sql.functions.lit): _*))
-
-  private[plans] val descriptor = (
-    org.apache.spark.sql.catalyst.FunctionIdentifier("strip_stops"),
-    new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-      classOf[StripStops].getName, "strip_stops"),
-    (children: Seq[Expression]) => {
-      require(children.size == 2,
-        "strip_stops(tokens, stopwords) takes exactly two arguments")
-      StripStops(children.head, children(1))
-    })
 }
 
 object ClfStats {
@@ -274,14 +232,4 @@ object ClfStats {
       org.apache.spark.sql.functions.array(
         stopwords.map(org.apache.spark.sql.functions.lit): _*),
       org.apache.spark.sql.functions.lit(withDistinct))
-
-  private[plans] val descriptor = (
-    org.apache.spark.sql.catalyst.FunctionIdentifier("clf_stats"),
-    new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-      classOf[ClfStats].getName, "clf_stats"),
-    (children: Seq[Expression]) => {
-      require(children.size == 3,
-        "clf_stats(tokens, stopwords, with_distinct) takes exactly three arguments")
-      ClfStats(children.head, children(1), children(2))
-    })
 }

@@ -17,8 +17,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
   * comparison pays ~|dims| interpreted expression-node evaluations plus
   * a zipped intermediate array. This is the inner loop of every ANN /
   * embedding-dedup candidate pair, exactly where interpreted eval
-  * hurts most. One codegen'd fused multiply-add loop, no intermediate
-  * array.
+  * hurts most. One compiled multiply-add loop ([[DotF64Kernel]]), no
+  * intermediate array.
   *
   * Accumulation order is left-to-right in double — BIT-IDENTICAL to the
   * retained column form (`Similarity.dotViaColumns`, property-asserted)
@@ -53,43 +53,16 @@ case class DotF64(left: Expression, right: Expression) extends BinaryExpression 
         s"(${left.dataType.simpleString}, ${right.dataType.simpleString})")
 
   override def nullSafeEval(l: Any, r: Any): Any = {
-    val a = l.asInstanceOf[ArrayData]
-    val b = r.asInstanceOf[ArrayData]
-    val n = a.numElements()
-    if (b.numElements() != n) return null
-    var acc = 0.0
-    var i = 0
-    while (i < n) {
-      if (a.isNullAt(i) || b.isNullAt(i)) return null
-      acc += a.getDouble(i) * b.getDouble(i)
-      i += 1
-    }
-    acc
+    val k = kernel.get()
+    val d = k.dot(l.asInstanceOf[ArrayData], r.asInstanceOf[ArrayData])
+    if (k.wasNull) null else d
   }
 
-  // CONSTRAINT: no generated line may BEGIN with '|' — enclosing Spark
-  // templates stripMargin AFTER splicing (see Md5Prefix32 / CodegenGuardSpec).
+  @transient private lazy val kernel = ThreadLocal.withInitial(() => new DotF64Kernel)
+
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val acc = ctx.freshName("acc")
-      val bad = ctx.freshName("bad")
-      s"""
-         |int $n = $a.numElements();
-         |boolean $bad = ($b.numElements() != $n);
-         |double $acc = 0.0;
-         |for (int $i = 0; $i < $n && !$bad; $i++) {
-         |  if ($a.isNullAt($i) || $b.isNullAt($i)) { $bad = true; break; }
-         |  $acc += $a.getDouble($i) * $b.getDouble($i);
-         |}
-         |if ($bad) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  ${ev.value} = $acc;
-         |}
-       """.stripMargin
-    })
+    nullSafeCodeGen(ctx, ev, (a, b) => KernelCall(ctx, ev, classOf[DotF64Kernel],
+      s"dot($a, $b)", KernelCall.IfFlagged))
 
   override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)
@@ -98,4 +71,30 @@ case class DotF64(left: Expression, right: Expression) extends BinaryExpression 
 object DotF64 {
   /** Column API. Requires `GraftExtensions` installed in the session. */
   def dotF64(a: Column, b: Column): Column = call_function("dot_f64", a, b)
+}
+
+/** The `dot_f64` row kernel. NOT thread-safe: `wasNull` reports the
+  * last call.
+  */
+final class DotF64Kernel {
+  /** True when the last `dot` was a null result. */
+  var wasNull = false
+
+  /** Left-to-right dot product; a null result on a length mismatch or a
+    * null element.
+    */
+  def dot(a: ArrayData, b: ArrayData): Double = {
+    wasNull = true
+    val n = a.numElements()
+    if (b.numElements() != n) return 0.0
+    var acc = 0.0
+    var i = 0
+    while (i < n) {
+      if (a.isNullAt(i) || b.isNullAt(i)) return 0.0
+      acc += a.getDouble(i) * b.getDouble(i)
+      i += 1
+    }
+    wasNull = false
+    acc
+  }
 }

@@ -1,13 +1,11 @@
 package graft.plans
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{DataType, LongType, StructField, StructType}
-import org.apache.spark.unsafe.types.UTF8String
 
 /** Native Catalyst expression: per-document token-distribution statistics
   * for the Shannon-entropy quality signal — the lexical-diversity gate a
@@ -31,9 +29,10 @@ import org.apache.spark.unsafe.types.UTF8String
   *     (half away from zero) agree on every carry.
   *
   * The input is sorted INTERNALLY (compiled `Arrays.sort` over
-  * `UTF8String`) so equal tokens form runs — the `RunStats` design: a
-  * hash-map histogram per row allocates per token, and the `array_sort`
-  * column route is a CodegenFallback comparator lambda in Spark 4.x.
+  * `UTF8String`, [[RunsKernel]]) so equal tokens form runs — the
+  * `RunStats` design: a hash-map histogram per row allocates per token,
+  * and the `array_sort` column route is a CodegenFallback comparator
+  * lambda in Spark 4.x.
   *
   * Semantics: empty array → (0, 0, 0); null input → null; a null
   * ELEMENT → null result (`Text.tokenize` never produces one).
@@ -57,71 +56,14 @@ case class EntropyStats(child: Expression) extends UnaryExpression {
         s"$prettyName requires array<string>, got ${other.simpleString}")
     }
 
-  override def nullSafeEval(arrAny: Any): Any = {
-    val arr = arrAny.asInstanceOf[ArrayData]
-    val len = arr.numElements()
-    val toks = new Array[UTF8String](len)
-    var i = 0
-    while (i < len) {
-      if (arr.isNullAt(i)) return null
-      toks(i) = arr.getUTF8String(i)
-      i += 1
-    }
-    java.util.Arrays.sort(toks.asInstanceOf[Array[AnyRef]])
-    var nTerms = 0L
-    var sMicros = 0L
-    i = 0
-    while (i < len) {
-      val t = toks(i)
-      var j = i + 1
-      while (j < len && t.equals(toks(j))) j += 1
-      val run = (j - i).toLong
-      nTerms += 1L
-      sMicros += run * Math.round(Math.log(run.toDouble) * 1000000.0)
-      i = j
-    }
-    InternalRow(len.toLong, nTerms, sMicros)
-  }
+  override def nullSafeEval(arrAny: Any): Any =
+    kernel.get().entropyStats(arrAny.asInstanceOf[ArrayData])
+
+  @transient private lazy val kernel = ThreadLocal.withInitial(() => new RunsKernel)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, arr => {
-      val len = ctx.freshName("len")
-      val toks = ctx.freshName("toks")
-      val nTerms = ctx.freshName("nTerms")
-      val sMicros = ctx.freshName("sMicros")
-      val i = ctx.freshName("i")
-      val j = ctx.freshName("j")
-      val run = ctx.freshName("run")
-      val hadNull = ctx.freshName("hadNull")
-      val utf8 = classOf[UTF8String].getName
-      s"""
-         |int $len = $arr.numElements();
-         |$utf8[] $toks = new $utf8[$len];
-         |boolean $hadNull = false;
-         |for (int $i = 0; $i < $len; $i++) {
-         |  if ($arr.isNullAt($i)) { $hadNull = true; break; }
-         |  $toks[$i] = $arr.getUTF8String($i);
-         |}
-         |if ($hadNull) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  java.util.Arrays.sort((Object[]) $toks);
-         |  long $nTerms = 0L;
-         |  long $sMicros = 0L;
-         |  int $i = 0;
-         |  while ($i < $len) {
-         |    int $j = $i + 1;
-         |    while ($j < $len && $toks[$i].equals($toks[$j])) $j++;
-         |    long $run = (long) ($j - $i);
-         |    $nTerms += 1L;
-         |    $sMicros += $run * Math.round(Math.log((double) $run) * 1000000.0);
-         |    $i = $j;
-         |  }
-         |  ${ev.value} = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-         |      new Object[]{(long) $len, $nTerms, $sMicros});
-         |}
-       """.stripMargin
-    })
+    nullSafeCodeGen(ctx, ev, arr => KernelCall(ctx, ev, classOf[RunsKernel],
+      s"entropyStats($arr)", KernelCall.IfNullRef))
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)

@@ -179,14 +179,4 @@ object GradSum128 {
   /** Column API. Requires `GraftExtensions` installed in the session. */
   def gradSum128(resid: Column, feats: Column, dims: Int): Column =
     call_function("grad_sum128", resid, feats, lit(dims))
-
-  private[plans] val descriptor = (
-    org.apache.spark.sql.catalyst.FunctionIdentifier("grad_sum128"),
-    new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-      classOf[GradSum128].getName, "grad_sum128"),
-    (children: Seq[Expression]) => {
-      require(children.size == 3,
-        "grad_sum128(resid, feats, dims) takes exactly three arguments")
-      GradSum128(children.head, children(1), children(2))
-    })
 }

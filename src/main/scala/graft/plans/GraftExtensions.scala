@@ -1,125 +1,76 @@
 package graft.plans
 
+import scala.reflect.ClassTag
+
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
 /** Engine Catalyst extensions, installed at session build via
   * `spark.sql.extensions=graft.plans.GraftExtensions` (`EngineSession`).
-  * Registers the native expressions for both the SQL and Column
-  * surfaces, and the `PrunedBucketScan` query-stage preparation rule.
+  * Registers the native expressions of [[GraftExtensions.functions]] for
+  * both the SQL and Column surfaces, and the `PrunedBucketScan`
+  * query-stage preparation rule.
+  *
+  * The kernel contract of the native scalar expressions:
+  *   - One algorithm. Each expression's row algorithm is written once,
+  *     as a method of a Scala kernel class. `nullSafeEval` and the
+  *     generated code both call it; the generated code is the one
+  *     template of [[KernelCall]], which holds no loop or arithmetic.
+  *   - State. A kernel instance lives in codegen mutable state, one per
+  *     task, and in a `ThreadLocal` on the interpreted path, so a kernel
+  *     may keep state across rows (a `MessageDigest`, the gram memo, the
+  *     stopword set, the MinHash family) and need not be thread-safe.
+  *   - Nulls. A kernel returns null for a null result, or a sentinel
+  *     where the range leaves one free (-1 for a Hamming distance), or
+  *     sets a `wasNull` flag on its instance (`dot_f64`), so an `int` or
+  *     `double` result is never boxed.
+  *   - No `CodegenFallback`: it would evaluate the children interpreted,
+  *     the per-row cost these expressions exist to remove. Children stay
+  *     generated code and reach the kernel through `nullSafeCodeGen`.
+  *
+  * A new function is one entry of [[GraftExtensions.functions]].
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction(GraftExtensions.hammingHexDescriptor)
-    ext.injectFunction(GraftExtensions.rollingHashesDescriptor)
-    ext.injectFunction(GraftExtensions.minhashSigsDescriptor)
-    ext.injectFunction(GraftExtensions.md5Prefix32Descriptor)
-    ext.injectFunction(GraftExtensions.wordShinglesDescriptor)
-    ext.injectFunction(GraftExtensions.simhashHexDescriptor)
-    ext.injectFunction(GraftExtensions.dotF64Descriptor)
-    ext.injectFunction(GraftExtensions.runStatsDescriptor)
-    ext.injectFunction(GraftExtensions.bloomContainsDescriptor)
-    ext.injectFunction(GraftExtensions.entropyStatsDescriptor)
-    ext.injectFunction(GramBuckets.descriptor)
-    ext.injectFunction(GramShares.descriptor)
-    ext.injectFunction(GradSum128.descriptor)
-    ext.injectFunction(ClfStats.descriptor)
-    ext.injectFunction(StripStops.descriptor)
+    GraftExtensions.functions.foreach(ext.injectFunction)
     ext.injectQueryStagePrepRule(_ => PrunedBucketScan)
   }
 }
 
 object GraftExtensions {
-  private[plans] val hammingHexDescriptor
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("hamming_hex"),
-    new ExpressionInfo(classOf[HammingHex].getName, "hamming_hex"),
+  private type Function = (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)
+
+  /** The registration of `name`: its `ExpressionInfo` names the built
+    * class, and a call with other than `arity` arguments fails analysis
+    * with a message naming the function and its argument count.
+    */
+  private def fn[E <: Expression](name: String, arity: Int)(build: Seq[Expression] => E)(
+      implicit built: ClassTag[E]): Function = (
+    FunctionIdentifier(name),
+    new ExpressionInfo(built.runtimeClass.getName, name),
     (children: Seq[Expression]) => {
-      require(children.size == 2, "hamming_hex(a, b) takes exactly two arguments")
-      HammingHex(children.head, children(1))
+      require(children.size == arity,
+        s"$name takes exactly $arity argument${if (arity == 1) "" else "s"}, " +
+          s"got ${children.size}")
+      build(children)
     })
 
-  private[plans] val rollingHashesDescriptor
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("rolling_hashes"),
-    new ExpressionInfo(classOf[RollingHashes].getName, "rolling_hashes"),
-    (children: Seq[Expression]) => {
-      require(children.size == 2, "rolling_hashes(str, w) takes exactly two arguments")
-      RollingHashes(children.head, children(1))
-    })
-
-  private[plans] val minhashSigsDescriptor
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("minhash_sigs"),
-    new ExpressionInfo(classOf[MinHashSigs].getName, "minhash_sigs"),
-    (children: Seq[Expression]) => {
-      require(children.size == 3,
-        "minhash_sigs(hv, numBands, bandSize) takes exactly three arguments")
-      MinHashSigs(children.head, children(1), children(2))
-    })
-
-  private[plans] val md5Prefix32Descriptor
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("md5_prefix32"),
-    new ExpressionInfo(classOf[Md5Prefix32].getName, "md5_prefix32"),
-    (children: Seq[Expression]) => {
-      require(children.size == 1, "md5_prefix32(arr) takes exactly one argument")
-      Md5Prefix32(children.head)
-    })
-
-  private[plans] val wordShinglesDescriptor
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("word_shingles"),
-    new ExpressionInfo(classOf[WordShingles].getName, "word_shingles"),
-    (children: Seq[Expression]) => {
-      require(children.size == 2, "word_shingles(toks, n) takes exactly two arguments")
-      WordShingles(children.head, children(1))
-    })
-
-  private[plans] val simhashHexDescriptor
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("simhash_hex"),
-    new ExpressionInfo(classOf[SimHashHex].getName, "simhash_hex"),
-    (children: Seq[Expression]) => {
-      require(children.size == 1, "simhash_hex(terms) takes exactly one argument")
-      SimHashHex(children.head)
-    })
-
-  private[plans] val dotF64Descriptor
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("dot_f64"),
-    new ExpressionInfo(classOf[DotF64].getName, "dot_f64"),
-    (children: Seq[Expression]) => {
-      require(children.size == 2, "dot_f64(a, b) takes exactly two arguments")
-      DotF64(children.head, children(1))
-    })
-
-  private[plans] val runStatsDescriptor
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("run_stats"),
-    new ExpressionInfo(classOf[RunStats].getName, "run_stats"),
-    (children: Seq[Expression]) => {
-      require(children.size == 1, "run_stats(grams) takes exactly one argument")
-      RunStats(children.head)
-    })
-
-  private[plans] val bloomContainsDescriptor
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("bloom_contains"),
-    new ExpressionInfo(classOf[BloomContains].getName, "bloom_contains"),
-    (children: Seq[Expression]) => {
-      require(children.size == 2,
-        "bloom_contains(filter, value) takes exactly two arguments")
-      BloomContains(children.head, children(1))
-    })
-
-  private[plans] val entropyStatsDescriptor
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("entropy_stats"),
-    new ExpressionInfo(classOf[EntropyStats].getName, "entropy_stats"),
-    (children: Seq[Expression]) => {
-      require(children.size == 1, "entropy_stats(toks) takes exactly one argument")
-      EntropyStats(children.head)
-    })
+  /** Every native function of the engine. */
+  private[graft] val functions: Seq[Function] = Seq(
+    fn("hamming_hex", 2)(c => HammingHex(c(0), c(1))),
+    fn("rolling_hashes", 2)(c => RollingHashes(c(0), c(1))),
+    fn("minhash_sigs", 3)(c => MinHashSigs(c(0), c(1), c(2))),
+    fn("md5_prefix32", 1)(c => Md5Prefix32(c(0))),
+    fn("word_shingles", 2)(c => WordShingles(c(0), c(1))),
+    fn("simhash_hex", 1)(c => SimHashHex(c(0))),
+    fn("dot_f64", 2)(c => DotF64(c(0), c(1))),
+    fn("run_stats", 1)(c => RunStats(c(0))),
+    fn("bloom_contains", 2)(c => BloomContains(c(0), c(1))),
+    fn("entropy_stats", 1)(c => EntropyStats(c(0))),
+    fn("gram_buckets", 3)(c => GramBuckets(c(0), c(1), c(2))),
+    fn("gram_shares", 3)(c => GramShares(c(0), c(1), c(2))),
+    fn("grad_sum128", 3)(c => GradSum128(c(0), c(1), c(2))),
+    fn("clf_stats", 3)(c => ClfStats(c(0), c(1), c(2))),
+    fn("strip_stops", 2)(c => StripStops(c(0), c(1))))
 }

@@ -1,10 +1,9 @@
 package graft.plans
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, TernaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.functions.{call_function, lit}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType, LongType, StringType}
@@ -22,7 +21,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * common-subexpression reuse, so every row pays d full gram+md5
   * passes (measured: minutes per fit at sf0.001). This expression is
   * ONE loop — one `MessageDigest` reused via update(bytes, i, n), one
-  * histogram — inside whole-stage codegen; the d downstream
+  * histogram ([[GramMd5Cache]]) — inside whole-stage codegen; the d downstream
   * `element_at` projections read the one histogram through codegen
   * subexpression elimination.
   *
@@ -42,64 +41,21 @@ case class GramBuckets(first: Expression, second: Expression, third: Expression)
   override def nullable: Boolean = true
   override def prettyName: String = "gram_buckets"
 
-  override def nullSafeEval(str: Any, nAny: Any, dAny: Any): Any = {
-    val bytes = str.asInstanceOf[UTF8String].getBytes
-    val n = nAny.asInstanceOf[Int]
-    val d = dAny.asInstanceOf[Int]
-    if (n <= 0 || d <= 0) return null
-    val counts = new Array[Long](d)
-    val m = bytes.length - n + 1
-    val cache = evalCache.get()
-    var i = 0
-    while (i < m) {
-      counts((cache.prefix32(bytes, i, n) % d).toInt) += 1
-      i += 1
-    }
-    new GenericArrayData(counts)
-  }
+  override def nullSafeEval(str: Any, nAny: Any, dAny: Any): Any =
+    cache.get().buckets(str.asInstanceOf[UTF8String], nAny.asInstanceOf[Int],
+      dAny.asInstanceOf[Int])
 
-  // interpreted-path cache: the expression instance may be shared across
-  // task threads, so the memo is per-thread (codegen gets a per-operator
-  // instance via mutable state instead)
-  @transient private lazy val evalCache = new ThreadLocal[GramMd5Cache] {
-    override def initialValue(): GramMd5Cache = new GramMd5Cache
-  }
+  @transient private lazy val cache = ThreadLocal.withInitial(() => new GramMd5Cache)
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    // ONE md5-prefix cache per generated operator instance (= per task):
-    // char n-grams are Zipf-repeated (≤ |alphabet|^n distinct over
-    // tokenizer output), so after warm-up nearly every window is a
-    // cache probe instead of a full MessageDigest round — bit-identical
-    // buckets (the cache stores the md5 prefix itself, keyed by the raw
-    // window bytes).
-    val cache = ctx.addMutableState("graft.plans.GramMd5Cache", "graftGramCache",
-      v => s"$v = new graft.plans.GramMd5Cache();")
-    // CONSTRAINT (Md5Prefix32): no emitted line may BEGIN with '|' —
-    // Spark's operator templates stripMargin AFTER splicing.
-    nullSafeCodeGen(ctx, ev, (str, nIn, dIn) => {
-      val bytes = ctx.freshName("bytes")
-      val n = ctx.freshName("n")
-      val d = ctx.freshName("d")
-      val counts = ctx.freshName("counts")
-      val m = ctx.freshName("m")
-      val i = ctx.freshName("i")
-      s"""
-         |int $n = $nIn;
-         |int $d = $dIn;
-         |if ($n <= 0 || $d <= 0) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  byte[] $bytes = $str.getBytes();
-         |  long[] $counts = new long[$d];
-         |  int $m = $bytes.length - $n + 1;
-         |  for (int $i = 0; $i < $m; $i++) {
-         |    $counts[(int) ($cache.prefix32($bytes, $i, $n) % $d)]++;
-         |  }
-         |  ${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($counts);
-         |}
-       """.stripMargin
-    })
-  }
+  // ONE md5-prefix cache per generated operator instance (= per task):
+  // char n-grams are Zipf-repeated (≤ |alphabet|^n distinct over
+  // tokenizer output), so after warm-up nearly every window is a cache
+  // probe instead of a full MessageDigest round — bit-identical buckets
+  // (the cache stores the md5 prefix itself, keyed by the raw window
+  // bytes).
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (str, n, d) => KernelCall(ctx, ev, classOf[GramMd5Cache],
+      s"buckets($str, $n, $d)", KernelCall.IfNullRef))
 
   override protected def withNewChildrenInternal(newFirst: Expression,
       newSecond: Expression, newThird: Expression): Expression =
@@ -110,7 +66,7 @@ case class GramBuckets(first: Expression, second: Expression, third: Expression)
   * length ≤ 7, keyed by the raw window bytes (length-tagged, packed into
   * one long — injective, so a hit can never alias a different gram).
   * NOT thread-safe: one instance per task (codegen mutable state) or per
-  * interpreted call. Grows ×4 from 4 Ki to a 512 Ki-entry cap (8 MB);
+  * thread (interpreted path). Grows ×4 from 4 Ki to a 512 Ki-entry cap (8 MB);
   * past the cap new grams simply hash directly — correctness never
   * depends on a hit, every value IS the md5 prefix. Windows longer than
   * 7 bytes bypass the cache (no packed key).
@@ -172,12 +128,34 @@ final class GramMd5Cache {
     v
   }
 
+  /** Adds the bucket `prefix32 % counts.length` of every width-n byte
+    * window of `bytes` to `counts`.
+    */
+  private def countWindows(counts: Array[Long], bytes: Array[Byte], n: Int): Unit = {
+    val m = bytes.length - n + 1
+    var k = 0
+    while (k < m) {
+      counts((prefix32(bytes, k, n) % counts.length).toInt) += 1
+      k += 1
+    }
+  }
+
+  /** The `gram_buckets` row kernel (see [[GramBuckets]]); null (a null
+    * result) when `n <= 0` or `d <= 0`.
+    */
+  def buckets(s: UTF8String, n: Int, d: Int): GenericArrayData = {
+    if (n <= 0 || d <= 0) return null
+    val counts = new Array[Long](d)
+    countWindows(counts, s.getBytes, n)
+    new GenericArrayData(counts)
+  }
+
   /** The full `gram_shares` row kernel (see [[GramShares]]) — lives on
     * the cache object so generated code reaches it through the one
     * mutable-state reference. Returns null to signal the composed
     * form's NULL cases (non-positive d, non-positive or NULL n).
     */
-  def shares(s: UTF8String, d: Int, ns: org.apache.spark.sql.catalyst.util.ArrayData)
+  def shares(s: UTF8String, d: Int, ns: ArrayData)
       : GenericArrayData = {
     if (d <= 0) return null
     val nn = ns.numElements()
@@ -197,12 +175,7 @@ final class GramMd5Cache {
       // over UTF-8 BYTES (GramBuckets' contract) — identical on the
       // ASCII-normalized tokenizer output both run on
       if (nchars - (n - 1) > 0) ng += nchars - (n - 1)
-      val m = bytes.length - n + 1
-      var k = 0
-      while (k < m) {
-        counts((prefix32(bytes, k, n) % d).toInt) += 1
-        k += 1
-      }
+      countWindows(counts, bytes, n)
       i += 1
     }
     val out = new Array[Double](d)
@@ -256,31 +229,14 @@ case class GramShares(first: Expression, second: Expression, third: Expression)
         s"${third.dataType.simpleString})")
 
   override def nullSafeEval(str: Any, dAny: Any, nsAny: Any): Any =
-    evalCache.get().shares(str.asInstanceOf[UTF8String],
-      dAny.asInstanceOf[Int],
-      nsAny.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData])
+    cache.get().shares(str.asInstanceOf[UTF8String], dAny.asInstanceOf[Int],
+      nsAny.asInstanceOf[ArrayData])
 
-  @transient private lazy val evalCache = new ThreadLocal[GramMd5Cache] {
-    override def initialValue(): GramMd5Cache = new GramMd5Cache
-  }
+  @transient private lazy val cache = ThreadLocal.withInitial(() => new GramMd5Cache)
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cache = ctx.addMutableState("graft.plans.GramMd5Cache", "graftGramCache",
-      v => s"$v = new graft.plans.GramMd5Cache();")
-    // CONSTRAINT (Md5Prefix32): no emitted line may BEGIN with '|'.
-    nullSafeCodeGen(ctx, ev, (str, dIn, nsIn) => {
-      val tmp = ctx.freshName("shares")
-      s"""
-         |org.apache.spark.sql.catalyst.util.GenericArrayData $tmp =
-         |    $cache.shares($str, $dIn, $nsIn);
-         |if ($tmp == null) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  ${ev.value} = $tmp;
-         |}
-       """.stripMargin
-    })
-  }
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (str, d, ns) => KernelCall(ctx, ev, classOf[GramMd5Cache],
+      s"shares($str, $d, $ns)", KernelCall.IfNullRef))
 
   override protected def withNewChildrenInternal(newFirst: Expression,
       newSecond: Expression, newThird: Expression): Expression =
@@ -292,30 +248,10 @@ object GramShares {
   def gramShares(str: Column, d: Int, ns: Seq[Int]): Column =
     call_function("gram_shares", str, lit(d),
       org.apache.spark.sql.functions.array(ns.map(n => lit(n)): _*))
-
-  private[plans] val descriptor
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("gram_shares"),
-    new ExpressionInfo(classOf[GramShares].getName, "gram_shares"),
-    (children: Seq[Expression]) => {
-      require(children.size == 3,
-        "gram_shares(str, d, ns) takes exactly three arguments")
-      GramShares(children.head, children(1), children(2))
-    })
 }
 
 object GramBuckets {
   /** Column API. Requires `GraftExtensions` installed in the session. */
   def gramBuckets(str: Column, n: Int, d: Int): Column =
     call_function("gram_buckets", str, lit(n), lit(d))
-
-  private[plans] val descriptor
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("gram_buckets"),
-    new ExpressionInfo(classOf[GramBuckets].getName, "gram_buckets"),
-    (children: Seq[Expression]) => {
-      require(children.size == 3,
-        "gram_buckets(str, n, d) takes exactly three arguments")
-      GramBuckets(children.head, children(1), children(2))
-    })
 }

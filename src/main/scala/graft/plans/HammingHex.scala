@@ -16,9 +16,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * a Generate + Aggregate (i.e. real plan nodes, and a shuffle for the
   * re-aggregate) per comparison. Fingerprint comparison belongs in the
   * innermost loop of a candidate-pair join, so it must stay a scalar,
-  * whole-stage-codegen-friendly expression. `doGenCode` emits a tight
-  * loop over the two byte arrays with `Integer.bitCount`; the
-  * interpreted path mirrors it exactly.
+  * whole-stage-codegen-friendly expression: one loop over the two byte
+  * arrays with `Integer.bitCount` ([[HammingHexKernel]]).
   *
   * Null/length semantics: null if either side is null (BinaryExpression
   * default), lengths differ, or a non-hex char appears — malformed input
@@ -30,61 +29,16 @@ case class HammingHex(left: Expression, right: Expression) extends BinaryExpress
   override def nullable: Boolean = true
   override def prettyName: String = "hamming_hex"
 
-  private def nibble(b: Byte): Int = {
-    val c = b & 0xff
-    if (c >= '0' && c <= '9') c - '0'
-    else if (c >= 'a' && c <= 'f') c - 'a' + 10
-    else if (c >= 'A' && c <= 'F') c - 'A' + 10
-    else -1
+  override def nullSafeEval(l: Any, r: Any): Any = {
+    val d = kernel.get().distance(l.asInstanceOf[UTF8String], r.asInstanceOf[UTF8String])
+    if (d < 0) null else d
   }
 
-  override def nullSafeEval(l: Any, r: Any): Any = {
-    val a = l.asInstanceOf[UTF8String].getBytes
-    val b = r.asInstanceOf[UTF8String].getBytes
-    if (a.length != b.length) null
-    else {
-      var d = 0
-      var i = 0
-      while (i < a.length) {
-        val na = nibble(a(i)); val nb = nibble(b(i))
-        if (na < 0 || nb < 0) return null
-        d += Integer.bitCount(na ^ nb)
-        i += 1
-      }
-      d
-    }
-  }
+  @transient private lazy val kernel = ThreadLocal.withInitial(() => new HammingHexKernel)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val ba = ctx.freshName("ba")
-      val bb = ctx.freshName("bb")
-      val i = ctx.freshName("i")
-      val na = ctx.freshName("na")
-      val nb = ctx.freshName("nb")
-      val acc = ctx.freshName("acc")
-      // nibble decode inlined: '0'-'9' → 0-9, 'a'-'f'/'A'-'F' → 10-15, else -1
-      def dec(c: String, out: String): String =
-        s"""int $out = ($c >= '0' && $c <= '9') ? $c - '0'
-           |  : ($c >= 'a' && $c <= 'f') ? $c - 'a' + 10
-           |  : ($c >= 'A' && $c <= 'F') ? $c - 'A' + 10 : -1;""".stripMargin
-      s"""
-         |byte[] $ba = $a.getBytes();
-         |byte[] $bb = $b.getBytes();
-         |if ($ba.length != $bb.length) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  int $acc = 0;
-         |  for (int $i = 0; $i < $ba.length; $i++) {
-         |    ${dec(s"$ba[$i]", na)}
-         |    ${dec(s"$bb[$i]", nb)}
-         |    if ($na < 0 || $nb < 0) { ${ev.isNull} = true; break; }
-         |    $acc += Integer.bitCount($na ^ $nb);
-         |  }
-         |  ${ev.value} = $acc;
-         |}
-       """.stripMargin
-    })
+    nullSafeCodeGen(ctx, ev, (a, b) => KernelCall(ctx, ev, classOf[HammingHexKernel],
+      s"distance($a, $b)", KernelCall.IfEquals("-1")))
 
   override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)
@@ -94,4 +48,33 @@ object HammingHex {
   /** Column API. Requires `GraftExtensions` installed in the session. */
   def hammingHex(a: Column, b: Column): Column =
     call_function("hamming_hex", a.cast("string"), b.cast("string"))
+}
+
+/** The `hamming_hex` row kernel; stateless. */
+final class HammingHexKernel {
+  private def nibble(b: Byte): Int = {
+    val c = b & 0xff
+    if (c >= '0' && c <= '9') c - '0'
+    else if (c >= 'a' && c <= 'f') c - 'a' + 10
+    else if (c >= 'A' && c <= 'F') c - 'A' + 10
+    else -1
+  }
+
+  /** Bit distance, or -1 (a null result) on a length mismatch or a
+    * non-hex character.
+    */
+  def distance(l: UTF8String, r: UTF8String): Int = {
+    val a = l.getBytes
+    val b = r.getBytes
+    if (a.length != b.length) return -1
+    var d = 0
+    var i = 0
+    while (i < a.length) {
+      val na = nibble(a(i)); val nb = nibble(b(i))
+      if (na < 0 || nb < 0) return -1
+      d += Integer.bitCount(na ^ nb)
+      i += 1
+    }
+    d
+  }
 }

@@ -1,8 +1,7 @@
 package graft.plans
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, TernaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.functions.call_function
@@ -19,14 +18,16 @@ import org.apache.spark.unsafe.types.UTF8String
   * higher-order-function lambdas are CodegenFallback in Spark 4.1, so
   * every element of every pass goes through interpreted expression eval.
   * For b=24/r=3 that is 72 interpreted array traversals per document.
-  * This expression is the same arithmetic as ONE codegen'd tight loop:
-  * O(numBands · bandSize · |hv|) multiply-mods on a primitive long[].
+  * This expression is the same arithmetic as ONE codegen'd tight loop
+  * ([[MinHashSigsKernel]]): O(numBands · bandSize · |hv|) multiply-mods
+  * on a primitive long[].
   *
-  * The (a_k, b_k) family and modulus are `Dedup.hashParams` /
-  * `HashModulus` EXACTLY (asserted by DedupProperties) — signatures are
-  * bit-identical to the column formulation and to the DuckDB oracle's
-  * embedded literals. Null on null/empty input (callers filter
-  * empty-shingle docs before signing).
+  * The kernel reads the (a_k, b_k) family and modulus from
+  * `Dedup.hashParams` / `HashModulus` — signatures are bit-identical to
+  * the column formulation (asserted by DedupProperties) and to the
+  * DuckDB oracle's embedded literals. Null on null/empty input (callers
+  * filter empty-shingle docs before signing) or non-positive band
+  * counts.
   */
 case class MinHashSigs(first: Expression, second: Expression, third: Expression)
     extends TernaryExpression {
@@ -35,25 +36,68 @@ case class MinHashSigs(first: Expression, second: Expression, third: Expression)
   override def nullable: Boolean = true
   override def prettyName: String = "minhash_sigs"
 
-  override def nullSafeEval(hvAny: Any, nbAny: Any, bsAny: Any): Any = {
-    val hv = hvAny.asInstanceOf[ArrayData].toLongArray()
-    val numBands = nbAny.asInstanceOf[Int]
-    val bandSize = bsAny.asInstanceOf[Int]
+  override def nullSafeEval(hvAny: Any, nbAny: Any, bsAny: Any): Any =
+    kernel.get().sigs(hvAny.asInstanceOf[ArrayData], nbAny.asInstanceOf[Int],
+      bsAny.asInstanceOf[Int])
+
+  @transient private lazy val kernel = ThreadLocal.withInitial(() => new MinHashSigsKernel)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (hv, nb, bs) => KernelCall(ctx, ev, classOf[MinHashSigsKernel],
+      s"sigs($hv, $nb, $bs)", KernelCall.IfNullRef))
+
+  override protected def withNewChildrenInternal(newFirst: Expression, newSecond: Expression,
+                                                 newThird: Expression): Expression =
+    copy(first = newFirst, second = newSecond, third = newThird)
+}
+
+object MinHashSigs {
+  /** Column API. Requires `GraftExtensions` installed in the session. */
+  def minhashSigs(hv: Column, numBands: Int, bandSize: Int): Column =
+    call_function("minhash_sigs", hv,
+      org.apache.spark.sql.functions.lit(numBands),
+      org.apache.spark.sql.functions.lit(bandSize))
+}
+
+/** The `minhash_sigs` row kernel. NOT thread-safe: it keeps the hash
+  * family's (a_k, b_k), computed once per instance and extended when a
+  * row asks for more hashes than any row before it.
+  */
+final class MinHashSigsKernel {
+  private var as = new Array[Long](0)
+  private var bs = new Array[Long](0)
+
+  private def params(count: Int): Unit = if (as.length < count) {
+    as = new Array[Long](count)
+    bs = new Array[Long](count)
+    var k = 0
+    while (k < count) {
+      val (a, b) = graft.operators.Dedup.hashParams(k)
+      as(k) = a
+      bs(k) = b
+      k += 1
+    }
+  }
+
+  /** The band signatures, or null (a null result) on an empty hash
+    * array or a non-positive band count or size.
+    */
+  def sigs(hvData: ArrayData, numBands: Int, bandSize: Int): GenericArrayData = {
+    val hv = hvData.toLongArray()
     if (hv.isEmpty || numBands <= 0 || bandSize <= 0) return null
-    val P = MinHashSigs.Modulus
-    val out = new Array[UTF8String](numBands)
+    params(numBands * bandSize)
+    val out = new Array[Any](numBands)
     var j = 0
     while (j < numBands) {
       val sb = new java.lang.StringBuilder
       var k = 0
       while (k < bandSize) {
-        val idx = j * bandSize + k
-        val a = ((2654435761L * (idx + 1)) % 1048573L) | 1L
-        val b = (40503L * (idx + 7)) % 65521L
+        val a = as(j * bandSize + k)
+        val b = bs(j * bandSize + k)
         var m = Long.MaxValue
         var i = 0
         while (i < hv.length) {
-          val h = (hv(i) * a + b) % P
+          val h = (hv(i) * a + b) % graft.operators.Dedup.HashModulus
           if (h < m) m = h
           i += 1
         }
@@ -64,65 +108,6 @@ case class MinHashSigs(first: Expression, second: Expression, third: Expression)
       out(j) = UTF8String.fromString(sb.toString)
       j += 1
     }
-    new GenericArrayData(out.asInstanceOf[Array[Any]])
+    new GenericArrayData(out)
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (hvc, nbc, bsc) => {
-      val hv = ctx.freshName("hv")
-      val out = ctx.freshName("out")
-      val j = ctx.freshName("j")
-      val k = ctx.freshName("k")
-      val i = ctx.freshName("i")
-      val idx = ctx.freshName("idx")
-      val a = ctx.freshName("a")
-      val b = ctx.freshName("b")
-      val m = ctx.freshName("m")
-      val h = ctx.freshName("h")
-      val sb = ctx.freshName("sb")
-      val P = MinHashSigs.Modulus
-      s"""
-         |long[] $hv = $hvc.toLongArray();
-         |if ($hv.length == 0 || $nbc <= 0 || $bsc <= 0) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  UTF8String[] $out = new UTF8String[$nbc];
-         |  for (int $j = 0; $j < $nbc; $j++) {
-         |    java.lang.StringBuilder $sb = new java.lang.StringBuilder();
-         |    for (int $k = 0; $k < $bsc; $k++) {
-         |      int $idx = $j * $bsc + $k;
-         |      long $a = ((2654435761L * ($idx + 1)) % 1048573L) | 1L;
-         |      long $b = (40503L * ($idx + 7)) % 65521L;
-         |      long $m = Long.MAX_VALUE;
-         |      for (int $i = 0; $i < $hv.length; $i++) {
-         |        long $h = ($hv[$i] * $a + $b) % ${P}L;
-         |        if ($h < $m) $m = $h;
-         |      }
-         |      if ($k > 0) $sb.append(',');
-         |      $sb.append($m);
-         |    }
-         |    $out[$j] = UTF8String.fromString($sb.toString());
-         |  }
-         |  ${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($out);
-         |}
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(newFirst: Expression, newSecond: Expression,
-                                                 newThird: Expression): Expression =
-    copy(first = newFirst, second = newSecond, third = newThird)
-}
-
-object MinHashSigs {
-  /** MUST equal `Dedup.HashModulus`; duplicated as a literal so the
-    * generated code embeds a compile-time constant (DedupProperties
-    * asserts the equality end-to-end).
-    */
-  val Modulus: Long = 2147483647L
-
-  /** Column API. Requires `GraftExtensions` installed in the session. */
-  def minhashSigs(hv: Column, numBands: Int, bandSize: Int): Column =
-    call_function("minhash_sigs", hv,
-      org.apache.spark.sql.functions.lit(numBands),
-      org.apache.spark.sql.functions.lit(bandSize))
 }

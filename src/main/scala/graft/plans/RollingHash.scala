@@ -1,8 +1,7 @@
 package graft.plans
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.functions.call_function
@@ -20,8 +19,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * transform/aggregate over every offset — w multiplications per
   * window). The rolling recurrence h' = (h - c₀·B^(w-1))·B + c_w is
   * O(n) total and belongs inside whole-stage codegen, not in a
-  * Generate + lambda pipeline. `doGenCode` emits one tight loop;
-  * the interpreted path mirrors it exactly.
+  * Generate + lambda pipeline: one loop ([[RollingHashesKernel]]).
   *
   * Arithmetic is engine-portable BY CONSTRUCTION (the DuckDB oracle
   * re-derives the same values): h(window) = Σ byte_j · B^(w-1-j) mod P
@@ -39,70 +37,14 @@ case class RollingHashes(left: Expression, right: Expression) extends BinaryExpr
   override def nullable: Boolean = true
   override def prettyName: String = "rolling_hashes"
 
-  override def nullSafeEval(str: Any, w: Any): Any = {
-    val bytes = str.asInstanceOf[UTF8String].getBytes
-    val wi = w.asInstanceOf[Int]
-    if (wi <= 0) return null
-    val n = bytes.length - wi + 1
-    if (n <= 0) return new GenericArrayData(Array.empty[Long])
-    val B = RollingHashes.Base
-    val P = RollingHashes.Modulus
-    // B^(w-1) mod P — the coefficient of the byte leaving the window
-    var c0 = 1L
-    var k = 1
-    while (k < wi) { c0 = c0 * B % P; k += 1 }
-    val out = new Array[Long](n)
-    var h = 0L
-    var i = 0
-    while (i < wi) { h = (h * B + (bytes(i) & 0xff)) % P; i += 1 }
-    out(0) = h
-    var j = 1
-    while (j < n) {
-      h = ((h - (bytes(j - 1) & 0xff) * c0 % P + P) % P * B + (bytes(j + wi - 1) & 0xff)) % P
-      out(j) = h
-      j += 1
-    }
-    new GenericArrayData(out)
-  }
+  override def nullSafeEval(str: Any, w: Any): Any =
+    kernel.get().hashes(str.asInstanceOf[UTF8String], w.asInstanceOf[Int])
+
+  @transient private lazy val kernel = ThreadLocal.withInitial(() => new RollingHashesKernel)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (str, w) => {
-      val bytes = ctx.freshName("bytes")
-      val wi = ctx.freshName("wi")
-      val n = ctx.freshName("n")
-      val c0 = ctx.freshName("c0")
-      val k = ctx.freshName("k")
-      val out = ctx.freshName("out")
-      val h = ctx.freshName("h")
-      val i = ctx.freshName("i")
-      val B = RollingHashes.Base
-      val P = RollingHashes.Modulus
-      s"""
-         |byte[] $bytes = $str.getBytes();
-         |int $wi = $w;
-         |if ($wi <= 0) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  int $n = $bytes.length - $wi + 1;
-         |  if ($n <= 0) {
-         |    ${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData(new long[0]);
-         |  } else {
-         |    long $c0 = 1L;
-         |    for (int $k = 1; $k < $wi; $k++) $c0 = $c0 * ${B}L % ${P}L;
-         |    long[] $out = new long[$n];
-         |    long $h = 0L;
-         |    for (int $i = 0; $i < $wi; $i++) $h = ($h * ${B}L + ($bytes[$i] & 0xff)) % ${P}L;
-         |    $out[0] = $h;
-         |    for (int $i = 1; $i < $n; $i++) {
-         |      $h = (($h - ($bytes[$i - 1] & 0xff) * $c0 % ${P}L + ${P}L) % ${P}L * ${B}L
-         |            + ($bytes[$i + $wi - 1] & 0xff)) % ${P}L;
-         |      $out[$i] = $h;
-         |    }
-         |    ${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($out);
-         |  }
-         |}
-       """.stripMargin
-    })
+    nullSafeCodeGen(ctx, ev, (str, w) => KernelCall(ctx, ev, classOf[RollingHashesKernel],
+      s"hashes($str, $w)", KernelCall.IfNullRef))
 
   override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)
@@ -111,10 +53,11 @@ case class RollingHashes(left: Expression, right: Expression) extends BinaryExpr
 object RollingHashes {
   /** Polynomial base and modulus — small enough that every intermediate
     * (and the oracle's 16-term direct sums) fits signed 64-bit in ANY
-    * engine, large enough for a ~2^31 hash space.
+    * engine, large enough for a ~2^31 hash space. Constants, so the
+    * kernel's `% Modulus` compiles to a division by a literal.
     */
-  val Base: Long = 257L
-  val Modulus: Long = 2147483647L
+  final val Base = 257L
+  final val Modulus = 2147483647L
 
   /** The direct-sum coefficients B^(w-1-j) mod P for j < w — embedded as
     * literals in the DuckDB oracle so both engines compute the identical
@@ -130,4 +73,33 @@ object RollingHashes {
   def rollingHashes(str: Column, w: Int): Column =
     call_function("rolling_hashes", str.cast("string"),
       org.apache.spark.sql.functions.lit(w))
+}
+
+/** The `rolling_hashes` row kernel; stateless. */
+final class RollingHashesKernel {
+  /** The window hashes, or null (a null result) when `w <= 0`. */
+  def hashes(str: UTF8String, w: Int): GenericArrayData = {
+    if (w <= 0) return null
+    val bytes = str.getBytes
+    val n = bytes.length - w + 1
+    if (n <= 0) return new GenericArrayData(Array.empty[Long])
+    val B = RollingHashes.Base
+    val P = RollingHashes.Modulus
+    // B^(w-1) mod P — the coefficient of the byte leaving the window
+    var c0 = 1L
+    var k = 1
+    while (k < w) { c0 = c0 * B % P; k += 1 }
+    val out = new Array[Long](n)
+    var h = 0L
+    var i = 0
+    while (i < w) { h = (h * B + (bytes(i) & 0xff)) % P; i += 1 }
+    out(0) = h
+    var j = 1
+    while (j < n) {
+      h = ((h - (bytes(j - 1) & 0xff) * c0 % P + P) % P * B + (bytes(j + w - 1) & 0xff)) % P
+      out(j) = h
+      j += 1
+    }
+    new GenericArrayData(out)
+  }
 }

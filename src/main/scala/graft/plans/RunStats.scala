@@ -2,7 +2,7 @@ package graft.plans
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions.call_function
@@ -55,21 +55,40 @@ case class RunStats(child: Expression) extends UnaryExpression {
         s"$prettyName requires array<string>, got ${other.simpleString}")
     }
 
-  override def nullSafeEval(arrAny: Any): Any = {
-    val arr = arrAny.asInstanceOf[ArrayData]
-    val len = arr.numElements()
-    val grams = new Array[UTF8String](len)
-    var i = 0
-    while (i < len) {
-      if (arr.isNullAt(i)) return null
-      grams(i) = arr.getUTF8String(i)
-      i += 1
-    }
-    java.util.Arrays.sort(grams.asInstanceOf[Array[AnyRef]])
+  override def nullSafeEval(arrAny: Any): Any =
+    kernel.get().runStats(arrAny.asInstanceOf[ArrayData])
+
+  @transient private lazy val kernel = ThreadLocal.withInitial(() => new RunsKernel)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, arr => KernelCall(ctx, ev, classOf[RunsKernel],
+      s"runStats($arr)", KernelCall.IfNullRef))
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+}
+
+object RunStats {
+  /** Column API (grams in any order — sorted internally). Requires
+    * `GraftExtensions` installed in the session.
+    */
+  def runStats(grams: Column): Column =
+    call_function("run_stats", grams)
+}
+
+/** The row kernel of `run_stats` and `entropy_stats`: both sort the
+  * row's strings so equal ones form runs. Stateless.
+  */
+final class RunsKernel {
+  /** `(top_chars, dup_chars)`, or null (a null result) on a null element. */
+  def runStats(arr: ArrayData): InternalRow = {
+    val grams = RunsKernel.sorted(arr)
+    if (grams == null) return null
+    val len = grams.length
     var bestRun = 0L
     var top = 0L
     var dup = 0L
-    i = 0
+    var i = 0
     while (i < len) {
       val g = grams(i)
       var j = i + 1
@@ -83,64 +102,46 @@ case class RunStats(child: Expression) extends UnaryExpression {
       if (run >= 2) dup += chars
       i = j
     }
-    InternalRow(top, dup)
+    new GenericInternalRow(Array[Any](top, dup))
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, arr => {
-      val len = ctx.freshName("len")
-      val grams = ctx.freshName("grams")
-      val bestRun = ctx.freshName("bestRun")
-      val top = ctx.freshName("top")
-      val dup = ctx.freshName("dup")
-      val i = ctx.freshName("i")
-      val j = ctx.freshName("j")
-      val run = ctx.freshName("run")
-      val chars = ctx.freshName("chars")
-      val hadNull = ctx.freshName("hadNull")
-      val utf8 = classOf[UTF8String].getName
-      s"""
-         |int $len = $arr.numElements();
-         |$utf8[] $grams = new $utf8[$len];
-         |boolean $hadNull = false;
-         |for (int $i = 0; $i < $len; $i++) {
-         |  if ($arr.isNullAt($i)) { $hadNull = true; break; }
-         |  $grams[$i] = $arr.getUTF8String($i);
-         |}
-         |if ($hadNull) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  java.util.Arrays.sort((Object[]) $grams);
-         |  long $bestRun = 0L;
-         |  long $top = 0L;
-         |  long $dup = 0L;
-         |  int $i = 0;
-         |  while ($i < $len) {
-         |    int $j = $i + 1;
-         |    while ($j < $len && $grams[$i].equals($grams[$j])) $j++;
-         |    long $run = (long) ($j - $i);
-         |    long $chars = $run * $grams[$i].numChars();
-         |    if ($run > $bestRun || ($run == $bestRun && $chars > $top)) {
-         |      $bestRun = $run;
-         |      $top = $chars;
-         |    }
-         |    if ($run >= 2) $dup += $chars;
-         |    $i = $j;
-         |  }
-         |  ${ev.value} = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-         |      new Object[]{$top, $dup});
-         |}
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
+  /** `(dl, n_terms, s_micros)` (see [[EntropyStats]]), or null (a null
+    * result) on a null element.
+    */
+  def entropyStats(arr: ArrayData): InternalRow = {
+    val toks = RunsKernel.sorted(arr)
+    if (toks == null) return null
+    val len = toks.length
+    var nTerms = 0L
+    var sMicros = 0L
+    var i = 0
+    while (i < len) {
+      val t = toks(i)
+      var j = i + 1
+      while (j < len && t.equals(toks(j))) j += 1
+      val run = (j - i).toLong
+      nTerms += 1L
+      sMicros += run * Math.round(Math.log(run.toDouble) * 1000000.0)
+      i = j
+    }
+    new GenericInternalRow(Array[Any](len.toLong, nTerms, sMicros))
+  }
 }
 
-object RunStats {
-  /** Column API (grams in any order — sorted internally). Requires
-    * `GraftExtensions` installed in the session.
+object RunsKernel {
+  /** The array's strings in sorted order (`UTF8String` is `Comparable`),
+    * or null when an element is null.
     */
-  def runStats(grams: Column): Column =
-    call_function("run_stats", grams)
+  def sorted(arr: ArrayData): Array[UTF8String] = {
+    val len = arr.numElements()
+    val out = new Array[UTF8String](len)
+    var i = 0
+    while (i < len) {
+      if (arr.isNullAt(i)) return null
+      out(i) = arr.getUTF8String(i)
+      i += 1
+    }
+    java.util.Arrays.sort(out.asInstanceOf[Array[AnyRef]])
+    out
+  }
 }

@@ -7,7 +7,6 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{DataType, StringType}
-import org.apache.spark.unsafe.types.UTF8String
 
 /** Native Catalyst expression: the 64-bit SimHash of a term array as a
   * 16-char hex string, computed in ONE map-side pass.
@@ -18,8 +17,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * `groupBy(doc_id, position)` — the explode multiplies the shuffle by
   * 16× the term count, and fingerprinting is per-document arithmetic
   * that needs no exchange at all. This expression digests each term
-  * once (`MessageDigest` allocated per generated class, not per row),
-  * accumulates the 64 bit-counts in a local array, and emits the
+  * once (one reused `MessageDigest`, [[Md5Kernel]]), accumulates the
+  * 64 bit-counts in a local array, and emits the
   * majority fingerprint — the whole SimHash pass becomes a narrow
   * projection, zero shuffles.
   *
@@ -48,88 +47,14 @@ case class SimHashHex(child: Expression) extends UnaryExpression {
         s"$prettyName requires array<string>, got ${other.simpleString}")
     }
 
-  override def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
-    val n = arr.numElements()
-    if (n == 0) return null
-    val md = java.security.MessageDigest.getInstance("MD5")
-    val cnt = new Array[Int](64)
-    var i = 0
-    while (i < n) {
-      if (arr.isNullAt(i)) return null
-      val d = md.digest(arr.getUTF8String(i).getBytes)
-      var j = 0
-      while (j < 8) { // first 8 digest bytes = first 16 hex nibbles
-        val b = d(j) & 0xff
-        var k = 0
-        while (k < 8) { // bit 7..0 of the byte = 2 nibbles' 4 bits each
-          cnt(j * 8 + k) += (b >>> (7 - k)) & 1
-          k += 1
-        }
-        j += 1
-      }
-      i += 1
-    }
-    val hex = "0123456789abcdef"
-    val out = new Array[Byte](16)
-    var p = 0
-    while (p < 16) {
-      var v = 0
-      var k = 0
-      while (k < 4) {
-        v = (v << 1) | (if (2 * cnt(p * 4 + k) > n) 1 else 0)
-        k += 1
-      }
-      out(p) = hex.charAt(v).toByte
-      p += 1
-    }
-    UTF8String.fromBytes(out)
-  }
+  override def nullSafeEval(input: Any): Any =
+    kernel.get().simhash(input.asInstanceOf[ArrayData])
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val md = ctx.addMutableState("java.security.MessageDigest", "graftSimMd5",
-      v => s"""try { $v = java.security.MessageDigest.getInstance("MD5"); }
-              |catch (java.security.NoSuchAlgorithmException e) { throw new RuntimeException(e); }""".stripMargin)
-    // CONSTRAINT: no generated line may BEGIN with '|' — enclosing Spark
-    // templates stripMargin AFTER splicing (see Md5Prefix32 / CodegenGuardSpec).
-    nullSafeCodeGen(ctx, ev, arr => {
-      val n = ctx.freshName("n")
-      val cnt = ctx.freshName("cnt")
-      val hadNull = ctx.freshName("hadNull")
-      val i = ctx.freshName("i")
-      val d = ctx.freshName("d")
-      val j = ctx.freshName("j")
-      val k = ctx.freshName("k")
-      val b = ctx.freshName("b")
-      val out = ctx.freshName("out")
-      val p = ctx.freshName("p")
-      val v = ctx.freshName("v")
-      s"""
-         |int $n = $arr.numElements();
-         |boolean $hadNull = ($n == 0);
-         |int[] $cnt = new int[64];
-         |for (int $i = 0; $i < $n && !$hadNull; $i++) {
-         |  if ($arr.isNullAt($i)) { $hadNull = true; break; }
-         |  byte[] $d = $md.digest($arr.getUTF8String($i).getBytes());
-         |  for (int $j = 0; $j < 8; $j++) {
-         |    int $b = $d[$j] & 0xff;
-         |    for (int $k = 0; $k < 8; $k++) $cnt[$j * 8 + $k] += ($b >>> (7 - $k)) & 1;
-         |  }
-         |}
-         |if ($hadNull) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  byte[] $out = new byte[16];
-         |  for (int $p = 0; $p < 16; $p++) {
-         |    int $v = 0;
-         |    for (int $k = 0; $k < 4; $k++) $v = ($v << 1) + ((2 * $cnt[$p * 4 + $k] > $n) ? 1 : 0);
-         |    $out[$p] = (byte) "0123456789abcdef".charAt($v);
-         |  }
-         |  ${ev.value} = UTF8String.fromBytes($out);
-         |}
-       """.stripMargin
-    })
-  }
+  @transient private lazy val kernel = ThreadLocal.withInitial(() => new Md5Kernel)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, arr => KernelCall(ctx, ev, classOf[Md5Kernel],
+      s"simhash($arr)", KernelCall.IfNullRef))
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)

@@ -7,15 +7,16 @@ import org.apache.spark.sql.SparkSession
   * Each named query runs `SPARK_GRAFT_RUNS` times (default 3); the
   * FIRST run absorbs cold file-listing/codegen costs — read the later
   * runs as steady state (or list a cheap same-table query first as an
-  * explicit warm-up). Session flags mirror `graft.Bench` but CPUS
-  * defaults to 32 (this box's dev profile) where Bench defaults to 4 —
-  * set SPARK_GRAFT_CPUS explicitly when comparing against an artifact.
+  * explicit warm-up). Session flags mirror `graft.Bench`, CPUS
+  * included (`SPARK_GRAFT_CPUS`, default 4 like Bench and Verify) — set
+  * it explicitly when comparing against an artifact taken at another
+  * core count.
   * Not part of the engine or the bench protocol.
   */
 object TimeQuery {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val runs = sys.env.getOrElse("SPARK_GRAFT_RUNS", "3").toInt
     val spark = graft.util.EngineSession.builder(s"local[$cpus]", cpus)
       .getOrCreate()

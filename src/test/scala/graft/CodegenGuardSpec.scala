@@ -1,9 +1,13 @@
 package graft
 
-import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression, Literal}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression, InterpretedUnsafeProjection, Literal}
+import org.apache.spark.sql.catalyst.expressions.aggregate.AggregateFunction
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, GenerateUnsafeProjection}
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Guards against the silent-interpreted-fallback failure class that hit
@@ -11,7 +15,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * makes Spark fall back to interpreted evaluation with only an ERROR log
   * — correctness holds, throughput collapses (q_curate ran 7× slow).
   *
-  * Two layers:
+  * Three layers:
   *   1. a static lint on every native expression's generated snippet —
   *      no line may begin with '|', because Spark operator templates
   *      splice snippets into `s"""…""".stripMargin` strings
@@ -20,45 +24,88 @@ import org.scalatest.funsuite.AnyFunSuite
   *      BENCH_r03 bug, Md5Prefix32's byte-packing line);
   *   2. an execution pass per expression under CODEGEN_ONLY factory mode
   *      with whole-stage fallback disabled, so a compile failure is a
-  *      test failure instead of a 25× slowdown.
+  *      test failure instead of a 25× slowdown;
+  *   3. a parity table: per expression, a generated projection and an
+  *      interpreted one give byte-identical rows on edge-case inputs.
   */
 class CodegenGuardSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
 
-  private def nativeExprs: Map[String, Expression] = Map(
-    "md5_prefix32" -> graft.plans.Md5Prefix32(
-      BoundReference(0, ArrayType(StringType), nullable = true)),
-    "minhash_sigs" -> graft.plans.MinHashSigs(
-      BoundReference(0, ArrayType(LongType), nullable = true),
-      Literal(24), Literal(3)),
-    "word_shingles" -> graft.plans.WordShingles(
-      BoundReference(0, ArrayType(StringType), nullable = true), Literal(3)),
-    "hamming_hex" -> graft.plans.HammingHex(
-      BoundReference(0, StringType, nullable = true),
-      BoundReference(1, StringType, nullable = true)),
-    "rolling_hashes" -> graft.plans.RollingHashes(
-      BoundReference(0, StringType, nullable = true), Literal(4)),
-    "simhash_hex" -> graft.plans.SimHashHex(
-      BoundReference(0, ArrayType(StringType), nullable = true)),
-    "dot_f64" -> graft.plans.DotF64(
-      BoundReference(0, ArrayType(DoubleType), nullable = true),
-      BoundReference(1, ArrayType(DoubleType), nullable = true)),
-    "run_stats" -> graft.plans.RunStats(
-      BoundReference(0, ArrayType(StringType), nullable = true)),
-    "entropy_stats" -> graft.plans.EntropyStats(
-      BoundReference(0, ArrayType(StringType), nullable = true)),
-    "gram_buckets" -> graft.plans.GramBuckets(
-      BoundReference(0, StringType, nullable = true), Literal(3), Literal(16)),
-    "gram_shares" -> graft.plans.GramShares(
-      BoundReference(0, StringType, nullable = true), Literal(16),
-      Literal.create(Seq(2, 3), ArrayType(IntegerType))),
-    "bloom_contains" -> {
-      val bf = org.apache.spark.util.sketch.BloomFilter.create(64, 0.01)
-      bf.putString("seed")
-      graft.plans.BloomContains(
-        Literal(graft.plans.BloomContains.serialize(bf), BinaryType),
-        BoundReference(0, StringType, nullable = true))
-    })
+  private def str(x: String): UTF8String = if (x == null) null else UTF8String.fromString(x)
+  private def strs(xs: String*): ArrayData = new GenericArrayData(xs.map(str).toArray[Any])
+  private def arr(xs: Any*): ArrayData = new GenericArrayData(xs.toArray)
+  private def in(i: Int, t: DataType): Expression = BoundReference(i, t, nullable = true)
+  private val StrArr = ArrayType(StringType)
+  private val Stops = strs("the", "a", "of")
+  private val Bloom = {
+    val bf = org.apache.spark.util.sketch.BloomFilter.create(64, 0.01)
+    bf.putString("seed")
+    Literal(graft.plans.BloomContains.serialize(bf), BinaryType)
+  }
+
+  /** Every registered scalar function over bound inputs, with the input
+    * rows the codegen/interpreted parity table runs: null input, a null
+    * element, an empty array, a length mismatch, `w <= 0` and non-hex
+    * text wherever the function takes them.
+    */
+  private val nativeCases: Seq[(String, Expression, Seq[Seq[Any]])] = Seq(
+    ("md5_prefix32", graft.plans.Md5Prefix32(in(0, StrArr)),
+      Seq(Seq(strs("a", "b c")), Seq(strs()), Seq(strs("a", null)), Seq(null))),
+    ("minhash_sigs", graft.plans.MinHashSigs(in(0, ArrayType(LongType)),
+      in(1, IntegerType), in(2, IntegerType)),
+      Seq(Seq(arr(1L, 2L, 3L), 24, 3), Seq(arr(7L), 2, 2), Seq(arr(), 24, 3),
+        Seq(arr(5L), 0, 3), Seq(arr(5L), 2, 0), Seq(null, 24, 3))),
+    ("word_shingles", graft.plans.WordShingles(in(0, StrArr), in(1, IntegerType)),
+      Seq(Seq(strs("a", "b", "c", "d"), 3), Seq(strs("a", "b"), 3), Seq(strs(), 2),
+        Seq(strs("a", null, "c"), 2), Seq(strs("a", null), 3), Seq(strs("a"), 0),
+        Seq(null, 2))),
+    ("hamming_hex", graft.plans.HammingHex(in(0, StringType), in(1, StringType)),
+      Seq(Seq(str("deadbeefdeadbeef"), str("deadbeffdeadbeef")),
+        Seq(str("AB"), str("ab")), Seq(str("abc"), str("ab")), Seq(str("zz"), str("aa")),
+        Seq(str(""), str("")), Seq(null, str("ab")))),
+    ("rolling_hashes", graft.plans.RollingHashes(in(0, StringType), in(1, IntegerType)),
+      Seq(Seq(str("rolling hash parity check"), 4), Seq(str("abc"), 4), Seq(str(""), 2),
+        Seq(str("abc"), 0), Seq(str("abc"), -1), Seq(null, 3))),
+    ("simhash_hex", graft.plans.SimHashHex(in(0, StrArr)),
+      Seq(Seq(strs("alpha", "beta", "alpha")), Seq(strs()), Seq(strs("a", null)), Seq(null))),
+    ("dot_f64", graft.plans.DotF64(in(0, ArrayType(DoubleType)), in(1, ArrayType(DoubleType))),
+      Seq(Seq(arr(1.5, -2.0), arr(3.0, 0.25)), Seq(arr(), arr()), Seq(arr(1.0), arr(1.0, 2.0)),
+        Seq(arr(1.0, null), arr(1.0, 2.0)), Seq(arr(Double.NaN), arr(1.0)),
+        Seq(null, arr(1.0)))),
+    ("run_stats", graft.plans.RunStats(in(0, StrArr)),
+      Seq(Seq(strs("ab", "c", "ab")), Seq(strs()), Seq(strs("x", null)), Seq(null))),
+    ("entropy_stats", graft.plans.EntropyStats(in(0, StrArr)),
+      Seq(Seq(strs("ab", "c", "ab")), Seq(strs()), Seq(strs("x", null)), Seq(null))),
+    ("gram_buckets", graft.plans.GramBuckets(in(0, StringType), in(1, IntegerType),
+      in(2, IntegerType)),
+      Seq(Seq(str("hello world"), 3, 16), Seq(str("ab"), 3, 16), Seq(str(""), 2, 8),
+        Seq(str("abc"), 0, 16), Seq(str("abc"), 3, 0), Seq(null, 3, 16))),
+    ("gram_shares", graft.plans.GramShares(in(0, StringType), in(1, IntegerType),
+      in(2, ArrayType(IntegerType))),
+      Seq(Seq(str("hello world"), 16, arr(2, 3)), Seq(str(""), 8, arr(2, 3)),
+        Seq(str("abc"), 0, arr(2)), Seq(str("abc"), 8, arr(0)), Seq(str("abc"), 8, arr(2, null)),
+        Seq(str("abc"), 8, arr()), Seq(null, 8, arr(2)))),
+    ("bloom_contains", graft.plans.BloomContains(Bloom, in(0, StringType)),
+      Seq(Seq(str("seed")), Seq(str("other")), Seq(str("")), Seq(null))),
+    ("clf_stats", graft.plans.ClfStats(in(0, StrArr), in(1, StrArr), in(2, BooleanType)),
+      Seq(Seq(strs("the", "cat", "the", "sat"), Stops, true),
+        Seq(strs("the", "cat", "the", "sat"), Stops, false), Seq(strs(), Stops, true),
+        Seq(strs("a", null), Stops, true), Seq(strs("a", null), Stops, false),
+        Seq(null, Stops, true))),
+    ("strip_stops", graft.plans.StripStops(in(0, StrArr), in(1, StrArr)),
+      Seq(Seq(strs("the", "cat", null, "a", "sat"), Stops), Seq(strs(), Stops),
+        Seq(null, Stops))))
+
+  private def nativeExprs: Map[String, Expression] =
+    nativeCases.map { case (name, expr, _) => name -> expr }.toMap
+
+  test("the guard covers every registered scalar function") {
+    val scalar = graft.plans.GraftExtensions.functions.collect {
+      case (id, info, _) if !classOf[AggregateFunction].isAssignableFrom(
+          Class.forName(info.getClassName)) => id.funcName
+    }
+    assert(nativeCases.map(_._1).sorted === scalar.sorted)
+  }
 
   test("no generated snippet line begins with '|' (stripMargin splice hazard)") {
     spark // force session init (codegen touches SQLConf.get)
@@ -194,6 +241,36 @@ class CodegenGuardSpec extends AnyFunSuite {
         graft.functions.Text.tokenize(col("text"))).as("es")
       val r = docs.select(es).select(col("es.dl"), col("es.s_micros"))
       assert(r.agg(sum(col("dl") + col("s_micros"))).head().getLong(0) > 0)
+    }
+  }
+
+  test("strip_stops + clf_stats compile and run CODEGEN_ONLY") {
+    withCodegenOnly {
+      val docs = graft.sources.Corpus.documents(spark, "/root/testdata/sf0.001")
+      val stop = graft.functions.Text.EffectiveStopwords
+      val toks = graft.functions.Text.tokenize(col("text"))
+      // the ingest tokenization path (Text.tokensNoStop) and the quality
+      // featurizer's one-pass stats, at real corpus widths: stripping
+      // removes exactly the stopword tokens clf_stats counts
+      val r = docs.select(size(toks).as("n"),
+        size(graft.functions.Text.tokensNoStop(col("text"))).as("kept"),
+        graft.plans.ClfStats.clfStats(toks, stop).as("cs"))
+      assert(r.filter(col("kept") =!= col("cs.n") - col("cs.n_stop")).count() === 0)
+      assert(r.agg(sum(col("n") - col("kept"))).head().getLong(0) > 0)
+    }
+  }
+
+  test("codegen and interpreted projections agree on every registered scalar function") {
+    spark // force session init (codegen touches SQLConf.get)
+    for ((name, expr, rows) <- nativeCases) {
+      val generated = GenerateUnsafeProjection.generate(Seq(expr))
+      val interpreted = InterpretedUnsafeProjection.createProjection(Seq(expr))
+      for (row <- rows) {
+        val input = InternalRow.fromSeq(row)
+        val g = generated(input).copy()
+        val i = interpreted(input).copy()
+        assert(g === i, s"$name(${row.mkString(", ")}): generated $g, interpreted $i")
+      }
     }
   }
 }

@@ -26,12 +26,14 @@ class HammingHexSpec extends AnyFunSuite {
   }
 
   test("codegen and interpreted paths agree") {
-    val df = Seq(("deadbeefdeadbeef", "deadbeffdeadbeef")).toDF("a", "b")
-    val viaCodegen = df.select(hammingHex($"a", $"b")).head().getInt(0)
+    spark // force session init (codegen touches SQLConf.get)
     val expr = graft.plans.HammingHex(
       org.apache.spark.sql.catalyst.expressions.Literal.create("deadbeefdeadbeef"),
       org.apache.spark.sql.catalyst.expressions.Literal.create("deadbeffdeadbeef"))
+    val viaCodegen = org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
+      .generate(Seq(expr)).apply(org.apache.spark.sql.catalyst.InternalRow.empty).getInt(0)
     assert(viaCodegen === expr.eval(null))
+    assert(dist("deadbeefdeadbeef", "deadbeffdeadbeef") === Some(viaCodegen))
   }
 
   test("simhashPairs: banding finds identical and near fingerprints") {

@@ -44,12 +44,16 @@ class RollingHashSpec extends AnyFunSuite {
   }
 
   test("codegen and interpreted paths agree") {
-    val viaCodegen = viaExpr("rolling hash parity check", 4).get
+    spark // force session init (codegen touches SQLConf.get)
     val expr = RollingHashes(
       org.apache.spark.sql.catalyst.expressions.Literal.create("rolling hash parity check"),
       org.apache.spark.sql.catalyst.expressions.Literal.create(4))
+    val viaCodegen = org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
+      .generate(Seq(expr)).apply(org.apache.spark.sql.catalyst.InternalRow.empty)
+      .getArray(0).toLongArray().toSeq
     val interp = expr.eval(null)
       .asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData].toLongArray().toSeq
     assert(viaCodegen === interp)
+    assert(viaExpr("rolling hash parity check", 4) === Some(interp))
   }
 }
