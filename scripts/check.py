@@ -31,6 +31,22 @@ oracle = json.load(open(f"{out}/oracle_sql.json"))
 errpath = f"{out}/_errors.json"
 verify_errors = json.load(open(errpath)) if os.path.exists(errpath) else {}
 
+def null_promoted(col):
+    """True for a float column pandas made out of an integer column that
+    holds NULLs: it has a NaN and every other value is integral. A float
+    column with no NaN (a DuckDB HUGEINT SUM, a DOUBLE) is really float."""
+    if not pd.api.types.is_float_dtype(col):
+        return False
+    v = col.to_numpy()
+    nan = np.isnan(v)
+    return bool(nan.any()) and bool((v[~nan] == np.floor(v[~nan])).all())
+
+def dtype_mismatch(g, e):
+    """The dtype-parity gate: one side integer, the other float, unless
+    the float side is an integer column pandas promoted for its NULLs."""
+    g_int, e_int = pd.api.types.is_integer_dtype(g), pd.api.types.is_integer_dtype(e)
+    return g_int != e_int and not (null_promoted(g) or null_promoted(e))
+
 def canon(df):
     df = df[sorted(df.columns)].copy()
     for c in df.columns:
@@ -92,8 +108,10 @@ for name in sorted(os.listdir(out)):
             # equal — the exact class that shipped q_cat_top_rank /
             # q_channel_report red in r20 (DuckDB SUM(BIGINT) -> HUGEINT ->
             # pandas float64). Oracle rule: any SUM over an integer column
-            # must CAST(... AS BIGINT).
-            if pd.api.types.is_integer_dtype(g[c]) != pd.api.types.is_integer_dtype(e[c]):
+            # must CAST(... AS BIGINT). A side pandas promoted to float for
+            # its NULLs counts as integer: its cells then differ in value,
+            # and the value compare below reports that.
+            if dtype_mismatch(g[c], e[c]):
                 fails.append((name, f"col {c} dtype parity: spark={g[c].dtype} duckdb={e[c].dtype} "
                               "(driver's canonical-string hash would fail; cast the oracle aggregate)"))
                 ok = False

@@ -67,12 +67,17 @@ object InvertedIndex {
     * rejected loudly (same contract as `rankedSearch` — they can never
     * match and would silently return nothing).
     *
-    * Scale shape: one term-filtered slice per phrase term — each a
-    * pushed predicate (bucket-pruned to the term's buckets on the
-    * persisted positional index, `IndexStore.positionalPostings`) —
-    * aligned on (doc_id, pos − i) equi-joins. Every branch is
-    * posting-set-sized, so AQE broadcasts the small sides; the corpus
-    * is never re-tokenized at query time and nothing is all-pairs.
+    * Scale shape: ONE scan filtered to the phrase's distinct terms
+    * (bucket-pruned to their buckets on the persisted positional index,
+    * `IndexStore.positionalPostings`) and ONE exchange, by `doc_id`; no
+    * join. Each posting votes for the phrase start `pos − i` at every
+    * offset `i` its term holds in the phrase (a repeated term holds
+    * several), and a `(doc_id, start)` group with `phrase.length` votes
+    * is one match: `(term, doc_id, pos)` is unique, so each offset adds
+    * at most one vote to a group. Both aggregates — votes per start,
+    * matches per doc — run on the one `doc_id` partitioning, which
+    * clusters `(doc_id, start)` as well. The corpus is never
+    * re-tokenized at query time.
     */
   def phraseQuery(positional: DataFrame, phrase: Seq[String]): DataFrame = {
     require(phrase.length >= 2, "phrase query needs at least two terms")
@@ -81,10 +86,14 @@ object InvertedIndex {
       s"phrase terms can never match a normalized token (lowercase a-z only): ${unindexable.mkString(", ")}")
     val stop = phrase.filter(Text.EffectiveStopwords.contains)
     require(stop.isEmpty, s"phrase terms are stopwords (never indexed): ${stop.mkString(", ")}")
-    phrase.zipWithIndex.map { case (t, i) =>
-      positional.filter(col("term") === t)
-        .select(col("doc_id"), (col("pos") - i).as("start"))
-    }.reduce(_.join(_, Seq("doc_id", "start")))
+    val offsets = phrase.zipWithIndex.groupMap(_._1)(_._2)
+    positional
+      .filter(col("term").isin(offsets.keys.toSeq: _*))
+      .select(col("doc_id"), explode(transform(element_at(typedLit(offsets), col("term")),
+        i => col("pos") - i)).as("start"))
+      .repartition(col("doc_id"))
+      .groupBy("doc_id", "start").agg(count(lit(1)).as("votes"))
+      .filter(col("votes") === phrase.length)
       .groupBy("doc_id")
       .agg(count(lit(1)).as("n_matches"))
   }
@@ -173,18 +182,17 @@ object InvertedIndex {
     * query term); the former `count over Window.partitionBy(term)`
     * serialized each query term's whole posting set onto one task, a
     * straggler AQE cannot split, where the join can be. The scalar N is
-    * one row, broadcast at any scale. (`TermStatsStore.rankedSearch`
-    * serves the same plan from the persisted bucket-pruned tf relation.)
+    * one row, broadcast at any scale. The joins build the (doc_id, tf,
+    * df) rows `TermStatsStore.rankedSearch` reads from its stored tf
+    * relation, and both paths score them with `TermScoring.ranked`.
     */
   def rankedSearch(docs: DataFrame, queryTerms: Seq[String], k: Int): DataFrame = {
     requireIndexableQuery(queryTerms, "ranked search")
-    val tf = docs
-      .select(col("doc_id"), explode(Text.tokensNoStop(col("text"))).as("term"))
-      .filter(col("term").isin(queryTerms: _*))
-      .groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
+    val tf = queryTf(docs, queryTerms)
     val dfRel = tf.groupBy("term").agg(count(lit(1)).as("df"))
     val n = docs.agg(countDistinct(col("doc_id")).as("n_docs"))
-    TermScoring.ranked(tf, dfRel, n, k)
+    TermScoring.ranked(
+      tf.join(dfRel, Seq("term")).crossJoin(broadcast(n)), col("n_docs"), k)
   }
 
   /** BM25-ranked retrieval — the industry-standard upgrade of the tf-idf
@@ -196,28 +204,38 @@ object InvertedIndex {
     *
     * Scale shape adds ONE relation to `rankedSearch`: per-doc token
     * length (a map-side `size` projection, no explode), whose single
-    * aggregate yields BOTH N and avgdl (one broadcast scalar row). The
-    * query-term tf relation is post-filter small, so its join against
-    * the narrow length relation broadcasts the tf side; everything
-    * downstream runs on matching docs only. df is the same
-    * partial-agg-join as `rankedSearch` (no term-keyed window). All
-    * arithmetic is plain double ops in a fixed order (integer length
-    * sums are exact), so the DuckDB oracle reproduces scores
-    * bit-for-bit at 6 dp. (`TermStatsStore.bm25` serves the same plan
-    * from the persisted relations.)
+    * aggregate yields BOTH N and avgdl (one broadcast scalar row). A
+    * doc_id that labels several documents has its tf summed over them,
+    * so its dl is the largest of their lengths (the stored tf relation
+    * keeps the same one dl per doc_id). The query-term tf relation is
+    * post-filter small, so its join against the length relation
+    * broadcasts the tf side; everything downstream runs on matching docs
+    * only. df is the same partial-agg-join as `rankedSearch` (no
+    * term-keyed window). The joins build the (doc_id, tf, dl, df) rows
+    * `TermStatsStore.bm25` reads from its stored tf relation, and both
+    * paths score them with `TermScoring.bm25`: plain double ops in one
+    * fixed order (integer length sums are exact), so the DuckDB oracle
+    * reproduces scores bit-for-bit at 6 dp.
     */
   def bm25Search(docs: DataFrame, queryTerms: Seq[String], k: Int,
                  k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     requireIndexableQuery(queryTerms, "BM25 search")
     val len = docs.select(col("doc_id"), size(Text.tokensNoStop(col("text"))).as("dl"))
     val stats = len.agg(count(lit(1)).as("n_docs"), avg(col("dl")).as("avgdl"))
-    val tf = docs
+    val tf = queryTf(docs, queryTerms)
+    val dfRel = tf.groupBy("term").agg(count(lit(1)).as("df"))
+    val rows = tf.join(dfRel, Seq("term"))
+      .join(len.groupBy("doc_id").agg(max(col("dl")).as("dl")), Seq("doc_id"))
+      .crossJoin(broadcast(stats))
+    TermScoring.bm25(rows, col("n_docs"), col("avgdl"), k, k1, b)
+  }
+
+  /** (doc_id, term, tf) of the query's terms, stopword-free stream. */
+  private def queryTf(docs: DataFrame, queryTerms: Seq[String]): DataFrame =
+    docs
       .select(col("doc_id"), explode(Text.tokensNoStop(col("text"))).as("term"))
       .filter(col("term").isin(queryTerms: _*))
       .groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
-    val dfRel = tf.groupBy("term").agg(count(lit(1)).as("df"))
-    TermScoring.bm25(tf, dfRel, len, stats, k, k1, b)
-  }
 }
 
 /** Boolean multi-term queries over the posting relation (SURVEY §2.2 —
@@ -226,7 +244,7 @@ object InvertedIndex {
   * Scale design: each operator is a SINGLE pass over the posting relation —
   * one `isin` filter (pushed to the scan; prunes to the matching term
   * buckets when the input is the term-bucketed persisted index) followed by
-  * one aggregation or one anti-join keyed on doc_id. The round-1 shape
+  * one aggregation keyed on doc_id — one shuffle, no join. The round-1 shape
   * (N per-term branches chained with intersect/except) re-scanned the corpus
   * once per term and shuffled once per set-op; at 100 TB that is N full
   * tokenization passes to answer a point query.
@@ -263,17 +281,20 @@ object BooleanQuery {
     postings.filter(col("term").isin(terms: _*)).select("doc_id").distinct()
   }
 
-  /** Documents containing `include` but NONE of `exclude`: a left-anti join
-    * of two term-pruned branches. Both sides are tiny posting sets, so AQE
-    * plans the anti side as a broadcast; on the persisted index each branch
-    * is a bucket-pruned scan.
+  /** Documents containing `include` but NONE of `exclude`: one scan
+    * filtered to all the named terms (bucket-pruned on the persisted
+    * index) and one aggregation keyed on doc_id that keeps a doc when
+    * one of its postings is `include` and none is in `exclude` — one
+    * shuffle, no join. An `include` that is also excluded matches
+    * nothing.
     */
   def andNot(postings: DataFrame, include: String, exclude: Seq[String]): DataFrame = {
-    val inc = postings.filter(col("term") === include).select("doc_id").distinct()
-    if (exclude.isEmpty) inc
-    else {
-      val exc = postings.filter(col("term").isin(exclude: _*)).select("doc_id")
-      inc.join(exc, Seq("doc_id"), "left_anti")
-    }
+    postings
+      .filter(col("term").isin(include +: exclude: _*))
+      .groupBy("doc_id")
+      .agg(bool_or(col("term") === include).as("inc"),
+        bool_or(col("term").isin(exclude: _*)).as("exc"))
+      .filter(col("inc") && !col("exc"))
+      .select("doc_id")
   }
 }

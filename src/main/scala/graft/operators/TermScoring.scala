@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.functions.Text
 
@@ -20,7 +20,8 @@ import graft.functions.Text
   * (The reference applies the same discipline in miniature: group
   * map-side before transferring — `mapper/src/processor.py:80-134`.)
   * Corpus-level scalars (N, avgdl) are 1-row relations, broadcast at
-  * any scale.
+  * any scale — or, for `ranked`/`bm25`, `Column`s: the store binds
+  * them as literals, so a served query plans no join at all.
   */
 object TermScoring {
 
@@ -39,41 +40,45 @@ object TermScoring {
         round(col("tf") * log(col("n_docs").cast("double") / col("df")), 6).as("tfidf"))
 
   /** Ranked retrieval: per-doc sum of tf-idf term weights over the
-    * query terms, top-k with a (score desc, doc_id) tie-break. Inputs
-    * are already filtered to the query's terms, so every relation here
-    * is matching-docs-sized except the broadcast scalar.
+    * query terms, top-k with a (score desc, doc_id) tie-break. The ONE
+    * scorer of the stored and the direct path: both hand it the same
+    * rows, so the float op order is shared and the scores bit-equal.
+    *
+    * @param rows  (doc_id, tf, df), one row per (doc, query term) —
+    *              already filtered to the query's terms
+    * @param nDocs the distinct document count: a literal on the stored
+    *              path, a broadcast 1-row column on the direct path
     */
-  def ranked(tf: DataFrame, dfRel: DataFrame, nDocs: DataFrame, k: Int): DataFrame =
-    tf.join(dfRel, Seq("term"))
-      .crossJoin(broadcast(nDocs))
-      .select(col("doc_id"),
-        round(col("tf") * log(col("n_docs").cast("double") / col("df")), 6).as("w"))
-      .groupBy("doc_id")
-      .agg(round(sum("w"), 6).as("score"), count(lit(1)).as("n_matched"))
-      .orderBy(col("score").desc, col("doc_id"))
-      .limit(k)
+  def ranked(rows: DataFrame, nDocs: Column, k: Int): DataFrame =
+    topK(rows.select(col("doc_id"),
+      round(col("tf") * log(nDocs.cast("double") / col("df")), 6).as("w")), k)
 
   /** BM25: Robertson +1-smoothed idf × saturated tf ÷ length norm, per
-    * term rounded to 6dp, summed per doc, top-k.
+    * term rounded to 6dp, summed per doc, top-k. The ONE scorer of the
+    * stored and the direct path (see `ranked`).
     *
-    * @param len   (doc_id, dl) — stopword-free token count per doc
-    * @param stats 1 row: (n_docs, avgdl) over ALL docs (zero-token docs
-    *              included)
+    * @param rows  (doc_id, tf, dl, df), one row per (doc, query term);
+    *              dl = the doc's stopword-free token count
+    * @param nDocs the document count, zero-token docs included
+    * @param avgdl the mean dl over the same documents
     */
-  def bm25(tf: DataFrame, dfRel: DataFrame, len: DataFrame, stats: DataFrame,
+  def bm25(rows: DataFrame, nDocs: Column, avgdl: Column,
            k: Int, k1: Double, b: Double): DataFrame = {
-    val idf = log((col("n_docs") - col("df") + 0.5) / (col("df") + 0.5) + 1)
-    val norm = col("tf") + lit(k1) * (lit(1) - b + lit(b) * col("dl") / col("avgdl"))
-    tf.join(dfRel, Seq("term"))
-      .join(len, Seq("doc_id")) // tf side is post-filter small → broadcast
-      .crossJoin(broadcast(stats))
-      .select(col("doc_id"),
-        round(idf * (col("tf") * (k1 + 1)) / norm, 6).as("w"))
+    val idf = log((nDocs - col("df") + 0.5) / (col("df") + 0.5) + 1)
+    val norm = col("tf") + lit(k1) * (lit(1) - b + lit(b) * col("dl") / avgdl)
+    topK(rows.select(col("doc_id"),
+      round(idf * (col("tf") * (k1 + 1)) / norm, 6).as("w")), k)
+  }
+
+  /** Per-doc score = rounded sum of the term weights `w`, with the
+    * matched-term count; top-k by (score desc, doc_id).
+    */
+  private def topK(weights: DataFrame, k: Int): DataFrame =
+    weights
       .groupBy("doc_id")
       .agg(round(sum("w"), 6).as("score"), count(lit(1)).as("n_matched"))
       .orderBy(col("score").desc, col("doc_id"))
       .limit(k)
-  }
 
   /** Unigram LM score (CCNet shape): per-doc average ln p(term) under
     * the corpus's own unigram distribution. Per-term ln(c/N) is rounded

@@ -57,15 +57,15 @@ case class ClfStats(first: Expression, second: Expression, third: Expression)
   override def prettyName: String = "clf_stats"
 
   override def checkInputDataTypes(): TypeCheckResult =
-    if (Seq(first, second).forall(_.dataType match {
+    if (!(Seq(first, second).forall(_.dataType match {
       case ArrayType(StringType, _) => true
       case _ => false
-    }) && third.dataType == org.apache.spark.sql.types.BooleanType)
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires (array<string>, array<string>, boolean), got " +
-        s"(${first.dataType.simpleString}, ${second.dataType.simpleString}, " +
-        s"${third.dataType.simpleString})")
+    }) && third.dataType == org.apache.spark.sql.types.BooleanType))
+      TypeCheckResult.TypeCheckFailure(
+        s"$prettyName requires (array<string>, array<string>, boolean), got " +
+          s"(${first.dataType.simpleString}, ${second.dataType.simpleString}, " +
+          s"${third.dataType.simpleString})")
+    else StopwordArg.check(prettyName, second)
 
   override def nullSafeEval(toksAny: Any, stopsAny: Any, distAny: Any): Any =
     kernel.get().compute(toksAny.asInstanceOf[ArrayData],
@@ -82,10 +82,22 @@ case class ClfStats(first: Expression, second: Expression, third: Expression)
     copy(first = newFirst, second = newSecond, third = newThird)
 }
 
+/** The stopword argument of `clf_stats` and `strip_stops` must be a
+  * constant: their kernel builds its stopword set from the first row
+  * and keeps it, so a per-row column would silently apply the first
+  * row's set to every row. Rejected at analysis instead.
+  */
+private object StopwordArg {
+  def check(fn: String, stops: Expression): TypeCheckResult =
+    if (stops.foldable) TypeCheckResult.TypeCheckSuccess
+    else TypeCheckResult.TypeCheckFailure(
+      s"$fn requires a constant stopword array, got the per-row expression ${stops.sql}")
+}
+
 /** The `clf_stats` row kernel. NOT thread-safe: one instance per task
   * (codegen mutable state) or per thread (interpreted path). The
   * stopword set is built once from the first row's stopword array —
-  * the argument is a literal by contract, identical every row.
+  * the argument is a constant, identical every row (`StopwordArg`).
   */
 final class ClfStatsKernel {
   private var stopSet: java.util.HashSet[UTF8String] = null
@@ -191,13 +203,13 @@ case class StripStops(left: Expression, right: Expression)
   override def prettyName: String = "strip_stops"
 
   override def checkInputDataTypes(): TypeCheckResult =
-    if (Seq(left, right).forall(_.dataType match {
+    if (!Seq(left, right).forall(_.dataType match {
       case ArrayType(StringType, _) => true
       case _ => false
-    })) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
+    })) TypeCheckResult.TypeCheckFailure(
       s"$prettyName requires (array<string>, array<string>), got " +
         s"(${left.dataType.simpleString}, ${right.dataType.simpleString})")
+    else StopwordArg.check(prettyName, right)
 
   override def nullSafeEval(toksAny: Any, stopsAny: Any): Any =
     kernel.get().strip(toksAny.asInstanceOf[ArrayData], stopsAny.asInstanceOf[ArrayData])

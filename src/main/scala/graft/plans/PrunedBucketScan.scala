@@ -13,10 +13,11 @@ import org.apache.spark.sql.execution.exchange.{EnsureRequirements, ShuffleExcha
   * one task.
   *
   * Spark's own `DisableUnnecessaryBucketedScan` already does this when no
-  * operator above the scan cares about its partitioning; it gives up when
-  * a broadcast join sits between the scan and an aggregate (phrase,
-  * proximity, AND-NOT, the BM25 tf slice). This rule covers those shapes
-  * and keeps every plan that uses the layout: it applies only when
+  * operator above the scan cares about its partitioning — phrase, AND-NOT
+  * and BM25 read one scan under a doc_id exchange. It gives up when a
+  * broadcast join sits between the scan and an aggregate: the two slices
+  * of a proximity query. This rule covers that shape and keeps every
+  * plan that uses the layout: it applies only when
   * re-running `EnsureRequirements` over the rewritten plan adds no
   * shuffle (the co-located join, term-keyed aggregates and index
   * compaction keep their bucketed scans). The plan it returns is that

@@ -15,9 +15,10 @@ import org.apache.spark.sql.SparkSession
   * amount.
   *
   * No part reads another part's output: `stats` aggregates the
-  * `(doc_id, term, tf)` rows `tf` writes and `scalars` the per-document
-  * lengths `docLengths` writes, each computed from the corpus by the one
-  * shared row expression (`TermStatsStore.tfRows` / `docLengthRows`).
+  * `(doc_id, term, tf)` rows `tf` stores (beside each posting's `dl` and
+  * `df`), and `scalars` the per-document lengths `docLengths` writes,
+  * each computed again from the corpus (`TermStatsStore.tfRows`,
+  * `wideTfRows` and `docLengthRows`).
   * Each part keeps its own corpus scan and tokenization: a persisted
   * token base shared by the six built fewer documents per second and
   * slowed the streamed micro-batches that follow the build.

@@ -38,8 +38,10 @@ import org.apache.spark.sql.SparkSession
   * `DisableUnnecessaryBucketedScan` (on by default) flattens a bucketed
   * scan no operator needs the partitioning of — a term lookup — and the
   * engine's `PrunedBucketScan` flattens a bucket-pruned scan whenever
-  * doing so adds no shuffle (phrase, AND-NOT, the BM25 tf slice). A flat
-  * scan still reads only the files of the selected buckets.
+  * doing so adds no shuffle (the two proximity slices; phrase, AND-NOT
+  * and BM25 read one scan under a doc_id exchange, which Spark's rule
+  * already flattens). A flat scan still reads only the files of the
+  * selected buckets.
   */
 object EngineSession {
   def builder(master: String, shufflePartitions: String): SparkSession.Builder =

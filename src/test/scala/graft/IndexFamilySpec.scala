@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions.Text
-import graft.operators.InvertedIndex
+import graft.operators.{BooleanQuery, InvertedIndex}
 import graft.sources.{Corpus, IndexFamily, IndexStore, SessionStores, TermStatsStore}
 
 /** The six index stores build as one concurrent job set (`IndexFamily`):
@@ -153,6 +153,48 @@ class IndexFamilySpec extends AnyFunSuite {
     }
     val first = results.head
     assert(first("scalars").head.getLong(0) === 47L && first("scalars").head.getLong(1) === 45L)
+    results.zip(settings).tail.foreach { case (r, (parts, aqe)) =>
+      for (name <- first.keys)
+        assert(r(name) === first(name), s"$name differs under shuffle partitions $parts, AQE $aqe")
+    }
+  }
+
+  test("the serve shapes give identical rows under shuffle partitions {1, 4, 7} and AQE on/off") {
+    // AND-NOT and phrase group once by doc_id over one pruned scan; the
+    // stored bm25/ranked read dl and df off the stored tf rows, which a
+    // (doc_id, term) aggregate and a term window derived. None of it may
+    // depend on how the exchanges split the rows.
+    val settings = for (parts <- Seq(1, 4, 7); aqe <- Seq(true, false)) yield (parts, aqe)
+    val results = settings.map { case (parts, aqe) =>
+      val s = spark.newSession()
+      s.conf.set("spark.sql.shuffle.partitions", parts.toLong)
+      s.conf.set("spark.sql.adaptive.enabled", aqe)
+      val dir = corpus(s"serve_p${parts}_aqe$aqe")
+      val docs = Corpus.documents(s, dir)
+      val where = s"shuffle partitions $parts, AQE $aqe"
+      val q = Seq("spark", "hash")
+      val got = Seq(
+        "andNot" -> BooleanQuery.andNot(IndexStore.postings(s, dir), "spark", Seq("hash")),
+        "andNot include excluded" ->
+          BooleanQuery.andNot(IndexStore.postings(s, dir), "hash", Seq("table", "hash")),
+        "phrase" -> InvertedIndex.phraseQuery(IndexStore.positionalPostings(s, dir),
+          Seq("hash", "table")),
+        "phrase repeated term" -> InvertedIndex.phraseQuery(
+          IndexStore.positionalPostings(s, dir), Seq("hash", "spark", "hash")),
+        "bm25" -> TermStatsStore.bm25(s, dir, q, 10),
+        "rankedSearch" -> TermStatsStore.rankedSearch(s, dir, q, 10)
+      ).map { case (name, df) => name -> sorted(df) }.toMap
+      // the corpus repeats doc_ids: the stored scorers and the direct
+      // ones still agree row for row
+      assert(got("bm25") === sorted(InvertedIndex.bm25Search(docs, q, 10)), where)
+      assert(got("rankedSearch") === sorted(InvertedIndex.rankedSearch(docs, q, 10)), where)
+      got
+    }
+    val first = results.head
+    Seq("andNot", "phrase", "phrase repeated term", "bm25", "rankedSearch").foreach { name =>
+      assert(first(name).nonEmpty, s"$name is empty: the comparison shows nothing")
+    }
+    assert(first("andNot include excluded").isEmpty)
     results.zip(settings).tail.foreach { case (r, (parts, aqe)) =>
       for (name <- first.keys)
         assert(r(name) === first(name), s"$name differs under shuffle partitions $parts, AQE $aqe")

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.{BooleanQuery, InvertedIndex}
@@ -158,5 +159,75 @@ class InvertedIndexSpec extends AnyFunSuite {
     intercept[IllegalArgumentException](InvertedIndex.proximityQuery(pos, "the", "cat", 5))
     intercept[IllegalArgumentException](InvertedIndex.proximityQuery(pos, "cat", "cat", 5))
     intercept[IllegalArgumentException](InvertedIndex.proximityQuery(pos, "cat", "sat", 0))
+  }
+
+  // ---- the one-pass serve shapes against the formulations they replaced
+
+  /** The former phrase shape: one term slice per phrase position,
+    * aligned by (doc_id, pos − i) equi-joins.
+    */
+  private def phraseByJoins(positional: DataFrame, phrase: Seq[String]): DataFrame =
+    phrase.zipWithIndex.map { case (t, i) =>
+      positional.filter(col("term") === t).select(col("doc_id"), (col("pos") - i).as("start"))
+    }.reduce(_.join(_, Seq("doc_id", "start")))
+      .groupBy("doc_id").agg(count(lit(1)).as("n_matches"))
+
+  /** The former AND-NOT shape: the include slice's distinct docs,
+    * left-anti joined with the exclude slice.
+    */
+  private def andNotByAntiJoin(postings: DataFrame, include: String,
+                               exclude: Seq[String]): DataFrame = {
+    val inc = postings.filter(col("term") === include).select("doc_id").distinct()
+    if (exclude.isEmpty) inc
+    else inc.join(postings.filter(col("term").isin(exclude: _*)).select("doc_id"),
+      Seq("doc_id"), "left_anti")
+  }
+
+  /** 300 documents of 0–24 words over a 5-word vocabulary, with
+    * stopwords mixed in, so short phrases match many times per doc.
+    */
+  private lazy val generated = {
+    val vocab = Seq("spark", "hash", "table", "value", "index")
+    val rnd = new scala.util.Random(13)
+    (1L to 300L).map { id =>
+      (id, s"u$id", Seq.fill(rnd.nextInt(25))(
+        if (rnd.nextInt(6) == 0) "the" else vocab(rnd.nextInt(vocab.size))).mkString(" "))
+    }.toDF("doc_id", "url", "text")
+  }
+
+  private def rows(df: DataFrame): Seq[Row] =
+    df.orderBy(df.columns.map(col): _*).collect().toSeq
+
+  test("phrase query equals the per-term join formulation on a generated index") {
+    val positional = InvertedIndex.positionalPostings(generated).cache()
+    for (phrase <- Seq(
+        Seq("spark", "hash"),
+        Seq("spark", "hash", "spark"),            // a repeated term holds two offsets
+        Seq("hash", "hash"),
+        Seq("value", "table", "spark", "hash"),   // 4 terms
+        Seq("index", "value", "index", "value"))) {
+      val want = rows(phraseByJoins(positional, phrase))
+      assert(want.nonEmpty, s"$phrase matches nothing: the comparison shows nothing")
+      assert(rows(InvertedIndex.phraseQuery(positional, phrase)) === want, phrase.mkString(" "))
+    }
+    positional.unpersist()
+  }
+
+  test("AND-NOT equals the anti-join formulation on a generated index") {
+    val postings = InvertedIndex.postings(generated).cache()
+    for ((inc, exc) <- Seq(
+        "spark" -> Seq("hash"),
+        "spark" -> Seq("spark"),                  // include ∈ exclude: nothing
+        "spark" -> Seq("hash", "spark", "table"),
+        "table" -> Seq("hash", "hash"),           // a repeated exclude term
+        "value" -> Seq.empty[String],             // no exclude: the include docs
+        "index" -> Seq("absent"))) {
+      val got = BooleanQuery.andNot(postings, inc, exc)
+      assert(got.columns.toSeq === Seq("doc_id"))
+      assert(rows(got) === rows(andNotByAntiJoin(postings, inc, exc)), s"$inc NOT $exc")
+    }
+    assert(BooleanQuery.andNot(postings, "spark", Seq("spark")).isEmpty)
+    assert(!BooleanQuery.andNot(postings, "spark", Seq("hash")).isEmpty)
+    postings.unpersist()
   }
 }

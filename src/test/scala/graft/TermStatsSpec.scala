@@ -95,4 +95,14 @@ class TermStatsSpec extends AnyFunSuite {
     assert(tfScans.forall(_.optionalBucketSet.isDefined),
       "query-term filter must bucket-prune the tf scan")
   }
+
+  test("the public tf accessor serves exactly (doc_id, term, tf)") {
+    // tfidf, lmScore and dsir join df/c columns onto it; the stored
+    // relation's dl and df would make those joins ambiguous
+    val tf = TermStatsStore.tf(spark, dir)
+    assert(tf.schema.map(f => f.name -> f.dataType.simpleString) ===
+      Seq("doc_id" -> "bigint", "term" -> "string", "tf" -> "bigint"))
+    assert(tf.count() === TermStatsStore.stats(spark, dir).agg(
+      org.apache.spark.sql.functions.sum("df")).head().getLong(0))
+  }
 }

@@ -66,6 +66,19 @@ class TokenizerSpec extends AnyFunSuite {
     assert(docs.filter(!(old <=> Text.tokensNoStop(col("text")))).count() === 0)
   }
 
+  test("strip_stops / clf_stats reject a per-row stopword column at analysis") {
+    // the kernels build their stopword set from the first row and keep
+    // it: rows (t=[a,b], s=[a]) and (t=[a,b], s=[b]) came back [b], [b]
+    val rows = Seq((Seq("a", "b"), Seq("a")), (Seq("a", "b"), Seq("b"))).toDF("t", "s")
+    for (q <- Seq("strip_stops(t, s)", "clf_stats(t, s, true)")) {
+      val e = intercept[org.apache.spark.sql.AnalysisException](rows.selectExpr(q).collect())
+      assert(e.getMessage.contains("constant stopword array"), s"$q: ${e.getMessage}")
+    }
+    // a literal stopword array still analyzes and strips
+    assert(rows.select(graft.plans.StripStops.stripStops($"t", Seq("a")))
+      .as[Seq[String]].collect().toSeq === Seq(Seq("b"), Seq("b")))
+  }
+
   test("F1+D1: stopwords dropped, duplicates collapsed, first-seen order") {
     assert(termsOf("the cat and the dog saw the cat") === Seq("cat", "dog", "saw"))
   }
